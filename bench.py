@@ -814,6 +814,13 @@ def main() -> None:
         with open(local_path, "w") as fh:
             json.dump(payload, fh)
         print(f"# full record -> {os.path.basename(local_path)}", file=sys.stderr)
+    elif sf_dir.rstrip("/").endswith("sf0.1"):
+        print(
+            f"# warning: full record NOT written: this run used {cpus} cores; "
+            "only a 32-core sf0.1 run writes BENCH_LOCAL_r*.json, the "
+            "tripwire's diff base",
+            file=sys.stderr,
+        )
 
 
 if __name__ == "__main__":

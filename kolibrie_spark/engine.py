@@ -235,10 +235,7 @@ class SparqlEngine:
         if kind == "INSERT":
             self.store.add_quads(triples)
         else:
-            df = self.store.spark.createDataFrame(
-                triples, self.store.quads.schema
-            )
-            self.store.delete(df)
+            self.store.delete_quads(triples)
         return True
 
     def execute(self, text: str) -> list[list[str]]:

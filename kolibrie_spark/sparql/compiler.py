@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kolibrie_spark import compare, rdfstar
+from kolibrie_spark.schema import local_df
 from kolibrie_spark.sparql import ast
 
 
@@ -252,11 +253,9 @@ class DatasetView:
 
     def named_graph_names(self) -> DataFrame:
         if self.from_named:
-            return self.store.spark.createDataFrame(
-                [(g,) for g in self.from_named], "g string"
-            )
+            return local_df(self.store.spark, [(g,) for g in self.from_named], ["g"])
         if self.from_graphs:
-            return self.store.spark.createDataFrame([], "g string")
+            return local_df(self.store.spark, [], ["g"])
         return self.store.named_graph_names()
 
 
@@ -607,8 +606,7 @@ class Compiler:
             tuple(None if t is None else self._ground_term_value(t) for t in row)
             for row in v.rows
         ]
-        schema = ", ".join(f"`{n}` string" for n in names)
-        df = self.spark.createDataFrame(rows, schema)
+        df = local_df(self.spark, rows, names)
         maybe_null = frozenset(
             n for idx, n in enumerate(names) if any(r[idx] is None for r in rows)
         )
@@ -878,7 +876,7 @@ class Compiler:
             nodes = self._reachable_from(edges, start_v)
             if zero:
                 nodes = nodes.unionByName(
-                    self.store.spark.createDataFrame([(start_v,)], "__dst string")
+                    local_df(self.store.spark, [(start_v,)], ["__dst"])
                 ).dropDuplicates()
             if isinstance(other, ast.Var):
                 return Bindings(nodes.select(F.col("__dst").alias(other.name)))
@@ -915,7 +913,7 @@ class Compiler:
                 .filter(F.col("__src") == start_v)
                 .select("__dst")
                 .unionByName(
-                    self.store.spark.createDataFrame([(start_v,)], "__dst string")
+                    local_df(self.store.spark, [(start_v,)], ["__dst"])
                 )
                 .dropDuplicates()
             )

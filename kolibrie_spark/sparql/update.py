@@ -7,24 +7,26 @@ before insertions; blank-node labels in INSERT templates allocate a fresh
 blank node per solution (execute_query.rs:854-865); instantiated quads with
 unbound variables are skipped (RDF legality of the instantiated term set).
 
-Spark shape: WHERE → bindings DataFrame (the same compiler as SELECT), each
-template quad → a select over the bindings, delete set applied with EXCEPT
-(set semantics — the reference's index is a hash set), insert set with
-union+distinct. The store swap cuts lineage via localCheckpoint so chained
-updates do not stack plans.
+Spark shape: the ground forms (INSERT/DELETE DATA) are edits of the store's
+driver-side delta and run no Spark job.  For the WHERE forms the WHERE
+compiles to a bindings DataFrame over the pre-update view (the same
+compiler as SELECT); one ``inline`` turns every solution into its
+instantiated delete and insert quads, tagged, and ``QuadStore.apply``
+collects them in one action — or, past the store's bound, compacts them
+into a new base.  Set semantics come from the store (see store.py).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kolibrie_spark import rdfstar
-from kolibrie_spark.schema import QUADS_SCHEMA
 from kolibrie_spark.sparql import ast
 from kolibrie_spark.sparql.compiler import Bindings, Compiler, CompileError, DatasetView
+from kolibrie_spark.store import OP, QUAD_COLS
 
 
 def _collect_quoted(term: ast.Term, acc: list[ast.QuotedTriple]) -> None:
@@ -64,7 +66,6 @@ def execute_update(
     each mutation (set semantics make the count delta exactly the
     reference's changed-quad tally); the default skips those jobs."""
     compiler = Compiler(store)
-    spark = store.spark
     before = store.triple_count() if with_summary else 0
 
     if isinstance(op, (ast.InsertData, ast.DeleteData)):
@@ -79,13 +80,12 @@ def execute_update(
             )
             for (s, p, o, g) in op.quads
         ]
-        df = spark.createDataFrame(rows, QUADS_SCHEMA)
         if isinstance(op, ast.InsertData):
-            store.insert(df)
+            store.add_quads(rows)
             if with_summary:
                 return UpdateSummary(inserted_quads=store.triple_count() - before)
         else:
-            store.delete(df)
+            store.delete_quads(rows)
             if with_summary:
                 return UpdateSummary(deleted_quads=before - store.triple_count())
         return None
@@ -93,29 +93,25 @@ def execute_update(
     if isinstance(op, ast.Modify):
         view = DatasetView(store, [], [])
         bindings = compiler.compile_group(op.where, view, active_graph=None)
-        # WHERE evaluated once pre-mutation: materialize now
-        bdf = bindings.df.localCheckpoint(eager=True)
-        bindings = Bindings(bdf, bindings.maybe_null)
-
-        delete_df, _del_quoted = _instantiate(
-            compiler, bindings, op.delete_template, fresh_blanks=False
+        changes = _changes(
+            compiler,
+            bindings,
+            [("d", op.delete_template, False), ("i", op.insert_template, True)],
         )
-        insert_df, ins_quoted = _instantiate(
-            compiler, bindings, op.insert_template, fresh_blanks=True
+        if changes is None:
+            return UpdateSummary() if with_summary else None
+        if not with_summary:
+            store.apply(changes)
+            return None
+        # pinned, so both halves come from one evaluation of the WHERE
+        changes = changes.localCheckpoint(eager=True)
+        store.apply(changes.filter(F.col(OP) == "d"))
+        after_delete = store.triple_count()
+        store.apply(changes.filter(F.col(OP) != "d"))
+        return UpdateSummary(
+            inserted_quads=store.triple_count() - after_delete,
+            deleted_quads=before - after_delete,
         )
-        if delete_df is not None:
-            store.delete(delete_df)
-        after_delete = store.triple_count() if with_summary else 0
-        if ins_quoted is not None:
-            store.insert_quoted(ins_quoted)
-        if insert_df is not None:
-            store.insert(insert_df)
-        if with_summary:
-            return UpdateSummary(
-                inserted_quads=store.triple_count() - after_delete,
-                deleted_quads=before - after_delete,
-            )
-        return None
 
     raise CompileError(f"unsupported update {op!r}")
 
@@ -125,14 +121,14 @@ def _template_term_col(
     df: DataFrame,
     term: ast.Term,
     fresh_blanks: bool,
-    quoted_parts: list[DataFrame],
-):
+    quoted: list[tuple[Column, Column, Column, Column]],
+) -> Column:
     """Column expression instantiating a template term per solution row.
 
     Quoted triples (possibly nested, possibly containing variables) become
     their deterministic surrogate id, and the corresponding
-    (qid, qs, qp, qo) rows are accumulated for insertion into the surrogate
-    table — per-solution annotation like
+    (qid, qs, qp, qo) columns are accumulated in ``quoted`` for the
+    surrogate table — per-solution annotation like
     ``INSERT { << ?s :p ?o >> :certainty "0.9" } WHERE {...}``."""
     if isinstance(term, ast.Var):
         if term.name in df.columns:
@@ -141,21 +137,63 @@ def _template_term_col(
     if isinstance(term, ast.BlankNode) and fresh_blanks:
         return F.concat(F.lit(f"_:{term.label}_"), F.col("__sol_id"))
     if isinstance(term, ast.QuotedTriple):
-        s = _template_term_col(compiler, df, term.s, fresh_blanks, quoted_parts)
-        p = _template_term_col(compiler, df, term.p, fresh_blanks, quoted_parts)
-        o = _template_term_col(compiler, df, term.o, fresh_blanks, quoted_parts)
+        s = _template_term_col(compiler, df, term.s, fresh_blanks, quoted)
+        p = _template_term_col(compiler, df, term.p, fresh_blanks, quoted)
+        o = _template_term_col(compiler, df, term.o, fresh_blanks, quoted)
         qid = rdfstar.qt_id_col(s, p, o)
-        quoted_parts.append(
-            df.select(
-                qid.alias("qid"), s.alias("qs"), p.alias("qp"), o.alias("qo")
-            ).filter(
-                F.col("qs").isNotNull()
-                & F.col("qp").isNotNull()
-                & F.col("qo").isNotNull()
-            )
-        )
+        quoted.append((qid, s, p, o))
         return qid
     return F.lit(compiler._ground_term_value(term))
+
+
+def _changes(
+    compiler: Compiler,
+    bindings: Bindings,
+    templates: list[tuple[str, list[ast.TemplateQuad], bool]],
+) -> DataFrame | None:
+    """Instantiate ``(tag, template, fresh_blanks)`` templates over the
+    solutions as one change frame (``QuadStore.apply``): a row per
+    solution and template quad, tagged, plus a 'q' row per quoted triple
+    of a non-delete template.  None when every template is empty.
+
+    Every solution row is expanded once, so a fresh blank-node suffix
+    (``uuid()``, one per solution — the same label within a solution maps
+    to the same blank node, execute_query.rs:854-865) is evaluated once and
+    shared by all of that solution's quads."""
+    if not any(template for _tag, template, _fresh in templates):
+        return None
+    df = bindings.df
+    if any(
+        fresh and isinstance(t, ast.BlankNode)
+        for _tag, template, fresh in templates
+        for tq in template
+        for t in (tq.s, tq.p, tq.o)
+    ):
+        df = df.withColumn("__sol_id", F.expr("uuid()"))
+
+    def entry(tag: str, *cols: Column) -> Column:
+        named = [c.cast("string").alias(n) for c, n in zip(cols, QUAD_COLS)]
+        return F.struct(F.lit(tag).alias(OP), *named)
+
+    entries = []
+    for tag, template, fresh in templates:
+        quoted: list[tuple[Column, Column, Column, Column]] = []
+        for tq in template:
+            spo = [
+                _template_term_col(compiler, df, t, fresh, quoted)
+                for t in (tq.s, tq.p, tq.o)
+            ]
+            entries.append(entry(tag, *spo, F.lit(tq.g)))
+        if tag != "d":
+            entries += [entry("q", *cols) for cols in quoted]
+    rows = df.select(F.inline(F.array(*entries)))
+    # instantiations with unbound components are illegal RDF → skipped
+    return rows.filter(
+        F.col("s").isNotNull()
+        & F.col("p").isNotNull()
+        & F.col("o").isNotNull()
+        & ((F.col(OP) != "q") | F.col("g").isNotNull())
+    )
 
 
 def _instantiate(
@@ -164,43 +202,19 @@ def _instantiate(
     template: list[ast.TemplateQuad],
     fresh_blanks: bool,
 ) -> tuple[DataFrame | None, DataFrame | None]:
-    """Returns (quads_df, quoted_rows_df)."""
-    if not template:
+    """One template over the solutions, as (quads_df, quoted_rows_df);
+    the latter is None when the template holds no quoted triple."""
+    rows = _changes(compiler, bindings, [("i", template, fresh_blanks)])
+    if rows is None:
         return None, None
-    df = bindings.df
-    if fresh_blanks and any(
-        isinstance(t, ast.BlankNode)
-        for tq in template
-        for t in (tq.s, tq.p, tq.o)
+    quads = rows.filter(F.col(OP) == "i").select(*QUAD_COLS).dropDuplicates()
+    if not any(
+        isinstance(t, ast.QuotedTriple) for tq in template for t in (tq.s, tq.p, tq.o)
     ):
-        # one fresh suffix per solution; the same label within a solution
-        # maps to the same blank node (execute_query.rs:854-865). The ids
-        # are materialized once — template quads reference __sol_id from
-        # separate selects, and a nondeterministic uuid() must not be
-        # re-evaluated per branch under re-optimization/AQE.
-        df = df.withColumn("__sol_id", F.expr("uuid()")).localCheckpoint(eager=True)
-
-    parts: list[DataFrame] = []
-    quoted_parts: list[DataFrame] = []
-    for tq in template:
-        cols = []
-        for pos, term in (("s", tq.s), ("p", tq.p), ("o", tq.o)):
-            col = _template_term_col(compiler, df, term, fresh_blanks, quoted_parts)
-            cols.append(col.cast("string").alias(pos))
-        cols.append(F.lit(tq.g).cast("string").alias("g"))
-        part = df.select(*cols)
-        # instantiations with unbound components are illegal RDF → skipped
-        part = part.filter(
-            F.col("s").isNotNull() & F.col("p").isNotNull() & F.col("o").isNotNull()
-        )
-        parts.append(part)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    quoted = None
-    if quoted_parts:
-        quoted = quoted_parts[0]
-        for p in quoted_parts[1:]:
-            quoted = quoted.unionByName(p)
-        quoted = quoted.dropDuplicates()
-    return out.dropDuplicates(), quoted
+        return quads, None
+    quoted = (
+        rows.filter(F.col(OP) == "q")
+        .select(*(F.col(c).alias(n) for c, n in zip(QUAD_COLS, ["qid", "qs", "qp", "qo"])))
+        .dropDuplicates()
+    )
+    return quads, quoted
