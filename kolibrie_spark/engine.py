@@ -586,9 +586,8 @@ class SparqlEngine:
         facts = self.store.quads.filter(F.col("g").isNull()).select("s", "p", "o")
         r = _R(self.spark, facts)
         r.rules = list(self.rules)
-        before = facts.count()
         out = r.materialize()
-        new = out.count() - before
+        new = r.rounds[-1][0] - r.rounds[0][0]  # fact rows after - before
         if new > 0:
             self.store.replace_quads(
                 out.withColumn("g", F.lit(None).cast("string")).unionByName(

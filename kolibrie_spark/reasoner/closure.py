@@ -119,13 +119,12 @@ def transitive_closure(
             F.col(f"b.{dst}").alias(dst),
             (F.col("a.dist") + F.col("b.dist")).alias("dist"),
         )
-        # ONE action per doubling (r12, guide §1.2): lazy mark + count —
-        # the count computes (and persists) every partition, so the
-        # checkpoint completes in the same job that reads convergence;
-        # the old eager mark paid a dedicated materialization job first.
-        # The count is also what makes the lazy mark safe here: the next
-        # round consumes `reach` twice (a-side and frontier), and by then
-        # it is fully persisted.
+        # Lazy mark + count. This is NOT one action per doubling: under
+        # AQE the lazy checkpoint already runs the plan's shuffle stages
+        # at call time, and the count then runs one more job that
+        # computes (and persists) every partition. The count is what
+        # makes the lazy mark safe here: the next round consumes `reach`
+        # twice (a-side and frontier), and by then it is fully persisted.
         reach = (
             reach.unionByName(stepped)
             .groupBy(src, dst)

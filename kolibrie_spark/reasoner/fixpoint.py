@@ -4,9 +4,7 @@ Reference algorithms re-expressed as DataFrame plans:
 - naive fixpoint (datalog/src/reasoning/materialisation/my_naive.rs:74):
   apply all rules to all facts until no growth;
 - semi-naive (semi_naive.rs:89): delta-driven — each round joins the
-  last round's delta against the full fact set in every premise position
-  (the classic distributed-datalog recipe; lineage is cut with
-  localCheckpoint each round so iteration does not stack plans);
+  last round's delta against the full fact set in every premise position;
 - negation-as-failure: LEFT ANTI join against the instantiated negated
   pattern (single stratum, shared/src/rule.rs semantics);
 - provenance semirings (shared/src/provenance.rs:18-60): a ``tag`` column
@@ -15,25 +13,38 @@ Reference algorithms re-expressed as DataFrame plans:
 - backward chaining (reasoning/backward_chaining.rs:150): driver-side
   goal-directed resolution issuing DataFrame probes per subgoal.
 
-Scale notes: each round shuffles on join variables only; the delta is
-usually tiny relative to the fact set so Catalyst broadcasts it (AQE);
-counts per round are the only driver actions. Iterations are capped.
+Scale notes: all four materializations run one loop, ``Reasoner._fixpoint``.
+With small inputs a round costs Spark jobs, stages and tasks, not data, so:
+the fact set is ONE local checkpoint with a boolean ``__new`` column (the
+delta is ``facts.filter(__new)``); dedup and the anti-join against old facts
+are one ``groupBy(s, p, o)`` over derived ∪ facts; the delta is broadcast
+while its known row count fits ``spark.sql.autoBroadcastJoinThreshold``; and
+the round is checkpointed EAGERLY under an ``Observation`` of its total and
+new row counts, so the emptiness test runs no job of its own. (A lazy
+checkpoint plus ``count()`` is not one action under AQE: the lazy checkpoint
+runs the plan's shuffle stages at call time and the count one more job.)
+Rounds are capped by ``max_iter``; running out raises ``RuntimeError``.
 """
 
 from __future__ import annotations
 
 import functools
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kolibrie_spark import compare
 from kolibrie_spark.reasoner.rule import FilterCondition, Rule, check_rule_safety
+from kolibrie_spark.schema import local_df
 from kolibrie_spark.sparql.ast import Iri, Lit, TriplePattern, Var
 
 FACTS_SCHEMA = "s string, p string, o string"
 TAGGED_SCHEMA = "s string, p string, o string, tag double"
+FACT_COLS = ["s", "p", "o"]
+FACT_ROWS_PER_PARTITION = 100_000  # of a round's fact-set checkpoint
+_ROW_BYTES = 256  # assumed per fact row, against the broadcast threshold
+_NEW = "__new"
 
 
 # ------------------------------------------------------------- semirings
@@ -218,22 +229,42 @@ def materialize_tags_as_rdfstar(
     store.insert(annotations, graphs=[])  # default graph only
 
 
+def _checkpoint(df: DataFrame, known_rows: int | None) -> tuple[DataFrame, int, int]:
+    """One round's fact set as an eager local checkpoint, with its total
+    and ``__new`` row counts read from an observation of the same job.
+    ``known_rows`` (the previous round's size) sets the partition count."""
+    if known_rows is not None:
+        df = df.coalesce(max(1, -(-known_rows // FACT_ROWS_PER_PARTITION)))
+    obs = Observation()
+    df = df.observe(
+        obs, F.count(F.lit(1)).alias("rows"), F.count(F.when(F.col(_NEW), 1)).alias("new")
+    )
+    facts = df.localCheckpoint(eager=True)
+    metrics = obs.get
+    return facts, metrics["rows"], metrics["new"]
+
+
 class Reasoner:
-    """Facts + rules with materialization (reference datalog/src/reasoning.rs)."""
+    """Facts + rules with materialization (reference datalog/src/reasoning.rs).
+
+    After a materialization, ``rounds`` lists ``(facts_rows, new_rows)``
+    per round: entry 0 is the deduplicated seed (all rows new), and the
+    last entry holds the final fact count."""
 
     def __init__(self, spark: SparkSession, facts: DataFrame | None = None):
         self.spark = spark
-        self.facts = facts if facts is not None else spark.createDataFrame([], FACTS_SCHEMA)
+        self.facts = facts if facts is not None else local_df(spark, [], FACT_COLS)
         # identity of the pristine empty seed: callers that only need to
         # know "was this reasoner ever given facts?" can compare against
         # this instead of paying a take(1) job on an empty RDD (r12)
         self._empty_seed = None if facts is not None else self.facts
         self.rules: list[Rule] = []
         self.constraints: list[Rule] = []
+        self.rounds: list[tuple[int, int]] = []
 
     # -------------------------------------------------------------- input
     def add_triples(self, rows: list[tuple[str, str, str]]) -> None:
-        new = self.spark.createDataFrame(rows, FACTS_SCHEMA)
+        new = local_df(self.spark, rows, FACT_COLS)
         self.facts = self.facts.unionByName(new).dropDuplicates()
 
     def add_rule(self, rule: Rule) -> None:
@@ -247,57 +278,15 @@ class Reasoner:
 
     # -------------------------------------------------------- fixpoints
     def materialize_naive(self, max_iter: int = 50) -> DataFrame:
-        facts = self.facts.localCheckpoint(eager=True)
-        count = facts.count()
-        for _ in range(max_iter):
-            derived = None
-            for rule in self.rules:
-                d = apply_rule(facts, rule)
-                derived = d if derived is None else derived.unionByName(d)
-            if derived is None:
-                break
-            # lazy mark + count = one action per round (r12, guide §1.2):
-            # the count computes every partition, completing the
-            # checkpoint in the job that reads convergence
-            facts = facts.unionByName(derived).dropDuplicates().localCheckpoint(eager=False)
-            new_count = facts.count()
-            if new_count == count:
-                break
-            count = new_count
-        self.facts = facts
-        return facts
+        """Naive fixpoint: every round applies all rules to all facts."""
+        self.facts = self._fixpoint(self.facts, naive=True, max_iter=max_iter)
+        return self.facts
 
     def materialize(self, max_iter: int = 50) -> DataFrame:
-        """Semi-naive fixpoint (the default, like the reference).
-
-        Per round only the (small) delta is checkpointed — the running fact
-        set stays a union of checkpointed deltas, so its lineage is bounded
-        by the round count without re-materializing the full set each round
-        (one full-facts write per iteration saved)."""
-        facts = self.facts.localCheckpoint(eager=True)
-        delta = facts
-        for _ in range(max_iter):
-            derived = None
-            for rule in self.rules:
-                d = apply_rule(facts, rule, delta=delta)
-                derived = d if derived is None else derived.unionByName(d)
-            if derived is None:
-                break
-            # lazy mark + count = one action per round (r12, guide §1.2);
-            # take(1) would compute only some partitions of a lazily-
-            # marked frame and leave the checkpoint half-built, so the
-            # emptiness probe is a count()
-            new_delta = (
-                derived.dropDuplicates()
-                .join(facts, on=["s", "p", "o"], how="left_anti")
-                .localCheckpoint(eager=False)
-            )
-            if new_delta.count() == 0:
-                break
-            facts = facts.unionByName(new_delta)
-            delta = new_delta
-        self.facts = facts
-        return facts
+        """Semi-naive fixpoint (the default, like the reference): every
+        round joins the last round's new facts against the fact set."""
+        self.facts = self._fixpoint(self.facts, naive=False, max_iter=max_iter)
+        return self.facts
 
     def infer(self, s: str, p: str, o: str) -> bool:
         return (
@@ -307,43 +296,79 @@ class Reasoner:
             > 0
         )
 
+    def _fixpoint(
+        self,
+        seed: DataFrame,
+        naive: bool,
+        max_iter: int,
+        semiring: Semiring | None = None,
+        admit=None,
+    ) -> DataFrame:
+        """The one fixpoint loop behind every ``materialize*`` method (see
+        the module notes). A round derives from the delta in each premise
+        position, or from all facts when ``naive``; a fact is new iff every
+        row of its ``groupBy(s, p, o)`` group over derived (src 1) ∪ facts
+        (src 0) is derived. With a ``semiring`` a new fact's tag is the ⊕
+        of the round's derivations and an old fact keeps its tag. ``admit``
+        filters the merged rows (repairs drop violating new facts there).
+        Returns the facts without ``__new``."""
+        cols = FACT_COLS + (["tag"] if semiring else [])
+        if semiring:  # a unique seed row keeps its tag exactly
+            one = F.count(F.lit(1)) == 1
+            tag = F.when(one, F.max("tag")).otherwise(semiring.plus_agg(F.col("tag")))
+            seed = seed.groupBy("s", "p", "o").agg(tag.alias("tag"))
+        else:
+            seed = seed.select(*cols).dropDuplicates()
+        facts, rows, new = _checkpoint(seed.withColumn(_NEW, F.lit(True)), None)
+        self.rounds = [(rows, new)]
+        threshold = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        for _ in range(max_iter):
+            if new == 0 or not self.rules:
+                return facts.select(*cols)
+            delta = None
+            if not naive:
+                delta = facts.filter(F.col(_NEW))
+                if new * _ROW_BYTES <= threshold:  # -1 disables broadcasts
+                    delta = F.broadcast(delta)
+            derived = functools.reduce(
+                DataFrame.unionByName,
+                [apply_rule(facts, rule, semiring, delta) for rule in self.rules],
+            )
+            src = F.col("__src")
+            fresh = F.min(src) == 1
+            aggs = [fresh.alias(_NEW)]
+            if semiring:
+                kept = F.max(F.when(src == 0, F.col("tag")))
+                aggs.append(F.when(fresh, semiring.plus_agg(F.col("tag"))).otherwise(kept).alias("tag"))
+            merged = (
+                derived.withColumn("__src", F.lit(1))
+                .unionByName(facts.select(*cols, F.lit(0).alias("__src")))
+                .groupBy("s", "p", "o")
+                .agg(*aggs)
+            )
+            if admit is not None:
+                merged = admit(merged)
+            facts, rows, new = _checkpoint(merged, rows)
+            self.rounds.append((rows, new))
+        if new and self.rules:
+            raise RuntimeError(
+                f"fixpoint did not converge in max_iter={max_iter} rounds: "
+                f"the last round derived {new} new facts"
+            )
+        return facts.select(*cols)
+
     # ---------------------------------------------------------- provenance
     def materialize_with_provenance(
         self, tagged_facts: DataFrame, semiring: Semiring, max_iter: int = 25
     ) -> DataFrame:
-        """Tagged fixpoint: (s,p,o,tag). Per round, alternative derivations
-        of the same fact merge with ⊕; existing facts keep the ⊕ of old and
-        new evidence. Iterates until the fact set stops growing (tag
-        saturation beyond max_iter is cut off, like the reference's
-        saturating semirings)."""
-        facts = tagged_facts.localCheckpoint(eager=True)
-        for _ in range(max_iter):
-            derived = None
-            for rule in self.rules:
-                d = apply_rule(facts, rule, semiring=semiring)
-                derived = d if derived is None else derived.unionByName(d)
-            if derived is None:
-                break
-            # ⊕ across the round's distinct derivations of one fact (each
-            # derivation path appears exactly once per round); a fact already
-            # in the store keeps its tag — re-deriving the same paths next
-            # round must not re-accumulate evidence (matches the reference's
-            # saturating tagged semi-naive, provenance_semi_naive.rs:210-330)
-            # lazy mark + count = one action per round (r12, guide §1.2);
-            # the running `facts` re-checkpoint below stays EAGER: it has
-            # no paired probe and every rule consumes it next round, so a
-            # lazy mark there would let sibling stages duplicate its
-            # computation before the first persist lands
-            new_facts = (
-                derived.groupBy("s", "p", "o")
-                .agg(semiring.plus_agg(F.col("tag")).alias("tag"))
-                .join(facts.select("s", "p", "o"), on=["s", "p", "o"], how="left_anti")
-                .localCheckpoint(eager=False)
-            )
-            if new_facts.count() == 0:
-                break
-            facts = facts.unionByName(new_facts).localCheckpoint(eager=True)
-        return facts
+        """Tagged fixpoint: (s,p,o,tag). Each round derives from all facts;
+        alternative derivations of a new fact merge with ⊕, and a fact
+        already held keeps its tag — re-deriving the same paths next round
+        must not re-accumulate evidence (the reference's saturating tagged
+        semi-naive, provenance_semi_naive.rs:210-330). Duplicate seed rows
+        merge with ⊕. Iterates until no new fact appears; raises
+        ``RuntimeError`` if that takes more than ``max_iter`` rounds."""
+        return self._fixpoint(tagged_facts, naive=True, max_iter=max_iter, semiring=semiring)
 
     # ------------------------------------------------------- constraints
     def check_constraints(self) -> DataFrame:
@@ -353,7 +378,7 @@ class Reasoner:
             d = apply_rule(self.facts, c)
             out = d if out is None else out.unionByName(d)
         if out is None:
-            return self.spark.createDataFrame([], FACTS_SCHEMA)
+            return local_df(self.spark, [], FACT_COLS)
         return out.dropDuplicates()
 
     def repair(self, max_removals: int = 4) -> list[set[tuple[str, str, str]]]:
@@ -371,7 +396,6 @@ class Reasoner:
         support: set[tuple[str, str, str]] = set()
         for c in self.constraints:
             for pat in c.premise:
-                rows = _scan(self.facts, pat, tagged=False)
                 # recover full triples for matched bindings
                 matched = apply_rule(self.facts, Rule(premise=[pat], conclusion=[pat]))
                 support |= {tuple(r) for r in matched.dropDuplicates().collect()}
@@ -383,7 +407,7 @@ class Reasoner:
                 if any(r <= set(subset) for r in repairs):
                     continue  # supersets of a found repair aren't minimal
                 trial = Reasoner(self.spark)
-                remove = self.spark.createDataFrame(list(subset), FACTS_SCHEMA)
+                remove = local_df(self.spark, list(subset), FACT_COLS)
                 trial.facts = base.exceptAll(remove)
                 trial.constraints = self.constraints
                 if trial.check_constraints().isEmpty():
@@ -409,53 +433,26 @@ class Reasoner:
             repairs = self.repair()
             if repairs:
                 best = sorted(repairs, key=lambda r: (len(r), sorted(r)))[0]
-                rm = self.spark.createDataFrame(sorted(best), FACTS_SCHEMA)
+                rm = local_df(self.spark, sorted(best), FACT_COLS)
                 self.facts = self.facts.join(
                     rm, on=["s", "p", "o"], how="left_anti"
                 )
-        facts = self.facts.localCheckpoint(eager=True)
-        delta = facts
-        for _ in range(max_iter):
-            derived = None
-            for rule in self.rules:
-                d = apply_rule(facts, rule, delta=delta)
-                derived = d if derived is None else derived.unionByName(d)
-            if derived is None:
-                break
-            # lazy mark + count probes (r12, guide §1.2) — same fusion as
-            # materialize(); both marks complete inside their count job
-            new_delta = (
-                derived.dropDuplicates()
-                .join(facts, on=["s", "p", "o"], how="left_anti")
-                .localCheckpoint(eager=False)
-            )
-            if new_delta.count() == 0:
-                break
-            candidate = facts.unionByName(new_delta)
-            support = self._violation_support(candidate)
-            if support is not None:
-                new_delta = new_delta.join(
-                    support, on=["s", "p", "o"], how="left_anti"
-                ).localCheckpoint(eager=False)
-                if new_delta.count() == 0:
-                    break
-            facts = facts.unionByName(new_delta)
-            delta = new_delta
-        self.facts = facts
-        return facts
 
-    def _violation_support(self, facts: DataFrame) -> DataFrame | None:
-        """Facts instantiating any constraint premise within a violation
-        binding over ``facts`` (None when there are no constraints)."""
-        sup = None
-        for c in self.constraints:
-            scans = [_scan(facts, p, tagged=False) for p in c.premise]
-            df = _join_premises(scans)
-            df = _apply_filters(df, c.filters)
-            df = _apply_negation(df, facts, c)
-            inst = _instantiate(df, c.premise, None)
-            sup = inst if sup is None else sup.unionByName(inst)
-        return sup.dropDuplicates() if sup is not None else None
+        def admit(merged: DataFrame) -> DataFrame:
+            """Drop the new facts that instantiate a constraint premise
+            within a violation over the merged fact set."""
+            if not self.constraints:
+                return merged
+            support = functools.reduce(DataFrame.unionByName, [
+                apply_rule(merged, replace(c, conclusion=c.premise))
+                for c in self.constraints
+            ])
+            return merged.join(
+                support.withColumn(_NEW, F.lit(True)), on=["s", "p", "o", _NEW], how="left_anti"
+            )
+
+        self.facts = self._fixpoint(self.facts, naive=False, max_iter=max_iter, admit=admit)
+        return self.facts
 
     # ------------------------------------------------------------- queries
     def query_abox(
@@ -479,7 +476,7 @@ class Reasoner:
         for removal in removals or [set()]:
             facts = self.facts
             if removal:
-                rm = self.spark.createDataFrame(sorted(removal), FACTS_SCHEMA)
+                rm = local_df(self.spark, sorted(removal), FACT_COLS)
                 facts = facts.join(rm, on=["s", "p", "o"], how="left_anti")
             rows = _scan(facts, pattern, tagged=False).dropDuplicates().collect()
             answer_sets.append({tuple(sorted(r.asDict().items())) for r in rows})
