@@ -1366,9 +1366,9 @@ def _q_closure_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # constant chain DEPTH (~48), chain COUNT grows with the data: the
     # closure output stays linear in |part| (a depth-d chain contributes
     # d·(d+1)/2 pairs, so depth ∝ n would make the result quadratic and
-    # the gate a scale-killer by construction), and the doubling runs a
-    # fixed ⌈log₂ 48⌉ = 6 rounds at every SF with no convergence counts —
-    # the diameter is known from one row count.
+    # the gate a scale-killer by construction), and the doubling runs
+    # ⌊log₂ 48⌋ + 1 = 6 rounds at every SF: the last one's checkpoint job
+    # observes an empty frontier.
     n = part.count()
     m = max(1, n // 48)
     w = Window.partitionBy(F.col("p_partkey") % m).orderBy("p_partkey")
@@ -1378,10 +1378,7 @@ def _q_closure_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("dst").isNotNull())
         .select(F.col("p_partkey").alias("src"), "dst")
     )
-    depth = -(-n // m)  # ceil: the longest chain
-    closure = transitive_closure(
-        edges, src="src", dst="dst", known_diameter=int(depth)
-    )
+    closure = transitive_closure(edges, src="src", dst="dst")
     return (
         closure.groupBy((F.col("src") % 64).alias("grp"))
         .agg(F.count(F.lit(1)).alias("pairs"))

@@ -27,16 +27,17 @@ exactly 2^k (a shorter one would contradict m minimal), so each closure
 pair is derived exactly once per round it can first appear — join output
 is proportional to the NEW pairs, total work O(|closure|) across all
 ⌈log₂ d⌉ rounds.  Each round is one equi-join plus one min aggregation,
-both plain shuffles AQE can re-plan, with `localCheckpoint` truncating
-lineage exactly like the label-propagation loop in operators/dedup.py.
-Cycles converge too (min-dist is bounded by |V|; H empties past the
-diameter).
+checkpointed eagerly through fixpoint's ``_checkpoint`` with H_{k+1}
+flagged ``__new``: the checkpoint job's observed count of H_{k+1} ends the
+loop, as no pair can lie farther than an empty frontier (a shortest path
+past 2^{k+1} passes a vertex at exactly 2^{k+1}).  Cycles converge too
+(min-dist is bounded by |V|).
 
 Trade-off (documented for the 100 TB read): the closure itself is the
 output — a K-vertex chain yields K²/2 pairs.  Use this when ancestor sets
 are the requested result or the diameter is large; for shallow hierarchies
-the Reasoner's semi-naive fixpoint (reasoner/fixpoint.py:241) touches
-fewer total tuples.
+the Reasoner's semi-naive fixpoint (``fixpoint.fixpoint``) touches fewer
+total tuples.  SPARQL's var-var ``p+`` path is this closure.
 
 Delta-only checkpointing was tried and measured SLOWER here (r8, VERDICT
 r7 task #4; numbers in BASELINE.md): two formulations — (a) per-round
@@ -58,6 +59,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from kolibrie_spark.reasoner.fixpoint import _NEW, _checkpoint
+
 
 def transitive_closure(
     edges: DataFrame,
@@ -65,82 +68,47 @@ def transitive_closure(
     dst: str = "dst",
     max_iter: int = 25,
     keep_distance: bool = False,
-    known_diameter: int | None = None,
 ) -> DataFrame:
     """All pairs (src, dst) with dst reachable from src via ≥1 edge.
-    Converges in ⌈log₂ diameter⌉ rounds (distance-tracked doubling).
+    Converges in ⌊log₂ diameter⌋ + 1 rounds (distance-tracked doubling).
 
+    Each round is one eager checkpoint of the min-distance pairs with the
+    next frontier (``dist == 2*hop``) flagged ``__new``; the loop ends when
+    the checkpoint job observes an empty frontier, so it runs no count.
     `max_iter` is a runaway bound, not a tuning knob: 25 doublings cover a
     diameter of 2**25 ≈ 33M, far past any real hierarchy.  Raises if not
     converged by then.  With `keep_distance` the result carries a `dist`
     column = shortest hop count.
-
-    `known_diameter` skips the per-round convergence count: when the
-    caller can bound the longest shortest-path (e.g. chains bounded by
-    group size), exactly ⌈log₂ d⌉ doubling rounds run with no counting
-    actions — one job per checkpoint instead of two.
     """
-    reach = (
-        edges.select(F.col(src), F.col(dst))
-        .dropDuplicates()
-        .withColumn("dist", F.lit(1).cast("long"))
-        .localCheckpoint(eager=True)
+    seed = edges.select(F.col(src), F.col(dst)).dropDuplicates()
+    reach, rows, new = _checkpoint(
+        seed.withColumn("dist", F.lit(1).cast("long")).withColumn(_NEW, F.lit(True)), None
     )
-    if known_diameter is not None:
-        if known_diameter < 1:
-            raise ValueError("known_diameter must be >= 1")
-        rounds = max(0, (known_diameter - 1).bit_length())  # ceil(log2(d))
-        hop = 1
-        for _ in range(rounds):
-            a = reach.alias("a")
-            b = reach.filter(F.col("dist") == hop).alias("b")
-            stepped = a.join(b, F.col(f"a.{dst}") == F.col(f"b.{src}")).select(
-                F.col(f"a.{src}").alias(src),
-                F.col(f"b.{dst}").alias(dst),
-                (F.col("a.dist") + F.col("b.dist")).alias("dist"),
-            )
-            reach = (
-                reach.unionByName(stepped)
-                .groupBy(src, dst)
-                .agg(F.min("dist").alias("dist"))
-                .localCheckpoint(eager=True)
-            )
-            hop *= 2
-        return reach if keep_distance else reach.select(src, dst)
-    n = reach.count()
-    hop = 1  # H_k = pairs at shortest distance exactly 2^k
+    hop = 1  # the flagged frontier H_k: pairs at shortest distance exactly 2^k
     for _ in range(max_iter):
-        # past the diameter the frontier is empty, stepped adds nothing and
-        # the count check below breaks — no separate isEmpty action needed
-        frontier = reach.filter(F.col("dist") == hop)
-        a, b = reach.alias("a"), frontier.alias("b")
+        if new == 0:
+            break
+        a, b = reach.alias("a"), reach.filter(F.col(_NEW)).alias("b")
         stepped = a.join(b, F.col(f"a.{dst}") == F.col(f"b.{src}")).select(
             F.col(f"a.{src}").alias(src),
             F.col(f"b.{dst}").alias(dst),
             (F.col("a.dist") + F.col("b.dist")).alias("dist"),
         )
-        # Lazy mark + count. This is NOT one action per doubling: under
-        # AQE the lazy checkpoint already runs the plan's shuffle stages
-        # at call time, and the count then runs one more job that
-        # computes (and persists) every partition. The count is what
-        # makes the lazy mark safe here: the next round consumes `reach`
-        # twice (a-side and frontier), and by then it is fully persisted.
-        reach = (
-            reach.unionByName(stepped)
+        hop *= 2
+        merged = (
+            reach.select(src, dst, "dist")
+            .unionByName(stepped)
             .groupBy(src, dst)
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)  # truncate lineage each doubling
+            .withColumn(_NEW, F.col("dist") == hop)
         )
-        grown = reach.count()
-        hop *= 2
-        if grown == n:
-            break
-        n = grown
+        reach, rows, new = _checkpoint(merged, rows)
     else:
-        raise RuntimeError(
-            f"transitive_closure did not converge in {max_iter} doublings"
-        )
-    return reach if keep_distance else reach.select(src, dst)
+        if new:
+            raise RuntimeError(
+                f"transitive_closure did not converge in {max_iter} doublings"
+            )
+    return reach.select(src, dst, *(["dist"] if keep_distance else []))
 
 
 def ancestors_via_closure(

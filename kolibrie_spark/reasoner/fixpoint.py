@@ -13,22 +13,32 @@ Reference algorithms re-expressed as DataFrame plans:
 - backward chaining (reasoning/backward_chaining.rs:150): driver-side
   goal-directed resolution issuing DataFrame probes per subgoal.
 
-Scale notes: all four materializations run one loop, ``Reasoner._fixpoint``.
-With small inputs a round costs Spark jobs, stages and tasks, not data, so:
-the fact set is ONE local checkpoint with a boolean ``__new`` column (the
-delta is ``facts.filter(__new)``); dedup and the anti-join against old facts
-are one ``groupBy(s, p, o)`` over derived ∪ facts; the delta is broadcast
-while its known row count fits ``spark.sql.autoBroadcastJoinThreshold``; and
-the round is checkpointed EAGERLY under an ``Observation`` of its total and
-new row counts, so the emptiness test runs no job of its own. (A lazy
-checkpoint plus ``count()`` is not one action under AQE: the lazy checkpoint
-runs the plan's shuffle stages at call time and the count one more job.)
+The engine's DataFrame fixpoints run one loop, ``fixpoint``. Its callers:
+- the four ``Reasoner.materialize*`` methods, keyed on ``(s, p, o)``
+  (provenance tags keep their first merged value; repairs filter each
+  round through ``admit``);
+- the ground-endpoint ``+``/``*`` property-path BFS
+  (``sparql/compiler.py``), keyed on the reached node;
+- the cross-window SDS+ recompute (``streaming/cross_window.py``), naive,
+  with the expiry as the tag, merged by max.
+``closure.transitive_closure`` keeps its own doubling loop (its step needs
+the hop) but checkpoints through the same ``_checkpoint``.
+
+Scale notes: with small inputs a round costs Spark jobs, stages and tasks,
+not data, so: the fact set is ONE local checkpoint with a boolean ``__new``
+column (the delta is ``facts.filter(__new)``); dedup and the anti-join
+against old facts are one ``groupBy(key)`` over derived ∪ facts; the delta
+is broadcast while its known row count fits
+``spark.sql.autoBroadcastJoinThreshold``; and the round is checkpointed
+EAGERLY under an ``Observation`` of its total and new row counts, so the
+emptiness test runs no job of its own.
 Rounds are capped by ``max_iter``; running out raises ``RuntimeError``.
 """
 
 from __future__ import annotations
 
 import functools
+from collections.abc import Callable
 from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -244,6 +254,75 @@ def _checkpoint(df: DataFrame, known_rows: int | None) -> tuple[DataFrame, int, 
     return facts, metrics["rows"], metrics["new"]
 
 
+def fixpoint(
+    seed: DataFrame,
+    step: Callable[[DataFrame, DataFrame], DataFrame | None],
+    key: list[str],
+    max_iter: int,
+    merge: Callable[[Column, Column], Column] | None = None,
+    admit: Callable[[DataFrame], DataFrame] | None = None,
+) -> tuple[DataFrame, list[tuple[int, int]]]:
+    """The engine's one DataFrame fixpoint loop (see the module notes).
+
+    The fact set has the ``key`` columns, plus ``tag`` when a ``merge`` is
+    given. ``step(facts, delta)`` returns the round's derived rows (same
+    columns), or None when nothing can ever be derived; ``delta`` is the
+    last round's new rows, so a semi-naive step joins it and a naive step
+    ignores it. Each round merges derived (src 1) ∪ facts (src 0) in one
+    ``groupBy(key)``: ``merge(tag, old)`` aggregates the group's tags given
+    its old tag (NULL for a key with no old row). A key is new when it had
+    no old row or its merged tag differs from its old tag. ``admit``
+    filters the merged rows before the checkpoint. Duplicate seed keys
+    merge with ``merge(tag, NULL)``; a unique seed row keeps its tag.
+
+    Returns the facts without ``__new`` and ``(facts_rows, new_rows)`` per
+    round, entry 0 being the seed. Raises ``RuntimeError`` if rows are still
+    new after ``max_iter`` rounds."""
+    cols = key + (["tag"] if merge else [])
+    if merge:
+        one = F.count(F.lit(1)) == 1
+        tag = F.when(one, F.max("tag")).otherwise(merge(F.col("tag"), F.lit(None)))
+        seed = seed.groupBy(*key).agg(tag.alias("tag"))
+    else:
+        seed = seed.select(*cols).dropDuplicates()
+    facts, rows, new = _checkpoint(seed.withColumn(_NEW, F.lit(True)), None)
+    rounds = [(rows, new)]
+    threshold = seed.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    for _ in range(max_iter):
+        if new == 0:
+            break
+        delta = facts.filter(F.col(_NEW))
+        if new * _ROW_BYTES <= threshold:  # -1 disables broadcasts
+            delta = F.broadcast(delta)
+        derived = step(facts, delta)
+        if derived is None:
+            break
+        src = F.col("__src")
+        fresh = F.min(src) == 1
+        aggs = [fresh.alias(_NEW)]
+        if merge:
+            old = F.max(F.when(src == 0, F.col("tag")))
+            tag = merge(F.col("tag"), old)
+            aggs = [(fresh | ~tag.eqNullSafe(old)).alias(_NEW), tag.alias("tag")]
+        merged = (
+            derived.withColumn("__src", F.lit(1))
+            .unionByName(facts.select(*cols, F.lit(0).alias("__src")))
+            .groupBy(*key)
+            .agg(*aggs)
+        )
+        if admit is not None:
+            merged = admit(merged)
+        facts, rows, new = _checkpoint(merged, rows)
+        rounds.append((rows, new))
+    else:
+        if new:
+            raise RuntimeError(
+                f"fixpoint did not converge in max_iter={max_iter} rounds: "
+                f"the last round derived {new} new facts"
+            )
+    return facts.select(*cols), rounds
+
+
 class Reasoner:
     """Facts + rules with materialization (reference datalog/src/reasoning.rs).
 
@@ -304,58 +383,22 @@ class Reasoner:
         semiring: Semiring | None = None,
         admit=None,
     ) -> DataFrame:
-        """The one fixpoint loop behind every ``materialize*`` method (see
-        the module notes). A round derives from the delta in each premise
-        position, or from all facts when ``naive``; a fact is new iff every
-        row of its ``groupBy(s, p, o)`` group over derived (src 1) ∪ facts
-        (src 0) is derived. With a ``semiring`` a new fact's tag is the ⊕
-        of the round's derivations and an old fact keeps its tag. ``admit``
-        filters the merged rows (repairs drop violating new facts there).
-        Returns the facts without ``__new``."""
-        cols = FACT_COLS + (["tag"] if semiring else [])
-        if semiring:  # a unique seed row keeps its tag exactly
-            one = F.count(F.lit(1)) == 1
-            tag = F.when(one, F.max("tag")).otherwise(semiring.plus_agg(F.col("tag")))
-            seed = seed.groupBy("s", "p", "o").agg(tag.alias("tag"))
-        else:
-            seed = seed.select(*cols).dropDuplicates()
-        facts, rows, new = _checkpoint(seed.withColumn(_NEW, F.lit(True)), None)
-        self.rounds = [(rows, new)]
-        threshold = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-        for _ in range(max_iter):
-            if new == 0 or not self.rules:
-                return facts.select(*cols)
-            delta = None
-            if not naive:
-                delta = facts.filter(F.col(_NEW))
-                if new * _ROW_BYTES <= threshold:  # -1 disables broadcasts
-                    delta = F.broadcast(delta)
-            derived = functools.reduce(
-                DataFrame.unionByName,
-                [apply_rule(facts, rule, semiring, delta) for rule in self.rules],
-            )
-            src = F.col("__src")
-            fresh = F.min(src) == 1
-            aggs = [fresh.alias(_NEW)]
-            if semiring:
-                kept = F.max(F.when(src == 0, F.col("tag")))
-                aggs.append(F.when(fresh, semiring.plus_agg(F.col("tag"))).otherwise(kept).alias("tag"))
-            merged = (
-                derived.withColumn("__src", F.lit(1))
-                .unionByName(facts.select(*cols, F.lit(0).alias("__src")))
-                .groupBy("s", "p", "o")
-                .agg(*aggs)
-            )
-            if admit is not None:
-                merged = admit(merged)
-            facts, rows, new = _checkpoint(merged, rows)
-            self.rounds.append((rows, new))
-        if new and self.rules:
-            raise RuntimeError(
-                f"fixpoint did not converge in max_iter={max_iter} rounds: "
-                f"the last round derived {new} new facts"
-            )
-        return facts.select(*cols)
+        """Every ``materialize*`` method on the kernel, keyed on
+        ``(s, p, o)``: a round derives from the delta in each premise
+        position, or from all facts when ``naive``. With a ``semiring`` a
+        new fact's tag is the ⊕ of the round's derivations and an old fact
+        keeps its tag, so it is never new again."""
+
+        def step(facts: DataFrame, delta: DataFrame) -> DataFrame | None:
+            if not self.rules:
+                return None
+            return functools.reduce(DataFrame.unionByName, [
+                apply_rule(facts, rule, semiring, None if naive else delta) for rule in self.rules
+            ])
+
+        merge = (lambda tag, old: F.coalesce(old, semiring.plus_agg(tag))) if semiring else None
+        facts, self.rounds = fixpoint(seed, step, FACT_COLS, max_iter, merge, admit)
+        return facts
 
     # ---------------------------------------------------------- provenance
     def materialize_with_provenance(

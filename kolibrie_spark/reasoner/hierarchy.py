@@ -43,8 +43,9 @@ from enum import IntEnum
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kolibrie_spark.reasoner.fixpoint import FACTS_SCHEMA, Reasoner
+from kolibrie_spark.reasoner.fixpoint import FACT_COLS, Reasoner
 from kolibrie_spark.reasoner.rule import Rule
+from kolibrie_spark.schema import local_df
 from kolibrie_spark.sparql.ast import Iri, Lit, TriplePattern, Var
 
 
@@ -214,7 +215,7 @@ class ReasoningHierarchy:
         of every other level is memoized in ``distinct_cache`` across the
         rules of one inference walk (BASE alone used to pay its dedup
         once per cross-level rule)."""
-        out = self.spark.createDataFrame([], FACTS_SCHEMA).withColumn(
+        out = local_df(self.spark, [], FACT_COLS).withColumn(
             "__lvl", F.lit(-1)
         )
         for lvl in deps:
@@ -269,7 +270,7 @@ class ReasoningHierarchy:
                 known_distinct.discard(level)
                 distinct_cache.pop(level, None)
             else:
-                new = self.spark.createDataFrame([], FACTS_SCHEMA)
+                new = local_df(self.spark, [], FACT_COLS)
 
             for hrule in [r for r in self.cross_level_rules if r.level == level]:
                 avail = self._dependency_facts(

@@ -37,10 +37,12 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kolibrie_spark import compare, rdfstar
+from kolibrie_spark.reasoner.closure import transitive_closure
+from kolibrie_spark.reasoner.fixpoint import fixpoint
 from kolibrie_spark.schema import local_df
 from kolibrie_spark.sparql import ast
 
@@ -705,9 +707,8 @@ class Compiler:
         """Evaluate a path expression to its edge set — a 2-column
         DataFrame (__src, __dst). Leaves reuse _scan, so constant
         predicates stay pushed down / partition-pruned; sequence = join,
-        alternative = union, inverse = column swap, '+' = semi-naive
-        transitive closure (delta joins the base edges; only the delta is
-        checkpointed, so lineage stays flat across iterations)."""
+        alternative = union, inverse = column swap, '+' = the distinct
+        pairs of reasoner.closure's doubling, in log rounds."""
         if isinstance(path, ast.Iri):
             pat = ast.TriplePattern(ast.Var("__src"), path, ast.Var("__dst"))
             return self._scan(pat, view, active_graph).df
@@ -767,40 +768,8 @@ class Compiler:
                 out = out.unionByName(b2)
             return out
         if isinstance(path, ast.PathPlus):
-            base = (
-                self._path_edges(path.inner, view, active_graph)
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            step = base.select(
-                F.col("__src").alias("__mid"), F.col("__dst").alias("__nxt")
-            )
-            acc, delta = base, base
-            while True:
-                grown = (
-                    delta.join(step, on=F.col("__dst") == F.col("__mid"))
-                    .select(F.col("__src"), F.col("__nxt").alias("__dst"))
-                    .distinct()
-                    .join(
-                        acc.select(
-                            F.col("__src").alias("__asrc"),
-                            F.col("__dst").alias("__adst"),
-                        ),
-                        on=(F.col("__src") == F.col("__asrc"))
-                        & (F.col("__dst") == F.col("__adst")),
-                        how="left_anti",
-                    )
-                    # lazy mark + count probe = one action per round (r12,
-                    # guide §1.2): the count computes every partition,
-                    # completing the checkpoint before next round's
-                    # delta/acc reads (take(1) on a lazily-marked frame
-                    # would leave it half-built)
-                    .localCheckpoint(eager=False)
-                )
-                if grown.count() == 0:
-                    return acc
-                acc = acc.unionByName(grown)
-                delta = grown
+            inner = self._path_edges(path.inner, view, active_graph)
+            return transitive_closure(inner, "__src", "__dst")
         raise CompileError(
             f"unsupported path element {path!r} — IRI leaves only; "
             "zero-length forms (*, ?) are supported solely as the outermost "
@@ -812,36 +781,24 @@ class Compiler:
         return self.store.spark.range(1).select()
 
     def _reachable_from(self, edges: DataFrame, start_value: str) -> DataFrame:
-        """Frontier BFS over an edge set from one ground node — returns the
-        reachable nodes (1 column __dst). Linear in edges touched, unlike
+        """Nodes reachable from one ground node (1 column __dst): a
+        semi-naive fixpoint keyed on __dst whose step joins only the last
+        round's new nodes to the edges. Linear in edges touched, unlike
         the full O(V^2)-pairs closure; this is what makes a ground-endpoint
-        `+` path viable at scale."""
-        base = edges.distinct().localCheckpoint(eager=True)
-        step = base.select(F.col("__src").alias("__mid"), F.col("__dst").alias("__nxt"))
-        frontier = (
-            base.filter(F.col("__src") == start_value)
-            .select("__dst")
-            .distinct()
-            .localCheckpoint(eager=True)
+        `+` path viable at scale. A shortest path uses each edge at most
+        once, so the edge count bounds the rounds."""
+        obs = Observation()
+        edges = (
+            edges.distinct().observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
         )
-        acc = frontier
-        while True:
-            grown = (
-                frontier.join(step, on=F.col("__dst") == F.col("__mid"))
-                .select(F.col("__nxt").alias("__dst"))
-                .distinct()
-                .join(
-                    acc.select(F.col("__dst").alias("__adst")),
-                    on=F.col("__dst") == F.col("__adst"),
-                    how="left_anti",
-                )
-                # lazy mark + count probe, as in the PathPlus closure above
-                .localCheckpoint(eager=False)
-            )
-            if grown.count() == 0:
-                return acc
-            acc = acc.unionByName(grown)
-            frontier = grown
+        hops = edges.select(F.col("__src").alias("__mid"), F.col("__dst").alias("__nxt"))
+
+        def step(_facts: DataFrame, delta: DataFrame) -> DataFrame:
+            return delta.join(hops, F.col("__dst") == F.col("__mid")).select(F.col("__nxt").alias("__dst"))
+
+        seed = edges.filter(F.col("__src") == start_value).select("__dst")
+        nodes, _ = fixpoint(seed, step, ["__dst"], max_iter=obs.get["n"])
+        return nodes
 
     def _path_pattern(
         self,

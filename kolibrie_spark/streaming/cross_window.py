@@ -20,9 +20,15 @@ mirroring the reference's two maintenance modes.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from kolibrie_spark.reasoner.fixpoint import FACT_COLS, MIN_MAX, apply_rule, fixpoint
 from kolibrie_spark.reasoner.rule import Rule
+from kolibrie_spark.schema import local_df
 from kolibrie_spark.sparql.ast import Iri, Lit, TriplePattern, Var
 
 
@@ -201,57 +207,32 @@ def naive_sds_plus(
 def dataframe_sds_plus(
     spark, rules: list[Rule], sds: Sds, now: int, max_iter: int = 20
 ) -> dict[str, list[Fact]]:
-    """DataFrame-backed SDS+ recompute for LARGE windows: the fixpoint runs
-    distributed through reasoner/fixpoint's tagged rule application with the
-    expiry as the provenance tag (⊗ = min over premise expiries, ⊕ = max
-    over alternative derivations — fixpoint.MIN_MAX is exactly that
-    algebra). Matches naive_sds_plus/IncrementalSdsPlus output
-    (cross_window_incremental.rs:26 maintenance semantics); the driver-side
-    variants stay the faithful small-window modes.
+    """DataFrame-backed SDS+ recompute for LARGE windows; matches
+    naive_sds_plus/IncrementalSdsPlus output (cross_window_incremental.rs:26
+    maintenance semantics); the driver-side variants stay the faithful
+    small-window modes. Raises ``RuntimeError`` past ``max_iter`` rounds."""
+    return _project_outputs(
+        _dataframe_fixpoint(spark, rules, _annotated_facts(sds, now), max_iter), sds
+    )
 
-    Per round: derive (fact, expiry) from all rules, merge with max() per
-    fact, stop when the (count, sum-of-expiry) pair stops changing —
-    expiries only grow and are drawn from a finite set, so this converges.
-    Static facts carry a never-expiring sentinel (2^62, an exact double).
-    """
-    from pyspark.sql import functions as F
 
-    from kolibrie_spark.reasoner.fixpoint import MIN_MAX, TAGGED_SCHEMA, apply_rule
+def _dataframe_fixpoint(
+    spark, rules: list[Rule], facts: dict[Fact, int], max_iter: int
+) -> dict[Fact, int]:
+    """``_fixpoint`` as a naive run of reasoner/fixpoint's kernel: the
+    expiry is the tag, ⊗ = min over premise expiries (fixpoint.MIN_MAX)
+    and the merge takes the max over the old expiry and the round's
+    derivations, so a fact is new again when its expiry grows. Expiries
+    are drawn from a finite set, so this converges. Static facts carry a
+    never-expiring sentinel (2^62, an exact double)."""
+    def step(facts: DataFrame, _delta: DataFrame) -> DataFrame | None:
+        derived = [apply_rule(facts, rule, semiring=MIN_MAX) for rule in rules]
+        return functools.reduce(DataFrame.unionByName, derived) if derived else None
 
-    base = _annotated_facts(sds, now)
-    facts = spark.createDataFrame(
-        [(s, p, o, float(e)) for (s, p, o), e in base.items()], TAGGED_SCHEMA
-    ).localCheckpoint(eager=True)
-    prev_stats = None
-    for _ in range(max_iter):
-        derived = None
-        for rule in rules:
-            d = apply_rule(facts, rule, semiring=MIN_MAX)
-            derived = d if derived is None else derived.unionByName(d)
-        if derived is None:
-            break
-        # lazy mark + the stats aggregate = one action per round (r12,
-        # guide §1.2): the aggregate computes every partition, completing
-        # the checkpoint in the job that reads convergence, and by the
-        # time each rule re-consumes `facts` next round it is persisted
-        facts = (
-            facts.unionByName(derived)
-            .groupBy("s", "p", "o")
-            .agg(F.max("tag").alias("tag"))
-            .localCheckpoint(eager=False)
-        )
-        row = facts.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("tag").alias("te")
-        ).first()
-        stats = (row.n, row.te)
-        if stats == prev_stats:
-            break
-        prev_stats = stats
-    derived_facts = {
-        (r.s, r.p, r.o): int(r.tag)
-        for r in facts.filter(F.col("tag") > now).collect()
-    }
-    return _project_outputs(derived_facts, sds)
+    rows = [(s, p, o, repr(float(e))) for (s, p, o), e in facts.items()]
+    seed = local_df(spark, rows, FACT_COLS + ["tag"]).withColumn("tag", F.col("tag").cast("double"))
+    out, _ = fixpoint(seed, step, FACT_COLS, max_iter, merge=lambda tag, _old: F.max(tag))
+    return {(r.s, r.p, r.o): int(r.tag) for r in out.collect()}
 
 
 class IncrementalSdsPlus:

@@ -58,8 +58,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # Cumulative control-plane phase timers (r13, guide §1: measure where the
-# per-batch wall time goes before cutting jobs). Keys: stats / closes /
-# eval / emit. Reset by callers that want a per-gate reading; the cost is
+# per-batch wall time goes before cutting jobs). Keys: stats / closes
+# (general path), control (the fast path's stats + closes), eval / emit.
+# Reset by callers that want a per-gate reading; the cost is
 # two perf_counter() calls per phase — noise next to any Spark job.
 PHASE_SEC: dict[str, float] = {}
 PHASE_N: dict[str, int] = {}

@@ -390,3 +390,59 @@ def test_dataframe_path_multihop_with_static(spark):
     assert dataframe_sds_plus(spark, rules, sds, now=15) == naive_sds_plus(
         rules, sds, now=15
     )
+
+
+def _growth_rules():
+    """alert is first derived from the short-lived w1 fact (expiry 11) and
+    re-derived in round 2 through co2seen (expiry 105); evacuate follows
+    alert, so its expiry grows one round later."""
+    def rule(premise, conclusion):
+        return Rule(
+            premise=[TriplePattern(Var("r"), Iri(p), Iri(o)) for p, o in premise],
+            conclusion=[TriplePattern(Var("r"), Iri(p), Iri(o)) for p, o in conclusion],
+        )
+
+    temp, co2 = annotate_predicate(W1, "temp"), annotate_predicate(W2, "co2")
+    alert, seen = annotate_predicate(OUT, "alert"), annotate_predicate(OUT, "co2seen")
+    evacuate = annotate_predicate(OUT, "evacuate")
+    return [
+        rule([(temp, "high")], [(alert, "on")]),
+        rule([(co2, "high")], [(seen, "yes")]),
+        rule([(seen, "yes")], [(alert, "on")]),
+        rule([(alert, "on"), (seen, "yes")], [(evacuate, "now")]),
+    ]
+
+
+def _growth_sds():
+    sds = Sds(output_iris={OUT})
+    sds.set_window(W1, 10, [WindowedTriple("room1", "temp", "high", 1)])
+    sds.set_window(W2, 100, [WindowedTriple("room1", "co2", "high", 5)])
+    return sds
+
+
+def test_dataframe_path_takes_grown_expiry(spark):
+    """A fact re-derived with a later expiry is new again, so the expiries
+    (not just the fact set) equal the driver-side fixpoint's."""
+    from kolibrie_spark.streaming.cross_window import (
+        _annotated_facts,
+        _dataframe_fixpoint,
+        _fixpoint,
+        dataframe_sds_plus,
+    )
+
+    rules, sds = _growth_rules(), _growth_sds()
+    facts = _annotated_facts(sds, now=9)
+    expected = _fixpoint(rules, facts)
+    assert expected[("room1", annotate_predicate(OUT, "alert"), "on")] == 105
+    assert expected[("room1", annotate_predicate(OUT, "evacuate"), "now")] == 105
+    assert _dataframe_fixpoint(spark, rules, facts, max_iter=20) == expected
+    assert dataframe_sds_plus(spark, rules, sds, now=9) == naive_sds_plus(rules, sds, now=9)
+
+
+def test_dataframe_path_raises_when_out_of_rounds(spark):
+    import pytest
+
+    from kolibrie_spark.streaming.cross_window import dataframe_sds_plus
+
+    with pytest.raises(RuntimeError, match="max_iter=1 "):
+        dataframe_sds_plus(spark, _growth_rules(), _growth_sds(), now=9, max_iter=1)

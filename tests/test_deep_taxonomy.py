@@ -119,19 +119,35 @@ def test_doubling_raises_on_max_iter_exhausted(spark):
         transitive_closure(edges, max_iter=2)  # diameter 40 needs ~6
 
 
-def test_known_diameter_path_skips_counts_and_agrees(spark):
-    """known_diameter runs exactly ceil(log2(d)) rounds with no
-    convergence actions and must produce the identical closure."""
-    depth = 37
-    facts = spark.createDataFrame(_taxonomy_triples(depth), ["s", "p", "o"])
-    edges = facts.filter(F.col("p") == SUBCLASS).select(
-        F.col("s").alias("src"), F.col("o").alias("dst")
-    )
-    probed = transitive_closure(edges)
-    bounded = transitive_closure(edges, known_diameter=depth)
-    got_a = {(r.src, r.dst) for r in probed.collect()}
-    got_b = {(r.src, r.dst) for r in bounded.collect()}
-    assert got_a == got_b and len(got_a) == (depth + 1) * depth // 2
-    # an over-estimate of the diameter is harmless (extra no-op round)
-    over = transitive_closure(edges, known_diameter=depth * 2)
-    assert {(r.src, r.dst) for r in over.collect()} == got_a
+def _chain_pairs(depth: int) -> set[tuple[str, str]]:
+    return {(f"urn:C{a}", f"urn:C{b}") for a in range(depth + 1) for b in range(a + 1, depth + 1)}
+
+
+def test_doubling_round_count_pin(spark):
+    """Round k joins the frontier at distance 2**k and flags the pairs at
+    2**(k+1); the loop ends on the first empty flagged frontier. Depth 37
+    fills distances 2..64 in 6 rounds, so max_iter=6 converges and
+    max_iter=5 still holds a non-empty frontier. A depth-32 chain (a power
+    of two) and a 3-cycle give the exact closure."""
+    def edges(depth):
+        facts = spark.createDataFrame(_taxonomy_triples(depth), ["s", "p", "o"])
+        return facts.filter(F.col("p") == SUBCLASS).select(
+            F.col("s").alias("src"), F.col("o").alias("dst")
+        )
+
+    got = transitive_closure(edges(37), max_iter=6)
+    assert {(r.src, r.dst) for r in got.collect()} == _chain_pairs(37)
+    with pytest.raises(RuntimeError, match="did not converge in 5 doublings"):
+        transitive_closure(edges(37), max_iter=5)
+
+    got = transitive_closure(edges(32), keep_distance=True).collect()
+    assert {(r.src, r.dst) for r in got} == _chain_pairs(32)
+    assert all(int(r.dst[5:]) - int(r.src[5:]) == r.dist for r in got)
+
+    cycle = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "a")], ["src", "dst"])
+    got = transitive_closure(cycle, keep_distance=True)
+    assert sorted(tuple(r) for r in got.collect()) == [
+        ("a", "a", 3), ("a", "b", 1), ("a", "c", 2),
+        ("b", "a", 2), ("b", "b", 3), ("b", "c", 1),
+        ("c", "a", 1), ("c", "b", 2), ("c", "c", 3),
+    ]
