@@ -729,47 +729,6 @@ def _sim_topk_pq_oracle() -> str:
     )
 
 
-def _q_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed CurationPipeline chain (repetition filter → exact dedup →
-    leakage-safe split) — verifies the fluent API composes the operators
-    without changing their individually-gated semantics. One Catalyst plan:
-    the filter merges into the scan, dedup is the only shuffle, split is a
-    pure expression."""
-    from kolibrie_spark.pipeline import CurationPipeline
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    out = (
-        CurationPipeline(docs)
-        .filter_repetition(max_dup_3gram=0.2)
-        .dedup_exact()
-        .split_by_group("source", _SPLITS)
-        .dataframe()
-    )
-    return out.select("doc_id", "source", "split")
-
-
-def _pipeline_curate_oracle() -> str:
-    from kolibrie_spark.operators.sampling import group_split_duckdb_case
-    from kolibrie_spark.operators.textanalysis import (
-        dup_ngram_fraction_duckdb,
-        fingerprint_duckdb_sql,
-    )
-
-    dup3 = dup_ngram_fraction_duckdb("text", 3)
-    fp = fingerprint_duckdb_sql("text")
-    case = group_split_duckdb_case("source", _SPLITS)
-    return f"""
-WITH base AS (
-  SELECT doc_id, text, source FROM documents WHERE {dup3} <= 0.2
-),
-fp AS (SELECT doc_id, {fp} AS f FROM base),
-keep AS (SELECT MIN(doc_id) AS doc_id FROM fp GROUP BY f)
-SELECT b.doc_id, b.source, {case} AS split
-FROM base b JOIN keep USING (doc_id)
-"""
-
-
 def _q_text_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocab tokenization: whitespace tokens mapped to ids through the
     corpus's own top-100 term vocabulary (OOV → 0). The vocab is a
@@ -812,24 +771,6 @@ SELECT doc_id,
          AS BIGINT) AS n_oov
 FROM documents, vocab
 """
-
-
-def _q_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style LM quality signal: mean bigram log-probability under an
-    add-k-smoothed LM trained on the corpus itself (one bigram explode, two
-    map-side-combined count aggregations, counts joined back; per-doc fold
-    in position order for bit-stability)."""
-    from kolibrie_spark.operators.lm import lm_score
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return lm_score(docs, "doc_id", "text")
-
-
-def _text_lm_score_oracle() -> str:
-    from kolibrie_spark.operators.lm import lm_score_duckdb_sql
-
-    return lm_score_duckdb_sql("documents", "doc_id", "text")
 
 
 def _q_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -943,49 +884,6 @@ def _dedup_incremental_oracle() -> str:
         "b.doc_id % 3 = 0",
         "doc_id % 3 <> 0",
         "b.doc_id, b.source",
-    )
-
-
-def _q_range_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-interval join without a cartesian: every purchase anchors
-    a 1-hour attribution window; all events landing in it join via the
-    hour-bin equi-join + exact predicate (no equi key exists, so naive
-    Spark would BroadcastNestedLoop). Value sums are integer-scaled
-    (cents) so the distributed aggregation is bit-exact."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.rangejoin import interval_join_binned
-    from kolibrie_spark.tables import load_table
-
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "value"
-    )
-    intervals = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("anchor_id"),
-            F.col("ts").alias("start_ts"),
-            (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("end_ts"),
-        )
-    )
-    joined = interval_join_binned(
-        events, intervals, "ts", "start_ts", "end_ts", bin_width_s=3600
-    )
-    return joined.groupBy("anchor_id").agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
-    )
-
-
-def _range_join_binned_oracle() -> str:
-    return (
-        "SELECT a.event_id AS anchor_id, COUNT(*) AS n_events, "
-        "CAST(SUM(CAST(round(e.value * 100) AS BIGINT)) AS BIGINT) AS value_cents "
-        "FROM events a JOIN events e "
-        "ON e.ts >= a.ts AND e.ts < a.ts + INTERVAL 1 HOUR "
-        "WHERE a.event_type = 'purchase' "
-        "GROUP BY a.event_id"
     )
 
 
@@ -1142,84 +1040,6 @@ def _graph_pagerank_oracle() -> str:
     from kolibrie_spark.operators.graph import pagerank_duckdb_sql
 
     return pagerank_duckdb_sql(_PAGERANK_EDGES_SQL, iterations=5)
-
-
-def _q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup: cluster embeddings into IVF cells (no-shuffle argmin
-    assignment), drop within-cell cosine near-duplicates keeping the
-    lowest id — the quadratic comparison is bounded per cell, the
-    paper's actual scale mechanism."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.semdedup import semantic_dedup
-    from kolibrie_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = semantic_dedup(emb, "vec_id", "embedding", ncells=8, threshold=0.4)
-    return out.select("vec_id", "label", "ivf_cell")
-
-
-def _dedup_semantic_oracle() -> str:
-    from kolibrie_spark.operators.semdedup import semantic_dedup_duckdb_sql
-
-    return semantic_dedup_duckdb_sql(
-        "embeddings",
-        "vec_id",
-        "embedding",
-        "t.vec_id, t.label",
-        ncells=8,
-        threshold=0.4,
-    )
-
-
-def _q_sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights: hashed-n-gram likelihood ratio of the
-    src0 target slice vs the whole corpus; scaled-integer log-prob sums
-    make the score shuffle-invariant and cross-engine exact."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.dsir import dsir_logweights
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    target = docs.where(F.col("source") == "src0")
-    return dsir_logweights(
-        docs, target, "doc_id", "text", buckets=256, target_within_raw=True
-    )
-
-
-def _sample_dsir_oracle() -> str:
-    from kolibrie_spark.operators.dsir import dsir_logweights_duckdb_sql
-
-    return dsir_logweights_duckdb_sql(
-        "documents", "doc_id", "text", "source = 'src0'", buckets=256
-    )
-
-
-_QUALITY_WEIGHTS = [3.0, -5.0, 4.0, -1.0, -2.0]
-_QUALITY_BIAS = -1.0
-
-
-def _q_text_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-based quality filter: logistic score over five doc-local
-    features (fixed literal weights here; train_quality_classifier
-    produces them from weak labels). Zero shuffle, whole-stage codegen;
-    9-dp rounding pins the sigmoid cross-engine."""
-    from kolibrie_spark.ml.quality import linear_quality_score
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return linear_quality_score(
-        docs, "doc_id", "text", _QUALITY_WEIGHTS, _QUALITY_BIAS
-    )
-
-
-def _text_quality_model_oracle() -> str:
-    from kolibrie_spark.ml.quality import linear_quality_score_duckdb_sql
-
-    return linear_quality_score_duckdb_sql(
-        "documents", "doc_id", "text", _QUALITY_WEIGHTS, _QUALITY_BIAS
-    )
 
 
 def _q_text_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1600,25 +1420,6 @@ def _url_canonicalize_oracle() -> str:
         f"WITH base AS (SELECT doc_id, {url} AS u FROM documents) "
         f"SELECT doc_id, {canon} AS canonical_url, {host} AS host FROM base"
     )
-
-
-def _q_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic export sharding manifest (operators/export.py):
-    per-shard row counts, char totals, and an order-independent xor
-    content hash over the cross-engine polynomial row hash — the
-    reproducible hand-off contract at the end of a curation run. One
-    hash aggregation; shard assignment is a pure key function."""
-    from kolibrie_spark.operators.export import shard_manifest
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return shard_manifest(docs, "doc_id", ["text", "source"], n_shards=16)
-
-
-def _export_manifest_oracle() -> str:
-    from kolibrie_spark.operators.export import shard_manifest_duckdb_sql
-
-    return shard_manifest_duckdb_sql("documents", "doc_id", ["text", "source"], 16)
 
 
 def _q_sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2178,116 +1979,6 @@ def _q_ml_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
         'ML.PREDICT(MODEL "price_score", INPUT { '
         "SELECT ?part ?price ?size WHERE { ?part <urn:part#p_retailprice> ?price . "
         "?part <urn:part#p_size> ?size } }, OUTPUT ?score)"
-    )
-
-
-def _q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal gate with REAL content decode for ALL THREE formats: each
-    document row synthesizes a valid media file (PNG / JPEG / WAV rotating
-    by doc_id) with deterministic CONTENT — PNG pixel(x,y) = (7x+13y+d)%256
-    encoded with filter type y%5 (so all five PNG unfilters must work),
-    JPEG pixel(x,y) = (d + x//8 + y//8)%256 encoded as a real baseline
-    entropy stream under a flat quant table (block-constant content is
-    DC-only, so the Huffman+IDCT round trip is BIT-EXACT and the oracle
-    can recompute it), WAV sample(i) = ((37i+11d)%4001)-2000.
-    ``extract_media_features`` decodes the actual IDAT / entropy-coded /
-    PCM bytes back out, so the DuckDB oracle verifies header fields AND
-    content-derived features bit-exactly."""
-    import numpy as np
-
-    from kolibrie_spark.operators.jpeg import QTABLE_FLAT, build_jpeg_baseline
-    from kolibrie_spark.operators.multimodal import (
-        build_png,
-        build_wav,
-        extract_media_features,
-    )
-    from kolibrie_spark.tables import load_table
-
-    # media decode is per-row Python CPU; spread a single-file read so
-    # the Arrow batches decode on every core
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def make(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                if did % 3 == 0:
-                    blob, mime = (
-                        build_png(
-                            did % 64 + 8,
-                            did % 48 + 8,
-                            pixel_fn=lambda x, y, d=did: (x * 7 + y * 13 + d) % 256,
-                            filter_cycle=True,
-                        ),
-                        "image/png",
-                    )
-                elif did % 3 == 1:
-                    w, h = did % 64 + 8, did % 48 + 8
-                    img = (
-                        did
-                        + np.arange(w)[None, :] // 8
-                        + np.arange(h)[:, None] // 8
-                    ) % 256
-                    blob, mime = (
-                        build_jpeg_baseline(w, h, qtable=QTABLE_FLAT, image=img),
-                        "image/jpeg",
-                    )
-                else:
-                    blob, mime = (
-                        build_wav(
-                            (did % 100 + 10) * 8,
-                            sample_fn=lambda i, d=did: ((i * 37 + d * 11) % 4001) - 2000,
-                        ),
-                        "audio/wav",
-                    )
-                out.append((str(did), mime, blob))
-            yield pd.DataFrame(out, columns=["media_id", "mime", "data"])
-
-    media = docs.mapInPandas(make, schema="media_id string, mime string, data binary")
-    return extract_media_features(media).select(
-        "media_id", "format", "width", "height", "duration_ms",
-        "mean_luminance", "audio_rms", "audio_peak",
-    )
-
-
-def _multimodal_features_oracle() -> str:
-    """Header fields round-trip the construction formulas; content features
-    recompute the pixel/sample generators in DuckDB with the same integer
-    arithmetic (exact int sums → one double division/sqrt → bit-equal)."""
-    return (
-        "SELECT CAST(doc_id AS VARCHAR) AS media_id, "
-        "CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'wav' END AS format, "
-        "CASE doc_id % 3 WHEN 0 THEN CAST(doc_id % 64 + 8 AS INT) "
-        "WHEN 1 THEN CAST(doc_id % 64 + 8 AS INT) END AS width, "
-        "CASE doc_id % 3 WHEN 0 THEN CAST(doc_id % 48 + 8 AS INT) "
-        "WHEN 1 THEN CAST(doc_id % 48 + 8 AS INT) END AS height, "
-        "CASE doc_id % 3 WHEN 2 THEN CAST(doc_id % 100 + 10 AS INT) END AS duration_ms, "
-        "CASE doc_id % 3 WHEN 0 THEN "
-        "CAST(list_sum(flatten(list_transform(range(0, doc_id % 48 + 8), y -> "
-        "list_transform(range(0, doc_id % 64 + 8), x -> (x*7 + y*13 + doc_id) % 256)"
-        "))) AS DOUBLE) / ((doc_id % 64 + 8) * (doc_id % 48 + 8)) "
-        "WHEN 1 THEN "
-        "CAST(list_sum(flatten(list_transform(range(0, doc_id % 48 + 8), y -> "
-        "list_transform(range(0, doc_id % 64 + 8), x -> (doc_id + x // 8 + y // 8) % 256)"
-        "))) AS DOUBLE) / ((doc_id % 64 + 8) * (doc_id % 48 + 8)) "
-        "END AS mean_luminance, "
-        "CASE doc_id % 3 WHEN 2 THEN "
-        "sqrt(CAST(list_sum(list_transform(range(0, (doc_id % 100 + 10) * 8), i -> "
-        "((i*37 + doc_id*11) % 4001 - 2000) * ((i*37 + doc_id*11) % 4001 - 2000)"
-        ")) AS DOUBLE) / ((doc_id % 100 + 10) * 8)) "
-        "END AS audio_rms, "
-        "CASE doc_id % 3 WHEN 2 THEN "
-        "CAST(list_max(list_transform(range(0, (doc_id % 100 + 10) * 8), i -> "
-        "abs((i*37 + doc_id*11) % 4001 - 2000))) AS INT) "
-        "END AS audio_peak "
-        "FROM documents"
     )
 
 
@@ -3038,375 +2729,6 @@ def _hard_negatives_oracle() -> str:
     )
 
 
-def _q_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Modality-routed media near-dup (phash.media_near_dup_pairs) over a
-    deterministic synthetic corpus: doc pair (2g, 2g+1) carries the SAME
-    content where the second member is perturbed by an invariance the
-    fingerprint cancels EXACTLY — uniform brightness shift for PNG (only
-    the DCT DC coefficient moves, and pHash drops DC) and 2x gain for WAV
-    (the Haitsma-Kalker double delta cancels uniform log-energy shifts) —
-    so every within-group pair has hamming 0 and the oracle reduces to
-    doc_id arithmetic. Cross-group absence is part of the checked value
-    set (any accidental <=3-bit collision would fail the row count)."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.phash import media_near_dup_pairs
-    from kolibrie_spark.tables import load_table
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter("doc_id < 200")
-        # per-row Python decode work: spread the single-file read, capped
-        # at 8 tasks (r13 media adjudication, guide §4.5) — every extra
-        # partition claims an Arrow worker whose first use pays
-        # fork+module imports, and on these few-hundred-row ~1ms/row
-        # fixtures the 32-task pool spin-up dominated the compute ~3:1
-        # (first-call 5.4s vs 1.9s steady; the scalar-pandas pool has its
-        # own reuse key and gets idle-reaped between gates)
-        .repartition(min(spark.sparkContext.defaultParallelism, 8))
-    )
-
-    def make(batches):
-        import pandas as pd
-
-        from kolibrie_spark.operators.multimodal import build_png, build_wav
-
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                if g % 2 == 0:
-                    # group-dependent SPATIAL FREQUENCIES (not just a
-                    # constant offset — pHash drops DC, so offset-only
-                    # differences would collide across groups). The v=1
-                    # twin re-encodes the SAME pixels with the filter-type
-                    # cycle: different bytes (different filters + zlib
-                    # stream), identical content — invisible to exact-byte
-                    # dedup, hamming 0 for pHash by construction
-                    data = build_png(
-                        g % 16 + 8,
-                        g % 12 + 8,
-                        lambda x, y: (
-                            (x * (7 + g % 23) + y * (13 + g % 19) + g) * 31
-                        )
-                        % 200,
-                        filter_cycle=bool(v),
-                    )
-                else:
-                    # group-dependent CHIRP (quadratic phase): a stationary
-                    # tone has ~zero double-deltas, so every group would
-                    # fingerprint alike; the chirp rate (3+g) gives each
-                    # group its own time-frequency trajectory
-                    gain = 2 if v else 1
-                    # r5: frames must hold real spectra — at the old
-                    # 40-89 sample lengths the 17 frames were 2-5 samples
-                    # each and the exact-integer fingerprint honestly
-                    # ties (the float one differentiated via noise)
-                    data = build_wav(
-                        g % 50 * 8 + 1200,
-                        sample_fn=lambda i: (
-                            (((3 + g) * i * i + (37 + 3 * g) * i + 11 * g)
-                             % 4001) - 2000
-                        )
-                        * gain,
-                    )
-                out.append((did, data))
-            yield pd.DataFrame(out, columns=["media_id", "data"])
-
-    media = docs.mapInPandas(make, "media_id long, data binary")
-    out = media_near_dup_pairs(media, "media_id", max_hamming=1)
-    return out.select(
-        "id_a", "id_b", "modality", F.col("hamming").cast("long").alias("hamming")
-    )
-
-
-def _media_near_dup_oracle() -> str:
-    return (
-        "SELECT CAST(2*g AS BIGINT) AS id_a, CAST(2*g+1 AS BIGINT) AS id_b, "
-        "CASE WHEN g % 2 = 0 THEN 'image' ELSE 'audio' END AS modality, "
-        "CAST(0 AS BIGINT) AS hamming "
-        "FROM (SELECT doc_id // 2 AS g FROM documents WHERE doc_id < 200 "
-        "GROUP BY 1 HAVING COUNT(*) = 2)"
-    )
-
-
-def _q_media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pHash near-dup pairs (phash.phash_near_pairs) over TRIPLET groups
-    of content-identical PNG re-encodings: doc triple (3g, 3g+1, 3g+2)
-    carries the same group-specific pixel pattern encoded three
-    byte-distinct ways — plain filters, the all-five-filters cycle, and
-    an ancillary tEXt chunk. Exact-byte dedup sees three distinct blobs;
-    pHash decodes to identical pixels, so each complete triple yields its
-    3 pairs at hamming 0 and the oracle reduces to doc_id arithmetic.
-    Cross-group absence at hamming<=1 is part of the checked value set
-    (the r5 exact-integer pHash moved one tiny-image cross-group pair —
-    groups 0/98, 8x8 vs 10x10 px — to hamming 2, so the budget tightened
-    from 2 to keep the oracle pure doc-id arithmetic)."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.phash import phash_near_pairs
-    from kolibrie_spark.tables import load_table
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter("doc_id < 300")
-        # per-row Python decode work: spread the single-file read, capped
-        # at 8 tasks (r13 media adjudication, guide §4.5) — every extra
-        # partition claims an Arrow worker whose first use pays
-        # fork+module imports, and on these few-hundred-row ~1ms/row
-        # fixtures the 32-task pool spin-up dominated the compute ~3:1
-        # (first-call 5.4s vs 1.9s steady; the scalar-pandas pool has its
-        # own reuse key and gets idle-reaped between gates)
-        .repartition(min(spark.sparkContext.defaultParallelism, 8))
-    )
-
-    def make(batches):
-        import pandas as pd
-
-        from kolibrie_spark.operators.multimodal import build_png
-
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 3, did % 3
-                # group-dependent spatial frequencies (period lcm(23,19)
-                # = 437 > #groups, so no two groups share a pattern);
-                # the three variants re-encode IDENTICAL pixels
-                data = build_png(
-                    g % 16 + 8,
-                    g % 12 + 8,
-                    lambda x, y: (
-                        (x * (7 + g % 23) + y * (13 + g % 19) + g) * 31
-                    )
-                    % 200,
-                    filter_cycle=(v == 1),
-                    extra_text=f"variant-{g}" if v == 2 else None,
-                )
-                out.append((did, data))
-            yield pd.DataFrame(out, columns=["media_id", "data"])
-
-    media = docs.mapInPandas(make, "media_id long, data binary")
-    out = phash_near_pairs(media, "media_id", max_hamming=1)
-    return out.select(
-        "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
-    )
-
-
-def _media_triplet_pairs_oracle() -> str:
-    """Complete triples (3g, 3g+1, 3g+2) -> their 3 pairs at hamming 0."""
-    return (
-        "SELECT CAST(3*g + p.a AS BIGINT) AS id_a, "
-        "CAST(3*g + p.b AS BIGINT) AS id_b, CAST(0 AS BIGINT) AS hamming "
-        "FROM (SELECT doc_id // 3 AS g FROM documents WHERE doc_id < 300 "
-        "GROUP BY 1 HAVING COUNT(*) = 3), "
-        "(VALUES (0, 1), (0, 2), (1, 2)) AS p(a, b)"
-    )
-
-
-def _q_multimodal_frame_content(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real MJPEG-in-MP4 frame CONTENT decode (multimodal.sample_frames):
-    each blob is a spec-shaped MP4 whose stbl sample tables point at 4
-    baseline-JPEG frames in mdat; the sampler walks stts/stsz/stco to the
-    sample covering each requested timestamp, decodes it with the
-    pure-Python T.81 codec, and emits 16 box-mean features. Frames are
-    2x2 grids of constant 8x8 blocks under the flat quant table, so JPEG
-    round-trips the pixels EXACTLY and each 4x4 feature box lies inside
-    one block — feat_sum = 4 * sum of the four block values, closed-form
-    in the oracle. Certifies container walk + entropy decode + feature
-    extraction end-to-end (VERDICT r3 item #5)."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.multimodal import sample_frames
-    from kolibrie_spark.tables import load_table
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter("doc_id < 120")
-        # per-row Python decode work: spread the single-file read, capped
-        # at 8 tasks (r13 media adjudication, guide §4.5) — every extra
-        # partition claims an Arrow worker whose first use pays
-        # fork+module imports, and on these few-hundred-row ~1ms/row
-        # fixtures the 32-task pool spin-up dominated the compute ~3:1
-        # (first-call 5.4s vs 1.9s steady; the scalar-pandas pool has its
-        # own reuse key and gets idle-reaped between gates)
-        .repartition(min(spark.sparkContext.defaultParallelism, 8))
-    )
-
-    def make(batches):
-        import numpy as np
-        import pandas as pd
-
-        from kolibrie_spark.operators.jpeg import (
-            QTABLE_FLAT,
-            build_jpeg_baseline,
-        )
-        from kolibrie_spark.operators.multimodal import build_mp4
-
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                g = int(did)
-                frames = []
-                for k in range(4):
-                    img = np.zeros((16, 16))
-                    for by in range(2):
-                        for bx in range(2):
-                            img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                                37 * g + 11 * k + 5 * bx + 3 * by
-                            ) % 256
-                    frames.append(
-                        build_jpeg_baseline(
-                            16, 16, qtable=QTABLE_FLAT, image=img
-                        )
-                    )
-                dur = (g % 7 + 1) * 500 * 4
-                out.append((str(g), build_mp4(dur, frames=frames)))
-            yield pd.DataFrame(out, columns=["media_id", "data"])
-
-    media = docs.mapInPandas(make, "media_id string, data binary")
-    out = sample_frames(media, n_frames=4, dim=16)
-    return out.select(
-        "media_id",
-        "frame_idx",
-        "ts_ms",
-        F.aggregate(
-            "frame_features", F.lit(0.0), lambda acc, x: acc + x
-        )
-        .cast("long")
-        .alias("feat_sum"),
-    )
-
-
-def _multimodal_frame_content_oracle() -> str:
-    # frame k of doc g: ts at the middle of its 1/4 slice of the
-    # 4*(g%7+1)*500 ms timeline; feat_sum = 4 blocks x 4 boxes each ->
-    # 4 * sum of the four block values (each mod-256 term separately)
-    base = "(37 * doc_id + 11 * f.k)"
-    return (
-        "SELECT CAST(doc_id AS VARCHAR) AS media_id, "
-        "CAST(f.k AS INTEGER) AS frame_idx, "
-        "CAST((4 * (doc_id % 7 + 1) * 500 * (2 * f.k + 1)) // 8 "
-        "AS INTEGER) AS ts_ms, "
-        f"CAST(4 * (({base} % 256) + (({base} + 5) % 256) "
-        f"+ (({base} + 3) % 256) + (({base} + 8) % 256)) AS BIGINT) "
-        "AS feat_sum "
-        "FROM documents, (VALUES (0), (1), (2), (3)) AS f(k) "
-        "WHERE doc_id < 120"
-    )
-
-
-def _q_media_audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio-fingerprint near-dup pairs (phash.audio_near_pairs) over
-    TRIPLET groups of gain variants: doc triple (3g, 3g+1, 3g+2) carries
-    the same group-specific chirp at gains 1x/2x/4x. Power-of-two gains
-    scale every FFT intermediate exactly (pure exponent shifts), so log
-    band energies shift by a constant and the Haitsma-Kalker double delta
-    cancels it — identical 64-bit fingerprints by construction, hamming 0
-    for every within-triple pair. Each group gets its own quadratic-phase
-    chirp rate (stationary tones would fingerprint alike across groups)."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.phash import audio_near_pairs
-    from kolibrie_spark.tables import load_table
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter("doc_id < 300")
-        # per-row Python decode work: spread the single-file read, capped
-        # at 8 tasks (r13 media adjudication, guide §4.5) — every extra
-        # partition claims an Arrow worker whose first use pays
-        # fork+module imports, and on these few-hundred-row ~1ms/row
-        # fixtures the 32-task pool spin-up dominated the compute ~3:1
-        # (first-call 5.4s vs 1.9s steady; the scalar-pandas pool has its
-        # own reuse key and gets idle-reaped between gates)
-        .repartition(min(spark.sparkContext.defaultParallelism, 8))
-    )
-
-    def make(batches):
-        import pandas as pd
-
-        from kolibrie_spark.operators.multimodal import build_wav
-
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 3, did % 3
-                gain = 1 << v  # 1x / 2x / 4x: exact in IEEE doubles
-                data = build_wav(
-                    60 + (g * 13) % 160,
-                    sample_fn=lambda i: (
-                        (((5 + 2 * g) * i * i
-                          + (29 + 3 * g) * i + 7 * g) % 4001) - 2000
-                    )
-                    * gain,
-                )
-                out.append((did, data))
-            yield pd.DataFrame(out, columns=["media_id", "data"])
-
-    media = docs.mapInPandas(make, "media_id long, data binary")
-    out = audio_near_pairs(media, "media_id", max_hamming=1)
-    return out.select(
-        "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
-    )
-
-
-def _q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Evenly-spaced video frame sampling over real MP4 (ftyp+mvhd)
-    containers (multimodal.sample_frames): each blob fans out to 4 frame
-    rows at the middle of its 1/4 slice of the mvhd timeline. The frame
-    timestamps derive from the REAL container parse, so the oracle
-    recomputes them from the construction formula; the hash-derived fake
-    frame features (the documented codec stub) are projected away."""
-    from kolibrie_spark.operators.multimodal import sample_frames
-    from kolibrie_spark.tables import load_table
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter("doc_id < 200")
-        # per-row Python decode work: spread the single-file read, capped
-        # at 8 tasks (r13 media adjudication, guide §4.5) — every extra
-        # partition claims an Arrow worker whose first use pays
-        # fork+module imports, and on these few-hundred-row ~1ms/row
-        # fixtures the 32-task pool spin-up dominated the compute ~3:1
-        # (first-call 5.4s vs 1.9s steady; the scalar-pandas pool has its
-        # own reuse key and gets idle-reaped between gates)
-        .repartition(min(spark.sparkContext.defaultParallelism, 8))
-    )
-
-    def make(batches):
-        import pandas as pd
-
-        from kolibrie_spark.operators.multimodal import build_mp4
-
-        for pdf in batches:
-            out = [
-                (str(int(d)), build_mp4(int(d) % 5000 + 500))
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(out, columns=["media_id", "data"])
-
-    media = docs.mapInPandas(make, "media_id string, data binary")
-    return sample_frames(media, n_frames=4, dim=16).select(
-        "media_id", "frame_idx", "ts_ms"
-    )
-
-
-def _multimodal_frames_oracle() -> str:
-    return (
-        "SELECT CAST(doc_id AS VARCHAR) AS media_id, CAST(k AS INT) AS frame_idx, "
-        "CAST(((doc_id % 5000 + 500) * (2*k + 1)) // 8 AS INT) AS ts_ms "
-        "FROM documents, UNNEST([0, 1, 2, 3]) t(k) WHERE doc_id < 200"
-    )
-
-
 def _q_events_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gaps-and-islands interval collapse (temporal.merge_intervals):
     per-user activity intervals [ts, ts + event_id % 7200s] merged into
@@ -3569,83 +2891,6 @@ JOIN sizes sa ON batch_id = sa.id
 JOIN sizes sb ON corpus_id = sb.id
 WHERE c * 1.0 / (sa.sn + sb.sn - c) >= 0.5
 """
-
-
-def _q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed image resize (multimodal.resize_images): real PNG
-    decode → integer box-average (floor) → PNG re-encode, then the
-    resized BLOB is decoded again by extract_media_features — so the gate
-    certifies the whole decode→resample→encode→decode loop. Integer
-    means make the resized content closed-form: the oracle recomputes
-    every 2x2 box floor-mean from the generator formula."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.multimodal import (
-        extract_media_features,
-        resize_images,
-    )
-    from kolibrie_spark.tables import load_table
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter("doc_id < 200")
-        # per-row Python decode work: spread the single-file read, capped
-        # at 8 tasks (r13 media adjudication, guide §4.5) — every extra
-        # partition claims an Arrow worker whose first use pays
-        # fork+module imports, and on these few-hundred-row ~1ms/row
-        # fixtures the 32-task pool spin-up dominated the compute ~3:1
-        # (first-call 5.4s vs 1.9s steady; the scalar-pandas pool has its
-        # own reuse key and gets idle-reaped between gates)
-        .repartition(min(spark.sparkContext.defaultParallelism, 8))
-    )
-
-    def make(batches):
-        import pandas as pd
-
-        from kolibrie_spark.operators.multimodal import build_png
-
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                w, h = (d % 8 + 4) * 2, (d % 6 + 4) * 2
-                out.append(
-                    (str(d), build_png(w, h, lambda x, y: (x * 7 + y * 13 + d) % 256))
-                )
-            yield pd.DataFrame(out, columns=["media_id", "data"])
-
-    media = docs.mapInPandas(make, "media_id string, data binary")
-    resized = resize_images(media, 6, 4)  # fixed 6x4 thumbnails
-    return extract_media_features(resized.select("media_id", "data")).select(
-        "media_id", "width", "height", "mean_luminance"
-    )
-
-
-def _multimodal_resize_oracle() -> str:
-    # resized pixel (x,y) = floor-mean of the generator over the integer
-    # index-grid box [(y*h)//4, ((y+1)*h)//4) x [(x*w)//6, ((x+1)*w)//6)
-    # (h, w >= 8 so every box is non-degenerate);
-    # mean_luminance = integer pixel sum / 24 as ONE double division
-    w = "((doc_id % 8 + 4) * 2)"
-    h = "((doc_id % 6 + 4) * 2)"
-    px = "((xx * 7 + yy * 13 + doc_id) % 256)"
-    box_sum = (
-        f"list_sum(flatten(list_transform("
-        f"range((y*{h})//4, ((y+1)*{h})//4), yy -> "
-        f"list_transform(range((x*{w})//6, ((x+1)*{w})//6), xx -> {px}))))"
-    )
-    box_n = (
-        f"((((y+1)*{h})//4 - (y*{h})//4) * (((x+1)*{w})//6 - (x*{w})//6))"
-    )
-    return (
-        "SELECT CAST(doc_id AS VARCHAR) AS media_id, "
-        "CAST(6 AS INT) AS width, CAST(4 AS INT) AS height, "
-        "CAST(list_sum(flatten(list_transform(range(0, 4), y -> "
-        "list_transform(range(0, 6), x -> "
-        f"{box_sum} // {box_n})))) AS DOUBLE) / 24 AS mean_luminance "
-        "FROM documents WHERE doc_id < 200"
-    )
 
 
 def _q_events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4159,78 +3404,6 @@ def _q_filter_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     )(spark, sf_dir)
 
 
-def _q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE training (operators/bpe.py): 8 merge rounds over the
-    documents corpus; returns the ordered merge table. Oracle: the K=8
-    rounds are small enough to UNROLL into one chained-CTE DuckDB query
-    (``_bpe_oracle``) — each round recomputes pair counts and applies the
-    argmax merge with the same (count desc, a asc, b asc) tiebreak as
-    ``operators/bpe.py``, so the gate is full rows+schema+hash, not
-    rows-only. Bit-identity with the textbook Sennrich implementation is
-    additionally pytest-asserted (tests/test_bpe.py)."""
-    from kolibrie_spark.operators.bpe import train_bpe
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    merges, _ = train_bpe(docs, "text", num_merges=8)
-    return spark.createDataFrame(
-        [(i, a, b, c) for i, (a, b, c) in enumerate(merges)],
-        "rank int, left string, right string, pair_count long",
-    )
-
-
-def _bpe_oracle(num_merges: int = 8) -> str:
-    """Unrolled K-round chained-CTE DuckDB twin of ``train_bpe``.
-
-    Each word's symbol list is encoded as a string where every symbol is
-    wrapped in chr(31) sentinels (``\\x1f sym \\x1f`` concatenated); since
-    document text is whitespace-split printable ASCII, symbols never
-    contain the sentinel, so (a) splitting on the double sentinel recovers
-    the exact symbol list and (b) SQL ``replace()`` of the pattern
-    ``\\x1f a \\x1f\\x1f b \\x1f`` is EXACTLY the left-to-right
-    non-overlapping BPE merge scan (a match must start at a sentinel,
-    sentinels terminate symbols, and replace() resumes after the
-    replacement, so a freshly merged symbol is never the left element of a
-    match in the same round — identical to the i+=2 advance in
-    ``bpe.py``). Round r: pair counts from adjacent symbol pairs weighted
-    by word freq; best pair by (count DESC, a ASC, b ASC) with the same
-    count>=2 early stop; v{r+1} applies the merge. DuckDB's default binary
-    collation matches Spark's UTF8 string ordering for the tiebreak."""
-    sep = "chr(31)"
-    parts = [
-        "v0 AS (SELECT chr(31) || array_to_string(list_append("
-        "string_split(word, ''), '</w>'), chr(31)||chr(31)) || chr(31) "
-        "AS enc, freq FROM (SELECT word, CAST(COUNT(*) AS BIGINT) AS freq "
-        "FROM (SELECT unnest(string_split_regex(trim(lower(text)), "
-        "'\\s+')) AS word FROM documents) WHERE length(word) > 0 "
-        "GROUP BY word))"
-    ]
-    for r in range(num_merges):
-        parts.append(
-            f"p{r} AS (SELECT syms[i] AS a, syms[i+1] AS b, "
-            "CAST(SUM(freq) AS BIGINT) AS c "
-            "FROM (SELECT freq, syms, unnest(range(1, len(syms))) AS i "
-            "FROM (SELECT freq, list_transform(string_split(enc, "
-            f"{sep}||{sep}), x -> trim(x, {sep})) AS syms FROM v{r})) "
-            "GROUP BY a, b)"
-        )
-        parts.append(
-            f"b{r} AS (SELECT a, b, c FROM p{r} WHERE c >= 2 "
-            "ORDER BY c DESC, a ASC, b ASC LIMIT 1)"
-        )
-        parts.append(
-            f"v{r + 1} AS (SELECT replace(enc, "
-            f"{sep}||a||{sep}||{sep}||b||{sep}, {sep}||a||b||{sep}) "
-            f"AS enc, freq FROM v{r}, b{r})"
-        )
-    union = " UNION ALL ".join(
-        f'SELECT CAST({r} AS INTEGER) AS "rank", a AS "left", '
-        f'b AS "right", c AS pair_count FROM b{r}'
-        for r in range(num_merges)
-    )
-    return "WITH " + ", ".join(parts) + " " + union
-
-
 # ---------------------------------------------------------------------------
 # the contract
 # ---------------------------------------------------------------------------
@@ -4243,38 +3416,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # The driver's correctness file records at most 50 entries, in dict order.
 # Gates listed here are moved to the FRONT of queries()/oracle_sql() so they
-# are guaranteed a driver row this round.  Rotate per round: round N's
-# driver-skipped tail (the last len(queries)-50 keys of the emitted order)
-# becomes the head of round N+1's list, so every gate gets an official
-# driver check at least every other round.
-#
-# STANDING policy since r5: oldest driver row leads.  Names not in
-# queries() are skipped by _driver_order, so listing planned gates is safe.
-#
-# ROUND-9 ROTATION (VERDICT r8 item #4): after r8, 5 gates still carry r4
-# driver rows and 49 carry r6; the window is 50.  Head: the 5 r4-rowed
-# gates (judge-re-checked green in the r8 session but still owed an
-# official row), then the 49 r6-rowed gates in queries() order — the last
-# ~4 overflow to r10, which then takes the r7 set (including the two
-# *_replay gates whose firing-trace pins were added this round; both were
-# re-oracle-checked at sf0.01 when the pins landed).  NOTE for the
-# record: r8's rotation comment said the text_common_spans plan changed
-# in r8 — it did not; the salted plan is the OPT-IN heavy_df_cap guard
-# and the default window plan is unchanged since r7 (VERDICT r8 #3).
+# are guaranteed a row.  Standing policy: the gates whose last recorded
+# check is oldest lead; the rest follow in queries() order.  Names not in
+# queries() are skipped by _driver_order.
 _DRIVER_FIRST = [
-    # ROUND-13 correctness window (VERDICT r12 tasks #4/#9): lead with the
-    # r12-touched gates that have NO driver row covering their r12
-    # restructuring (CORRECTNESS_r11 ran before those changes landed;
-    # CORRECTNESS_r12's 50-gate window is disjoint from them) — the six
-    # streaming gates, reasoner_hierarchy, dedup_prefix_jaccard,
-    # split_leakage_safe, text_lm_score, mlschema_graph, dedup_semantic,
-    # embed_hard_negatives, closure_doubling, dedup_containment — then the
-    # gates whose semantics-preserving rewrites landed THIS round (prefix
-    # filtering for ngram/containment, exact vectorized sim_topk scans,
-    # media fan-out caps, streaming control plane), then the remaining
-    # gates not covered by the r11/r12 windows (latest driver row r10) in
-    # queries() order.  60 listed / window 50: the last ~10 overflow to
-    # r14, which should lead with them.
     "streaming_istream_live",
     "streaming_dstream_live",
     "streaming_sliding_live",
@@ -4284,24 +3429,14 @@ _DRIVER_FIRST = [
     "reasoner_hierarchy",
     "dedup_prefix_jaccard",
     "split_leakage_safe",
-    "text_lm_score",
     "mlschema_graph",
-    "dedup_semantic",
     "embed_hard_negatives",
     "closure_doubling",
     "dedup_containment",
-    # -- r13-touched
     "dedup_ngram_jaccard",
     "sim_topk_pq",
     "sim_topk_ivf",
     "sim_topk_lsh",
-    "media_phash_pairs",
-    "media_audio_fp",
-    "media_near_dup",
-    "multimodal_frame_content",
-    "multimodal_frames",
-    "multimodal_resize",
-    # -- not covered by the r11/r12 windows (latest row r10), queries() order
     "path_negated_set",
     "search_hybrid_rrf",
     "text_quality_gopher",
@@ -4325,15 +3460,12 @@ _DRIVER_FIRST = [
     "sample_domain_cap",
     "url_canonicalize",
     "sample_token_budget",
-    "export_manifest",
     "reasoner_transitive_closure",
     "prob_hybrid",
     "ml_predict",
-    "multimodal_features",
     "builder_chain",
     "profile_winsorize",
     "audit_snapshot_diff",
-    "bpe_train_merges",
     "graph_triangles",
     "sketch_hll_distinct",
     "dedup_incremental_near",
@@ -4526,7 +3658,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_common_spans": _q_text_common_spans,
         "text_quality_gopher": _q_text_quality_gopher,
         "dedup_incremental": _q_dedup_incremental,
-        "range_join_binned": _q_range_join_binned,
         "layout_zorder": _q_layout_zorder,
         "embed_centroids": _q_embed_centroids,
         "analytics_q5": _q_analytics_q5,
@@ -4553,9 +3684,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "profile_quantiles": _q_profile_quantiles,
         "profile_histogram": _q_profile_histogram,
         "graph_pagerank": _q_graph_pagerank,
-        "text_quality_model": _q_text_quality_model,
-        "dedup_semantic": _q_dedup_semantic,
-        "sample_dsir": _q_sample_dsir,
         "pack_sequences": _q_pack_sequences,
         "text_repetition": _q_text_repetition,
         "sample_domain_mix": _q_sample_domain_mix,
@@ -4564,9 +3692,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sample_group_split": _q_sample_group_split,
         "profile_stats": _q_profile_stats,
         "text_scrub_pii": _q_text_scrub_pii,
-        "pipeline_curate": _q_pipeline_curate,
         "text_tokenize_ids": _q_text_tokenize_ids,
-        "text_lm_score": _q_text_lm_score,
         "text_chunk": _q_text_chunk,
         "top_docs_per_source": _q_top_docs_per_source,
         "events_window_agg": _q_events_window_agg,
@@ -4574,7 +3700,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sample_stratified": _q_sample_stratified,
         "url_canonicalize": _q_url_canonicalize,
         "sample_token_budget": _q_sample_token_budget,
-        "export_manifest": _q_export_manifest,
         "split_leakage_safe": _q_split_leakage_safe,
         # --- reasoner + streaming replay (§2.9/§2.10)
         "reasoner_transitive_closure": _q_reasoner_closure,
@@ -4601,9 +3726,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "describe_subject": _q_describe_subject,
         "select_expr_proj": _q_select_expr_proj,
         "filter_datetime": _q_filter_datetime,
-        # --- ML / multimodal / builder (§2.11, §2.12)
+        # --- ML / builder (§2.11, §2.12)
         "ml_predict": _q_ml_predict,
-        "multimodal_features": _q_multimodal_features,
         "builder_chain": _q_builder_chain,
         "asof_join_events_orders": _q_asof_join,
         # --- round-3 session-4 additions
@@ -4611,19 +3735,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "profile_winsorize": _q_profile_winsorize,
         "audit_snapshot_diff": _q_audit_snapshot_diff,
         "embed_hard_negatives": _q_embed_hard_negatives,
-        "bpe_train_merges": _q_bpe_train_merges,
-        "media_near_dup": _q_media_near_dup,
-        "media_phash_pairs": _q_media_phash_pairs,
-        "media_audio_fp": _q_media_audio_fp,
-        "multimodal_frame_content": _q_multimodal_frame_content,
-        "multimodal_frames": _q_multimodal_frames,
         "events_interval_merge": _q_events_interval_merge,
         "graph_triangles": _q_graph_triangles,
         "sketch_hll_distinct": _q_sketch_hll_distinct,
         "events_anomaly_mad": _q_events_anomaly_mad,
         "events_ewma": _q_events_ewma,
         "dedup_incremental_near": _q_dedup_incremental_near,
-        "multimodal_resize": _q_multimodal_resize,
         "events_path_trigrams": _q_events_path_trigrams,
         "analytics_q3": _q_analytics_q3,
         "analytics_q10": _q_analytics_q10,
@@ -4950,7 +4067,6 @@ def oracle_sql() -> dict[str, str]:
         "text_common_spans": _text_common_spans_oracle(),
         "text_quality_gopher": _text_quality_gopher_oracle(),
         "dedup_incremental": _dedup_incremental_oracle(),
-        "range_join_binned": _range_join_binned_oracle(),
         "layout_zorder": _layout_zorder_oracle(),
         "embed_centroids": _embed_centroids_oracle(),
         "analytics_q5": _analytics_q5_oracle(),
@@ -4977,9 +4093,6 @@ def oracle_sql() -> dict[str, str]:
         "profile_quantiles": _profile_quantiles_oracle(),
         "profile_histogram": _profile_histogram_oracle(),
         "graph_pagerank": _graph_pagerank_oracle(),
-        "text_quality_model": _text_quality_model_oracle(),
-        "dedup_semantic": _dedup_semantic_oracle(),
-        "sample_dsir": _sample_dsir_oracle(),
         "pack_sequences": _pack_sequences_oracle(),
         "text_repetition": _text_repetition_oracle(),
         "sample_domain_mix": _sample_domain_mix_oracle(),
@@ -4988,9 +4101,7 @@ def oracle_sql() -> dict[str, str]:
         "sample_group_split": _sample_group_split_oracle(),
         "profile_stats": _profile_stats_oracle(),
         "text_scrub_pii": _text_scrub_pii_oracle(),
-        "pipeline_curate": _pipeline_curate_oracle(),
         "text_tokenize_ids": _text_tokenize_ids_oracle(),
-        "text_lm_score": _text_lm_score_oracle(),
         "text_chunk": _text_chunk_oracle(),
         "top_docs_per_source": _top_docs_per_source_oracle(),
         "events_window_agg": (
@@ -5060,7 +4171,6 @@ def oracle_sql() -> dict[str, str]:
         "sample_stratified": _sample_stratified_oracle(),
         "url_canonicalize": _url_canonicalize_oracle(),
         "sample_token_budget": _sample_token_budget_oracle(),
-        "export_manifest": _export_manifest_oracle(),
         "split_leakage_safe": _split_leakage_safe_oracle(),
         "streaming_istream_replay": (
             "WITH w AS (SELECT DISTINCT "
@@ -5094,7 +4204,6 @@ def oracle_sql() -> dict[str, str]:
         ),
         "streaming_sliding_live": _streaming_sliding_live_oracle(),
         "streaming_sync_live": _streaming_sync_live_oracle(),
-        "multimodal_features": _multimodal_features_oracle(),
         "ml_predict": (
             "SELECT 'urn:part:' || CAST(p_partkey AS VARCHAR) AS part, "
             "CAST(p_retailprice AS VARCHAR) AS price, "
@@ -5123,23 +4232,16 @@ def oracle_sql() -> dict[str, str]:
             "AND EXISTS (SELECT 1 FROM w WHERE w.window_open = s.window_open)"
         ),
         # --- round-3 session-4 additions
-        "bpe_train_merges": _bpe_oracle(num_merges=8),
         "telemetry_resample": _resample_oracle(),
         "profile_winsorize": _winsorize_oracle(),
         "audit_snapshot_diff": _audit_snapshot_diff_oracle(),
         "embed_hard_negatives": _hard_negatives_oracle(),
-        "media_near_dup": _media_near_dup_oracle(),
-        "media_phash_pairs": _media_triplet_pairs_oracle(),
-        "media_audio_fp": _media_triplet_pairs_oracle(),
-        "multimodal_frame_content": _multimodal_frame_content_oracle(),
-        "multimodal_frames": _multimodal_frames_oracle(),
         "events_interval_merge": _interval_merge_oracle(),
         "graph_triangles": _graph_triangles_oracle(),
         "sketch_hll_distinct": _hll_distinct_oracle(),
         "events_anomaly_mad": _events_anomaly_mad_oracle(),
         "events_ewma": _events_ewma_oracle(),
         "dedup_incremental_near": _dedup_incremental_near_oracle(),
-        "multimodal_resize": _multimodal_resize_oracle(),
         "events_path_trigrams": _events_path_trigrams_oracle(),
         "analytics_q3": _analytics_q3_oracle(),
         "analytics_q10": _analytics_q10_oracle(),

@@ -693,10 +693,6 @@ def main() -> None:
     regressions = _find_regressions(timings, prev)
     # known intentional cost changes (feature additions, not regressions)
     notes = {
-        "multimodal_features": (
-            "r3 added real JPEG entropy decode (operators/jpeg.py) and PNG/"
-            "WAV content decode to the gate; r2 timed header-only JPEG"
-        ),
         "dedup_exact": (
             "sub-second gate at the scheduling floor; r2's count()-era "
             "number let Catalyst skip the keep-set join output "
@@ -719,13 +715,6 @@ def main() -> None:
             "intentional ~1.1s behavior check, not a plan regression"
         ),
     }
-    # r4's 1.25-1.4x drift cluster (VERDICT r4 what's-wrong #3) was
-    # re-measured in isolation (tools/bench_one.py, fresh JVM per run,
-    # r5): text_analyze 0.87s / sim_topk_lsh 1.24s / sim_topk_cosine
-    # 0.57s / reasoner_transitive_closure 3.71s / events_window_agg 0.29s
-    # — i.e. back at (or within noise of) their r3 values, so the in-suite
-    # drift is JVM pressure from the 4 media gates added to the same
-    # session in r4, not per-gate regressions.
     for name in regressions:
         if name in notes:
             regressions[name]["note"] = notes[name]

@@ -1,5 +1,5 @@
 """LLM-data-pipeline operators on the DataFrame substrate: deduplication,
-similarity search, text analysis, multimodal column plumbing.
+similarity search, text analysis.
 
 These go beyond the reference's own surface (BASELINE.json north star) and
 are designed for 100 TB: built-in column expressions (JVM, whole-stage

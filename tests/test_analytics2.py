@@ -373,7 +373,6 @@ def test_earlier_curation_operators_on_empty_input(spark):
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
     )
-    from kolibrie_spark.operators.dsir import dsir_logweights
     from kolibrie_spark.operators.packing import pack_sequences
     from kolibrie_spark.operators.scrub import scrub_pii
     from kolibrie_spark.operators.search import bm25_topk, top_terms
@@ -390,8 +389,6 @@ def test_earlier_curation_operators_on_empty_input(spark):
     assert top_terms(docs, "text", 5).count() == 0
     assert bm25_topk(docs, "doc_id", "text", "query terms", 5).count() == 0
     assert pack_sequences(docs, "doc_id", "toks", 128, shards=4).count() == 0
-    # dsir over empty raw corpus (target also empty)
-    assert dsir_logweights(docs, docs, "doc_id", "text").count() == 0
     assert scrub_pii(docs, "doc_id", "text").count() == 0
 
 
@@ -638,66 +635,6 @@ def test_ewma_last(spark):
         s = 0.3 * x + 0.7 * s
     got = dict((k, e) for k, n, e in mine)["k1"]
     assert got == s
-
-
-def test_resize_images_box_floor_and_roundtrip(spark):
-    from kolibrie_spark.operators.multimodal import (
-        build_png,
-        decode_png,
-        resize_images,
-    )
-
-    w, h = 12, 8
-    gen = lambda x, y: (x * 7 + y * 13 + 5) % 256
-    df = spark.createDataFrame(
-        [("a", build_png(w, h, gen))], "media_id string, data binary"
-    )
-    out = resize_images(df, 6, 4).collect()[0]
-    assert out.decode_error is None and (out.width, out.height) == (6, 4)
-    d = decode_png(bytes(out.data))  # re-encoded blob is a valid PNG
-    assert (d["width"], d["height"], d["channels"]) == (6, 4, 1)
-    px = bytes(d["pixels"])
-    for y in range(4):
-        for x in range(6):
-            box = [gen(2 * x, 2 * y), gen(2 * x + 1, 2 * y),
-                   gen(2 * x, 2 * y + 1), gen(2 * x + 1, 2 * y + 1)]
-            assert px[y * 6 + x] == sum(box) // 4
-
-
-def test_resize_images_rgb_and_errors(spark):
-    import struct
-    import zlib
-
-    from kolibrie_spark.operators.multimodal import resize_images
-
-    # tiny RGB png: encode manually via build_png? build_png is grayscale;
-    # construct a 2x2 RGB PNG by hand
-    def chunk(ctype, payload):
-        return (
-            struct.pack(">I", len(payload)) + ctype + payload
-            + struct.pack(">I", zlib.crc32(ctype + payload) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
-    raw = b"\x00" + bytes([255, 0, 0, 0, 255, 0]) + b"\x00" + bytes(
-        [0, 0, 255, 255, 255, 255]
-    )
-    png = (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-    )
-    df = spark.createDataFrame(
-        [("rgb", png), ("bad", b"nope")], "media_id string, data binary"
-    )
-    rows = {r.media_id: r for r in resize_images(df, 1, 1).collect()}
-    # luma: (299*255)//1000=76, (587*255)//1000=149, (114*255)//1000=29,
-    # white=(299*255+587*255+114*255)//1000=255 -> mean floor
-    assert rows["rgb"].decode_error is None
-    from kolibrie_spark.operators.multimodal import decode_png
-
-    px = bytes(decode_png(bytes(rows["rgb"].data))["pixels"])
-    assert px[0] == (76 + 149 + 29 + 255) // 4
-    assert rows["bad"].decode_error is not None and rows["bad"].data is None
 
 
 def test_path_ngrams(spark):

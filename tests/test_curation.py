@@ -261,48 +261,6 @@ def test_top_per_group(spark):
     assert got == sorted(tuple(r) for r in want)
 
 
-def test_lm_score(spark, docs):
-    import math
-
-    from kolibrie_spark.operators.lm import K_SMOOTH, lm_score, lm_score_duckdb_sql
-
-    got = {r.doc_id: r for r in lm_score(docs, "doc_id", "text").collect()}
-    # brute-force oracle
-    texts = {r.doc_id: r.text for r in docs.collect()}
-    bgs = {
-        did: list(zip(t.lower().split(), t.lower().split()[1:]))
-        for did, t in texts.items()
-        if t.strip()
-    }
-    all_bg = [b for v in bgs.values() for b in v]
-    vocab = {w for b in all_bg for w in b}
-    from collections import Counter
-
-    cb, cc = Counter(all_bg), Counter(b[0] for b in all_bg)
-    for did, doc_bgs in bgs.items():
-        if not doc_bgs:
-            continue
-        s = 0.0
-        for b in doc_bgs:
-            s = s + math.log(
-                (cb[b] + K_SMOOTH) / (cc[b[0]] + K_SMOOTH * len(vocab))
-            )
-        assert got[did].n_bigrams == len(doc_bgs)
-        assert got[did].avg_logp == pytest.approx(s / len(doc_bgs), abs=1e-8)
-    # repeated doc ("spam"x6): highest typicality of its own bigrams
-    assert got[3].avg_logp > got[7].avg_logp
-    # empty doc: no bigrams, NULL score
-    assert got[6].n_bigrams == 0 and got[6].avg_logp is None
-    # DuckDB twin bit-identical
-    con = duckdb.connect()
-    con.register("d", docs.toPandas())
-    want = con.execute(lm_score_duckdb_sql("d", "doc_id", "text")).fetchall()
-    got_rows = sorted(
-        tuple(r) for r in lm_score(docs, "doc_id", "text").collect()
-    )
-    assert got_rows == sorted(tuple(r) for r in want)
-
-
 def test_group_split_no_leakage(spark):
     from kolibrie_spark.operators.sampling import (
         group_split,

@@ -1,8 +1,6 @@
 """Round-3 session-2 curation operators: cross-doc span profiling,
-Gopher quality rules, incremental corpus dedup, binned range join,
-Z-order layout, embedding centroids — brute-force Python oracles."""
-
-from datetime import datetime, timedelta
+Gopher quality rules, incremental corpus dedup, Z-order layout,
+embedding centroids — brute-force Python oracles."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -171,38 +169,6 @@ def test_dedup_against_corpus(spark, docs):
     assert "fp" in out.columns
 
 
-def test_interval_join_binned_vs_brute_force(spark):
-    from kolibrie_spark.operators.rangejoin import interval_join_binned
-
-    base = datetime(2024, 1, 1)
-    events = [
-        (i, base + timedelta(minutes=7 * i, microseconds=123456 * (i % 3)), float(i))
-        for i in range(60)
-    ]
-    edf = spark.createDataFrame(events, "event_id long, ts timestamp, value double")
-    ivs = [
-        (100, base + timedelta(minutes=10), base + timedelta(minutes=45)),
-        # interval longer than the bin width: must still match exactly
-        (101, base + timedelta(minutes=50), base + timedelta(hours=3)),
-        # sub-second exclusive end straddling a bin boundary
-        (102, base + timedelta(minutes=59, seconds=59), base + timedelta(hours=1, microseconds=999999)),
-        (103, base + timedelta(days=2), base + timedelta(days=3)),  # no matches
-    ]
-    idf = spark.createDataFrame(
-        ivs, "anchor_id long, start_ts timestamp, end_ts timestamp"
-    )
-    out = interval_join_binned(edf, idf, "ts", "start_ts", "end_ts", 1800)
-    got = {(r["anchor_id"], r["event_id"]) for r in out.collect()}
-    expect = {
-        (a, e)
-        for a, s, t in ivs
-        for e, ts, _ in events
-        if s <= ts < t
-    }
-    assert got == expect
-    assert (103, 0) not in got
-
-
 def test_zorder_value_brute_force(spark):
     from kolibrie_spark.operators.layout import zorder_value
 
@@ -304,124 +270,3 @@ def test_group_centroids_shuffle_invariant(spark):
     assert a == b
 
 
-def test_linear_quality_score_flags(spark):
-    from kolibrie_spark.ml.quality import linear_quality_score
-
-    rows = [
-        (1, "the cat sat on the mat and it is a fine day for all of us"),
-        (2, "!!! ??? ... ;;; :::"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    # positive weight on stopword ratio, negative on punctuation
-    out = {
-        r["doc_id"]: r
-        for r in linear_quality_score(
-            df, "doc_id", "text", [0.0, -8.0, 6.0, 0.0, 0.0], 0.0
-        ).collect()
-    }
-    assert out[1]["keep"] == 1 and out[1]["quality_score"] > 0.5
-    assert out[2]["keep"] == 0 and out[2]["quality_score"] < 0.5
-
-
-def test_train_quality_classifier_separates(spark):
-    """MLlib training on weak labels must learn weights that separate
-    clean prose from punctuation spam via the same feature expressions."""
-    from kolibrie_spark.ml.quality import (
-        linear_quality_score,
-        train_quality_classifier,
-    )
-
-    import random
-
-    rng = random.Random(9)
-    clean_words = "the cat sat on a mat and it is that day for work".split()
-    rows = []
-    for i in range(40):
-        rows.append((i, " ".join(rng.choices(clean_words, k=30)), 1))
-    for i in range(40, 80):
-        rows.append((i, " ".join(rng.choices(["!!!", "###", "..?!"], k=30)), 0))
-    df = spark.createDataFrame(rows, "doc_id long, text string, label int")
-    weights, bias = train_quality_classifier(df, "text", "label")
-    scored = {
-        r["doc_id"]: r["keep"]
-        for r in linear_quality_score(
-            df, "doc_id", "text", weights, bias
-        ).collect()
-    }
-    acc = sum(
-        1 for i, _, lab in rows if scored[i] == lab
-    ) / len(rows)
-    assert acc >= 0.95, f"train/apply accuracy {acc}"
-
-
-def test_semantic_dedup_brute_force(spark):
-    import math
-    import random
-
-    from kolibrie_spark.operators.semdedup import semantic_dedup
-
-    rng = random.Random(13)
-    base = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(10)]
-    rows = []
-    vid = 0
-    for b in base:
-        for _ in range(3):  # three tight copies of each base vector
-            rows.append((vid, [x + rng.uniform(-1e-3, 1e-3) for x in b]))
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = semantic_dedup(df, "vec_id", "embedding", ncells=4, threshold=0.999)
-    kept = {r["vec_id"] for r in out.collect()}
-
-    # brute-force replication: same first-N centroids, same drop rule
-    def l2sq(a, b):
-        return sum((x - y) ** 2 for x, y in zip(a, b))
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / math.sqrt(sum(x * x for x in a) * sum(y * y for y in b))
-
-    vecs = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in df.collect()  # float32-rounded values, as Spark computes
-    }
-    cents = [vecs[i] for i in sorted(vecs)[:4]]
-    cell = {
-        i: min(range(4), key=lambda c: (l2sq(vecs[i], cents[c]), c))
-        for i in vecs
-    }
-    expect = {
-        i
-        for i in vecs
-        if not any(
-            j < i and cell[j] == cell[i] and cos(vecs[j], vecs[i]) >= 0.999
-            for j in vecs
-        )
-    }
-    assert kept == expect
-    # each clone triplet that lands in one cell keeps exactly its lowest id
-    assert len(kept) < len(vecs)
-
-
-def test_dsir_logweights_favors_target_like_docs(spark):
-    from kolibrie_spark.operators.dsir import dsir_logweights
-
-    target_words = "alpha beta gamma delta epsilon"
-    other_words = "one two three four five six seven"
-    rows = [(i, target_words, "t") for i in range(10)]
-    rows += [(10 + i, other_words, "r") for i in range(30)]
-    rows += [(40, "alpha beta gamma delta epsilon", "r")]  # target-like raw doc
-    rows += [(41, "", "r")]  # empty doc -> no grams, NULL weight
-    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    target = df.where(F.col("source") == "t")
-    out = {r["doc_id"]: r for r in dsir_logweights(df, target, "doc_id", "text").collect()}
-    # target-like raw doc scores above the off-distribution docs
-    assert out[40]["logw"] > out[10]["logw"]
-    assert out[41]["n_grams"] == 1  # split('') yields one empty-string gram
-    # weights identical under a different partitioning (integer sums)
-    out2 = {
-        r["doc_id"]: r["logw"]
-        for r in dsir_logweights(
-            df.repartition(7, "doc_id"), target, "doc_id", "text"
-        ).collect()
-    }
-    assert out2 == {k: v["logw"] for k, v in out.items()}

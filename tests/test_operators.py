@@ -1,4 +1,4 @@
-"""LLM-pipeline operators: dedup, similarity, text analysis, multimodal."""
+"""LLM-pipeline operators: dedup, similarity, text analysis."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -131,229 +131,6 @@ def test_quality_score_monotone(spark):
     assert out[1] > out[2]
 
 
-# ------------------------------------------------------------- multimodal
-@pytest.fixture(scope="module")
-def media(spark):
-    from kolibrie_spark.operators.multimodal import MEDIA_SCHEMA
-
-    rows = [
-        ("m1", "image/png", b"\x89PNG-fake-bytes-1", (64, 48, None)),
-        ("m2", "image/png", b"\x89PNG-fake-bytes-2", (1000, 500, None)),
-        ("m3", "video/mp4", b"\x00mp4-fake", (640, 480, 3500)),
-    ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_multimodal_fake_features(media):
-    from kolibrie_spark.operators.multimodal import deterministic_fake, extract_features
-
-    out = {r.media_id: r for r in extract_features(media).collect()}
-    assert len(out["m1"].feature) == 16
-    assert out["m1"].decode_error is None
-    # deterministic: same bytes -> same vector
-    assert list(out["m1"].feature) == [
-        pytest.approx(v) for v in deterministic_fake(b"\x89PNG-fake-bytes-1")
-    ]
-    assert list(out["m1"].feature) != list(out["m2"].feature)
-
-
-def test_multimodal_decode_error_isolated(media):
-    from kolibrie_spark.operators.multimodal import extract_features
-
-    def flaky(data: bytes):
-        if data.endswith(b"-2"):
-            raise ValueError("corrupt blob")
-        return [0.0]
-
-    out = {r.media_id: r for r in extract_features(media, decoder=flaky).collect()}
-    assert out["m2"].feature is None and "corrupt blob" in out["m2"].decode_error
-    assert out["m1"].feature == [0.0] and out["m1"].decode_error is None
-
-
-def test_multimodal_real_decode_is_stubbed(media):
-    from kolibrie_spark.operators.multimodal import extract_features
-
-    with pytest.raises(Exception) as exc_info:
-        extract_features(media, decoder=None).collect()
-    assert "NotImplementedError" in str(exc_info.value) or isinstance(
-        exc_info.value, NotImplementedError
-    )
-
-
-def test_frame_sample_and_resize(media):
-    from kolibrie_spark.operators.multimodal import frame_sample_plan, resize_meta
-
-    frames = frame_sample_plan(media, every_ms=1000).collect()
-    assert [(r.media_id, r.frame_ts_ms) for r in frames] == [
-        ("m3", 0), ("m3", 1000), ("m3", 2000), ("m3", 3000)
-    ]
-    t = {r.media_id: r.target for r in resize_meta(media, 500).collect()}
-    assert (t["m2"].width, t["m2"].height) == (500, 250)
-    assert (t["m1"].width, t["m1"].height) == (64, 48)  # under limit: unchanged
-
-
-def test_png_content_roundtrip_all_filters():
-    """Encoder writes filter type y%5 per row; decoder must reverse Sub/Up/
-    Average/Paeth to recover the exact pixel bytes."""
-    from kolibrie_spark.operators.multimodal import (
-        build_png,
-        decode_png,
-        png_luminance_stats,
-    )
-
-    w, h = 17, 12
-
-    def fn(x, y):
-        return (x * 31 + y * 7 + 3) % 256
-
-    blob = build_png(w, h, pixel_fn=fn, filter_cycle=True)
-    dec = decode_png(blob)
-    assert (dec["width"], dec["height"], dec["channels"]) == (w, h, 1)
-    assert dec["pixels"] == bytes(fn(x, y) for y in range(h) for x in range(w))
-    st = png_luminance_stats(blob)
-    assert st["mean_luminance"] == sum(
-        fn(x, y) for y in range(h) for x in range(w)
-    ) / (w * h)
-    # default builder (zeros, filter 0) unchanged and decodable
-    assert decode_png(build_png(5, 4))["pixels"] == bytes(20)
-
-
-def test_encode_png_gray_bit_identical_to_build_png():
-    """encode_png_gray (vectorized filter-0 emit, r7 resize-regression
-    fix) must produce the exact bytes of the per-pixel build_png path —
-    the media gates hash re-encoded blobs, so byte identity is the
-    contract, not just decode equivalence."""
-    import numpy as np
-
-    from kolibrie_spark.operators.multimodal import (
-        build_png,
-        decode_png,
-        encode_png_gray,
-    )
-
-    rng = np.random.default_rng(11)
-    for w, h in [(1, 1), (6, 4), (32, 32), (17, 23)]:
-        px = rng.integers(0, 256, size=w * h, dtype=np.uint8).tobytes()
-        fast = encode_png_gray(px, w, h)
-        slow = build_png(w, h, pixel_fn=lambda x, y, px=px, w=w: px[y * w + x])
-        assert fast == slow
-        assert bytes(decode_png(fast)["pixels"]) == px
-    import pytest
-
-    with pytest.raises(ValueError):
-        encode_png_gray(b"\x00" * 5, 2, 2)
-
-
-def test_resize_pixels_integral_image_bit_exact():
-    """The r7 integral-image resampler must match the per-box loop it
-    replaced (floor integer means over the same index grids) on every
-    channel count, including upscale (degenerate 1-px boxes)."""
-    import numpy as np
-
-    from kolibrie_spark.operators.multimodal import resize_pixels
-
-    def loop_resize(px, w, h, ch, out_w, out_h):
-        arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w * ch)
-        if ch <= 2:
-            gray = (
-                arr[:, 0::ch].astype(np.int64) if ch == 2 else arr.astype(np.int64)
-            )
-        else:
-            pix = arr.reshape(h, w, ch).astype(np.int64)
-            gray = (
-                299 * pix[:, :, 0] + 587 * pix[:, :, 1] + 114 * pix[:, :, 2]
-            ) // 1000
-        ys = [(y * h) // out_h for y in range(out_h + 1)]
-        xs = [(x * w) // out_w for x in range(out_w + 1)]
-        out = bytearray(out_w * out_h)
-        for yi in range(out_h):
-            y0, y1 = ys[yi], max(ys[yi + 1], ys[yi] + 1)
-            for xi in range(out_w):
-                x0, x1 = xs[xi], max(xs[xi + 1], xs[xi] + 1)
-                box = gray[y0:y1, x0:x1]
-                out[yi * out_w + xi] = int(box.sum()) // box.size
-        return bytes(out)
-
-    rng = np.random.default_rng(13)
-    cases = [
-        (5, 3, 1, 32, 32),   # upscale: boxes degenerate to 1 px
-        (64, 48, 3, 16, 16), # RGB downscale
-        (7, 7, 2, 7, 7),     # gray+alpha identity-ish
-        (100, 60, 4, 32, 24),
-        (1, 1, 1, 4, 4),
-        (22, 16, 1, 6, 4),   # the multimodal_resize gate's shape class
-    ]
-    for w, h, ch, ow, oh in cases:
-        px = rng.integers(0, 256, size=h * w * ch, dtype=np.uint8).tobytes()
-        assert resize_pixels(px, w, h, ch, ow, oh) == loop_resize(
-            px, w, h, ch, ow, oh
-        ), (w, h, ch, ow, oh)
-
-
-def test_png_decode_rejects_unsupported():
-    from kolibrie_spark.operators.multimodal import build_png, decode_png
-
-    blob = bytearray(build_png(4, 4))
-    blob[24] = 16  # bit depth 16
-    with pytest.raises(ValueError, match="bit depth"):
-        decode_png(bytes(blob))
-    blob = bytearray(build_png(4, 4))
-    blob[28] = 1  # Adam7
-    with pytest.raises(ValueError, match="interlac"):
-        decode_png(bytes(blob))
-
-
-def test_wav_pcm_roundtrip_and_stats():
-    import math
-
-    from kolibrie_spark.operators.multimodal import (
-        build_wav,
-        decode_wav_samples,
-        wav_pcm_stats,
-    )
-
-    n = 160
-
-    def fn(i):
-        return ((i * 37 + 11) % 4001) - 2000
-
-    blob = build_wav(n, sample_fn=fn)
-    dec = decode_wav_samples(blob)
-    assert dec["samples"] == [fn(i) for i in range(n)]
-    st = wav_pcm_stats(blob)
-    assert st["audio_rms"] == math.sqrt(sum(fn(i) ** 2 for i in range(n)) / n)
-    assert st["audio_peak"] == max(abs(fn(i)) for i in range(n))
-    # silence still round-trips
-    assert wav_pcm_stats(build_wav(8))["audio_rms"] == 0.0
-
-
-def test_extract_media_features_content_columns(spark):
-    from kolibrie_spark.operators.multimodal import (
-        build_jpeg,
-        build_png,
-        build_wav,
-        extract_media_features,
-    )
-
-    rows = [
-        ("p", "image/png", build_png(8, 8, pixel_fn=lambda x, y: x + y, filter_cycle=True)),
-        ("j", "image/jpeg", build_jpeg(32, 16)),
-        ("w", "audio/wav", build_wav(80, sample_fn=lambda i: (i % 7) - 3)),
-        ("bad", "image/png", b"\x89PNG truncated"),
-    ]
-    df = spark.createDataFrame(rows, "media_id string, mime string, data binary")
-    out = {r.media_id: r for r in extract_media_features(df).collect()}
-    assert out["p"].mean_luminance == sum(
-        x + y for y in range(8) for x in range(8)
-    ) / 64
-    assert out["p"].audio_rms is None and out["p"].decode_error is None
-    # header-only JPEG (no DQT/SOS): decode reports the reason per-row
-    assert out["j"].width == 32 and out["j"].mean_luminance is None
-    assert "jpeg decode" in out["j"].decode_error
-    assert out["w"].audio_peak == 3 and out["w"].duration_ms == 10
-    assert out["bad"].format is None and out["bad"].decode_error
-
-
 def test_salted_join_equals_plain_join(spark):
     from pyspark.sql import functions as F
 
@@ -440,41 +217,6 @@ def test_ngram_jaccard_heavy_shingle_salting_exact(spark):
         ).collect()
     }
     assert salted == unsalted and len(salted) == 190  # all C(20,2) pairs share
-
-
-def test_media_header_roundtrip():
-    """Real container codecs: build → parse recovers the header values."""
-    from kolibrie_spark.operators.multimodal import (
-        build_jpeg, build_png, build_wav,
-        parse_jpeg_header, parse_media_header, parse_png_header, parse_wav_header,
-    )
-
-    png = parse_png_header(build_png(123, 45))
-    assert (png["format"], png["width"], png["height"]) == ("png", 123, 45)
-    jpg = parse_jpeg_header(build_jpeg(640, 480))
-    assert (jpg["format"], jpg["width"], jpg["height"]) == ("jpeg", 640, 480)
-    wav = parse_wav_header(build_wav(4000, sample_rate=8000, channels=2, bits=16))
-    assert wav["duration_ms"] == 500 and wav["sample_rate"] == 8000
-    assert wav["channels"] == 2
-    # sniffing dispatches on magic bytes
-    assert parse_media_header(build_png(3, 4))["format"] == "png"
-    assert parse_media_header(build_wav(80))["format"] == "wav"
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="unknown media container"):
-        parse_media_header(b"garbage")
-
-
-def test_extract_headers_isolates_corrupt_blobs(spark):
-    from kolibrie_spark.operators.multimodal import build_png, extract_headers
-
-    rows = [
-        ("ok", "image/png", bytearray(build_png(10, 20))),
-        ("bad", "image/png", bytearray(b"\x89PNG\r\n\x1a\nXXXX")),  # truncated
-    ]
-    df = spark.createDataFrame(rows, "media_id string, mime string, data binary")
-    out = {r.media_id: r for r in extract_headers(df).collect()}
-    assert out["ok"].width == 10 and out["ok"].decode_error is None
-    assert out["bad"].width is None and out["bad"].decode_error is not None
 
 
 def test_connected_components_chain_and_triangle(spark):
@@ -669,69 +411,6 @@ def test_kmeans_ivf_recall_beats_first_n(spark):
     assert r_kmeans >= 0.9  # real centroids recover the query's cluster
 
 
-def test_mp4_header_roundtrip_and_distributed(spark):
-    """MP4 (ISO BMFF) container support: build -> parse round trip for
-    both mvhd versions' duration math, corrupt-blob isolation, and the
-    distributed extract_headers path sniffing mp4 next to png/wav."""
-    from kolibrie_spark.operators.multimodal import (
-        build_mp4,
-        build_png,
-        extract_headers,
-        parse_mp4_header,
-    )
-
-    assert parse_mp4_header(build_mp4(5000, 1000))["duration_ms"] == 5000
-    assert parse_mp4_header(build_mp4(90000, 600))["duration_ms"] == 150000
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        parse_mp4_header(b"\x00\x00\x00\x08free")  # no ftyp
-
-    rows = [
-        ("v1", bytearray(build_mp4(42_000, 1000))),
-        ("v2", bytearray(build_mp4(30, 600))),
-        ("p1", bytearray(build_png(3, 2, lambda x, y: x + y))),
-        ("bad", bytearray(b"ftypnot really")),
-    ]
-    df = spark.createDataFrame(rows, "media_id string, data binary")
-    out = {r.media_id: r for r in extract_headers(df).collect()}
-    assert out["v1"].format == "mp4" and out["v1"].duration_ms == 42000
-    assert out["v2"].duration_ms == 50
-    assert out["p1"].format == "png" and out["p1"].width == 3
-    assert out["bad"].decode_error is not None
-
-
-def test_sample_frames_fanout_and_determinism(spark):
-    """Video frame sampling: one blob fans out to n evenly spaced frame
-    rows over the real mvhd timeline; decode is the documented
-    deterministic fake; corrupt blobs isolate per row."""
-    from kolibrie_spark.operators.multimodal import build_mp4, sample_frames
-
-    rows = [
-        ("v1", bytearray(build_mp4(8000, 1000))),   # 8s video
-        ("v2", bytearray(build_mp4(1000, 1000))),   # 1s video
-        ("bad", bytearray(b"not a video")),
-    ]
-    df = spark.createDataFrame(rows, "media_id string, data binary")
-    out = sample_frames(df, n_frames=4).collect()
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r.media_id, []).append(r)
-    assert len(by_id["v1"]) == 4
-    # frames at the middle of each 1/4 slice of 8000ms
-    assert sorted(r.ts_ms for r in by_id["v1"]) == [1000, 3000, 5000, 7000]
-    assert all(len(r.frame_features) == 16 for r in by_id["v1"])
-    assert len(by_id["bad"]) == 1 and by_id["bad"][0].decode_error is not None
-    # determinism: same blob + ts -> same features on a different layout
-    out2 = sample_frames(df.repartition(3), n_frames=4).collect()
-    key = lambda rs: sorted(
-        (r.media_id, r.frame_idx, r.ts_ms, tuple(r.frame_features or []))
-        for r in rs
-    )
-    assert key(out) == key(out2)
-
-
 def test_prefix_jaccard_equals_exact(docs):
     from kolibrie_spark.operators.dedup import (
         ngram_jaccard_pairs,
@@ -796,81 +475,6 @@ def test_prefix_jaccard_size_boundary_subset_pair(spark):
     assert prefix_jaccard_pairs(docs2, "doc_id", "text", 1, 0.5).count() == 0
 
 
-def test_mp4_mjpeg_sample_tables_roundtrip():
-    """build_mp4(frames=...) writes real stts/stsz/stco tables;
-    parse_mp4_samples recovers exact byte ranges and start times, and
-    every extracted sample decodes back to its source pixels exactly
-    (flat quant table + block-constant content)."""
-    import numpy as np
-
-    from kolibrie_spark.operators.jpeg import (
-        QTABLE_FLAT,
-        build_jpeg_baseline,
-        decode_jpeg,
-    )
-    from kolibrie_spark.operators.multimodal import (
-        build_mp4,
-        parse_mp4_header,
-        parse_mp4_samples,
-    )
-
-    imgs = [np.full((16, 16), 20 * k + 5, dtype=np.float64) for k in range(3)]
-    frames = [
-        build_jpeg_baseline(16, 16, qtable=QTABLE_FLAT, image=im) for im in imgs
-    ]
-    blob = build_mp4(3000, frames=frames)
-    assert parse_mp4_header(blob)["duration_ms"] == 3000
-    tab = parse_mp4_samples(blob)
-    assert tab["codec"] == "jpeg"
-    assert [s[0] for s in tab["samples"]] == [0, 1000, 2000]
-    for k, (_, off, sz) in enumerate(tab["samples"]):
-        assert blob[off : off + sz] == frames[k]
-        px = decode_jpeg(blob[off : off + sz])["pixels"]
-        assert (px == 20 * k + 5).all()
-
-
-def test_sample_frames_decodes_mjpeg_content(spark):
-    """The content path: sample_frames picks the sample covering each
-    timestamp and emits exact box-mean features of the decoded pixels;
-    metadata-only skeletons in the same batch keep the fake-feature
-    fallback (decode_error stays NULL for both)."""
-    import numpy as np
-    import pandas as pd
-
-    from kolibrie_spark.operators.jpeg import QTABLE_FLAT, build_jpeg_baseline
-    from kolibrie_spark.operators.multimodal import build_mp4, sample_frames
-
-    frames = [
-        build_jpeg_baseline(
-            16, 16, qtable=QTABLE_FLAT,
-            image=np.full((16, 16), 50 + 40 * k, dtype=np.float64),
-        )
-        for k in range(4)
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                ("mjpeg", bytearray(build_mp4(4000, frames=frames))),
-                ("skeleton", bytearray(build_mp4(4000))),
-            ],
-            columns=["media_id", "data"],
-        )
-    )
-    rows = sample_frames(df, n_frames=4, dim=16).collect()
-    by_id = {}
-    for r in rows:
-        assert r["decode_error"] is None
-        by_id.setdefault(r["media_id"], []).append(r)
-    for r in by_id["mjpeg"]:
-        k = r["frame_idx"]
-        assert r["ts_ms"] == 4000 * (2 * k + 1) // 8
-        # constant frame -> all 16 box means equal the frame value
-        assert list(r["frame_features"]) == [float(50 + 40 * k)] * 16
-    # skeleton rows carry the deterministic fake (still 16-dim, not None)
-    for r in by_id["skeleton"]:
-        assert len(r["frame_features"]) == 16
-
-
 def test_embedding_lsh_pairs_equals_exact(spark):
     """LSH-candidate + exact-verify must reproduce the exact all-pairs
     output bit-for-bit (same contract the driver oracle enforces), on a
@@ -909,64 +513,6 @@ def test_embedding_lsh_pairs_equals_exact(spark):
         ).collect()
     )
     assert lsh == exact
-
-
-def _mp4_box(typ: bytes, payload: bytes) -> bytes:
-    return (8 + len(payload)).to_bytes(4, "big") + typ + payload
-
-
-def test_mp4_leading_audio_track_and_missing_boxes():
-    """parse_mp4_samples must (a) skip a leading non-video trak and find
-    the 'vide' one by hdlr handler_type, and (b) raise ValueError — not
-    TypeError — when a video trak is missing its sample machinery, so
-    sample_frames' except-ValueError fallback catches it."""
-    import pytest
-
-    from kolibrie_spark.operators.jpeg import build_jpeg_baseline
-    from kolibrie_spark.operators.multimodal import build_mp4, parse_mp4_samples
-
-    frames = [build_jpeg_baseline(16, 16, lambda x, y: 90)]
-    good = build_mp4(1000, frames=frames)
-    base = parse_mp4_samples(good)
-    assert base["codec"] == "jpeg" and len(base["samples"]) == 1
-
-    # splice an audio trak BEFORE the video trak inside moov
-    audio_hdlr = _mp4_box(
-        b"hdlr", b"\x00\x00\x00\x00" + bytes(4) + b"soun" + bytes(12) + b"X\x00"
-    )
-    audio_trak = _mp4_box(b"trak", _mp4_box(b"mdia", audio_hdlr))
-    ftyp_len = int.from_bytes(good[0:4], "big")
-    moov_len = int.from_bytes(good[ftyp_len : ftyp_len + 4], "big")
-    moov_payload = good[ftyp_len + 8 : ftyp_len + moov_len]
-    mvhd_len = int.from_bytes(moov_payload[0:4], "big")
-    new_moov = _mp4_box(
-        b"moov",
-        moov_payload[:mvhd_len] + audio_trak + moov_payload[mvhd_len:],
-    )
-    spliced = good[:ftyp_len] + new_moov + good[ftyp_len + moov_len :]
-    # the video trak's sample tables are byte-identical after the splice
-    # (stco stores the absolute offset AS WRITTEN), so the parse must
-    # return exactly the base result — proving the audio trak was skipped
-    got = parse_mp4_samples(spliced)
-    assert got == base
-
-    # a 'vide' trak with no mdhd/stbl: diagnosable ValueError, not TypeError
-    vide_hdlr = _mp4_box(
-        b"hdlr", b"\x00\x00\x00\x00" + bytes(4) + b"vide" + bytes(12) + b"X\x00"
-    )
-    broken_trak = _mp4_box(b"trak", _mp4_box(b"mdia", vide_hdlr))
-    broken = good[:ftyp_len] + _mp4_box(
-        b"moov", moov_payload[:mvhd_len] + broken_trak
-    )
-    with pytest.raises(ValueError, match="missing mdhd"):
-        parse_mp4_samples(broken)
-
-    # audio-only file: "no video track", same as the skeleton path
-    audio_only = good[:ftyp_len] + _mp4_box(
-        b"moov", moov_payload[:mvhd_len] + audio_trak
-    )
-    with pytest.raises(ValueError, match="no video track"):
-        parse_mp4_samples(audio_only)
 
 
 def test_embedding_lsh_pairs_degenerate_inputs(spark):
@@ -1139,50 +685,6 @@ def test_containment_pairs_asymmetric(spark):
         for r in ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.8).collect()
     }
     assert (1, 2) not in jac
-
-
-def test_shard_manifest_deterministic_and_mergeable(spark):
-    """Export manifest invariants: shard assignment is a pure key
-    function (repartition-invariant), the xor content hash is
-    order-independent, and any row change flips its shard's hash."""
-    from kolibrie_spark.operators.export import (
-        assign_shards,
-        shard_manifest,
-        shard_manifest_duckdb_sql,
-    )
-
-    rows_ = [(i, f"text body {i} " * (i % 5 + 1), f"src{i % 3}") for i in range(200)]
-    df = spark.createDataFrame(rows_, "doc_id long, text string, source string")
-
-    m1 = {r.shard: (r.n_rows, r.n_chars, r.content_hash)
-          for r in shard_manifest(df, "doc_id", ["text", "source"], 8).collect()}
-    # partitioning/order must not matter
-    m2 = {r.shard: (r.n_rows, r.n_chars, r.content_hash)
-          for r in shard_manifest(
-              df.repartition(13).sortWithinPartitions("source"),
-              "doc_id", ["text", "source"], 8).collect()}
-    assert m1 == m2 and sum(v[0] for v in m1.values()) == 200
-
-    # DuckDB twin agrees exactly
-    import duckdb
-
-    con = duckdb.connect()
-    con.register("docs", df.toPandas())
-    want = {int(s): (int(n), int(c), int(h)) for s, n, c, h in con.execute(
-        shard_manifest_duckdb_sql("docs", "doc_id", ["text", "source"], 8)
-    ).fetchall()}
-    assert want == m1
-
-    # a single-row edit flips exactly that row's shard hash
-    df2 = df.withColumn(
-        "text",
-        F.when(F.col("doc_id") == 7, F.lit("tampered")).otherwise(F.col("text")),
-    )
-    m3 = {r.shard: (r.n_rows, r.n_chars, r.content_hash)
-          for r in shard_manifest(df2, "doc_id", ["text", "source"], 8).collect()}
-    s7 = [r.shard for r in assign_shards(df, "doc_id", 8).filter("doc_id = 7").collect()][0]
-    assert m3[s7][2] != m1[s7][2]
-    assert all(m3[s][2] == m1[s][2] for s in m1 if s != s7)
 
 
 def test_load_table_parallel_opt_out(spark, tmp_path):

@@ -22,7 +22,6 @@ def test_empty_inputs_session4(spark):
         corpus_signatures,
         near_dup_against_corpus,
     )
-    from kolibrie_spark.operators.multimodal import resize_images, sample_frames
     from kolibrie_spark.operators.profiling import mad_outliers, winsorize
     from kolibrie_spark.operators.scd import ewma_last, resample_ffill
     from kolibrie_spark.operators.sketches import hll_distinct
@@ -30,7 +29,6 @@ def test_empty_inputs_session4(spark):
 
     docs = spark.createDataFrame([], "doc_id long, text string")
     ev = spark.createDataFrame([], "k string, ts long, v double, id long")
-    media = spark.createDataFrame([], "media_id string, data binary")
     edges = spark.createDataFrame([], "src long, dst long")
     iv = spark.createDataFrame([], "k string, s long, e long")
 
@@ -43,8 +41,6 @@ def test_empty_inputs_session4(spark):
     assert ewma_last(ev, "k", "ts", "v").count() == 0
     assert resample_ffill(ev, "k", "ts", "v", 10).count() == 0
     assert path_ngrams(ev, "k", "ts", "v", "id").count() == 0
-    assert resize_images(media, 4, 4).count() == 0
-    assert sample_frames(media).count() == 0
     state = corpus_signatures(docs, "doc_id", "text")
     assert state.count() == 0
     assert near_dup_against_corpus(docs, state, "doc_id", "text").count() == 0

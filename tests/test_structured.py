@@ -591,51 +591,6 @@ def test_funnel_stream_recovers_from_checkpoint(spark, tmp_path):
     assert emissions[-1] == (100, 200, 300)
 
 
-def test_ewma_stream_matches_batch_fold(spark, tmp_path):
-    """Streaming EWMA (applyInPandasWithState, 2-number state per key)
-    converges to the batch ewma_last fold over the full history when
-    batch boundaries respect event-time order."""
-    from kolibrie_spark.operators.scd import ewma_last
-    from kolibrie_spark.streaming.ewma import ewma_stream
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    hist = [(f"k{i % 3}", i, float(((i * 31) % 97) - 48) / 7.0) for i in range(60)]
-    # two chronological batches
-    spark.createDataFrame(hist[:30], "k string, t long, v double").write.parquet(src)
-
-    stream = spark.readStream.schema("k string, t long, v double").parquet(src)
-    out = ewma_stream(stream, "k", "t", "v", alpha=0.3)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ewma_test")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    spark.createDataFrame(hist[30:], "k string, t long, v double").write.mode(
-        "append"
-    ).parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    # last emission per key == batch fold over the whole history
-    live = {
-        r.k: (r.n_obs, r.ewma)
-        for r in spark.sql(
-            "SELECT k, n_obs, ewma FROM (SELECT *, row_number() OVER "
-            "(PARTITION BY k ORDER BY n_obs DESC) AS rn FROM ewma_test) "
-            "WHERE rn = 1"
-        ).collect()
-    }
-    batch_df = spark.createDataFrame(hist, "k string, t long, v double")
-    want = {
-        r.k: (r.n_obs, r.ewma)
-        for r in ewma_last(batch_df, "k", "t", "v", alpha=0.3).collect()
-    }
-    assert live == want
-
-
 _TWO_WINDOW_Q = """REGISTER RSTREAM <out> AS SELECT *
        FROM NAMED WINDOW :w1 ON :s1 [RANGE 4 STEP 4]
        FROM NAMED WINDOW :w2 ON :s2 [RANGE 5 STEP 5]
@@ -815,7 +770,8 @@ def _report_parity(spark, query, timeline):
     """Run one (query, scripted-timeline) scenario through BOTH engines —
     structured at one-event-time-per-batch granularity and the faithful
     RSPEngine event-at-a-time — and return (structured, faithful)
-    emission lists."""
+    emission lists, sorted by repr (an unbound variable is None, which
+    does not order against a string)."""
     from kolibrie_spark.streaming.engine import RSPEngine
     from kolibrie_spark.streaming.structured import compile_structured
 
@@ -824,12 +780,12 @@ def _report_parity(spark, query, timeline):
         events_df(spark, [(s, p, o, st, ts) for (st, (s, p, o), ts) in timeline]),
         batch_seconds=1,
     )
-    structured = sorted(map(tuple, q.emissions))
+    structured = sorted(map(tuple, q.emissions), key=repr)
 
     collected = []
     eng = RSPEngine(spark, query, consumer=collected.append)
     eng.add_events(timeline)
-    return structured, sorted(map(tuple, collected))
+    return structured, sorted(map(tuple, collected), key=repr)
 
 
 @pytest.mark.parametrize(
@@ -911,6 +867,36 @@ def test_structured_report_strategies_sliding_step_gt1(spark, report, rng):
     eng = RSPEngine(spark, query, consumer=collected.append)
     eng.add_events(timeline)
     assert structured == sorted(map(tuple, collected))
+
+
+@pytest.mark.parametrize("op", ["ISTREAM", "DSTREAM"])
+def test_r2s_diff_unbound_optional_matches_faithful(spark, op):
+    """An OPTIONAL left unbound gives a NULL binding.  The structured
+    ISTREAM/DSTREAM diff groups by the binding columns, so two NULLs are
+    the same binding; the faithful IStream/DStream compare row keys, where
+    an unbound variable is equal to itself too.  A subject that never gets
+    a label stays in consecutive windows: neither engine may re-emit it
+    (ISTREAM) or report it deleted (DSTREAM) while it stays."""
+    timeline = [
+        ("s1", ("x", "p", "T"), 1),
+        ("s1", ("y", "p", "T"), 2),
+        ("s1", ("y", "label", "L"), 3),
+        ("s1", ("x", "p", "T"), 5),
+        ("s1", ("z", "p", "T"), 7),
+        ("s1", ("x", "p", "T"), 9),
+        ("s1", ("w", "p", "T"), 13),
+    ]
+    query = (
+        f"REGISTER {op} <out> AS SELECT * "
+        "FROM NAMED WINDOW :w ON :s1 [RANGE 4 STEP 2] "
+        "WHERE { WINDOW :w { ?s <p> ?t . OPTIONAL { ?s <label> ?l } } }"
+    )
+    structured, faithful = _report_parity(spark, query, timeline)
+    assert structured == faithful
+    # x is in every fired window with ?l unbound: ISTREAM emits it once,
+    # DSTREAM never reports it deleted
+    x_rows = [r for r in structured if dict(r)["s"] == "x"]
+    assert x_rows == ([(("l", None), ("s", "x"), ("t", "T"))] if op == "ISTREAM" else [])
 
 
 def test_per_stream_hwm_holds_stalled_stream_window(spark):

@@ -9,7 +9,7 @@ changes; the diff of PLANS.md is the review artifact.
 
 Reading the report: every BroadcastNestedLoop occurrence in the gate is
 a ONE-ROW broadcast (a corpus-stats / totals relation crossJoined in:
-ks_drift totals, bm25/lm corpus stats, dsir model defaults) or the
+ks_drift totals, bm25 corpus stats) or the
 UNDEF-wildcard theta join of values_undef — the right plan for those
 shapes, not an accidental O(n*m). The structural audits
 (tests/test_plans.py) separately assert zero CartesianProduct anywhere.
