@@ -7,14 +7,22 @@ micro-batch pipeline over EVENTS_SCHEMA-shaped input
 (s, p, o, g, stream, event_time-as-seconds):
 
     source → foreachBatch {
-        union into a bounded, checkpointed event buffer (DataFrame state);
-        control plane: per window spec, one small aggregate decides which
-        window closed under the batch high-water mark (driver sees a
-        handful of numbers, never the events);
-        data plane: fired window content = partition-prunable range filter
-        over the buffer → the registered group compiles to a DataFrame
-        plan; multi-window results join as DataFrames (compatible-mapping);
-        R2S = distinct/anti-join diffs against a state DataFrame;
+        state: window state is a list of PANES, each one eager local
+        checkpoint of a micro-batch in the batch's own partitioning (a
+        batch finer than one slide bucket folds into the current bucket's
+        pane); the checkpoint job carries an Observation of the batch's
+        row count, event-time range and per-stream maxima, so the driver
+        learns the marks without a job, and a pane is read coalesced to
+        one partition per ROWS_PER_TASK observed rows;
+        control plane: the latest closed window per spec is driver
+        arithmetic over the panes' per-bucket maxima (default report,
+        width % slide == 0, no watermark), else one fused aggregate over
+        the live panes;
+        data plane: fired window content = the panes overlapping
+        [open, close) under a range filter → the registered group
+        compiles to a DataFrame plan; multi-window results join as
+        DataFrames (compatible-mapping); R2S = one dedup/diff aggregate
+        against the previous emission's lazily checkpointed bindings;
         only final emission rows reach the sink.
     }
 
@@ -45,23 +53,41 @@ Documented divergences from the faithful mode (SURVEY §4.2.5):
   faithful engine exactly when micro-batches carry one event time each
   (parity-tested); non-TimeDriven ticks remain faithful-mode features.
 
-State size is bounded: the buffer keeps at most max(width)+slide seconds of
-events (plus watermark slack); R2S state is one result set per query.
+State is bounded. Every read filters ``event_time > horizon``, where the
+horizon is ``hwm - (width + slide)`` of the slowest window (its own
+stream's mark under ``per_stream_hwm``), raised to ``hwm - watermark``
+when a watermark is set. The horizon never falls, so a window sees the
+same events it would see in one buffer filtered batch by batch. A pane
+whose newest event is at or below the horizon is dropped and, once no
+held window result or R2S state still reads it, unpersisted. For an
+in-order stream that leaves about ``max(width + slide) / gcd(slides) + 2``
+live panes, whatever the batch size. R2S state is one result set per
+query, unpersisted once the next emission has read it. A sink must
+consume its emission inside the call: the panes and the state under a
+lazily held emission frame can be unpersisted later.
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
+from functools import reduce
 from time import perf_counter
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-# Cumulative control-plane phase timers (r13, guide §1: measure where the
-# per-batch wall time goes before cutting jobs). Keys: stats / closes
-# (general path), control (the fast path's stats + closes), eval / emit.
-# Reset by callers that want a per-gate reading; the cost is
-# two perf_counter() calls per phase — noise next to any Spark job.
+from kolibrie_spark.sparql import ast
+from kolibrie_spark.sparql.compiler import Bindings, Compiler, DatasetView, join_bindings
+from kolibrie_spark.store import QuadStore
+from kolibrie_spark.streaming.rspql import RSPQLQuery, parse_rspql
+from kolibrie_spark.streaming.s2r import Periodic, ReportStrategy
+
+# Cumulative per-batch phase timers. Keys: pane (the batch's checkpoint
+# job, plus the per-bucket aggregate of a batch that spans several slide
+# buckets), closes (the general path's fused-closes aggregate), eval
+# (window compilation), emit (the R2S diff and the sink). Callers reset
+# them for a per-run reading; each phase costs two perf_counter() calls.
 PHASE_SEC: dict[str, float] = {}
 PHASE_N: dict[str, int] = {}
 
@@ -70,13 +96,14 @@ def _phase(name: str, t0: float) -> None:
     PHASE_SEC[name] = PHASE_SEC.get(name, 0.0) + (perf_counter() - t0)
     PHASE_N[name] = PHASE_N.get(name, 0) + 1
 
-from kolibrie_spark.sparql import ast
-from kolibrie_spark.sparql.compiler import Bindings, Compiler, DatasetView, join_bindings
-from kolibrie_spark.store import QuadStore
-from kolibrie_spark.streaming.rspql import RSPQLQuery, parse_rspql
-from kolibrie_spark.streaming.s2r import Periodic, ReportStrategy
 
-_BUFFER_SCHEMA = "s string, p string, o string, stream string, event_time long"
+_BUFFER_COLS = [
+    ("s", "string"), ("p", "string"), ("o", "string"), ("stream", "string"), ("event_time", "long"),
+]
+# Rows per partition when a pane is read: a pane's checkpoint keeps the
+# partitioning of the batches in it, and its reads coalesce it (no
+# shuffle) to one partition per this many observed rows.
+ROWS_PER_TASK = 100_000
 
 
 def window_assignments(df: DataFrame, time_col: str, width: int, slide: int) -> DataFrame:
@@ -90,6 +117,33 @@ def window_assignments(df: DataFrame, time_col: str, width: int, slide: int) -> 
     return df.withColumn("window_open", F.explode(valid)).withColumn(
         "window_close", F.col("window_open") + F.lit(width)
     )
+
+
+def _unpersist(checkpoint: DataFrame) -> None:
+    """Free a local checkpoint's blocks: they belong to the RDD under its
+    LogicalRDD, and DataFrame.unpersist only touches the SQL cache."""
+    checkpoint._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+@dataclass(eq=False)
+class _Pane:
+    """One eager local checkpoint of window state, ``ckpt``, read as
+    ``df``: the checkpoint coalesced by its observed row count.
+    ``lo``/``hi`` bound its event times; ``occ`` maps (stream, gcd
+    bucket) to the newest event time there, with stream None standing for
+    any stream — kept on the fast control plane only."""
+
+    ckpt: DataFrame
+    df: DataFrame
+    rows: int
+    lo: int
+    hi: int
+    occ: dict[tuple, int]
+
+
+def _overlapping(panes: list[_Pane], open_: int, close: int) -> list[_Pane]:
+    """The panes that can hold events of ``[open_, close)``."""
+    return [p for p in panes if p.lo < close and p.hi >= open_]
 
 
 @dataclass
@@ -112,29 +166,25 @@ class StructuredRSP:
     # (rsp_engine.rs:773-811: add_to_stream only ticks the matching
     # windows) — a stalled stream's window then HOLDS instead of being
     # closed by other streams' progress. Variable-stream windows and the
-    # non-default REPORT gates still use the global hwm; buffer eviction
+    # non-default REPORT gates still use the global hwm; pane eviction
     # keys on the slowest window so a held window's events are retained.
     per_stream_hwm: bool = False
     emissions: list = field(default_factory=list)
 
     def __post_init__(self):
-        self.buffer: DataFrame = self.spark.createDataFrame([], _BUFFER_SCHEMA)
         self.hwm = -1
         self._stream_hwm: dict[str, int] = {}
         self._fired_until: dict[str, int] = {}
-        # r13 fast control plane (guide §1.2/§5: one driver action per
-        # batch): when every window is default-report with width % slide
-        # == 0 and no watermark is set, the per-batch stats aggregate and
-        # the fused-closes buffer aggregate collapse into ONE tiny
-        # groupBy(stream, slide-bucket) job over the marked buffer∪batch
-        # union, and the latest-closed-window arithmetic moves to the
-        # driver over the collected bucket set (see _process_batch_fast
-        # for the exactness argument). Buckets are kept at the gcd of the
-        # slides; a pathological gcd that would explode the group count
-        # falls back to the general path.
-        import math
-
         ws = self.query.windows
+        # streams named by fixed-stream windows: the only per-stream marks
+        # anything reads (_hwm_for, the fast path's occupancy)
+        self._streams = sorted({w.stream for w in ws if w.stream is not None})
+        # Fast control plane: when every window is default-report with
+        # width % slide == 0 and no watermark is set, the latest closed
+        # window per spec is driver arithmetic over the panes' occupied
+        # (stream, gcd-bucket) maxima (see _fast_closes for the exactness
+        # argument); a pathological gcd that would explode the bucket
+        # count falls back to the general path's fused aggregate.
         self._gcd = math.gcd(*[w.slide for w in ws]) if ws else 0
         default_report = all(
             not (list(getattr(w, "report", None) or []))
@@ -149,9 +199,23 @@ class StructuredRSP:
             and self._gcd > 0
             and max((w.width + w.slide) // self._gcd for w in ws) <= 4096
         )
-        # (stream, gcd-bucket) -> max event_time still in the buffer: the
-        # driver-side twin of the buffer closes-aggregate (fast path only)
-        self._occ: dict[tuple, int] = {}
+        # window state: live panes in arrival order, the read horizon, the
+        # panes dropped from state but maybe still read by a held frame,
+        # and the panes each held frame reads (a window result by IRI, the
+        # R2S state by "__r2s")
+        self._panes: list[_Pane] = []
+        self._horizon: int | None = None
+        self._retired: list[_Pane] = []
+        self._held: dict[str, set[_Pane]] = {}
+        self._step = 0  # how far the last batch moved the hwm
+        self._empty = self.spark.range(0).selectExpr(
+            *[f"CAST(NULL AS {t}) AS {c}" for c, t in _BUFFER_COLS]
+        )
+        # one window store per spec: each evaluation swaps its quads
+        self._window_stores = {w.iri: QuadStore(self.spark) for w in ws}
+        # the compiled static side, keyed on the static store's frames
+        self._static_key: tuple | None = None
+        self._static: Bindings | None = None
         self._last_window_results: dict[str, Bindings] = {}
         self._r2s_state: DataFrame | None = None
         self._cycle: set[str] = set()
@@ -168,80 +232,232 @@ class StructuredRSP:
                 self.sync_policy = w.policy
                 break
 
+    # -------------------------------------------------------------- state
+    @property
+    def buffer(self) -> DataFrame:
+        """The live window state: the union of the live panes under the
+        horizon filter (read-only)."""
+        return self._read(self._panes, self._horizon)
+
+    def _read(
+        self, panes: list[_Pane], horizon: int | None, open_: int | None = None,
+        close: int | None = None, stream: str | None = None,
+    ) -> DataFrame:
+        """Events of ``panes`` above ``horizon``, optionally restricted to
+        ``[open_, close)`` and one stream. Only overlapping panes are read,
+        and a pane gets a bound only when it straddles it: a plan without
+        per-batch literals generates the same code every batch, so Spark's
+        codegen cache serves it."""
+        if open_ is not None:
+            panes = _overlapping(panes, open_, close)
+        t = F.col("event_time")
+        parts = []
+        for p in panes:
+            if horizon is not None and p.hi <= horizon:
+                continue
+            conds = []
+            if horizon is not None and p.lo <= horizon:
+                conds.append(t > horizon)
+            if open_ is not None and p.lo < open_:
+                conds.append(t >= open_)
+            if open_ is not None and p.hi >= close:
+                conds.append(t < close)
+            parts.append(p.df.filter(reduce(lambda x, y: x & y, conds)) if conds else p.df)
+        if not parts:
+            return self._empty
+        df = reduce(DataFrame.union, parts)
+        return df if stream is None else df.filter(F.col("stream") == stream)
+
+    def _stream_maxima(self) -> list:
+        """Per-stream max event time, one column per fixed window stream."""
+        t = F.col("event_time")
+        return [
+            F.max(F.when(F.col("stream") == s, t)).alias(f"m{i}")
+            for i, s in enumerate(self._streams)
+        ]
+
+    def _add_pane(self, batch: DataFrame):
+        """Checkpoint ``batch`` as window state in ONE job and return its
+        observed max event time and per-stream maxima (None for an empty
+        batch, which leaves the state as it was).
+
+        The checkpoint keeps the batch's own partitioning, so the source
+        scan runs as wide as it did before; only the pane's reads are
+        coalesced, by the row count observed in this job. The batch folds
+        into the latest pane when that pane holds only the current slide
+        bucket and the last batch's advance of the hwm says this one stays
+        inside it; a wrong guess only makes a pane span two buckets. On
+        the fast path a pane records its per-(stream, bucket) maxima: pure
+        arithmetic when the batch lies in one gcd bucket, else one small
+        aggregate over this pane's checkpoint."""
+        g = self._gcd
+        last = self._panes[-1] if self._panes else None
+        cur = self.hwm - self.hwm % g
+        fold = (
+            last is not None
+            and last.lo >= cur
+            and self.hwm + self._step < cur + g
+        )
+        obs = Observation()
+        t = F.col("event_time")
+        new = batch.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.min(t).alias("lo"),
+            F.max(t).alias("hi"),
+            *self._stream_maxima(),
+        )
+        _t0 = perf_counter()
+        ckpt = (last.df.union(new) if fold else new).localCheckpoint(eager=True)
+        m = obs.get
+        if m["n"] == 0:
+            _unpersist(ckpt)
+            _phase("pane", _t0)
+            return None
+        n, lo, hi = m["n"], m["lo"], m["hi"]
+        smax = {s: m[f"m{i}"] for i, s in enumerate(self._streams) if m[f"m{i}"] is not None}
+        if fold:
+            n, lo, hi = last.rows + n, min(last.lo, lo), max(last.hi, hi)
+        df = ckpt.coalesce(-(-n // ROWS_PER_TASK))
+        occ: dict[tuple, int] = {}
+        if self._fast:
+            b = m["lo"] - m["lo"] % g
+            if m["hi"] < b + g:
+                occ = {(None, b): m["hi"]} | {(s, b): v for s, v in smax.items()}
+                if fold:
+                    occ = last.occ | {k: max(v, last.occ.get(k, v)) for k, v in occ.items()}
+            else:
+                occ = self._bucket_maxima(df)
+        _phase("pane", _t0)
+        pane = _Pane(ckpt, df, n, lo, hi, occ)
+        if fold:
+            self._panes[-1] = pane
+            self._retired.append(last)
+        else:
+            self._panes.append(pane)
+        return m["hi"], smax
+
+    def _bucket_maxima(self, df: DataFrame) -> dict[tuple, int]:
+        """(stream or None, gcd bucket) -> max event time over one pane."""
+        t = F.col("event_time")
+        bucket = (t - F.pmod(t, F.lit(self._gcd))).cast("long")
+        rows = (
+            df.groupBy(bucket.alias("b"))
+            .agg(F.max(t).alias("mx"), *self._stream_maxima())
+            .collect()
+        )
+        occ: dict[tuple, int] = {}
+        for r in rows:
+            occ[(None, r["b"])] = r["mx"]
+            for i, s in enumerate(self._streams):
+                if r[f"m{i}"] is not None:
+                    occ[(s, r["b"])] = r[f"m{i}"]
+        return occ
+
+    def _evict(self) -> None:
+        """Raise the horizon to the current marks and drop every pane at
+        or below it: nothing older than any window can still need — under
+        per-stream firing the slowest window's OWN hwm governs, so a held
+        window's events survive other streams' progress."""
+        horizon = min(self._hwm_for(w) - (w.width + w.slide) for w in self.query.windows)
+        if self.watermark is not None:
+            horizon = max(horizon, self.hwm - self.watermark)
+        self._horizon = horizon
+        self._retired += [p for p in self._panes if p.hi <= horizon]
+        self._panes = [p for p in self._panes if p.hi > horizon]
+
+    def _release(self) -> None:
+        """Unpersist the dropped panes that no held frame reads any more."""
+        held = set().union(*self._held.values())
+        for p in self._retired:
+            if p not in held:
+                _unpersist(p.ckpt)
+        self._retired = [p for p in self._retired if p in held]
+
     # ------------------------------------------------------------ batches
     def process_batch(self, events: DataFrame) -> list:
         batch = events.select(
             "s", "p", "o", "stream", F.col("event_time").cast("long").alias("event_time")
         )
-        if self._fast:
-            return self._process_batch_fast(batch)
-        # r12 (guide §1.2, fewer driver round-trips): ONE control-plane
-        # aggregate per batch carries the global hwm, the row count, and —
-        # under per_stream_hwm — each fixed-stream window's own mark
-        # (conditional max per stream).  Only streams named by window
-        # specs matter: _hwm_for() never reads any other key, so the
-        # per-stream groupBy job this replaces computed marks nobody used.
-        streams = (
-            sorted({w.stream for w in self.query.windows if w.stream is not None})
-            if self.per_stream_hwm
-            else []
-        )
-        _t0 = perf_counter()
-        stats = batch.agg(
-            F.max("event_time").alias("hi"),
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.max(
-                    F.when(F.col("stream") == s, F.col("event_time"))
-                ).alias(f"shi{i}")
-                for i, s in enumerate(streams)
-            ],
-        ).first()
-        _phase("stats", _t0)
-        if stats.n == 0:
-            return []
-        # pre-batch snapshots: report-gated specs judge candidates on the
+        # pre-batch snapshot: report-gated specs judge candidates on the
         # PRE-event window contents (s2r.rs judges and emits the originals
         # while filling clones)
-        prev_hwm = self.hwm
-        pre_buffer = self.buffer
-        self.hwm = max(self.hwm, int(stats.hi))
-        for i, s in enumerate(streams):
-            if stats[f"shi{i}"] is not None:
-                self._stream_hwm[s] = max(
-                    self._stream_hwm.get(s, -1), int(stats[f"shi{i}"])
-                )
-        if self.watermark is not None:
-            batch = batch.filter(F.col("event_time") >= self.hwm - self.watermark)
-        self.buffer = self.buffer.unionByName(batch)
-        # bounded state: nothing older than any window can still need —
-        # under per-stream firing the slowest window's OWN hwm governs,
-        # so a held window's events survive other streams' progress
-        horizon = min(
-            self._hwm_for(w) - (w.width + w.slide) for w in self.query.windows
-        )
-        if self.watermark is not None:
-            horizon = max(horizon, self.hwm - self.watermark)
-        # LAZY checkpoint (r12, guide §1.2): the buffer plan above is
-        # narrow (previous checkpoint ∪ batch, filtered — no exchange),
-        # so eager=True paid a dedicated blocking job per batch purely to
-        # materialize it (~0.5s/batch measured).  Lazy still truncates
-        # lineage; the partitions materialize inside the next control-
-        # plane job that reads the buffer (the fused-closes aggregate on
-        # the default-report path, the pre-batch report probe one batch
-        # later on the REPORT-gated path).
-        self.buffer = self.buffer.filter(
-            F.col("event_time") > F.lit(horizon)
-        ).localCheckpoint(eager=False)
+        prev_hwm, pre_panes, pre_horizon = self.hwm, list(self._panes), self._horizon
+        stats = self._add_pane(batch)
+        if stats is None:
+            return []
+        hi, smax = stats
+        self.hwm = max(self.hwm, hi)
+        self._step = self.hwm - prev_hwm
+        for s, v in smax.items():
+            self._stream_hwm[s] = max(self._stream_hwm.get(s, -1), v)
+        self._evict()
 
         pre_flush = self._timeout_preflush()
-        all_w = {w.iri for w in self.query.windows}
+        if self._fast:
+            fired = self._fast_closes()
+        else:
+            fired = self._general_closes(prev_hwm, pre_panes, pre_horizon)
+        out = pre_flush + self._advance(fired, {w.iri for w in self.query.windows})
+        self._release()
+        return out
 
-        # r12 (guide §1.2): one fused control-plane aggregate computes the
-        # latest closed window for EVERY default-report spec (previously
-        # one window_assignments-explode + agg job per window).  For an
-        # event t under governing hwm H, its largest fireable close is
-        # pure arithmetic: the largest open o ≡ 0 (mod slide) with
+    def _fire(self, w, close: int) -> None:
+        """Evaluate window ``w`` closing at ``close`` over the live panes."""
+        open_ = close - w.width
+        self._fired_until[w.iri] = close
+        content = self._read(self._panes, self._horizon, open_, close, w.stream)
+        self._last_window_results[w.iri] = self._eval_window(w, content)
+        self._held[w.iri] = set(_overlapping(self._panes, open_, close))
+
+    def _fast_closes(self) -> set:
+        """The latest closed window per spec from the panes' occupancy,
+        with no Spark job.
+
+        Exactness vs the general path's fused aggregate (derivation in
+        OPTIMIZATION_r13.md): with width a multiple of slide, every event
+        of slide-bucket b witnesses exactly the closes {max(width, b+slide)
+        .. b+width}, so the bucket's best fireable close under mark H is
+        c = min(b+width, P) with P = (H//slide)*slide, valid when
+        c >= max(width, b+slide) — and all events of one bucket fall on
+        the same side of P, so the bucket-level max equals the event-level
+        max. A gcd bucket lies inside one slide bucket of every window, so
+        it can stand in for b. A (stream, bucket) is occupied iff its
+        newest event in some live pane is above the horizon — exactly when
+        the horizon-filtered state still holds one of its events, the
+        state the general path aggregates."""
+        occupied: dict[str | None, set[int]] = {}
+        for p in self._panes:
+            for (s, b), mx in p.occ.items():
+                if mx > self._horizon:
+                    occupied.setdefault(s, set()).add(b)
+        fired: set[str] = set()
+        for w in self.query.windows:
+            H = self._hwm_for(w)
+            if H < w.width:
+                continue
+            P = (H // w.slide) * w.slide
+            best = None
+            for b in occupied.get(w.stream, ()):
+                bj = b - (b % w.slide)
+                c = min(bj + w.width, P)
+                if c >= max(w.width, bj + w.slide) and (best is None or c > best):
+                    best = c
+            if best is None or best <= self._fired_until.get(w.iri, -1):
+                continue
+            self._fire(w, best)
+            fired.add(w.iri)
+        return fired
+
+    def _general_closes(
+        self, prev_hwm: int, pre_panes: list[_Pane], pre_horizon: int | None
+    ) -> set:
+        """Watermark, REPORT and width % slide != 0 registrations: one
+        fused aggregate over the live panes gives every default-report
+        spec's latest closed window; report-gated specs judge their
+        candidates on the pre-batch panes."""
+        # For an event t under governing hwm H, its largest fireable close
+        # is pure arithmetic: the largest open o ≡ 0 (mod slide) with
         # o <= min(t, H - width) is o* = lim - (lim mod slide); any
         # smaller slide-multiple is < t - width whenever o* is, so the
         # event's candidate is o* + width when o* still covers t
@@ -274,48 +490,28 @@ class StructuredRSP:
             if strategies and strategies != [ReportStrategy.ON_WINDOW_CLOSE]:
                 # non-default REPORT clause: the event-at-a-time report
                 # semantics at batch granularity
-                pre_events = (
-                    pre_buffer
-                    if w.stream is None
-                    else pre_buffer.filter(F.col("stream") == w.stream)
-                )
+                pre_events = self._read(pre_panes, pre_horizon, stream=w.stream)
                 close = self._report_fire(w, strategies, pre_events, prev_hwm)
                 if close is None:
                     continue
                 open_ = max(0, close - w.width)
                 content = (
-                    pre_events.filter(
-                        (F.col("event_time") >= open_)
-                        & (F.col("event_time") < close)
-                    )
+                    self._read(pre_panes, pre_horizon, open_, close, w.stream)
                     .select("s", "p", "o")
                     .distinct()  # Content keys items: set semantics
                 )
                 self._last_window_results[w.iri] = self._eval_window(w, content)
+                self._held[w.iri] = set(_overlapping(pre_panes, open_, close))
                 fired.add(w.iri)
                 continue
-            stream_events = (
-                self.buffer
-                if w.stream is None
-                else self.buffer.filter(F.col("stream") == w.stream)
-            )
-            # control plane: latest window of this spec closed under the
-            # governing hwm (this stream's own, under per_stream_hwm) —
-            # read from the fused aggregate above
+            # latest window of this spec closed under the governing hwm
+            # (this stream's own, under per_stream_hwm)
             close_v = fused_closes[f"__c{j}"] if fused_closes is not None else None
             if close_v is None or close_v <= self._fired_until.get(w.iri, -1):
                 continue
-            close = int(close_v)
-            open_ = close - w.width
-            self._fired_until[w.iri] = close
+            self._fire(w, int(close_v))
             fired.add(w.iri)
-            # data plane: evaluate the registered group over the window
-            content = stream_events.filter(
-                (F.col("event_time") >= open_) & (F.col("event_time") < close)
-            ).select("s", "p", "o")
-            self._last_window_results[w.iri] = self._eval_window(w, content)
-
-        return pre_flush + self._advance(fired, all_w)
+        return fired
 
     def _timeout_preflush(self) -> list:
         """TIMEOUT deadline check BEFORE this batch's window evals, mirroring
@@ -337,103 +533,6 @@ class StructuredRSP:
             if fallback == "STEAL" and set(self._last_window_results) == all_w:
                 return self._emit()
         return []
-
-    def _process_batch_fast(self, batch: DataFrame) -> list:
-        """One-driver-action control plane for the default-report,
-        no-watermark, width%slide==0 case (r13, guide §1.2): a single tiny
-        ``groupBy(stream, gcd-slide-bucket)`` job over the marked
-        buffer∪batch union simultaneously (a) materializes the buffer's
-        lazy checkpoint, (b) yields the batch row count and the new
-        high-water marks, and (c) maintains ``self._occ`` — the surviving
-        max event time per (stream, bucket) — from which the latest closed
-        window per spec is pure driver arithmetic.
-
-        Exactness vs the general path's buffer aggregate (derivation in
-        OPTIMIZATION_r13.md): with width a multiple of slide, every event
-        of slide-bucket b witnesses exactly the closes {max(width, b+slide)
-        .. b+width}, so the bucket's best fireable close under mark H is
-        c = min(b+width, P) with P = (H//slide)*slide, valid when
-        c >= max(width, b+slide) — and all events of one bucket fall on
-        the same side of P, so the bucket-level max equals the event-level
-        max. Eviction is mimicked exactly: a bucket stays occupied iff its
-        newest event survives the horizon, and the physical buffer applies
-        the same horizon filter on read (the checkpoint itself persists
-        one batch behind the horizon, which no reader can observe — every
-        content filter runs on the filtered view)."""
-        g = self._gcd
-        old = self.buffer.withColumn("__new", F.lit(False))
-        ckpt = old.unionByName(
-            batch.withColumn("__new", F.lit(True))
-        ).localCheckpoint(eager=False)
-        self.buffer = ckpt.drop("__new")
-        _t0 = perf_counter()
-        bucket = (
-            F.col("event_time") - F.pmod(F.col("event_time"), F.lit(g))
-        ).cast("long")
-        rows = (
-            ckpt.groupBy(F.col("stream").alias("__s"), bucket.alias("__b"))
-            .agg(
-                F.max("event_time").alias("__mx"),
-                F.count(F.when(F.col("__new"), F.lit(1))).alias("__nn"),
-            )
-            .collect()
-        )
-        _phase("control", _t0)
-        if sum(r["__nn"] for r in rows) == 0:
-            return []
-        # marks: old buffer rows are <= the stored hwm by construction, so
-        # the union max IS the running max; same per stream
-        self.hwm = max([self.hwm] + [int(r["__mx"]) for r in rows])
-        if self.per_stream_hwm:
-            for r in rows:
-                cur = self._stream_hwm.get(r["__s"], -1)
-                if int(r["__mx"]) > cur:
-                    self._stream_hwm[r["__s"]] = int(r["__mx"])
-        for r in rows:
-            k = (r["__s"], int(r["__b"]))
-            if self._occ.get(k, -1) < int(r["__mx"]):
-                self._occ[k] = int(r["__mx"])
-        horizon = min(
-            self._hwm_for(w) - (w.width + w.slide) for w in self.query.windows
-        )
-        self._occ = {k: v for k, v in self._occ.items() if v > horizon}
-        self.buffer = self.buffer.filter(F.col("event_time") > F.lit(horizon))
-
-        pre_flush = self._timeout_preflush()
-        all_w = {w.iri for w in self.query.windows}
-        fired: set[str] = set()
-        for w in self.query.windows:
-            H = self._hwm_for(w)
-            if H < w.width:
-                continue
-            P = (H // w.slide) * w.slide
-            best = None
-            for (s, b), _mx in self._occ.items():
-                if w.stream is not None and s != w.stream:
-                    continue
-                bj = b - (b % w.slide)
-                c = min(bj + w.width, P)
-                if c >= max(w.width, bj + w.slide) and (
-                    best is None or c > best
-                ):
-                    best = c
-            if best is None or best <= self._fired_until.get(w.iri, -1):
-                continue
-            close = int(best)
-            open_ = close - w.width
-            self._fired_until[w.iri] = close
-            fired.add(w.iri)
-            stream_events = (
-                self.buffer
-                if w.stream is None
-                else self.buffer.filter(F.col("stream") == w.stream)
-            )
-            content = stream_events.filter(
-                (F.col("event_time") >= open_) & (F.col("event_time") < close)
-            ).select("s", "p", "o")
-            self._last_window_results[w.iri] = self._eval_window(w, content)
-
-        return pre_flush + self._advance(fired, all_w)
 
     def _hwm_for(self, w) -> int:
         """The high-water mark that governs window ``w``: its own
@@ -462,8 +561,6 @@ class StructuredRSP:
         keeps the reference's quirk: it fires when content EQUALS the last
         JUDGED content, and every judged candidate updates that state in
         iteration order.  Returns the fired close, or None."""
-        import math
-
         t = self.hwm
         slide, width = w.slide, w.width
         closes: set[int] = set()
@@ -510,7 +607,7 @@ class StructuredRSP:
         self, pre_events: DataFrame, closes: list[int], width: int
     ) -> dict[int, tuple]:
         """(distinct-count, order-independent hash) per candidate window
-        over the pre-batch buffer, in ONE aggregate job."""
+        over the pre-batch state, in ONE aggregate job."""
         if not closes:
             return {}
         cand = F.array(
@@ -569,14 +666,23 @@ class StructuredRSP:
 
     def _eval_window(self, w, content: DataFrame) -> Bindings:
         _t0 = perf_counter()
-        store = QuadStore(
-            self.spark,
-            quads=content.withColumn("g", F.lit(None).cast("string")),
-        )
-        compiler = Compiler(store)
-        out = compiler.compile_group(w.group, DatasetView(store, [], []), None)
+        store = self._window_stores[w.iri]
+        store.quads = content.select("s", "p", "o", F.lit(None).cast("string").alias("g"))
+        out = Compiler(store).compile_group(w.group, DatasetView(store, [], []), None)
         _phase("eval", _t0)
         return out
+
+    def _static_bindings(self) -> Bindings:
+        """The static side, compiled once per version of the static store:
+        its quads, graphs and quoted frames are replaced on every change."""
+        st = self.static_store
+        key = (st.quads, st.graphs, st.quoted)
+        if self._static_key is None or any(a is not b for a, b in zip(key, self._static_key)):
+            self._static = Compiler(st).compile_group(
+                self.query.static_group, DatasetView(st, [], []), active_graph=None
+            )
+            self._static_key = key
+        return self._static
 
     def _emit(self) -> list:
         joined: Bindings | None = None
@@ -584,82 +690,64 @@ class StructuredRSP:
             b = self._last_window_results[w.iri]
             joined = b if joined is None else join_bindings(joined, b)
         if self.query.static_group.elements and self.static_store is not None:
-            compiler = Compiler(self.static_store)
-            sb = compiler.compile_group(
-                self.query.static_group,
-                DatasetView(self.static_store, [], []),
-                active_graph=None,
-            )
+            sb = self._static_bindings()
             joined = sb if joined is None else join_bindings(joined, sb)
         df = joined.df
         if not self.query.select.star:
             keep = [v.name for v in self.query.select.select if isinstance(v, ast.Var)]
             df = df.select(
-                *[
-                    (F.col(k) if k in df.columns else F.lit("")).alias(k)
-                    for k in keep
-                ]
+                *[(F.col(k) if k in df.columns else F.lit("")).alias(k) for k in keep]
             )
         op = self.query.operator
         if op == "RSTREAM":
             out_df = df.dropDuplicates()
-        else:  # ISTREAM / DSTREAM
-            # r13 (guide §2.4): the R2S diff used to run as dropDuplicates
-            # (one exchange) -> localCheckpoint -> anti-join against the
-            # state checkpoint (two MORE exchanges, because a checkpoint
-            # scan reports UnknownPartitioning so ENSURE_REQUIREMENTS
-            # re-shuffles both sides).  Set-dedup and set-diff are ONE
-            # aggregation: tag new rows and state rows, union, group by
-            # the binding columns, and read membership off two max()
-            # flags — a single exchange computes dedup AND diff for
-            # either operator.  The state rides as the RAW (pre-dedup)
-            # binding checkpoint; the map-side partial aggregation
-            # collapses its duplicates before the exchange, so re-deduping
-            # it per emission costs no extra shuffle bytes.
-            # LAZY checkpoint (r12, guide §5): this emission's sink/
-            # collect consumes every partition of `df` through the union-
-            # aggregate (or through dropDuplicates on the first ISTREAM
-            # emission); the first DSTREAM emission is an empty frame and
-            # leaves `df` unmaterialized until the successor emission
-            # reads it as state — same as before.
+        else:
+            # Set-dedup and set-diff are ONE aggregation: tag this
+            # emission's rows and the state's, union, group by the binding
+            # columns, and read membership off two flags. A group's rows
+            # are all-new (never in state), all-old (deleted), or mixed
+            # (present in both): ISTREAM emits the all-new groups, DSTREAM
+            # the all-old ones. The first emission has no state, so
+            # ISTREAM emits every binding and DSTREAM none.
+            # The new state is a LAZY checkpoint of the binding frame: the
+            # job that reads this emission fills it, so the next diff
+            # reads it instead of recomputing the window plan.
             df = df.localCheckpoint(eager=False)
-            if self._r2s_state is None:
-                out_df = (
-                    df.dropDuplicates()
-                    if op == "ISTREAM"
-                    else self.spark.createDataFrame([], df.schema)
-                )
-            else:
-                cols = list(df.columns)
-                tagged = df.select(
-                    *cols, F.lit(True).alias("__new")
-                ).unionByName(
+            cols = list(df.columns)
+            tagged = df.select(*cols, F.lit(True).alias("__new"))
+            if self._r2s_state is not None:
+                tagged = tagged.unionByName(
                     self._r2s_state.select(*cols, F.lit(False).alias("__new"))
                 )
-                flags = tagged.groupBy(*cols).agg(
-                    F.max("__new").alias("__hn"),
-                    F.min("__new").alias("__mn"),
-                )
-                # a group's rows are all-new (never in state), all-old
-                # (deleted), or mixed (present in both): ISTREAM emits
-                # the all-new groups, DSTREAM the all-old ones
-                keep = (
-                    (F.col("__hn") & F.col("__mn"))
-                    if op == "ISTREAM"
-                    else (~F.col("__hn") & ~F.col("__mn"))
-                )
-                out_df = flags.filter(keep).select(*cols)
-            self._r2s_state = df
+            flags = tagged.groupBy(*cols).agg(
+                F.max("__new").alias("__hn"), F.min("__new").alias("__mn")
+            )
+            keep = (
+                (F.col("__hn") & F.col("__mn"))
+                if op == "ISTREAM"
+                else (~F.col("__hn") & ~F.col("__mn"))
+            )
+            out_df = flags.filter(keep).select(*cols)
+            old, self._r2s_state = self._r2s_state, df
         _t0 = perf_counter()
         if self.sink is not None:
             # scale path: hand the emission DataFrame to the sink inside
             # the batch — no driver-side materialization of result rows
             self.sink(out_df)
-            _phase("emit", _t0)
-            return []
-        rows = [sorted(r.asDict().items()) for r in out_df.collect()]
-        self.emissions.extend(rows)
+            rows = []
+        else:
+            rows = [sorted(r.asDict().items()) for r in out_df.collect()]
+            self.emissions.extend(rows)
         _phase("emit", _t0)
+        if op != "RSTREAM":
+            if old is not None:
+                _unpersist(old)  # only this emission read it
+            # A sink that reads only part of its emission can leave the
+            # state's checkpoint unfilled: the panes it reads are held
+            # until the next emission replaces it.
+            self._held["__r2s"] = set().union(
+                *(self._held.get(w.iri, set()) for w in self.query.windows)
+            )
         return rows
 
     # -------------------------------------------------------------- driving

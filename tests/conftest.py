@@ -19,15 +19,15 @@ _SLOW_TESTS = {
     "test_fresh_jvm_confirm_stage_clears_and_confirms",
     "test_no_cartesian_products_in_gate_plans",
     # faithful-engine parity + coordination sweeps (structured streaming
-    # keeps the scripted-timeline, r2s, live-gate-vs-replay and
-    # fast-vs-general differential pins in the default lane)
+    # keeps the scripted-timeline, r2s, live-gate-vs-replay,
+    # fast-vs-general differential and per-stream-hwm faithful-engine
+    # parity pins in the default lane)
     "test_live_two_window_sync_matches_faithful_engine",
     "test_structured_timeout_matches_faithful_engine_event_clock",
     "test_structured_wait_vs_steal_coordination",
     "test_structured_report_strategies_match_faithful",
     "test_structured_report_strategies_sliding_step_gt1",
     "test_structured_timeout_event_time_deadline",
-    "test_per_stream_hwm_holds_stalled_stream_window",
     # scenario / workflow e2e composites
     "test_full_combination_workflow",
     "test_provenance_feedback_loop",

@@ -8,10 +8,23 @@ ITYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
 def events_df(spark, rows):
-    """rows: (s, p, o, stream, event_time)"""
+    """rows: (s, p, o, stream, event_time), as a JVM local relation: a
+    frame of pickled Python rows would start Python workers on every scan."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) if rows else [()] * 5
+    table = pa.table(
+        {
+            "s": pa.array(cols[0], pa.string()),
+            "p": pa.array(cols[1], pa.string()),
+            "o": pa.array(cols[2], pa.string()),
+            "g": pa.nulls(len(rows), pa.string()),
+            "stream": pa.array(cols[3], pa.string()),
+            "event_time": pa.array(cols[4], pa.int64()),
+        }
+    )
     return spark.createDataFrame(
-        [(s, p, o, None, st, t) for (s, p, o, st, t) in rows],
-        "s string, p string, o string, g string, stream string, event_time long",
+        table, "s string, p string, o string, g string, stream string, event_time long"
     )
 
 
@@ -1032,3 +1045,163 @@ def test_fast_control_plane_per_stream_hwm_parity(spark):
         res = q.run_events_df(df, batch_seconds=5)
         got.append((res, dict(q._fired_until)))
     assert got[0] == got[1]
+
+
+def _fast_vs_general(spark, qtext, batches, policy=("WAIT",)):
+    """Per-batch emissions (sorted: row order within one emission is not
+    fixed) and the firing trace of the fast and the general control plane
+    on the same micro-batches, plus the most panes either run held."""
+    from kolibrie_spark.streaming.structured import compile_structured
+
+    got, panes = [], 0
+    for fast in (True, False):
+        q = compile_structured(spark, qtext, sync_policy=policy)
+        q._fast = fast
+        out = []
+        for batch in batches:
+            out.append(sorted(map(tuple, q.process_batch(events_df(spark, batch)))))
+            panes = max(panes, len(q._panes))
+        got.append((out, dict(q._fired_until)))
+    return got, panes
+
+
+def test_fast_control_plane_parity_multi_bucket_batches(spark):
+    """A batch that spans several slide buckets gets its per-bucket
+    maxima from one aggregate over its own pane; the firing trace and
+    the emissions must still equal the general path's."""
+    import random
+
+    rng = random.Random(11)
+    rows, t = [], 0
+    for i in range(30):
+        t += 45 if i == 15 else rng.choice([1, 2, 4])
+        rows.append((f"u{rng.randint(0, 4)}", "t", f"x{rng.randint(0, 2)}", "ev", t))
+    batches = [[r for r in rows if lo <= r[4] < lo + 17] for lo in range(0, t + 1, 17)]
+    qtext = (
+        "REGISTER ISTREAM <out> AS SELECT * "
+        "FROM NAMED WINDOW :w1 ON :ev [RANGE 20 STEP 5] "
+        "FROM NAMED WINDOW :w2 ON :ev [RANGE 30 STEP 10] "
+        "WHERE { WINDOW :w1 { ?u <t> ?t } WINDOW :w2 { ?u <t> ?x } }"
+    )
+    got, _ = _fast_vs_general(spark, qtext, batches, ("STEAL",))
+    assert got[0] == got[1]
+    assert any(got[0][0])  # something was emitted
+
+
+def test_fast_control_plane_parity_folded_panes(spark):
+    """Batches finer than one slide fold into the current bucket's pane
+    (including a wrong guess at a bucket edge); the fast path must still
+    match the general path — also across a jump past width + slide — and
+    the pane count stays bounded by the window span, not the batch
+    count."""
+    times = [0, 1, 2, 3, 4, 5, 7, 8, 10, 30, 31, 33, 34]
+    batches = [[(f"u{t % 4}", "t", f"x{t % 3}", "ev", t)] for t in times]
+    qtext = (
+        "REGISTER ISTREAM <out> AS SELECT * "
+        "FROM NAMED WINDOW :w ON :ev [RANGE 6 STEP 3] "
+        "WHERE { WINDOW :w { ?u <t> ?t } }"
+    )
+    got, panes = _fast_vs_general(spark, qtext, batches)
+    assert got[0] == got[1]
+    assert any(got[0][0])
+    assert panes <= (6 + 3) // 3 + 2 < len(times)
+
+
+def test_pane_state_is_bounded_over_60_aligned_batches(spark):
+    """60 STEP-aligned batches through a RANGE 4*STEP ISTREAM window: the
+    state's partition count is the same after batch 10 and batch 60
+    (panes are evicted whole, not filtered), and every emission equals
+    a Python window model — the current window's bindings minus the
+    previous window's, as perfbench's rsp_stream expects them."""
+    import random
+
+    from kolibrie_spark.streaming.structured import compile_structured
+
+    step = 10
+    q = compile_structured(
+        spark,
+        f"""REGISTER ISTREAM <out> AS SELECT ?u ?t
+           FROM NAMED WINDOW :w ON :ev [RANGE {4 * step} STEP {step}]
+           WHERE {{ WINDOW :w {{ ?u <t> ?t }} }}""",
+    )
+    rng = random.Random(3)
+    batches = [
+        [
+            (f"u{rng.randint(0, 7)}", "t", f"x{rng.randint(0, 2)}", "ev",
+             b * step + rng.randint(0, step - 1))
+            for _ in range(rng.randint(1, 3))
+        ]
+        for b in range(60)
+    ]
+
+    def window(b):
+        lo, hi = (b - 4) * step, b * step
+        return {(u, t) for rows in batches for (u, _p, t, _s, et) in rows if lo <= et < hi}
+
+    prev, parts = set(), {}
+    for b, rows in enumerate(batches):
+        out = q.process_batch(events_df(spark, rows))
+        if b >= 4:  # the first window to close is [0, 4 * step)
+            cur = window(b)
+            assert sorted((dict(r)["u"], dict(r)["t"]) for r in out) == sorted(cur - prev), b
+            prev = cur
+        if b + 1 in (10, 60):
+            parts[b + 1] = (q.buffer.rdd.getNumPartitions(), len(q._panes))
+    assert parts[10][0] == parts[60][0]
+    # live panes: the (4 + 1) * step behind the mark, plus the current one
+    assert max(n for _, n in parts.values()) <= 4 + 1 + 1
+    assert q.buffer.count() <= sum(len(r) for r in batches[-6:])
+
+
+def test_static_side_change_reaches_next_emission(spark):
+    """The static side is compiled once per version of the static store:
+    a quad inserted between two batches joins the next emission."""
+    from kolibrie_spark.store import QuadStore
+    from kolibrie_spark.streaming.structured import compile_structured
+
+    static = QuadStore.from_rows(spark, [("dev1", "locatedIn", "lab")])
+    q = compile_structured(
+        spark,
+        """REGISTER RSTREAM <out> AS SELECT ?d ?room
+           FROM NAMED WINDOW :w ON :s1 [RANGE 2 STEP 2]
+           WHERE { WINDOW :w { ?d <temp> ?t } ?d <locatedIn> ?room }""",
+        static_store=static,
+    )
+
+    def batch(t):
+        return events_df(spark, [("dev1", "temp", "20", "s1", t), ("dev2", "temp", "30", "s1", t)])
+
+    q.process_batch(batch(0))
+    first = q.process_batch(batch(2))  # fires [0, 2)
+    assert sorted(dict(r)["d"] for r in first) == ["dev1"]
+    compiled = q._static
+    assert q.process_batch(batch(4)) and q._static is compiled  # no change: no recompile
+    static.add_quads([("dev2", "locatedIn", "office")])
+    after = q.process_batch(batch(6))  # fires [4, 6)
+    assert sorted((dict(r)["d"], dict(r)["room"]) for r in after) == [
+        ("dev1", "lab"),
+        ("dev2", "office"),
+    ]
+
+
+def test_large_first_batch_keeps_its_partitions(spark, monkeypatch):
+    """A pane's checkpoint keeps its batch's partitioning, and its reads
+    are coalesced by the row count observed in the checkpoint job: a
+    first batch over the rows-per-partition mark is still read as
+    several partitions, a one-row batch as one."""
+    from kolibrie_spark.streaming import structured
+
+    monkeypatch.setattr(structured, "ROWS_PER_TASK", 10)
+    q = structured.compile_structured(
+        spark,
+        "REGISTER RSTREAM <out> AS SELECT ?u "
+        "FROM NAMED WINDOW :w ON :ev [RANGE 20 STEP 10] "
+        "WHERE { WINDOW :w { ?u <t> ?x } }",
+    )
+    big = events_df(spark, [(f"u{i}", "t", "x", "ev", i % 10) for i in range(40)])
+    assert q.process_batch(big.repartition(4)) == []
+    assert q._panes[0].ckpt.rdd.getNumPartitions() == 4
+    assert q._panes[0].df.rdd.getNumPartitions() == 4  # ceil(40 / 10)
+    out = q.process_batch(events_df(spark, [("v", "t", "x", "ev", 25)]))  # fires [0, 20)
+    assert sorted(dict(r)["u"] for r in out) == sorted(f"u{i}" for i in range(40))
+    assert q._panes[-1].df.rdd.getNumPartitions() == 1

@@ -1,10 +1,11 @@
 """Phase-split probe for the live streaming gates (r13, guide §1).
 
-Runs the named live gates once each in one JVM (bench session config) and
-prints, per gate: total wall seconds, the StructuredRSP control-plane
-phase split (stats / closes / eval / emit, cumulative across batches with
-call counts), and the residual (setup chunk-write + streaming-engine
-machinery + final parquet read).
+Runs the named live gates once each in one JVM (local[cpu_count] unless
+SPARK_GRAFT_CPUS says otherwise) and prints, per gate: total wall
+seconds, the StructuredRSP phase split (``PHASE_SEC``: pane / closes /
+eval / emit, cumulative across batches with call counts), and the
+residual (setup chunk-write + streaming-engine machinery + final parquet
+read).
 
 Usage: python tools/stream_phase_probe.py [gate ...]
 """
@@ -28,13 +29,13 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("kolibrie-stream-phase-probe")
         .config("spark.sql.shuffle.partitions", str(int(cpus)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", "2g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

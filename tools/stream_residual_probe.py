@@ -1,6 +1,8 @@
 """Break down the live-gate residual: chunk-write setup vs stream drain
 vs per-trigger machinery (r13, guide §1). Monkeypatches the entry module's
-_write_stream_chunks and _drain_live to time them."""
+_write_stream_chunks and _drain_live to time them; the drain's StructuredRSP
+share is the ``PHASE_SEC`` split (pane / closes / eval / emit). Runs on
+local[cpu_count] unless SPARK_GRAFT_CPUS says otherwise."""
 from __future__ import annotations
 
 import json
@@ -20,12 +22,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(int(cpus)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", "2g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
