@@ -41,6 +41,18 @@ def compare(left: Column, op: str, right: Column) -> Column:
     raise ValueError(f"unknown comparison operator {op!r}")
 
 
+def compare_sql(left: str, op: str, right: str) -> str:
+    """``compare`` as Spark SQL text over two SQL expressions."""
+    if op == "=":
+        return f"({left} <=> {right})"
+    if op == "!=":
+        return f"NOT ({left} <=> {right})"
+    if op not in ("<", "<=", ">", ">="):
+        raise ValueError(f"unknown comparison operator {op!r}")
+    ln, rn = f"try_cast({left} AS DOUBLE)", f"try_cast({right} AS DOUBLE)"
+    return f"({ln} IS NOT NULL AND {rn} IS NOT NULL AND {ln} {op} {rn})"
+
+
 def order_keys(col: Column, ascending: bool) -> list[Column]:
     """Sort keys reproducing numeric-if-both-parse-else-lexical ORDER BY.
 

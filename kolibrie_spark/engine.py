@@ -358,24 +358,20 @@ class SparqlEngine:
         through.  Inserts the derived facts and returns them."""
         from pyspark.sql import functions as F
 
-        from kolibrie_spark.reasoner.fixpoint import (
-            _apply_filters,
-            _join_premises,
-            _scan,
-            _term_value,
-        )
+        from kolibrie_spark.reasoner.fixpoint import _term_value, compile_bindings
+        from kolibrie_spark.reasoner.rule import pattern_variables
         from kolibrie_spark.sparql.ast import Var
 
         pred_df = self.ml_predict(ml_text)
         facts = self.store.quads.filter(F.col("g").isNull()).select("s", "p", "o")
-        bind = _join_premises([_scan(facts, pat, tagged=False) for pat in rule.premise])
-        bind = _apply_filters(bind, rule.filters)
-        shared = [c for c in bind.columns if c in pred_df.columns and c != out_var]
+        bound = dict.fromkeys(v for pat in rule.premise for v in pattern_variables(pat))
+        shared = [v for v in bound if v in pred_df.columns and v != out_var]
         if not shared:
             raise ValueError(
                 "RULE + ML.PREDICT with an OUTPUT-bound conclusion needs a "
                 "shared anchor variable between WHERE and INPUT"
             )
+        bind = compile_bindings(rule).run(facts)
         joined = bind.join(
             pred_df.select(*shared, out_var).dropDuplicates(shared), on=shared
         )

@@ -59,7 +59,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from kolibrie_spark.reasoner.fixpoint import _NEW, _checkpoint
+from kolibrie_spark.reasoner.fixpoint import _NEW, _checkpoint, round_metrics
 
 
 def transitive_closure(
@@ -81,8 +81,9 @@ def transitive_closure(
     column = shortest hop count.
     """
     seed = edges.select(F.col(src), F.col(dst)).dropDuplicates()
+    metrics = round_metrics()
     reach, rows, new = _checkpoint(
-        seed.withColumn("dist", F.lit(1).cast("long")).withColumn(_NEW, F.lit(True)), None
+        seed.withColumn("dist", F.lit(1).cast("long")).withColumn(_NEW, F.lit(True)), None, metrics
     )
     hop = 1  # the flagged frontier H_k: pairs at shortest distance exactly 2^k
     for _ in range(max_iter):
@@ -102,7 +103,7 @@ def transitive_closure(
             .agg(F.min("dist").alias("dist"))
             .withColumn(_NEW, F.col("dist") == hop)
         )
-        reach, rows, new = _checkpoint(merged, rows)
+        reach, rows, new = _checkpoint(merged, rows, metrics)
     else:
         if new:
             raise RuntimeError(

@@ -1,19 +1,28 @@
 """Forward/backward chaining over a facts DataFrame.
 
-Reference algorithms re-expressed as DataFrame plans:
+Reference algorithms re-expressed as Spark plans:
 - naive fixpoint (datalog/src/reasoning/materialisation/my_naive.rs:74):
   apply all rules to all facts until no growth;
 - semi-naive (semi_naive.rs:89): delta-driven — each round joins the
   last round's delta against the full fact set in every premise position;
-- negation-as-failure: LEFT ANTI join against the instantiated negated
+- negation-as-failure: NOT EXISTS against the instantiated negated
   pattern (single stratum, shared/src/rule.rs semantics);
 - provenance semirings (shared/src/provenance.rs:18-60): a ``tag`` column
   flows through the joins — ⊗ combines premise tags within a derivation,
   ⊕ merges alternative derivations of the same fact per round;
 - backward chaining (reasoning/backward_chaining.rs:150): driver-side
-  goal-directed resolution issuing DataFrame probes per subgoal.
+  goal-directed resolution issuing one pattern probe per subgoal.
 
-The engine's DataFrame fixpoints run one loop, ``fixpoint``. Its callers:
+Rules run only as compiled rule text: ``compile_rules`` turns a rule
+program (rules, semiring, naive or semi-naive) into ONE Spark SQL text over
+the views ``{facts}`` and ``{delta}`` (every premise-position branch,
+filter, negation, conclusion and ⊗ tag), its constants named parameters
+(``:c0``), so no term is quoted. A fixpoint compiles once and each round
+runs ``spark.sql(text, args, facts=…, delta=…)``: the same plan built from
+Column calls costs ~700 py4j round trips per round. Constraints, repairs,
+pattern probes and the ML rule bindings run the same text.
+
+The engine's fixpoints run one loop, ``fixpoint``. Its callers:
 - the four ``Reasoner.materialize*`` methods, keyed on ``(s, p, o)``
   (provenance tags keep their first merged value; repairs filter each
   round through ``admit``);
@@ -27,25 +36,30 @@ the hop) but checkpoints through the same ``_checkpoint``.
 Scale notes: with small inputs a round costs Spark jobs, stages and tasks,
 not data, so: the fact set is ONE local checkpoint with a boolean ``__new``
 column (the delta is ``facts.filter(__new)``); dedup and the anti-join
-against old facts are one ``groupBy(key)`` over derived ∪ facts; the delta
-is broadcast while its known row count fits
-``spark.sql.autoBroadcastJoinThreshold``; and the round is checkpointed
-EAGERLY under an ``Observation`` of its total and new row counts, so the
-emptiness test runs no job of its own.
+against old facts are one ``groupBy(key)`` over derived ∪ facts, its
+aggregate built once per ``fixpoint`` call; the delta is broadcast while
+its known row count fits ``spark.sql.autoBroadcastJoinThreshold``; and the
+round is checkpointed EAGERLY under an ``Observation`` of its total and new
+row counts, so the emptiness test runs no job of its own. That job runs
+under a fixed plan (``conf.scoped_conf``): AQE off, which runs each shuffle
+stage as a job, and ⌈rows / ``FACT_ROWS_PER_PARTITION``⌉ shuffle partitions
+from the last observed row count, never ``spark.sql.shuffle.partitions``
+(200 by default: 4-6× slower here).
 Rounds are capped by ``max_iter``; running out raises ``RuntimeError``.
 """
 
 from __future__ import annotations
 
-import functools
 from collections.abc import Callable
+from contextlib import nullcontext
 from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from kolibrie_spark import compare
-from kolibrie_spark.reasoner.rule import FilterCondition, Rule, check_rule_safety
+from kolibrie_spark.compare import compare_sql
+from kolibrie_spark.conf import scoped_conf
+from kolibrie_spark.reasoner.rule import Rule, check_rule_safety
 from kolibrie_spark.schema import local_df
 from kolibrie_spark.sparql.ast import Iri, Lit, TriplePattern, Var
 
@@ -66,10 +80,10 @@ class Semiring:
 
     name: str
 
-    def times(self, a: Column, b: Column) -> Column:
-        if self.name == "addmult":
-            return a * b
-        return F.least(a, b)
+    def times_sql(self, tags: list[str]) -> str:
+        if len(tags) == 1:
+            return tags[0]
+        return " * ".join(tags) if self.name == "addmult" else f"least({', '.join(tags)})"
 
     def plus_agg(self, col: Column) -> Column:
         if self.name == "addmult":
@@ -92,118 +106,105 @@ def _term_value(t) -> str:
     raise TypeError(f"not a constant term: {t!r}")
 
 
-def _scan(facts: DataFrame, pat: TriplePattern, tagged: bool) -> DataFrame:
-    df = facts
-    out, seen, conds = [], {}, []
-    for pos, term in (("s", pat.s), ("p", pat.p), ("o", pat.o)):
-        if isinstance(term, Var):
-            if term.name in seen:
-                conds.append(F.col(pos) == F.col(seen[term.name]))
+# ----------------------------------------------------- compiled rule text
+@dataclass(frozen=True)
+class RuleText:
+    """A rule program as one Spark SQL text over the views ``{facts}`` and
+    ``{delta}``, with the name of each constant's parameter."""
+
+    sql: str
+    params: dict[str, str]
+
+    def run(self, facts: DataFrame, delta: DataFrame | None = None) -> DataFrame:
+        args = {name: value for value, name in self.params.items()}
+        return facts.sparkSession.sql(self.sql, args, facts=facts, delta=delta)
+
+
+def _param(params: dict[str, str], value: str) -> str:
+    return ":" + params.setdefault(value, f"c{len(params)}")
+
+
+def _body(rule: Rule, sources: list[str], params: dict[str, str]) -> tuple[str, dict[str, str]]:
+    """``FROM … WHERE …`` of one rule body, premise i read from the view
+    ``sources[i]`` as ``t{i}``, and the column each variable binds to."""
+
+    def match(alias: str, pat: TriplePattern, bound: dict[str, str]) -> list[str]:
+        conds = []
+        for pos, term in zip(FACT_COLS, (pat.s, pat.p, pat.o)):
+            col = f"{alias}.{pos}"
+            if not isinstance(term, Var):
+                conds.append(f"{col} = {_param(params, _term_value(term))}")
+            elif term.name in bound:
+                conds.append(f"{col} = {bound[term.name]}")
             else:
-                seen[term.name] = pos
-                out.append(F.col(pos).alias(term.name))
-        else:
-            conds.append(F.col(pos) == F.lit(_term_value(term)))
-    for c in conds:
-        df = df.filter(c)
-    if tagged:
-        out.append(F.col("tag").alias(f"__tag_{id(pat)}"))
-    return df.select(*out) if out else df.select()
+                bound[term.name] = col
+        return conds
 
-
-def _join_premises(scans: list[DataFrame]) -> DataFrame:
-    df = scans[0]
-    for nxt in scans[1:]:
-        shared = sorted(
-            (set(df.columns) & set(nxt.columns)) - {c for c in df.columns if c.startswith("__tag_")}
-        )
-        df = df.join(nxt, on=shared, how="inner") if shared else df.crossJoin(nxt)
-    return df
-
-
-def _apply_filters(df: DataFrame, filters: list[FilterCondition]) -> DataFrame:
-    """Conjunction of conditions; conditions sharing an or_group id came
-    from one ``FILTER (a || b)`` and OR together (SPARQL semantics — the
-    reference's datalog evaluator drops OR'ed rule filters entirely,
-    rules.rs:133-163, which we deliberately do not mirror)."""
-
-    def cond(f: FilterCondition):
-        if f.variable not in df.columns:
-            return F.lit(False)
-        return compare.compare(F.col(f.variable), f.operator, F.lit(f.value))
-
-    groups: dict[int, object] = {}
-    for f in filters:
+    binds: dict[str, str] = {}
+    conds = [c for i, pat in enumerate(rule.premise) for c in match(f"t{i}", pat, binds)]
+    # conditions sharing an or_group came from one ``FILTER (a || b)`` and
+    # OR together (SPARQL semantics; the reference's datalog evaluator drops
+    # OR'ed rule filters, rules.rs:133-163, which we do not mirror)
+    ors: dict[int, list[str]] = {}
+    for f in rule.filters:
+        c = "FALSE"
+        if f.variable in binds:
+            c = compare_sql(binds[f.variable], f.operator, _param(params, f.value))
         if f.or_group is None:
-            df = df.filter(cond(f))
+            conds.append(c)
         else:
-            c = cond(f)
-            groups[f.or_group] = c if f.or_group not in groups else (groups[f.or_group] | c)
-    for c in groups.values():
-        df = df.filter(c)
-    return df
+            ors.setdefault(f.or_group, []).append(c)
+    conds += ["(" + " OR ".join(group) + ")" for group in ors.values()]
+    for j, pat in enumerate(rule.negative_premise):
+        neg = match(f"n{j}", pat, dict(binds))
+        neg_where = " AND ".join(neg or ["TRUE"])
+        conds.append(f"NOT EXISTS (SELECT 1 FROM {{facts}} n{j} WHERE {neg_where})")
+    froms = ", ".join(f"{{{src}}} t{i}" for i, src in enumerate(sources))
+    return f"FROM {froms} WHERE {' AND '.join(conds) or 'TRUE'}", binds
 
 
-def _apply_negation(df: DataFrame, facts: DataFrame, rule: Rule) -> DataFrame:
-    for pat in rule.negative_premise:
-        neg = _scan(facts.select("s", "p", "o"), pat, tagged=False)
-        join_vars = sorted(set(df.columns) & set(neg.columns))
-        if join_vars:
-            df = df.join(neg, on=join_vars, how="left_anti")
-        else:
-            # ground negated pattern: empty result iff the fact exists
-            df = df.join(neg.limit(1), how="left_anti", on=F.lit(True))
-    return df
+def _conclusion_term(term, binds: dict[str, str], params: dict[str, str]) -> str:
+    if isinstance(term, Var) and term.name not in binds:
+        raise ValueError(f"unbound conclusion variable ?{term.name}")
+    return binds[term.name] if isinstance(term, Var) else _param(params, _term_value(term))
 
 
-def _instantiate(df: DataFrame, patterns: list[TriplePattern], tag_col: Column | None) -> DataFrame:
-    parts = []
-    for pat in patterns:
-        cols = []
-        for pos, term in (("s", pat.s), ("p", pat.p), ("o", pat.o)):
-            if isinstance(term, Var):
-                cols.append(F.col(term.name).alias(pos))
-            else:
-                cols.append(F.lit(_term_value(term)).alias(pos))
-        if tag_col is not None:
-            cols.append(tag_col.alias("tag"))
-        parts.append(df.select(*cols))
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
-    return out
+def compile_rules(
+    rules: list[Rule], semiring: Semiring | None = None, semi_naive: bool = False
+) -> RuleText:
+    """One application of every rule as one SQL text with columns s, p, o
+    (and ``tag``, the ⊗ of the premise tags, under a ``semiring``): a
+    SELECT per rule, conclusion and, when ``semi_naive``, premise position
+    read from ``{delta}`` (the rest from ``{facts}``), UNION ALL'ed."""
+    params: dict[str, str] = {}
+    selects = []
+    for rule in rules:
+        n = len(rule.premise)
+        for k in range(n) if semi_naive else [None]:
+            sources = ["delta" if i == k else "facts" for i in range(n)]
+            body, binds = _body(rule, sources, params)
+            tag = [semiring.times_sql([f"t{i}.tag" for i in range(n)]) + " AS tag"] if semiring else []
+            for pat in rule.conclusion:
+                cols = [f"{_conclusion_term(t, binds, params)} AS {pos}"
+                        for pos, t in zip(FACT_COLS, (pat.s, pat.p, pat.o))]
+                selects.append(f"SELECT {', '.join(cols + tag)} {body}")
+    return RuleText("\nUNION ALL\n".join(selects), params)
 
 
-def apply_rule(
-    facts: DataFrame,
-    rule: Rule,
-    semiring: Semiring | None = None,
-    delta: DataFrame | None = None,
-) -> DataFrame:
-    """One rule application. With ``delta``, a semi-naive step: the union
-    over premise positions of (delta at position i) ⋈ (facts elsewhere)."""
-    tagged = semiring is not None
+def compile_bindings(rule: Rule) -> RuleText:
+    """The bindings of a rule body over ``{facts}``: one column per
+    variable of its premises, named after the variable."""
+    params: dict[str, str] = {}
+    body, binds = _body(rule, ["facts"] * len(rule.premise), params)
+    cols = ", ".join(f"{col} AS `{var}`" for var, col in binds.items())
+    return RuleText(f"SELECT {cols} {body}", params)
 
-    def one(pos_delta: int | None) -> DataFrame:
-        scans = [
-            _scan(delta if (pos_delta is not None and i == pos_delta) else facts, p, tagged)
-            for i, p in enumerate(rule.premise)
-        ]
-        df = _join_premises(scans)
-        df = _apply_filters(df, rule.filters)
-        df = _apply_negation(df, facts, rule)
-        tag = None
-        if tagged:
-            tag_cols = [c for c in df.columns if c.startswith("__tag_")]
-            tag = functools.reduce(semiring.times, [F.col(c) for c in tag_cols])
-        return _instantiate(df, rule.conclusion, tag)
 
-    if delta is None:
-        return one(None)
-    out = one(0)
-    for i in range(1, len(rule.premise)):
-        out = out.unionByName(one(i))
-    return out
+def _match(facts: DataFrame, pat: TriplePattern) -> list[dict[str, str]]:
+    """The distinct bindings of one pattern's variables over ``facts``."""
+    rows = compile_rules([Rule([pat], [pat])]).run(facts).dropDuplicates().collect()
+    names = [(i, t.name) for i, t in enumerate((pat.s, pat.p, pat.o)) if isinstance(t, Var)]
+    return [{name: r[i] for i, name in names} for r in rows]
 
 
 # Full annotation IRI: the reference's tag stores encode the predicate as
@@ -239,19 +240,28 @@ def materialize_tags_as_rdfstar(
     store.insert(annotations, graphs=[])  # default graph only
 
 
-def _checkpoint(df: DataFrame, known_rows: int | None) -> tuple[DataFrame, int, int]:
-    """One round's fact set as an eager local checkpoint, with its total
-    and ``__new`` row counts read from an observation of the same job.
-    ``known_rows`` (the previous round's size) sets the partition count."""
-    if known_rows is not None:
-        df = df.coalesce(max(1, -(-known_rows // FACT_ROWS_PER_PARTITION)))
+def round_metrics() -> list[Column]:
+    """The total and ``__new`` row counts a checkpoint job observes."""
+    return [F.count(F.lit(1)).alias("rows"), F.count(F.when(F.col(_NEW), 1)).alias("new")]
+
+
+def _checkpoint(
+    df: DataFrame, known_rows: int | None, metrics: list[Column]
+) -> tuple[DataFrame, int, int]:
+    """One round's fact set as an eager local checkpoint, and its total and
+    ``__new`` row counts observed (``metrics``) in the same job. Given the
+    previous round's ``known_rows`` it runs under a fixed plan (module
+    notes); a seed, whose rows nobody has counted, under the session's."""
     obs = Observation()
-    df = df.observe(
-        obs, F.count(F.lit(1)).alias("rows"), F.count(F.when(F.col(_NEW), 1)).alias("new")
-    )
-    facts = df.localCheckpoint(eager=True)
-    metrics = obs.get
-    return facts, metrics["rows"], metrics["new"]
+    df = df.observe(obs, *metrics)
+    width = None if known_rows is None else max(1, -(-known_rows // FACT_ROWS_PER_PARTITION))
+    scope = nullcontext() if width is None else scoped_conf(df.sparkSession, {
+        "spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": str(width),
+    })
+    with scope:
+        facts = df.localCheckpoint(eager=True)
+    observed = obs.get
+    return facts, observed["rows"], observed["new"]
 
 
 def fixpoint(
@@ -278,41 +288,42 @@ def fixpoint(
     Returns the facts without ``__new`` and ``(facts_rows, new_rows)`` per
     round, entry 0 being the seed. Raises ``RuntimeError`` if rows are still
     new after ``max_iter`` rounds."""
-    cols = key + (["tag"] if merge else [])
+    cols = [F.col(c) for c in key + (["tag"] if merge else [])]
+    keys, metrics = cols[:len(key)], round_metrics()
+    src, is_new = F.col("__src"), F.col(_NEW)
+    fresh = F.min(src) == 1
+    aggs = [fresh.alias(_NEW)]
     if merge:
-        one = F.count(F.lit(1)) == 1
-        tag = F.when(one, F.max("tag")).otherwise(merge(F.col("tag"), F.lit(None)))
-        seed = seed.groupBy(*key).agg(tag.alias("tag"))
+        single = F.count(F.lit(1)) == 1
+        tag = F.when(single, F.max("tag")).otherwise(merge(F.col("tag"), F.lit(None)))
+        seed = seed.groupBy(*keys).agg(tag.alias("tag"))
+        old = F.max(F.when(src == 0, F.col("tag")))
+        tag = merge(F.col("tag"), old)
+        aggs = [(fresh | ~tag.eqNullSafe(old)).alias(_NEW), tag.alias("tag")]
     else:
         seed = seed.select(*cols).dropDuplicates()
-    facts, rows, new = _checkpoint(seed.withColumn(_NEW, F.lit(True)), None)
+    one, zero = F.lit(1), F.lit(0)
+    facts, rows, new = _checkpoint(seed.withColumn(_NEW, F.lit(True)), None, metrics)
     rounds = [(rows, new)]
     threshold = seed.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     for _ in range(max_iter):
         if new == 0:
             break
-        delta = facts.filter(F.col(_NEW))
+        delta = facts.filter(is_new)
         if new * _ROW_BYTES <= threshold:  # -1 disables broadcasts
             delta = F.broadcast(delta)
         derived = step(facts, delta)
         if derived is None:
             break
-        src = F.col("__src")
-        fresh = F.min(src) == 1
-        aggs = [fresh.alias(_NEW)]
-        if merge:
-            old = F.max(F.when(src == 0, F.col("tag")))
-            tag = merge(F.col("tag"), old)
-            aggs = [(fresh | ~tag.eqNullSafe(old)).alias(_NEW), tag.alias("tag")]
         merged = (
-            derived.withColumn("__src", F.lit(1))
-            .unionByName(facts.select(*cols, F.lit(0).alias("__src")))
-            .groupBy(*key)
+            derived.withColumn("__src", one)
+            .unionByName(facts.drop(_NEW).withColumn("__src", zero))
+            .groupBy(*keys)
             .agg(*aggs)
         )
         if admit is not None:
             merged = admit(merged)
-        facts, rows, new = _checkpoint(merged, rows)
+        facts, rows, new = _checkpoint(merged, rows, metrics)
         rounds.append((rows, new))
     else:
         if new:
@@ -389,12 +400,10 @@ class Reasoner:
         new fact's tag is the ⊕ of the round's derivations and an old fact
         keeps its tag, so it is never new again."""
 
+        text = compile_rules(self.rules, semiring, semi_naive=not naive) if self.rules else None
+
         def step(facts: DataFrame, delta: DataFrame) -> DataFrame | None:
-            if not self.rules:
-                return None
-            return functools.reduce(DataFrame.unionByName, [
-                apply_rule(facts, rule, semiring, None if naive else delta) for rule in self.rules
-            ])
+            return None if text is None else text.run(facts, delta)
 
         merge = (lambda tag, old: F.coalesce(old, semiring.plus_agg(tag))) if semiring else None
         facts, self.rounds = fixpoint(seed, step, FACT_COLS, max_iter, merge, admit)
@@ -416,13 +425,9 @@ class Reasoner:
     # ------------------------------------------------------- constraints
     def check_constraints(self) -> DataFrame:
         """Violations: instantiated conclusions of constraint rules."""
-        out = None
-        for c in self.constraints:
-            d = apply_rule(self.facts, c)
-            out = d if out is None else out.unionByName(d)
-        if out is None:
+        if not self.constraints:
             return local_df(self.spark, [], FACT_COLS)
-        return out.dropDuplicates()
+        return compile_rules(self.constraints).run(self.facts).dropDuplicates()
 
     def repair(self, max_removals: int = 4) -> list[set[tuple[str, str, str]]]:
         """Minimal repairs (reference semi_naive_with_repairs.rs:11 /
@@ -436,13 +441,10 @@ class Reasoner:
         if violations.isEmpty():
             return []
         # support set: base facts matched by any constraint premise
-        support: set[tuple[str, str, str]] = set()
-        for c in self.constraints:
-            for pat in c.premise:
-                # recover full triples for matched bindings
-                matched = apply_rule(self.facts, Rule(premise=[pat], conclusion=[pat]))
-                support |= {tuple(r) for r in matched.dropDuplicates().collect()}
-        support_list = sorted(support)
+        matched = compile_rules([
+            Rule(premise=[pat], conclusion=[pat]) for c in self.constraints for pat in c.premise
+        ]).run(self.facts)
+        support_list = sorted({tuple(r) for r in matched.dropDuplicates().collect()})
         base = self.facts
         repairs: list[set] = []
         for k in range(1, max_removals + 1):
@@ -481,19 +483,18 @@ class Reasoner:
                     rm, on=["s", "p", "o"], how="left_anti"
                 )
 
+        support = compile_rules([replace(c, conclusion=c.premise) for c in self.constraints])
+
         def admit(merged: DataFrame) -> DataFrame:
             """Drop the new facts that instantiate a constraint premise
             within a violation over the merged fact set."""
-            if not self.constraints:
-                return merged
-            support = functools.reduce(DataFrame.unionByName, [
-                apply_rule(merged, replace(c, conclusion=c.premise))
-                for c in self.constraints
-            ])
             return merged.join(
-                support.withColumn(_NEW, F.lit(True)), on=["s", "p", "o", _NEW], how="left_anti"
+                support.run(merged).withColumn(_NEW, F.lit(True)),
+                on=["s", "p", "o", _NEW],
+                how="left_anti",
             )
 
+        admit = admit if self.constraints else None
         self.facts = self._fixpoint(self.facts, naive=False, max_iter=max_iter, admit=admit)
         return self.facts
 
@@ -521,8 +522,7 @@ class Reasoner:
             if removal:
                 rm = local_df(self.spark, sorted(removal), FACT_COLS)
                 facts = facts.join(rm, on=["s", "p", "o"], how="left_anti")
-            rows = _scan(facts, pattern, tagged=False).dropDuplicates().collect()
-            answer_sets.append({tuple(sorted(r.asDict().items())) for r in rows})
+            answer_sets.append({tuple(sorted(b.items())) for b in _match(facts, pattern)})
         common = set.intersection(*answer_sets) if answer_sets else set()
         return [dict(t) for t in sorted(common)]
 
@@ -541,9 +541,9 @@ class Reasoner:
         g = self._substitute(goal, binding)
         results: list[dict] = []
         # facts matching the goal
-        rows = _scan(self.facts, g, tagged=False).dropDuplicates().collect()
+        rows = _match(self.facts, g)
         for row in rows:
-            results.append({**binding, **row.asDict()})
+            results.append({**binding, **row})
         if not any(isinstance(t, Var) for t in (g.s, g.p, g.o)):
             if rows:
                 return [dict(binding)]

@@ -30,11 +30,10 @@ in-memory base is for tests and small interactive use;
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kolibrie_spark.conf import scoped_conf
 from kolibrie_spark.schema import (
     GRAPHS_SCHEMA,
     QUADS_SCHEMA,
@@ -86,25 +85,14 @@ def _in_strings(sql: str, values) -> Column:
     return F.expr(f"{sql} IN ({lits})")
 
 
-# serializes _take's save/set/restore of a session setting across threads
-_TAKE_LOCK = threading.Lock()
-
-
 def _take(df: DataFrame, n: int) -> list:
     """``df.limit(n).collect()`` in one Spark job.  A collect under a limit
     scans one partition, then four times as many per round until it has
     ``n`` rows, so a change with fewer rows costs up to three jobs; raising
     the first round to every partition makes it one.  The setting is
     session-wide for the length of the action."""
-    conf = df.sparkSession.conf
-    key = "spark.sql.limit.initialNumPartitions"
-    with _TAKE_LOCK:
-        old = conf.get(key)
-        conf.set(key, str(1 << 20))
-        try:
-            return df.limit(n).collect()
-        finally:
-            conf.set(key, old)
+    with scoped_conf(df.sparkSession, {"spark.sql.limit.initialNumPartitions": str(1 << 20)}):
+        return df.limit(n).collect()
 
 
 class QuadStore:

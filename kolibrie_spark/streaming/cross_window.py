@@ -20,13 +20,12 @@ mirroring the reference's two maintenance modes.
 
 from __future__ import annotations
 
-import functools
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kolibrie_spark.reasoner.fixpoint import FACT_COLS, MIN_MAX, apply_rule, fixpoint
+from kolibrie_spark.reasoner.fixpoint import FACT_COLS, MIN_MAX, compile_rules, fixpoint
 from kolibrie_spark.reasoner.rule import Rule
 from kolibrie_spark.schema import local_df
 from kolibrie_spark.sparql.ast import Iri, Lit, TriplePattern, Var
@@ -225,9 +224,10 @@ def _dataframe_fixpoint(
     derivations, so a fact is new again when its expiry grows. Expiries
     are drawn from a finite set, so this converges. Static facts carry a
     never-expiring sentinel (2^62, an exact double)."""
+    text = compile_rules(rules, MIN_MAX) if rules else None
+
     def step(facts: DataFrame, _delta: DataFrame) -> DataFrame | None:
-        derived = [apply_rule(facts, rule, semiring=MIN_MAX) for rule in rules]
-        return functools.reduce(DataFrame.unionByName, derived) if derived else None
+        return None if text is None else text.run(facts)
 
     rows = [(s, p, o, repr(float(e))) for (s, p, o), e in facts.items()]
     seed = local_df(spark, rows, FACT_COLS + ["tag"]).withColumn("tag", F.col("tag").cast("double"))

@@ -18,12 +18,16 @@ from __future__ import annotations
 import functools
 import math
 import random
+import sys
+import threading
+import time
 from collections import defaultdict
 
 import pytest
 
 from kolibrie_spark.reasoner import Reasoner, Rule
-from kolibrie_spark.reasoner.fixpoint import ADD_MULT, MIN_MAX, TAGGED_SCHEMA
+from kolibrie_spark.conf import scoped_conf
+from kolibrie_spark.reasoner.fixpoint import ADD_MULT, MIN_MAX, TAGGED_SCHEMA, compile_rules
 from kolibrie_spark.reasoner.rule import FilterCondition
 from kolibrie_spark.schema import local_df
 from kolibrie_spark.sparql.ast import Iri, TriplePattern, Var
@@ -299,3 +303,166 @@ def test_duplicate_seed_rows_are_one_fact(spark):
     got = [tuple(x) for x in r.materialize().collect()]
     assert sorted(got) == sorted(set(_chain(3)) | {("i", TYPE, "C1"), ("i", TYPE, "C2")})
     assert r.rounds[0] == (3, 3) and r.rounds[-1] == (5, 0)
+
+
+# ------------------------------------------------- compiled rule text
+ODD = "it's \\ a \"quoted\" ünïcødé ∀ term"
+
+TEXT_RULES = [
+    # constants with a quote, a backslash, double quotes and non-ASCII, in
+    # premise and conclusion
+    Rule(premise=[P(V("x"), I(ODD), V("y"))], conclusion=[P(V("y"), I(ODD + "'"), I(ODD))]),
+    # a variable repeated inside one pattern
+    Rule(premise=[P(V("x"), I("p"), V("x"))], conclusion=[P(V("x"), I("self"), I("yes"))]),
+    # premises with no shared variable: a cross join
+    Rule(premise=[P(V("a"), I("q"), V("b")), P(V("c"), I("w"), V("d"))],
+         conclusion=[P(V("a"), I("cross"), V("d"))]),
+    # two OR groups, each with a numeric comparison that a non-numeric
+    # side makes false (v < "zz"; x >= "-1" over node names), and a plain
+    # conjunct
+    Rule(
+        premise=[P(V("x"), I("w"), V("v"))],
+        filters=[
+            FilterCondition("v", "=", "n3", or_group=1),
+            FilterCondition("v", "<", "zz", or_group=1),
+            FilterCondition("v", "!=", "2"),
+            FilterCondition("x", ">=", "-1", or_group=2),
+            FilterCondition("x", "!=", "n1", or_group=2),
+        ],
+        conclusion=[P(V("x"), I("picked"), V("v"))],
+    ),
+    # a numeric comparison over values not all numeric
+    Rule(premise=[P(V("x"), I("w"), V("v"))], filters=[FilterCondition("v", ">", "6")],
+         conclusion=[P(V("x"), I("heavy"), V("v"))]),
+    # ground negation: of a fact that is always there, and of one never there
+    Rule(premise=[P(V("x"), I("p"), V("y"))], negative_premise=[P(I("n3"), I("q"), I("n0"))],
+         conclusion=[P(V("x"), I("never"), V("y"))]),
+    Rule(premise=[P(V("x"), I("p"), V("y"))], negative_premise=[P(I("n9"), I(ODD), I("n9"))],
+         conclusion=[P(V("x"), I("always"), V("y"))]),
+    # variable negation, and a two-pattern conclusion
+    Rule(
+        premise=[P(V("x"), I("p"), V("y")), P(V("y"), I("p"), V("z"))],
+        negative_premise=[P(V("z"), I("q"), V("x"))],
+        conclusion=[P(V("x"), I("p2"), V("z")), P(V("z"), I("p2inv"), V("x"))],
+    ),
+]
+
+
+def _one_step(rules, facts, delta, semiring):
+    """One application of ``rules`` as the multiset the compiled text
+    returns: one row per binding and conclusion, and with a ``delta`` one
+    per premise position whose fact is in the delta."""
+    out = []
+    for rule in rules:
+        for b, used in _solutions(rule, facts):
+            reads = [None] if delta is None else [k for k, u in enumerate(used) if u in delta]
+            tag = functools.reduce(
+                lambda a, c: _times(semiring, a, c), [facts[u] for u in used]
+            ) if semiring else None
+            for _ in reads:
+                for c in rule.conclusion:
+                    out.append(_ground(c, b) + ((round(tag, 12),) if semiring else ()))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("semi", [False, True], ids=["naive", "semi"])
+@pytest.mark.parametrize("semiring", [None, ADD_MULT, MIN_MAX], ids=["plain", "addmult", "minmax"])
+def test_rule_text_matches_driver_evaluation(spark, semiring, semi):
+    rows = sorted(set(random_graph(21))) + [
+        ("n1", ODD, "n2"), ("n2", ODD, ODD), ("n4", "w", "1e1"), ("n5", "w", "-3"),
+        ("n6", "w", "n3"), ("n1", "w", "n3"), ("n7", "w", "x"),
+    ]
+    rng = random.Random(3)
+    # tags include exactly 1.0; about half the facts are in the delta
+    facts = {f: rng.choice([0.25, 0.5, 0.9, 1.0]) for f in rows}
+    delta = {f for f in rows if rng.random() < 0.5} | {("n1", ODD, "n2")}
+    df = spark.createDataFrame(
+        [(*f, t, f in delta) for f, t in facts.items()],
+        "s string, p string, o string, tag double, __new boolean",
+    )
+    text = compile_rules(TEXT_RULES, semiring, semi_naive=semi)
+    got = sorted(
+        tuple(r[:3]) + ((round(r[3], 12),) if semiring else ())
+        for r in text.run(df, df.filter("__new")).collect()
+    )
+    assert got == _one_step(TEXT_RULES, facts, delta if semi else None, semiring)
+    assert ODD not in text.sql  # constants travel as parameters
+    preds = {r[1] for r in got}
+    assert {"cross", "self", "picked", "heavy", "always", "p2", "p2inv", ODD + "'"} <= preds
+    assert "never" not in preds
+    assert {(r[0], r[2]) for r in got if r[1] == "picked"} == {("n6", "n3")}
+
+
+def _stage_tasks(sc, group):
+    time.sleep(0.5)  # job events reach the status store asynchronously
+    st = sc.statusTracker()
+    return [
+        info.numTasks
+        for jid in st.getJobIdsForGroup(group)
+        for sid in st.getJobInfo(jid).stageIds
+        if (info := st.getStageInfo(sid)) is not None
+    ]
+
+
+def test_rounds_run_row_sized_plan_and_restore_settings(spark):
+    """With the session at 200 shuffle partitions, no stage of a
+    semi-naive materialization runs 200 tasks (the round's width comes
+    from its rows), and AQE and the shuffle width read back unchanged
+    after a run, after a run that exhausts max_iter, and after an
+    exception inside a scope."""
+    aqe, width = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+    sc = spark.sparkContext
+    before = {k: spark.conf.get(k) for k in (aqe, width)}
+    try:
+        spark.conf.set(width, "200")
+        want = {aqe: spark.conf.get(aqe), width: "200"}
+        sc.setJobGroup("fixed-plan-rounds", "fixpoint rounds")
+        try:
+            r = Reasoner(spark, _facts(spark, _chain(9)))
+            r.add_rule(TYPE_RULE)
+            assert r.materialize().count() == 9 + 8
+        finally:
+            sc.setJobGroup("idle", "idle")
+        tasks = _stage_tasks(sc, "fixed-plan-rounds")
+        assert tasks and max(tasks) < 200, tasks
+        assert {k: spark.conf.get(k) for k in want} == want
+        r = Reasoner(spark, _facts(spark, _chain(11)))
+        r.add_rule(TYPE_RULE)
+        with pytest.raises(RuntimeError, match="max_iter=3"):
+            r.materialize(max_iter=3)
+        assert {k: spark.conf.get(k) for k in want} == want
+        with pytest.raises(ZeroDivisionError):
+            with scoped_conf(spark, {aqe: "false", width: "1"}):
+                assert spark.conf.get(width) == "1"
+                1 / 0
+        assert {k: spark.conf.get(k) for k in want} == want
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
+def test_scoped_conf_serializes_threads(spark):
+    """Eight threads enter scopes at once: inside its scope each reads its
+    own value, and the session's value is back at the end."""
+    key = "spark.sql.shuffle.partitions"
+    before, errors = spark.conf.get(key), []
+
+    def worker(i):
+        for _ in range(20):
+            with scoped_conf(spark, {key: str(100 + i)}):
+                if spark.conf.get(key) != str(100 + i):
+                    errors.append(i)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert spark.conf.get(key) == before
