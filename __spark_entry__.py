@@ -203,201 +203,9 @@ def _q_rdf_star_builtins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# LLM-pipeline operators (dedup / similarity / text analysis) on documents,
-# embeddings, events — SURVEY.md north-star extensions
+# LLM-pipeline operators (text analysis / search / profiling) on documents,
+# events — SURVEY.md north-star extensions
 # ---------------------------------------------------------------------------
-
-
-def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.dedup import exact_dedup
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "key", F.substring("text", 1, 40)
-    )
-    return exact_dedup(docs, ["key"], "doc_id").select("doc_id", "key")
-
-
-def _q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kolibrie_spark.operators.dedup import ngram_jaccard_pairs
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
-
-
-def _q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric containment near-dup (operators/dedup.py:
-    containment_pairs): |A∩B| / min(|A|,|B|) over 3-gram shingles —
-    catches subset-style duplication symmetric Jaccard misses; same
-    skew-guarded shared-shingle candidate plan as dedup_ngram_jaccard."""
-    from kolibrie_spark.operators.dedup import containment_pairs
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return containment_pairs(docs, "doc_id", "text", n=3, threshold=0.8)
-
-
-def _q_dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Jaccard join via prefix filtering (AllPairs/PPJoin) — same
-    output as dedup_ngram_jaccard from a near-linear candidate set; shares
-    the exact-Jaccard DuckDB oracle."""
-    from kolibrie_spark.operators.dedup import prefix_jaccard_pairs
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return prefix_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
-
-
-def _q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kolibrie_spark.operators.dedup import minhash_lsh_pairs
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(
-        docs, "doc_id", "text", n=3, num_hashes=64, bands=32, threshold=0.5
-    )
-
-
-def _q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup pipeline tail: MinHash+LSH pairs → connected components
-    (distributed min-label propagation) → a cluster id per document
-    (singletons cluster to themselves). The keep-set is cluster == doc_id."""
-    from kolibrie_spark.operators.dedup import minhash_lsh_pairs, near_dup_clusters
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs, "doc_id", "text", n=3, num_hashes=64, bands=32, threshold=0.5
-    )
-    # the cluster-join side only routes doc_id into a hash join: the
-    # CPU-spread repartition would be a wasted Exchange there (r12)
-    ids = load_table(spark, sf_dir, "documents", parallel=False)
-    return near_dup_clusters(ids, pairs, "doc_id")
-
-
-def _dedup_cluster_oracle() -> str:
-    """Recursive-CTE connected components over the exact-Jaccard pair set
-    (LSH pair recall is exact-verified, so the edge sets match)."""
-    from kolibrie_spark.operators.dedup import ngram_jaccard_pairs_duckdb_sql
-
-    pairs_sql = ngram_jaccard_pairs_duckdb_sql("documents", "doc_id", "text", 3, 0.5)
-    return f"""
-WITH RECURSIVE pairs AS ({pairs_sql}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION SELECT id_b, id_a FROM pairs
-),
-reach(id, r) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r
-),
-comp AS (
-  SELECT id, LEAST(id, MIN(r)) AS component FROM reach GROUP BY id
-)
-SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS cluster
-FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
-"""
-
-
-def _q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kolibrie_spark.operators.dedup import simhash_near_pairs
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return simhash_near_pairs(docs, "doc_id", "text", max_hamming=3)
-
-
-def _q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale path: hyperplane-LSH candidates + exact verify — the oracle is
-    the exact all-pairs SQL, so oracle equality IS the recall proof (same
-    contract as dedup_minhash_lsh vs its exact-Jaccard oracle)."""
-    from kolibrie_spark.operators.dedup import embedding_lsh_pairs
-    from kolibrie_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_lsh_pairs(emb, "vec_id", "embedding", dim=64, threshold=0.4)
-
-
-def _query_vector(spark: SparkSession, sf_dir: str) -> list[float]:
-    from kolibrie_spark.tables import load_table
-
-    row = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter("vec_id = 0")
-        .select("embedding")
-        .first()
-    )
-    return [float(v) for v in row[0]]
-
-
-def _q_sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kolibrie_spark.operators.similarity import cosine_topk
-    from kolibrie_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return cosine_topk(emb, _query_vector(spark, sf_dir), 10, "vec_id", "embedding")
-
-
-def _q_sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kolibrie_spark.operators.similarity import lsh_bucket_topk
-    from kolibrie_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return lsh_bucket_topk(
-        emb, _query_vector(spark, sf_dir), 10, "vec_id", "embedding",
-        bits=8, nprobe=32,
-    )
-
-
-def _q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kolibrie_spark.operators.similarity import ivf_topk
-    from kolibrie_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(
-        emb, _query_vector(spark, sf_dir), 10, "vec_id", "embedding",
-        ncells=16, nprobe=4,
-    )
-
-
-def _sim_topk_ivf_oracle() -> str:
-    from kolibrie_spark.operators.similarity import ivf_topk_duckdb_sql
-
-    qv = (
-        "(SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) "
-        "FROM embeddings WHERE vec_id = 0)"
-    )
-    return ivf_topk_duckdb_sql(
-        "embeddings", qv, 10, "vec_id", "embedding", ncells=16, nprobe=4
-    )
-
-
-def _q_sim_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Int8-quantized top-k: integer dot products over per-vector
-    symmetric int8 codes (4x less IO than float32 at scale), rescaled by
-    the two quantization scales — deterministic, so DuckDB reproduces
-    every score bit-for-bit."""
-    from kolibrie_spark.operators.similarity import quantized_topk
-    from kolibrie_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return quantized_topk(emb, _query_vector(spark, sf_dir), 10, "vec_id", "embedding")
-
-
-def _sim_topk_quantized_oracle() -> str:
-    from kolibrie_spark.operators.similarity import quantized_topk_duckdb_sql
-
-    return quantized_topk_duckdb_sql(
-        "embeddings",
-        "(SELECT embedding FROM embeddings WHERE vec_id = 0)",
-        10,
-        "vec_id",
-        "embedding",
-    )
 
 
 _BM25_TERMS = ["spark", "join", "window"]
@@ -418,48 +226,6 @@ def _text_bm25_topk_oracle() -> str:
     from kolibrie_spark.operators.search import bm25_topk_duckdb_sql
 
     return bm25_topk_duckdb_sql("documents", "doc_id", "text", _BM25_TERMS, k=20)
-
-
-def _q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval (operators/search.py:rrf_fuse): Reciprocal Rank
-    Fusion of the sparse BM25 top-20 and the dense cosine top-20 — the
-    standard two-tower combiner a curation pipeline runs for
-    hard-negative mining and contamination sweeps. Both inputs are the
-    engine's own scale-safe top-k plans; fusion is O(k) and the fixed
-    left-to-right 1/(60+rank) summation is bit-identical in DuckDB."""
-    from kolibrie_spark.operators.search import bm25_topk, rrf_fuse
-    from kolibrie_spark.operators.similarity import cosine_topk
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    sparse = bm25_topk(docs, "doc_id", "text", _BM25_TERMS, k=20)
-    dense = cosine_topk(emb, _query_vector(spark, sf_dir), 20, "vec_id", "embedding")
-    return rrf_fuse(
-        [(sparse, "doc_id", "bm25"), (dense, "vec_id", "cosine")], k=10
-    )
-
-
-def _search_hybrid_rrf_oracle() -> str:
-    from kolibrie_spark.operators.search import (
-        bm25_topk_duckdb_sql,
-        rrf_fuse_duckdb_sql,
-    )
-    from kolibrie_spark.operators.similarity import cosine_duckdb_sql
-
-    bm_sql = bm25_topk_duckdb_sql("documents", "doc_id", "text", _BM25_TERMS, k=20)
-    cos = cosine_duckdb_sql("v", "qv")
-    cos_sql = (
-        "WITH q AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) "
-        "AS qv FROM embeddings WHERE vec_id = 0), "
-        "e AS (SELECT vec_id, "
-        "list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings) "
-        f"SELECT vec_id, {cos} AS cosine "
-        "FROM e, q ORDER BY cosine DESC, vec_id LIMIT 20"
-    )
-    return rrf_fuse_duckdb_sql(
-        [(bm_sql, "doc_id", "bm25"), (cos_sql, "vec_id", "cosine")], k=10
-    )
 
 
 def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -518,122 +284,6 @@ def _text_repetition_oracle() -> str:
         f"{dup_ngram_fraction_duckdb('text', 3)} AS dup_3gram_frac "
         f"FROM documents"
     )
-
-
-def _q_sample_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-weighted (alpha=0.5) domain resampling over the source
-    column: tiny per-domain aggregate broadcast back, keep decision is a
-    deterministic hash filter — no corpus shuffle."""
-    from kolibrie_spark.operators.sampling import domain_mix_sample
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = domain_mix_sample(docs, "doc_id", "source", alpha=0.5, target_frac=0.3)
-    return out.select("doc_id", "source")
-
-
-def _sample_domain_mix_oracle() -> str:
-    from kolibrie_spark.operators.sampling import domain_mix_duckdb_sql
-
-    return domain_mix_duckdb_sql("documents", "doc_id", "source", 0.5, 0.3)
-
-
-def _q_text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: 5-gram containment of every document
-    against the src0 slice as the 'eval set' (broadcast n-gram relation,
-    doc-local dedup before explode, one doc-keyed aggregation)."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.contamination import ngram_containment
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("source") == "src0").select("text")
-    return ngram_containment(docs, "doc_id", "text", bench, "text", n=5)
-
-
-def _text_contamination_oracle() -> str:
-    from kolibrie_spark.operators.contamination import ngram_containment_duckdb_sql
-
-    return ngram_containment_duckdb_sql(
-        "documents",
-        "doc_id",
-        "text",
-        "(SELECT text FROM documents WHERE source = 'src0')",
-        "text",
-        n=5,
-    )
-
-
-_SPLITS = {"train": 0.8, "valid": 0.1, "test": 0.1}
-
-
-def _q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship pipeline composition: MinHash-LSH near-dup pairs →
-    connected components → deterministic hash split BY CLUSTER, so no
-    near-duplicate chain ever straddles train and eval (the leakage bug
-    domain-level splitting can't catch when duplicates cross domains).
-    The oracle recomputes components with a recursive CTE over the
-    exact-Jaccard pair set and applies the same polynomial-hash split."""
-    from kolibrie_spark.operators.dedup import minhash_lsh_pairs
-    from kolibrie_spark.operators.sampling import leakage_safe_split
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs, "doc_id", "text", n=3, num_hashes=64, bands=32, threshold=0.5
-    )
-    # the split side only routes doc_id into the cluster hash join: the
-    # CPU-spread repartition would be a wasted Exchange there (r12)
-    ids = load_table(spark, sf_dir, "documents", parallel=False)
-    return leakage_safe_split(ids, "doc_id", pairs, _SPLITS)
-
-
-def _split_leakage_safe_oracle() -> str:
-    from kolibrie_spark.operators.dedup import ngram_jaccard_pairs_duckdb_sql
-    from kolibrie_spark.operators.sampling import group_split_duckdb_case
-
-    pairs_sql = ngram_jaccard_pairs_duckdb_sql("documents", "doc_id", "text", 3, 0.5)
-    case = group_split_duckdb_case("cluster", _SPLITS)
-    return f"""
-WITH RECURSIVE pairs AS ({pairs_sql}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION SELECT id_b, id_a FROM pairs
-),
-reach(id, r) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r
-),
-comp AS (
-  SELECT id, LEAST(id, MIN(r)) AS component FROM reach GROUP BY id
-),
-clustered AS (
-  SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS cluster
-  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
-)
-SELECT doc_id, cluster, {case} AS split FROM clustered
-"""
-
-
-def _q_sample_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-safe split assignment: whole source domains land in one of
-    train/valid/test via the deterministic group-key hash (near-duplicates
-    sharing a domain can never straddle train and eval). Pure projection —
-    no shuffle."""
-    from kolibrie_spark.operators.sampling import group_split
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    return group_split(docs, "source", _SPLITS)
-
-
-def _sample_group_split_oracle() -> str:
-    from kolibrie_spark.operators.sampling import group_split_duckdb_case
-
-    case = group_split_duckdb_case("source", _SPLITS)
-    return f"SELECT doc_id, source, {case} AS split FROM documents"
 
 
 def _q_profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -704,29 +354,6 @@ def _text_top_terms_oracle() -> str:
     from kolibrie_spark.operators.search import top_terms_duckdb_sql
 
     return top_terms_duckdb_sql("documents", "text", k=25)
-
-
-def _q_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ (product-quantization) ADC top-k: vectors as m=8 sub-space codes,
-    query distance = sum of 8 precomputed query-to-codeword distances —
-    the FAISS-style memory-scale ANN path (codes are ~32x smaller than
-    float32 vectors). Deterministic seeded codebooks; the oracle re-derives
-    them in SQL."""
-    from kolibrie_spark.operators.similarity import pq_topk
-    from kolibrie_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return pq_topk(
-        emb, _query_vector(spark, sf_dir), 10, "vec_id", "embedding", m=8, ksub=16
-    )
-
-
-def _sim_topk_pq_oracle() -> str:
-    from kolibrie_spark.operators.similarity import pq_topk_duckdb_sql_derived
-
-    return pq_topk_duckdb_sql_derived(
-        "embeddings", "vec_id", "embedding", query_id=0, k=10, dim=64, m=8, ksub=16
-    )
 
 
 def _q_text_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -854,39 +481,6 @@ def _text_quality_gopher_oracle() -> str:
     )
 
 
-def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nightly-crawl dedup: the doc_id%3==0 slice is the 'new batch', the
-    rest the historical corpus; survivors are batch docs whose content
-    fingerprint is unseen. Anti-join on the 64-bit fingerprint — Spark's
-    runtime bloom-filter join prunes the batch scan at scale."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.incremental import dedup_against_corpus
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    batch = docs.where(F.col("doc_id") % 3 == 0)
-    corpus = docs.where(F.col("doc_id") % 3 != 0)
-    return dedup_against_corpus(batch, corpus, "doc_id", "text").select(
-        "doc_id", "source", "fp"
-    )
-
-
-def _dedup_incremental_oracle() -> str:
-    from kolibrie_spark.operators.incremental import (
-        dedup_against_corpus_duckdb_sql,
-    )
-
-    return dedup_against_corpus_duckdb_sql(
-        "documents",
-        "doc_id",
-        "b.text",
-        "b.doc_id % 3 = 0",
-        "doc_id % 3 <> 0",
-        "b.doc_id, b.source",
-    )
-
-
 def _q_layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order data-layout clustering of lineitem on (l_partkey,
     l_suppkey): the Morton value every row is range-partitioned and
@@ -914,23 +508,6 @@ def _layout_zorder_oracle() -> str:
     return (
         f"SELECT l_orderkey, l_linenumber, {z} AS zval FROM lineitem"
     )
-
-
-def _q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label embedding centroids (SemDeDup/IVF codebook shape) with
-    integer-scaled exact summation — reproducible under any shuffle
-    order, bit-identical across engines."""
-    from kolibrie_spark.operators.embeddings import group_centroids
-    from kolibrie_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return group_centroids(emb, "label", "embedding", scale=6)
-
-
-def _embed_centroids_oracle() -> str:
-    from kolibrie_spark.operators.embeddings import group_centroids_duckdb_sql
-
-    return group_centroids_duckdb_sql("embeddings", "label", "embedding", 6)
 
 
 def _q_profile_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1420,75 +997,6 @@ def _url_canonicalize_oracle() -> str:
         f"WITH base AS (SELECT doc_id, {url} AS u FROM documents) "
         f"SELECT doc_id, {canon} AS canonical_url, {host} AS host FROM base"
     )
-
-
-def _q_sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget corpus selection (operators/sampling.py): greedy
-    best-score-first prefix under a cumulative whitespace-token budget —
-    'the best data that fits the training budget'. Score is a
-    deterministic proxy (n_chars % 97) so the ranking exercises real
-    reordering; exact window-cumsum twin in the oracle."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.sampling import token_budget_sample
-    from kolibrie_spark.tables import load_table
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            (F.col("n_chars") % 97).alias("score"),
-            F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias("tokens"),
-        )
-    )
-    return token_budget_sample(docs, "doc_id", "score", "tokens", budget=8000)
-
-
-def _sample_token_budget_oracle() -> str:
-    return (
-        "WITH t AS (SELECT doc_id, n_chars % 97 AS score, "
-        "len(string_split_regex(trim(text), '\\s+')) AS tokens FROM documents), "
-        "c AS (SELECT doc_id, score, tokens, "
-        "SUM(tokens) OVER (ORDER BY score DESC, doc_id ASC "
-        "ROWS UNBOUNDED PRECEDING) AS cum FROM t) "
-        "SELECT doc_id, score, tokens FROM c WHERE cum <= 8000"
-    )
-
-
-def _q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sampling over orders: per-priority keep
-    rates via the cross-engine polynomial hash — the kept set is a pure
-    function of the key (reproducible across runs/backfills), and the
-    filter pushes down to the scan."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.sampling import stratified_sample
-    from kolibrie_spark.tables import load_table
-
-    orders = load_table(spark, sf_dir, "orders")
-    out = stratified_sample(
-        orders,
-        "o_orderkey",
-        "o_orderpriority",
-        {"1-URGENT": 1.0, "2-HIGH": 0.5, "3-MEDIUM": 0.1},
-        default=0.02,
-    )
-    return out.select(
-        "o_orderkey", "o_orderpriority", F.col("o_totalprice").alias("price")
-    )
-
-
-def _sample_stratified_oracle() -> str:
-    from kolibrie_spark.operators.sampling import bucket_duckdb
-
-    b = bucket_duckdb("o_orderkey")
-    return f"""
-SELECT o_orderkey, o_orderpriority, o_totalprice AS price
-FROM orders
-WHERE {b} < CASE o_orderpriority
-  WHEN '1-URGENT' THEN 10000 WHEN '2-HIGH' THEN 5000
-  WHEN '3-MEDIUM' THEN 1000 ELSE 200 END
-"""
 
 
 def _q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2086,26 +1594,6 @@ def _text_normalize_oracle() -> str:
     )
 
 
-def _q_sample_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain cap: at most 15 docs per source, kept set chosen by
-    deterministic key-hash rank (unbiased, replayable on any cluster)."""
-    from kolibrie_spark.operators.sampling import domain_cap_sample
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return domain_cap_sample(docs, "doc_id", "source", cap=15).select(
-        "doc_id", "source"
-    )
-
-
-def _sample_domain_cap_oracle() -> str:
-    from kolibrie_spark.operators.sampling import domain_cap_duckdb_sql
-
-    return domain_cap_duckdb_sql(
-        "documents", "doc_id", "source", 15, "doc_id, source"
-    )
-
-
 def _q_dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style corpus-wide exact-paragraph dedup with document
     reassembly: one window over the paragraph fingerprint (first
@@ -2177,30 +1665,6 @@ def _events_retention_oracle() -> str:
     )
 
 
-def _q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-weighted Bernoulli sampling: keep probability proportional
-    to document length (capped at 1), deterministic per doc_id — a filter
-    over the scan, zero shuffle."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.sampling import weighted_sample
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "w", F.col("n_chars").cast("double") / 500.0
-    )
-    return weighted_sample(docs, "doc_id", "w").select("doc_id", "source")
-
-
-def _sample_weighted_oracle() -> str:
-    from kolibrie_spark.operators.sampling import weighted_sample_duckdb_predicate
-
-    pred = weighted_sample_duckdb_predicate(
-        "doc_id", "(CAST(n_chars AS DOUBLE) / 500.0)"
-    )
-    return f"SELECT doc_id, source FROM documents WHERE {pred}"
-
-
 def _q_profile_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source token accounting with largest-first cumulative share —
     the data-mixing planning table. Doc-local token counting (no explode),
@@ -2259,52 +1723,6 @@ def _profile_pivot_oracle() -> str:
     from kolibrie_spark.operators.analytics import pivot_counts_duckdb_sql
 
     return pivot_counts_duckdb_sql("documents", "source", "lang", _PIVOT_LANGS)
-
-
-def _q_embed_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-level eval contamination: the 'benchmark' side is a
-    deterministically perturbed subset of the corpus (every 25th vector,
-    elementwise jitter x*(1+0.01*((i%7)-3)) — the leaked-example model),
-    detected by shared-LSH-bucket + cosine >= 0.99. Bench side broadcast;
-    corpus never shuffles."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.operators.contamination import embedding_contamination
-    from kolibrie_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    bench = emb.filter(F.col("vec_id") % 25 == 0).select(
-        (F.col("vec_id") + 1_000_000).alias("bench_id"),
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x, i: x * (1.0 + 0.01 * ((i % 7) - 3).cast("double")),
-        ).alias("embedding"),
-    )
-    return embedding_contamination(
-        emb, "vec_id", bench, "bench_id", "embedding", dim=64, tau=0.99
-    )
-
-
-def _embed_contamination_oracle() -> str:
-    from kolibrie_spark.operators.contamination import (
-        embedding_contamination_duckdb_sql,
-    )
-
-    bench_sql = (
-        "(SELECT vec_id + 1000000 AS bench_id, "
-        "list_transform(generate_series(1, 64), i -> "
-        "CAST(embedding[i] AS DOUBLE) * (1.0 + 0.01 * CAST((i - 1) % 7 - 3 AS DOUBLE))"
-        ") AS embedding FROM embeddings WHERE vec_id % 25 = 0)"
-    )
-    return embedding_contamination_duckdb_sql(
-        "embeddings",
-        "vec_id",
-        bench_sql,
-        "bench_id",
-        "embedding",
-        dim=64,
-        tau=0.99,
-    )
 
 
 _HTML_PRE = '<p class="doc">'
@@ -2688,18 +2106,6 @@ def _audit_snapshot_diff_oracle() -> str:
     )
 
 
-def _q_embed_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-negative mining: per anchor, the most-similar different-label
-    vector among its LSH-bucket neighbors (embeddings.hard_negatives)."""
-    from kolibrie_spark.operators.embeddings import hard_negatives
-    from kolibrie_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return hard_negatives(
-        emb, "vec_id", "embedding", "label", dim=64, bits=6, per_anchor=1
-    )
-
-
 def _resample_oracle() -> str:
     from kolibrie_spark.operators.scd import resample_ffill_duckdb_sql
 
@@ -2717,15 +2123,6 @@ def _winsorize_oracle() -> str:
 
     return winsorize_duckdb_sql(
         "documents", "source", "n_chars", "t.doc_id, t.source"
-    )
-
-
-def _hard_negatives_oracle() -> str:
-    from kolibrie_spark.operators.embeddings import hard_negatives_duckdb_sql
-
-    return hard_negatives_duckdb_sql(
-        "embeddings", "vec_id", "embedding", "label",
-        dim=64, bits=6, per_anchor=1,
     )
 
 
@@ -2837,60 +2234,6 @@ def _events_ewma_oracle() -> str:
         "(SELECT user_id, epoch_us(ts) AS t, value FROM events)",
         "user_id", "t", "value", alpha=0.25,
     )
-
-
-def _q_dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental NEAR-dup against persisted MinHash state
-    (incremental.near_dup_against_corpus): batch docs (id < 250) flagged
-    against the corpus signature table (id >= 250) via banded bucket join
-    — corpus text never rescanned. The signature-estimated score is
-    projected away; what the oracle asserts is that the flagged PAIR SET
-    equals the exact-Jaccard >= 0.5 ground truth at these parameters
-    (64 hashes / 16 bands — verified equivalent on this corpus; the
-    estimate-vs-exact boundary contract is documented on the operator)."""
-    from kolibrie_spark.operators.incremental import (
-        corpus_signatures,
-        near_dup_against_corpus,
-    )
-    from kolibrie_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    # the operator contract says state is a PERSISTED table; emulate with
-    # a lazy localCheckpoint so the signature map isn't recomputed by the
-    # bucket and verify branches
-    state = corpus_signatures(
-        docs.filter("doc_id >= 250"), "doc_id", "text", 3, 64
-    ).localCheckpoint(eager=False)
-    return near_dup_against_corpus(
-        docs.filter("doc_id < 250"), state, "doc_id", "text",
-        n=3, num_hashes=64, bands=16, threshold=0.5,
-    ).select("batch_id", "corpus_id")
-
-
-def _dedup_incremental_near_oracle() -> str:
-    gram = "w[i] || ' ' || w[i+1] || ' ' || w[i+2]"
-    return f"""
-WITH words AS (
-  SELECT doc_id AS id, string_split_regex(trim(text), '\\s+') AS w
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT id, {gram} AS s
-  FROM words, UNNEST(generate_series(1, greatest(len(w) - 2, 1))) t(i)
-  WHERE i <= len(w) - 2 OR len(w) < 3
-),
-sizes AS (SELECT id, COUNT(*) AS sn FROM sh GROUP BY id),
-shared AS (
-  SELECT a.id AS batch_id, b.id AS corpus_id, COUNT(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.id < 250 AND b.id >= 250
-  GROUP BY 1, 2
-)
-SELECT batch_id, corpus_id
-FROM shared
-JOIN sizes sa ON batch_id = sa.id
-JOIN sizes sb ON corpus_id = sb.id
-WHERE c * 1.0 / (sa.sn + sb.sn - c) >= 0.5
-"""
 
 
 def _q_events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3427,20 +2770,10 @@ _DRIVER_FIRST = [
     "streaming_istream_replay",
     "streaming_dstream_replay",
     "reasoner_hierarchy",
-    "dedup_prefix_jaccard",
-    "split_leakage_safe",
     "mlschema_graph",
-    "embed_hard_negatives",
     "closure_doubling",
-    "dedup_containment",
-    "dedup_ngram_jaccard",
-    "sim_topk_pq",
-    "sim_topk_ivf",
-    "sim_topk_lsh",
     "path_negated_set",
-    "search_hybrid_rrf",
     "text_quality_gopher",
-    "dedup_incremental",
     "analytics_q5",
     "profile_rollup",
     "audit_quality",
@@ -3448,8 +2781,6 @@ _DRIVER_FIRST = [
     "events_downsample",
     "dedup_substring",
     "text_strip_html",
-    "embed_contamination",
-    "sample_weighted",
     "profile_token_budget",
     "profile_pivot",
     "dedup_paragraphs",
@@ -3457,9 +2788,7 @@ _DRIVER_FIRST = [
     "profile_ks_drift",
     "fuzzy_vocab_pairs",
     "text_normalize",
-    "sample_domain_cap",
     "url_canonicalize",
-    "sample_token_budget",
     "reasoner_transitive_closure",
     "prob_hybrid",
     "ml_predict",
@@ -3468,7 +2797,6 @@ _DRIVER_FIRST = [
     "audit_snapshot_diff",
     "graph_triangles",
     "sketch_hll_distinct",
-    "dedup_incremental_near",
 ]
 
 
@@ -3639,27 +2967,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rdf_star_annotate": _q_rdf_star_annotate,
         "rdf_star_builtins": _q_rdf_star_builtins,
         # --- LLM-pipeline operators (north-star extensions)
-        "dedup_exact": _q_dedup_exact,
-        "dedup_ngram_jaccard": _q_dedup_ngram_jaccard,
-        "dedup_containment": _q_dedup_containment,
-        "dedup_prefix_jaccard": _q_dedup_prefix_jaccard,
-        "dedup_minhash_lsh": _q_dedup_minhash_lsh,
-        "dedup_cluster": _q_dedup_cluster,
-        "dedup_simhash": _q_dedup_simhash,
-        "dedup_embedding_cosine": _q_dedup_embedding_cosine,
-        "sim_topk_cosine": _q_sim_topk_cosine,
-        "sim_topk_lsh": _q_sim_topk_lsh,
-        "sim_topk_ivf": _q_sim_topk_ivf,
-        "sim_topk_quantized": _q_sim_topk_quantized,
-        "sim_topk_pq": _q_sim_topk_pq,
         "text_analyze": _q_text_analyze,
         "text_bm25_topk": _q_text_bm25_topk,
-        "search_hybrid_rrf": _q_search_hybrid_rrf,
         "text_common_spans": _q_text_common_spans,
         "text_quality_gopher": _q_text_quality_gopher,
-        "dedup_incremental": _q_dedup_incremental,
         "layout_zorder": _q_layout_zorder,
-        "embed_centroids": _q_embed_centroids,
         "analytics_q5": _q_analytics_q5,
         "profile_rollup": _q_profile_rollup,
         "audit_quality": _q_audit_quality,
@@ -3668,8 +2980,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_json_agg": _q_events_json_agg,
         "dedup_substring": _q_dedup_substring,
         "text_strip_html": _q_text_strip_html,
-        "embed_contamination": _q_embed_contamination,
-        "sample_weighted": _q_sample_weighted,
         "profile_token_budget": _q_profile_token_budget,
         "events_rolling": _q_events_rolling,
         "profile_pivot": _q_profile_pivot,
@@ -3680,16 +2990,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "profile_ks_drift": _q_profile_ks_drift,
         "fuzzy_vocab_pairs": _q_fuzzy_vocab,
         "text_normalize": _q_text_normalize,
-        "sample_domain_cap": _q_sample_domain_cap,
         "profile_quantiles": _q_profile_quantiles,
         "profile_histogram": _q_profile_histogram,
         "graph_pagerank": _q_graph_pagerank,
         "pack_sequences": _q_pack_sequences,
         "text_repetition": _q_text_repetition,
-        "sample_domain_mix": _q_sample_domain_mix,
-        "text_contamination": _q_text_contamination,
         "text_top_terms": _q_text_top_terms,
-        "sample_group_split": _q_sample_group_split,
         "profile_stats": _q_profile_stats,
         "text_scrub_pii": _q_text_scrub_pii,
         "text_tokenize_ids": _q_text_tokenize_ids,
@@ -3697,10 +3003,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "top_docs_per_source": _q_top_docs_per_source,
         "events_window_agg": _q_events_window_agg,
         "events_sessionize": _q_events_sessionize,
-        "sample_stratified": _q_sample_stratified,
         "url_canonicalize": _q_url_canonicalize,
-        "sample_token_budget": _q_sample_token_budget,
-        "split_leakage_safe": _q_split_leakage_safe,
         # --- reasoner + streaming replay (§2.9/§2.10)
         "reasoner_transitive_closure": _q_reasoner_closure,
         "closure_doubling": _q_closure_doubling,
@@ -3734,145 +3037,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "telemetry_resample": _q_telemetry_resample,
         "profile_winsorize": _q_profile_winsorize,
         "audit_snapshot_diff": _q_audit_snapshot_diff,
-        "embed_hard_negatives": _q_embed_hard_negatives,
         "events_interval_merge": _q_events_interval_merge,
         "graph_triangles": _q_graph_triangles,
         "sketch_hll_distinct": _q_sketch_hll_distinct,
         "events_anomaly_mad": _q_events_anomaly_mad,
         "events_ewma": _q_events_ewma,
-        "dedup_incremental_near": _q_dedup_incremental_near,
         "events_path_trigrams": _q_events_path_trigrams,
         "analytics_q3": _q_analytics_q3,
         "analytics_q10": _q_analytics_q10,
     })
-
-
-def _embedding_cosine_oracle() -> str:
-    from kolibrie_spark.operators.similarity import cosine_duckdb_sql
-
-    cos = cosine_duckdb_sql("a.v", "b.v")
-    return (
-        "WITH e AS (SELECT vec_id, "
-        "list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings) "
-        f"SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cosine "
-        f"FROM e a JOIN e b ON a.vec_id < b.vec_id WHERE {cos} >= 0.4"
-    )
-
-
-def _sim_topk_oracle() -> str:
-    from kolibrie_spark.operators.similarity import cosine_duckdb_sql
-
-    cos = cosine_duckdb_sql("v", "qv")
-    return (
-        "WITH q AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) "
-        "AS qv FROM embeddings WHERE vec_id = 0), "
-        "e AS (SELECT vec_id, "
-        "list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings) "
-        f"SELECT vec_id, {cos} AS cosine "
-        "FROM e, q ORDER BY cosine DESC, vec_id LIMIT 10"
-    )
-
-
-def _dedup_simhash_oracle() -> str:
-    """DuckDB twin of simhash_near_pairs: FNV-1a-64 per token (hugeint
-    arithmetic mod 2^64), per-bit majority vote, byte-reversed packing
-    (numpy packbits MSB-first + big-endian view), exact all-pairs hamming
-    (the Spark side's 4-block join is pure candidate pruning — for
-    max_hamming=3 at least one 16-bit block matches, so results are equal).
-    Documents are ASCII, so ord(char) == utf8 byte."""
-    return """
-WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
-  FROM documents WHERE trim(text) <> ''
-),
-utoks AS (SELECT DISTINCT tok FROM toks),
-hashed AS (
-  SELECT tok,
-    CAST(list_reduce(
-      list_prepend(14695981039346656037::HUGEINT,
-        list_transform(generate_series(1, length(tok)), i -> ord(tok[i])::HUGEINT)),
-      (h, c) -> (xor(h, c) * 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT
-    ) AS UBIGINT) AS h
-  FROM utoks
-),
-bits AS (
-  SELECT t.doc_id, g.b,
-    CASE WHEN (h.h >> (8*(7 - g.b//8) + (g.b%8))) & 1 = 1 THEN 1 ELSE -1 END AS pm
-  FROM toks t JOIN hashed h USING (tok)
-  CROSS JOIN generate_series(0, 63) g(b)
-),
-agg AS (
-  SELECT doc_id, b, CASE WHEN SUM(pm) > 0 THEN 1 ELSE 0 END AS bit
-  FROM bits GROUP BY 1, 2
-),
-sh AS (
-  SELECT doc_id,
-    SUM(CASE WHEN bit = 1 THEN (1::UBIGINT << b)::HUGEINT ELSE 0 END) AS uh
-  FROM agg GROUP BY 1
-),
-final AS (
-  SELECT doc_id,
-    CAST(CASE WHEN uh >= 9223372036854775808 THEN uh - 18446744073709551616
-              ELSE uh END AS BIGINT) AS simhash
-  FROM sh
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM final a JOIN final b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-"""
-
-
-def _sim_topk_lsh_oracle() -> str:
-    """DuckDB twin of lsh_bucket_topk (bits=8, nprobe=32, seed=42): the
-    hyperplanes are deterministic (seeded, rounded to 6 decimals) and baked
-    in as literals; signatures use the same left-fold dot product as the
-    Spark side; probed buckets = 32 nearest by hamming with ascending-id
-    tie-break (Python's stable sort over an increasing range)."""
-    from kolibrie_spark.operators.similarity import cosine_duckdb_sql, hyperplanes
-
-    planes = hyperplanes(64, 8, 42)
-    plane_sql = (
-        "[" + ", ".join("[" + ", ".join(repr(x) for x in p) + "]" for p in planes) + "]"
-    )
-    dot_vp = (
-        "list_reduce(list_prepend(0.0::DOUBLE, "
-        "list_transform(generate_series(1, 64), k -> {v}[k] * ps[j+1][k])), "
-        "(acc, x) -> acc + x)"
-    )
-    sig = (
-        "list_aggregate(list_transform(generate_series(0, 7), "
-        "j -> CASE WHEN " + dot_vp + " >= 0 THEN (1::BIGINT << j) ELSE 0::BIGINT END), 'sum')"
-    )
-    cos = cosine_duckdb_sql("v", "qv")
-    return f"""
-WITH planes AS (SELECT {plane_sql}::DOUBLE[][] AS ps),
-q AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-      FROM embeddings WHERE vec_id = 0),
-qs AS (SELECT {sig.format(v='qv')} AS qsig FROM q, planes),
-e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings),
-esig AS (SELECT vec_id, v, {sig.format(v='v')} AS bucket FROM e, planes),
-probed AS (
-  SELECT g.b FROM generate_series(0, 255) g(b), qs
-  ORDER BY bit_count(xor(g.b, qs.qsig)), g.b LIMIT 32
-)
-SELECT vec_id, {cos} AS cosine
-FROM esig, q WHERE bucket IN (SELECT b FROM probed)
-ORDER BY cosine DESC, vec_id LIMIT 10
-"""
-
-
-def _containment_oracle() -> str:
-    from kolibrie_spark.operators.dedup import containment_pairs_duckdb_sql
-
-    return containment_pairs_duckdb_sql("documents", "doc_id", "text", 3, 0.8)
-
-
-def _ngram_jaccard_oracle() -> str:
-    from kolibrie_spark.operators.dedup import ngram_jaccard_pairs_duckdb_sql
-
-    return ngram_jaccard_pairs_duckdb_sql("documents", "doc_id", "text", 3, 0.5)
 
 
 def oracle_sql() -> dict[str, str]:
@@ -4042,33 +3215,12 @@ def oracle_sql() -> dict[str, str]:
             "'urn:supplier:' || CAST(s_suppkey AS VARCHAR) AS subj, "
             "s_name AS obj FROM supplier"
         ),
-        # --- LLM-pipeline operators. dedup_simhash / sim_topk_lsh are
-        # approximate indexes but fully DETERMINISTIC (FNV token hashes,
-        # seeded hyperplanes), so they get value-exact DuckDB twins too.
-        "dedup_exact": (
-            "SELECT MIN(doc_id) AS doc_id, substr(text, 1, 40) AS key "
-            "FROM documents GROUP BY substr(text, 1, 40)"
-        ),
-        "dedup_ngram_jaccard": _ngram_jaccard_oracle(),
-        "dedup_containment": _containment_oracle(),
-        "dedup_minhash_lsh": _ngram_jaccard_oracle(),
-        "dedup_prefix_jaccard": _ngram_jaccard_oracle(),
-        "dedup_cluster": _dedup_cluster_oracle(),
-        "dedup_simhash": _dedup_simhash_oracle(),
-        "sim_topk_lsh": _sim_topk_lsh_oracle(),
-        "dedup_embedding_cosine": _embedding_cosine_oracle(),
-        "sim_topk_cosine": _sim_topk_oracle(),
-        "sim_topk_ivf": _sim_topk_ivf_oracle(),
-        "sim_topk_quantized": _sim_topk_quantized_oracle(),
-        "sim_topk_pq": _sim_topk_pq_oracle(),
+        # --- LLM-pipeline operators
         "text_analyze": _text_analyze_oracle(),
         "text_bm25_topk": _text_bm25_topk_oracle(),
-        "search_hybrid_rrf": _search_hybrid_rrf_oracle(),
         "text_common_spans": _text_common_spans_oracle(),
         "text_quality_gopher": _text_quality_gopher_oracle(),
-        "dedup_incremental": _dedup_incremental_oracle(),
         "layout_zorder": _layout_zorder_oracle(),
-        "embed_centroids": _embed_centroids_oracle(),
         "analytics_q5": _analytics_q5_oracle(),
         "profile_rollup": _profile_rollup_oracle(),
         "audit_quality": _audit_quality_oracle(),
@@ -4077,8 +3229,6 @@ def oracle_sql() -> dict[str, str]:
         "events_json_agg": _events_json_agg_oracle(),
         "dedup_substring": _dedup_substring_oracle(),
         "text_strip_html": _text_strip_html_oracle(),
-        "embed_contamination": _embed_contamination_oracle(),
-        "sample_weighted": _sample_weighted_oracle(),
         "profile_token_budget": _profile_token_budget_oracle(),
         "events_rolling": _events_rolling_oracle(),
         "profile_pivot": _profile_pivot_oracle(),
@@ -4089,16 +3239,12 @@ def oracle_sql() -> dict[str, str]:
         "profile_ks_drift": _profile_ks_drift_oracle(),
         "fuzzy_vocab_pairs": _fuzzy_vocab_oracle(),
         "text_normalize": _text_normalize_oracle(),
-        "sample_domain_cap": _sample_domain_cap_oracle(),
         "profile_quantiles": _profile_quantiles_oracle(),
         "profile_histogram": _profile_histogram_oracle(),
         "graph_pagerank": _graph_pagerank_oracle(),
         "pack_sequences": _pack_sequences_oracle(),
         "text_repetition": _text_repetition_oracle(),
-        "sample_domain_mix": _sample_domain_mix_oracle(),
-        "text_contamination": _text_contamination_oracle(),
         "text_top_terms": _text_top_terms_oracle(),
-        "sample_group_split": _sample_group_split_oracle(),
         "profile_stats": _profile_stats_oracle(),
         "text_scrub_pii": _text_scrub_pii_oracle(),
         "text_tokenize_ids": _text_tokenize_ids_oracle(),
@@ -4168,10 +3314,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         "prob_hybrid": _prob_hybrid_oracle(),
         "events_sessionize": _events_sessionize_oracle(),
-        "sample_stratified": _sample_stratified_oracle(),
         "url_canonicalize": _url_canonicalize_oracle(),
-        "sample_token_budget": _sample_token_budget_oracle(),
-        "split_leakage_safe": _split_leakage_safe_oracle(),
         "streaming_istream_replay": (
             "WITH w AS (SELECT DISTINCT "
             "CAST(epoch_us(ts) // 1000000 AS BIGINT) "
@@ -4235,13 +3378,11 @@ def oracle_sql() -> dict[str, str]:
         "telemetry_resample": _resample_oracle(),
         "profile_winsorize": _winsorize_oracle(),
         "audit_snapshot_diff": _audit_snapshot_diff_oracle(),
-        "embed_hard_negatives": _hard_negatives_oracle(),
         "events_interval_merge": _interval_merge_oracle(),
         "graph_triangles": _graph_triangles_oracle(),
         "sketch_hll_distinct": _hll_distinct_oracle(),
         "events_anomaly_mad": _events_anomaly_mad_oracle(),
         "events_ewma": _events_ewma_oracle(),
-        "dedup_incremental_near": _dedup_incremental_near_oracle(),
         "events_path_trigrams": _events_path_trigrams_oracle(),
         "analytics_q3": _analytics_q3_oracle(),
         "analytics_q10": _analytics_q10_oracle(),

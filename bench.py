@@ -510,8 +510,8 @@ def main() -> None:
         # the suite compiles ~60 queries' generated classes in one JVM; the
         # default 100-entry codegen cache evicts a query's classes between
         # its own timed runs, so CPU-dense queries re-pay whole-stage
-        # compilation on every run (measured: dedup_minhash_lsh 7.4s with
-        # eviction vs 2.5s steady-state)
+        # compilation on every run (measured on a since-removed MinHash
+        # gate: 7.4s with eviction vs 2.5s steady-state)
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         # ContextCleaner reclaims dead broadcasts/shuffles/RDDs only when
         # a JVM GC drops their references; a 24g heap can go the whole
@@ -693,17 +693,6 @@ def main() -> None:
     regressions = _find_regressions(timings, prev)
     # known intentional cost changes (feature additions, not regressions)
     notes = {
-        "dedup_exact": (
-            "sub-second gate at the scheduling floor; r2's count()-era "
-            "number let Catalyst skip the keep-set join output "
-            "materialization the noop sink now forces"
-        ),
-        "dedup_embedding_cosine": (
-            "r5 routed the gate through the scale-safe LSH-bucket path "
-            "(embedding_lsh_pairs: linear shuffle) replacing the "
-            "quadratic-shuffle all-pairs blocks; ~2.0s vs 1.4s at sf0.1 "
-            "is the price of the 100TB-viable plan (VERDICT r4 item #2)"
-        ),
         "streaming_istream_replay": (
             "r9 added the firing-trace pin (VERDICT r8 #6): two small "
             "distinct-window collects per gate construction — an "

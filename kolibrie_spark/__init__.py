@@ -4,7 +4,7 @@ data-processing capabilities of StreamIntelligenceLab/Kolibrie.
 The engine stores RDF quads as a DataFrame (``s, p, o, g`` string columns),
 compiles the reference's supported SPARQL 1.1 fragment to Spark SQL /
 Catalyst plans, runs RSP-QL continuous queries on Structured Streaming, and
-adds LLM-data-pipeline operators (dedup, similarity search, text analysis)
+adds LLM-data-pipeline operators (text analysis, keyword search, profiling)
 on the same DataFrame substrate.
 
 Design stance (see SURVEY.md): this is a re-expression of the reference's

@@ -1,8 +1,8 @@
-"""LLM-data-pipeline operators on the DataFrame substrate: deduplication,
-similarity search, text analysis.
+"""LLM-data-pipeline operators on the DataFrame substrate: text analysis,
+keyword search, profiling.
 
 These go beyond the reference's own surface (BASELINE.json north star) and
 are designed for 100 TB: built-in column expressions (JVM, whole-stage
-codegen) wherever possible, LSH-style candidate pruning instead of all-pairs
-joins, Arrow-batched pandas UDFs where Python is unavoidable.
+codegen) wherever possible, candidate pruning instead of all-pairs joins,
+Arrow-batched pandas UDFs where Python is unavoidable.
 """

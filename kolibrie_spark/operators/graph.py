@@ -1,8 +1,7 @@
 """Distributed graph analytics over edge DataFrames: PageRank.
 
-Complements reasoner/fixpoint.py (semi-naive closure) and
-operators/dedup.py (connected components) with the classic iterative
-rank computation, used in curation for link-graph quality signals
+Complements reasoner/fixpoint.py (semi-naive closure) with the classic
+iterative rank computation, used in curation for link-graph quality signals
 (e.g. harvesting a crawl frontier's authority scores).
 
 Determinism: floating PageRank is NOT reproducible distributed (the

@@ -1,10 +1,11 @@
-"""Deterministic, cross-engine-reproducible hashing for dedup operators.
+"""Deterministic, cross-engine-reproducible hashing for the curation operators
+(packing, sketches, text analysis).
 
 Two tiers:
 - ``poly_hash`` — a polynomial character fold expressed with Spark
   higher-order functions (``transform``/``aggregate``). Slow-ish but
   bit-reproducible in DuckDB (``list_transform``/``list_reduce``), which is
-  what makes the dedup operators oracle-checkable.
+  what makes those operators oracle-checkable.
 - ``xxhash64`` (Spark built-in) — the scale path; same operators accept
   ``hash_fn="xxhash64"`` when cross-engine reproducibility isn't needed.
 

@@ -13,7 +13,7 @@ the result is a pure function of (ids, token counts, budget, shards) — the
 same layout on every rerun, any cluster, any partitioning.
 
 The reference engine has no packing surface (this is a north-star
-training-pipeline operator, like operators/sampling.py); the hash is the
+training-pipeline operator); the hash is the
 cross-engine-reproducible polynomial fold (operators/hashing.py) so a
 DuckDB oracle can replay the exact layout — swap ``hash_fn="xxhash64"``
 at 100 TB when no cross-engine contract is needed.

@@ -116,7 +116,7 @@ def rrf_fuse(
     hard-negative mining and contamination sweeps.
 
     ``rankings``: (df, id_col, score_col) per retriever, each df one of
-    the engine's top-k outputs (bm25_topk, cosine_topk, ivf_topk, ...).
+    the engine's top-k outputs (bm25_topk, ...).
     Each list is ranked by (score desc, id asc); a document scores
     ``sum over lists of 1/(rrf_k + rank)`` with absent-from-list
     contributing 0.0, summed in the rankings order — the same fixed op

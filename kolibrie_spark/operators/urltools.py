@@ -1,7 +1,7 @@
 """URL canonicalization + host-level dedup — the web-corpus half of the
 dedup family (crawl pipelines dedup by canonical URL before any content
 hashing; reference parity: the reference has no URL tooling, this is part
-of the LLM-data-pipeline extension set like operators/dedup.py).
+of the LLM-data-pipeline extension set).
 
 Everything is pure column expressions (JVM, whole-stage codegen — no
 Python in the per-row path), so canonicalization adds no shuffle and

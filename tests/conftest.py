@@ -41,7 +41,6 @@ _SLOW_TESTS = {
     # hypothesis/property + brute-force sweeps (each operator keeps a
     # deterministic default-lane unit test)
     "test_union_is_multiset_concat",
-    "test_prefix_jaccard_equals_exact_property",
     "test_two_pattern_join_matches_naive",
     "test_filter_matches_duckdb_try_numeric",
     "test_remove_duplicate_spans_matches_brute_force",
@@ -49,7 +48,6 @@ _SLOW_TESTS = {
     "test_ks_drift_bounds_and_symmetry",
     "test_scrub_is_idempotent",
     "test_canonical_url_matches_duckdb_and_is_idempotent",
-    "test_embedding_contamination_repetitions_raise_recall",
     "test_common_span_profile_heavy_df_cap_equivalence",
     # serializer round-trip property sweeps (default lane keeps the
     # format unit tests and the rdfio differentials)

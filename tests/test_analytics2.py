@@ -1,49 +1,8 @@
-"""Weighted sampling, token budget, rolling windows, pivot counts."""
+"""Token budget, rolling windows, pivot counts, temporal and graph operators."""
 
 import datetime
 
 import duckdb
-
-
-def test_weighted_sample_extremes(spark):
-    from kolibrie_spark.operators.sampling import weighted_sample
-
-    rows = [(i, 1.0 if i % 2 == 0 else 0.0) for i in range(100)]
-    df = spark.createDataFrame(rows, "k long, w double")
-    kept = sorted(r["k"] for r in weighted_sample(df, "k", "w").collect())
-    assert kept == [i for i in range(100) if i % 2 == 0]  # w=1 kept, w=0 dropped
-
-
-def test_weighted_sample_rate_and_determinism(spark):
-    from kolibrie_spark.operators.sampling import weighted_sample
-
-    rows = [(i, 0.3) for i in range(2000)]
-    df = spark.createDataFrame(rows, "k long, w double")
-    kept1 = sorted(r["k"] for r in weighted_sample(df, "k", "w").collect())
-    kept2 = sorted(
-        r["k"] for r in weighted_sample(df.repartition(5), "k", "w").collect()
-    )
-    assert kept1 == kept2
-    assert 0.25 < len(kept1) / 2000 < 0.35
-
-
-def test_weighted_sample_duckdb_twin(spark):
-    from kolibrie_spark.operators.sampling import (
-        weighted_sample,
-        weighted_sample_duckdb_predicate,
-    )
-
-    rows = [(i, (i % 10) / 10.0) for i in range(500)]
-    df = spark.createDataFrame(rows, "k long, w double")
-    mine = sorted(
-        r["k"] for r in weighted_sample(df, "k", "w", scale=1.5).collect()
-    )
-    con = duckdb.connect()
-    con.execute("CREATE TABLE t (k BIGINT, w DOUBLE)")
-    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
-    pred = weighted_sample_duckdb_predicate("k", "w", scale=1.5)
-    ref = sorted(r[0] for r in con.execute(f"SELECT k FROM t WHERE {pred}").fetchall())
-    assert mine == ref
 
 
 def test_token_budget_shares(spark):
@@ -190,51 +149,6 @@ def test_pivot_counts_duckdb_twin(spark):
     assert mine == ref
 
 
-def test_embedding_contamination_detects_planted(spark):
-    import numpy as np
-
-    from kolibrie_spark.operators.contamination import embedding_contamination
-
-    rng = np.random.RandomState(3)
-    vecs = rng.randn(80, 16).round(4)
-    corpus = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(80)],
-        "cid long, embedding array<double>",
-    )
-    # bench = 5 corpus vectors with tiny jitter + 3 unrelated vectors
-    planted = [(1000 + i, [float(x) * 1.0005 for x in vecs[i * 7]]) for i in range(5)]
-    noise = [(2000 + i, [float(x) for x in rng.randn(16).round(4)]) for i in range(3)]
-    bench = spark.createDataFrame(
-        planted + noise, "bid long, embedding array<double>"
-    )
-    out = embedding_contamination(
-        corpus, "cid", bench, "bid", "embedding", dim=16, tau=0.999
-    )
-    got = {(r["corpus_id"], r["bench_id"]) for r in out.collect()}
-    # scaling preserves cosine exactly -> every planted pair within any
-    # bucket split must map cid=i*7 to bid=1000+i; noise never matches
-    assert got <= {(i * 7, 1000 + i) for i in range(5)}
-    assert len(got) >= 4  # at most one pair lost to a bucket split
-    assert all(b < 2000 for _, b in got)
-
-
-def test_embedding_contamination_broadcasts_bench(spark):
-    import numpy as np
-
-    from kolibrie_spark.operators.contamination import embedding_contamination
-
-    rng = np.random.RandomState(5)
-    mk = lambda n, o: [(o + i, [float(x) for x in rng.randn(8)]) for i in range(n)]
-    corpus = spark.createDataFrame(mk(40, 0), "cid long, embedding array<double>")
-    bench = spark.createDataFrame(mk(4, 100), "bid long, embedding array<double>")
-    plan = (
-        embedding_contamination(corpus, "cid", bench, "bid", "embedding", dim=8)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-
-
 def test_json_field_and_agg(spark):
     from kolibrie_spark.operators.semistructured import json_agg_by_key
 
@@ -286,32 +200,6 @@ def test_json_agg_duckdb_twin(spark):
     assert mine == ref
 
 
-def test_embedding_contamination_repetitions_raise_recall(spark):
-    import numpy as np
-
-    from kolibrie_spark.operators.contamination import embedding_contamination
-
-    rng = np.random.RandomState(9)
-    vecs = rng.randn(120, 16).round(4)
-    corpus = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(120)],
-        "cid long, embedding array<double>",
-    )
-    bench = spark.createDataFrame(
-        [(1000 + i, [float(x) * 1.0004 for x in vecs[i]]) for i in range(120)],
-        "bid long, embedding array<double>",
-    )
-    args = (corpus, "cid", bench, "bid", "embedding")
-    n1 = embedding_contamination(*args, dim=16, tau=0.999).count()
-    n3 = embedding_contamination(*args, dim=16, tau=0.999, repetitions=3).count()
-    assert n3 >= n1  # extra plane sets can only ADD shared-bucket pairs
-    assert n3 >= 118  # ~all 120 planted pairs recovered at r=3
-    # dedupe: no pair may appear twice
-    out3 = embedding_contamination(*args, dim=16, tau=0.999, repetitions=3)
-    rows = [(r["corpus_id"], r["bench_id"]) for r in out3.collect()]
-    assert len(rows) == len(set(rows))
-
-
 def test_session3_operators_on_empty_input(spark):
     """Every session-3 operator must handle an empty corpus/stream
     gracefully (no crash, empty or degenerate-but-sane output)."""
@@ -328,10 +216,6 @@ def test_session3_operators_on_empty_input(spark):
     from kolibrie_spark.operators.normalize import normalize_text
     from kolibrie_spark.operators.paragraphs import dedup_paragraphs
     from kolibrie_spark.operators.profiling import ks_drift, token_budget
-    from kolibrie_spark.operators.sampling import (
-        domain_cap_sample,
-        weighted_sample,
-    )
     from kolibrie_spark.operators.scd import downsample_last, scd2_intervals
     from kolibrie_spark.operators.sketches import kmv_distinct
     from kolibrie_spark.operators.substring import remove_duplicate_spans
@@ -346,8 +230,6 @@ def test_session3_operators_on_empty_input(spark):
     assert normalize_text(docs, "text").count() == 0
     assert dedup_paragraphs(docs, "doc_id", "text").count() == 0
     assert remove_duplicate_spans(docs, "doc_id", "text").count() == 0
-    assert domain_cap_sample(docs, "doc_id", "source", 5).count() == 0
-    assert weighted_sample(docs, "doc_id", "w").count() == 0
     assert funnel(ev, "uid", "ts", "et", ["a", "b"]).count() == 0
     assert retention(ev, "uid", "ts").count() == 0
     assert rolling_user_stats(ev, "uid", "ts", "v", "eid").count() == 0
@@ -367,95 +249,18 @@ def test_earlier_curation_operators_on_empty_input(spark):
     """Round-3 session-1/2 operators under an empty corpus."""
     from pyspark.sql import functions as F
 
-    from kolibrie_spark.operators.contamination import ngram_containment
-    from kolibrie_spark.operators.dedup import (
-        exact_dedup,
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-    )
     from kolibrie_spark.operators.packing import pack_sequences
     from kolibrie_spark.operators.scrub import scrub_pii
     from kolibrie_spark.operators.search import bm25_topk, top_terms
     from kolibrie_spark.operators.textanalysis import gopher_rules
 
     docs = spark.createDataFrame([], "doc_id long, text string, source string, toks long")
-    bench = spark.createDataFrame([("b", "benchmark text here")], "bid string, text string")
 
-    assert exact_dedup(docs, ["text"], "doc_id").count() == 0
-    assert minhash_lsh_pairs(docs, "doc_id", "text").count() == 0
-    assert ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5).count() == 0
-    assert ngram_containment(docs, "doc_id", "text", bench, "text", 3).count() == 0
     assert gopher_rules(docs, "doc_id", "text").count() == 0
     assert top_terms(docs, "text", 5).count() == 0
     assert bm25_topk(docs, "doc_id", "text", "query terms", 5).count() == 0
     assert pack_sequences(docs, "doc_id", "toks", 128, shards=4).count() == 0
     assert scrub_pii(docs, "doc_id", "text").count() == 0
-
-
-def test_hard_negatives_contract_and_twin(spark):
-    import numpy as np
-
-    from kolibrie_spark.operators.embeddings import (
-        hard_negatives,
-        hard_negatives_duckdb_sql,
-    )
-
-    rng = np.random.RandomState(13)
-    # two label clusters around distinct centers + a cross-class near-dup
-    c0, c1 = rng.randn(8), rng.randn(8)
-    rows = []
-    for i in range(40):
-        lbl = i % 2
-        vec = (c0 if lbl == 0 else c1) + 0.3 * rng.randn(8)
-        rows.append((i, [float(x) for x in vec.round(4)], lbl))
-    # plant: vector 100 is label 1 but sits exactly on vector 0 (label 0)
-    rows.append((100, rows[0][1], 1))
-    df = spark.createDataFrame(rows, "vid long, embedding array<double>, label int")
-    out = hard_negatives(
-        df, "vid", "embedding", "label", dim=8, per_anchor=2
-    )
-    got = {(r["anchor_id"], r["negative_id"]) for r in out.collect()}
-    # the planted twin is anchor 0's hardest negative (cosine 1.0, same bucket)
-    assert (0, 100) in got and (100, 0) in got
-
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE t (vid BIGINT, embedding DOUBLE[], label INT)")
-    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
-    ref = {
-        tuple(r)
-        for r in con.execute(
-            hard_negatives_duckdb_sql(
-                "t", "vid", "embedding", "label", dim=8, per_anchor=2
-            )
-        ).fetchall()
-    }
-    mine = {tuple(r) for r in out.collect()}
-    assert mine == ref
-
-
-def test_hard_negatives_positive_relation(spark):
-    import numpy as np
-
-    from kolibrie_spark.operators.embeddings import hard_negatives
-
-    rng = np.random.RandomState(17)
-    c0, c1 = rng.randn(8) * 3, rng.randn(8) * 3
-    rows = [
-        (i, [float(x) for x in ((c0 if i % 2 == 0 else c1) + 0.1 * rng.randn(8)).round(4)], i % 2)
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "vid long, embedding array<double>, label int")
-    pos = hard_negatives(
-        df, "vid", "embedding", "label", dim=8, per_anchor=1, relation="positive"
-    ).collect()
-    labels = dict((r[0], r[2]) for r in rows)
-    assert len(pos) > 0
-    for r in pos:
-        assert labels[r["anchor_id"]] == labels[r["negative_id"]]
-        assert r["anchor_id"] != r["negative_id"]
-        assert r["cosine"] > 0.9  # tight same-cluster pairs
 
 
 def test_merge_intervals(spark):

@@ -174,75 +174,6 @@ def test_downsample_duckdb_twin(spark):
     assert mine == ref
 
 
-# ---------------------------------------------------------------------------
-# incremental near-dup vs persisted signature state
-# ---------------------------------------------------------------------------
-
-
-def _mk_doc(words):
-    return " ".join(words)
-
-
-def test_near_dup_against_corpus_flags_planted(spark):
-    from kolibrie_spark.operators.incremental import (
-        corpus_signatures,
-        near_dup_against_corpus,
-    )
-
-    base = ("the quick brown fox jumps over the lazy dog and runs far "
-            "away into the deep green forest tonight").split()
-    corpus = spark.createDataFrame(
-        [(i, _mk_doc(base[i % 3 :] + [f"corp{i}", f"x{i}", f"y{i}"])) for i in range(20)],
-        "doc_id long, text string",
-    )
-    state = corpus_signatures(corpus, "doc_id", "text").localCheckpoint()
-    batch = spark.createDataFrame(
-        [
-            (100, _mk_doc(base + ["corp0", "x0", "y0"])),  # ~= corpus doc 0
-            (101, corpus.collect()[5]["text"]),  # exact copy of corpus doc 5
-            (102, "completely unrelated words about spark catalyst plans"),
-        ],
-        "doc_id long, text string",
-    )
-    out = near_dup_against_corpus(
-        batch, state, "doc_id", "text", threshold=0.5
-    )
-    got = {(r["batch_id"], r["corpus_id"]): r["est_jaccard"] for r in out.collect()}
-    # exact copy -> estimate exactly 1.0 against its twin
-    assert got[(101, 5)] == 1.0
-    # the near-copy of doc 0 is flagged
-    assert any(b == 100 for b, _ in got)
-    # unrelated doc never flagged
-    assert not any(b == 102 for b, _ in got)
-
-
-def test_near_dup_against_corpus_deterministic(spark):
-    from kolibrie_spark.operators.incremental import (
-        corpus_signatures,
-        near_dup_against_corpus,
-    )
-
-    docs = [(i, f"tok{i} tok{i+1} tok{i+2} tok{i%4} shared words here") for i in range(30)]
-    corpus = spark.createDataFrame(docs, "doc_id long, text string")
-    state = corpus_signatures(corpus, "doc_id", "text")
-    batch = spark.createDataFrame(
-        [(200 + i, t) for i, t in [(0, docs[3][1]), (1, docs[7][1])]],
-        "doc_id long, text string",
-    )
-    a = sorted(map(tuple, near_dup_against_corpus(batch, state, "doc_id", "text").collect()))
-    b = sorted(
-        map(
-            tuple,
-            near_dup_against_corpus(
-                batch.repartition(5), corpus_signatures(
-                    corpus.repartition(7), "doc_id", "text"
-                ), "doc_id", "text"
-            ).collect(),
-        )
-    )
-    assert a == b and len(a) >= 2
-
-
 def test_diff_snapshots(spark):
     from kolibrie_spark.operators.audit import diff_snapshots
 
@@ -291,37 +222,6 @@ def test_diff_snapshots_duckdb_twin(spark):
         ).fetchall()
     }
     assert mine == ref
-
-
-def test_near_dup_state_survives_parquet_roundtrip(spark, tmp_path):
-    """The signature state table persists to parquet and reloads without
-    changing results — the nightly-pipeline contract."""
-    from kolibrie_spark.operators.incremental import (
-        corpus_signatures,
-        near_dup_against_corpus,
-    )
-
-    docs = [(i, f"alpha beta gamma doc{i % 5} delta epsilon") for i in range(25)]
-    corpus = spark.createDataFrame(docs, "doc_id long, text string")
-    state = corpus_signatures(corpus, "doc_id", "text")
-    path = str(tmp_path / "sig_state")
-    state.write.parquet(path)
-    reloaded = spark.read.parquet(path)
-    batch = spark.createDataFrame(
-        [(900, docs[2][1]), (901, "unrelated totally different content")],
-        "doc_id long, text string",
-    )
-    live = sorted(
-        map(tuple, near_dup_against_corpus(batch, state, "doc_id", "text").collect())
-    )
-    persisted = sorted(
-        map(
-            tuple,
-            near_dup_against_corpus(batch, reloaded, "doc_id", "text").collect(),
-        )
-    )
-    assert live == persisted and any(b == 900 for b, _, _ in live)
-    assert not any(b == 901 for b, _, _ in live)
 
 
 def test_resample_ffill_basic(spark):

@@ -1,5 +1,5 @@
-"""Curation operators: repetition metrics, domain-mix sampling,
-benchmark contamination, corpus top terms — brute-force Python oracles
+"""Curation operators: repetition metrics, tokenization, chunking,
+profiling, PII scrubbing, corpus top terms — brute-force Python oracles
 plus DuckDB twins."""
 
 import duckdb
@@ -73,101 +73,6 @@ def test_repetition_duckdb_twin(spark, docs):
         ).fetchall()
     )
     assert got == want  # exact float equality
-
-
-def test_domain_mix_sample(spark, docs):
-    from kolibrie_spark.operators.sampling import (
-        domain_mix_duckdb_sql,
-        domain_mix_sample,
-    )
-
-    out = domain_mix_sample(docs, "doc_id", "source", alpha=0.5, target_frac=0.5)
-    got = sorted((r.doc_id, r.source) for r in out.collect())
-    con = duckdb.connect()
-    con.register("docs", docs.toPandas())
-    want = sorted(
-        tuple(r)
-        for r in con.execute(
-            domain_mix_duckdb_sql("docs", "doc_id", "source", 0.5, 0.5)
-        ).fetchall()
-    )
-    assert got == want
-    # determinism: same kept set on rerun
-    again = sorted((r.doc_id, r.source) for r in out.collect())
-    assert got == again
-    with pytest.raises(ValueError):
-        domain_mix_sample(docs, "doc_id", "source", 0.5, 0.0)
-
-
-def test_domain_mix_upweights_small_domains(spark):
-    from kolibrie_spark.operators.sampling import domain_mix_sample
-
-    rows = [(i, "big") for i in range(900)] + [
-        (i + 1000, "small") for i in range(100)
-    ]
-    df = spark.createDataFrame(rows, "k long, d string")
-    kept = domain_mix_sample(df, "k", "d", alpha=0.5, target_frac=0.3).groupBy(
-        "d"
-    ).count()
-    by = {r.d: r["count"] for r in kept.collect()}
-    # alpha=0.5 shifts share toward the small domain: its keep RATE must
-    # exceed the big domain's (0.3 flat would keep 30% of each)
-    assert by["small"] / 100 > by["big"] / 900
-    # and the overall take is near the 30% target
-    assert 0.2 < (by["small"] + by["big"]) / 1000 < 0.45
-
-
-def test_ngram_containment_brute_force(spark, docs):
-    from kolibrie_spark.operators.contamination import ngram_containment
-
-    bench = docs.filter(F.col("source") == "code").select("text")
-    out = ngram_containment(docs, "doc_id", "text", bench, "text", n=3)
-    got = {
-        r.doc_id: (r.n_ngrams, r.n_contaminated, r.containment)
-        for r in out.collect()
-    }
-    rows = [(r.doc_id, r.text) for r in docs.collect()]
-    bench_set = set()
-    for did, text in rows:
-        if did in (6, 7):
-            bench_set |= set(_ngrams(text, 3))
-    for did, text in rows:
-        grams = set(_ngrams(text, 3))
-        hits = len(grams & bench_set)
-        want_frac = hits / len(grams) if grams else 0.0
-        assert got[did] == (len(grams), hits, pytest.approx(want_frac)), did
-    # the benchmark doc itself is fully contaminated
-    assert got[7][2] == 1.0
-    # short/empty docs get 0 ngrams, containment 0.0
-    assert got[5] == (0, 0, 0.0)
-    assert got[6] == (0, 0, 0.0)
-
-
-def test_ngram_containment_duckdb_twin(spark, docs):
-    from kolibrie_spark.operators.contamination import (
-        ngram_containment,
-        ngram_containment_duckdb_sql,
-    )
-
-    bench = docs.filter(F.col("source") == "code").select("text")
-    out = ngram_containment(docs, "doc_id", "text", bench, "text", n=2)
-    got = sorted(tuple(r) for r in out.collect())
-    con = duckdb.connect()
-    con.register("docs", docs.toPandas())
-    want = sorted(
-        tuple(r)
-        for r in con.execute(
-            ngram_containment_duckdb_sql(
-                "docs",
-                "doc_id",
-                "text",
-                "(SELECT text FROM docs WHERE source = 'code')",
-                "text",
-                n=2,
-            )
-        ).fetchall()
-    )
-    assert got == want
 
 
 def test_tokenize_to_ids(spark, docs):
@@ -259,36 +164,6 @@ def test_top_per_group(spark):
         top_per_group_duckdb_sql("d", "grp", "score", 2, "doc_id", "doc_id, grp, score")
     ).fetchall()
     assert got == sorted(tuple(r) for r in want)
-
-
-def test_group_split_no_leakage(spark):
-    from kolibrie_spark.operators.sampling import (
-        group_split,
-        group_split_duckdb_case,
-    )
-
-    rows = [(i, f"host{i % 17}") for i in range(300)]
-    df = spark.createDataFrame(rows, "doc_id long, host string")
-    splits = {"train": 0.8, "valid": 0.1, "test": 0.1}
-    out = group_split(df, "host", splits)
-    got = [(r.doc_id, r.host, r.split) for r in out.collect()]
-    # leakage-safety: one split per group
-    per_host = {}
-    for _d, h, s in got:
-        per_host.setdefault(h, set()).add(s)
-    assert all(len(v) == 1 for v in per_host.values())
-    # DuckDB twin agrees row-for-row
-    con = duckdb.connect()
-    con.register("d", df.toPandas())
-    case = group_split_duckdb_case("host", splits)
-    want = con.execute(
-        f"SELECT doc_id, host, {case} AS split FROM d"
-    ).fetchall()
-    assert sorted(got) == sorted(tuple(r) for r in want)
-    with pytest.raises(ValueError):
-        group_split(df, "host", {"a": 0.5, "b": 0.4})
-    with pytest.raises(ValueError):
-        group_split(df, "host", {})
 
 
 def test_profile_stats(spark):

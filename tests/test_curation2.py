@@ -1,6 +1,5 @@
 """Round-3 session-2 curation operators: cross-doc span profiling,
-Gopher quality rules, incremental corpus dedup, Z-order layout,
-embedding centroids — brute-force Python oracles."""
+Gopher quality rules, Z-order layout — brute-force Python oracles."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -156,19 +155,6 @@ def test_gopher_rules_duckdb_twin(spark, docs):
     assert mine == ref
 
 
-def test_dedup_against_corpus(spark, docs):
-    from kolibrie_spark.operators.incremental import dedup_against_corpus
-
-    batch = docs.where(F.col("doc_id").isin(1, 4, 5))
-    corpus = docs.where(~F.col("doc_id").isin(1, 4, 5))
-    out = dedup_against_corpus(batch, corpus, "doc_id", "text")
-    kept = {r["doc_id"] for r in out.collect()}
-    # doc 1's content also exists in the corpus as doc 6 -> dropped;
-    # docs 4 and 5 are unique to the batch -> kept
-    assert kept == {4, 5}
-    assert "fp" in out.columns
-
-
 def test_zorder_value_brute_force(spark):
     from kolibrie_spark.operators.layout import zorder_value
 
@@ -231,42 +217,4 @@ def test_zorder_layout_clusters(spark):
     assert sum(r["xs"] for r in spans) / len(spans) < 40
     assert sum(r["ys"] for r in spans) / len(spans) < 40
     assert out.columns == ["x", "y"]
-
-
-def test_group_centroids_exact(spark):
-    from kolibrie_spark.operators.embeddings import group_centroids
-
-    rows = [
-        (0, [1.0, 2.0, 3.0]),
-        (0, [3.0, 2.0, 1.0]),
-        (1, [0.5, -0.5, 0.25]),
-    ]
-    df = spark.createDataFrame(rows, "label int, embedding array<float>")
-    out = {
-        (r["label"], r["dim"]): (r["centroid"], r["n_vecs"])
-        for r in group_centroids(df, "label", "embedding").collect()
-    }
-    assert out[(0, 0)] == (2.0, 2)
-    assert out[(0, 1)] == (2.0, 2)
-    assert out[(0, 2)] == (2.0, 2)
-    assert out[(1, 0)] == (0.5, 1)
-    assert out[(1, 1)] == (-0.5, 1)
-    assert out[(1, 2)] == (0.25, 1)
-
-
-def test_group_centroids_shuffle_invariant(spark):
-    """Integer-scaled summation: identical result under different
-    partitionings (plain float sums would not guarantee this)."""
-    import random
-
-    from kolibrie_spark.operators.embeddings import group_centroids
-
-    rng = random.Random(7)
-    rows = [(i % 3, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(300)]
-    df1 = spark.createDataFrame(rows, "label int, embedding array<float>")
-    df2 = df1.repartition(13, "label")
-    a = sorted(map(tuple, group_centroids(df1, "label", "embedding").collect()))
-    b = sorted(map(tuple, group_centroids(df2, "label", "embedding").collect()))
-    assert a == b
-
 

@@ -1,5 +1,5 @@
 """Session-3 curation operators: KMV sketch, KS drift, fuzzy vocab pairs,
-unicode normalization, per-domain cap."""
+unicode normalization, cross-engine hashing, winsorizing."""
 
 import duckdb
 import pytest
@@ -225,54 +225,8 @@ def test_normalize_duckdb_twin(spark):
 
 
 # ---------------------------------------------------------------------------
-# per-domain cap
+# cross-engine hashing
 # ---------------------------------------------------------------------------
-
-
-def test_domain_cap_deterministic_and_capped(spark):
-    from kolibrie_spark.operators.sampling import domain_cap_sample
-
-    rows = [(i, f"d{i % 3}") for i in range(90)] + [(1000 + i, "whale") for i in range(200)]
-    df = spark.createDataFrame(rows, "k long, dom string")
-    kept1 = sorted(r["k"] for r in domain_cap_sample(df, "k", "dom", 10).collect())
-    kept2 = sorted(
-        r["k"]
-        for r in domain_cap_sample(
-            df.repartition(7), "k", "dom", 10
-        ).collect()
-    )
-    assert kept1 == kept2  # partition-layout invariant
-    counts = (
-        domain_cap_sample(df, "k", "dom", 10)
-        .groupBy("dom")
-        .count()
-        .collect()
-    )
-    assert all(r["count"] == 10 for r in counts)
-
-
-def test_domain_cap_duckdb_twin(spark):
-    from kolibrie_spark.operators.sampling import (
-        domain_cap_duckdb_sql,
-        domain_cap_sample,
-    )
-
-    rows = [(i, f"d{i % 4}") for i in range(120)]
-    df = spark.createDataFrame(rows, "k long, dom string")
-    mine = {
-        (r["k"], r["dom"])
-        for r in domain_cap_sample(df, "k", "dom", 7).collect()
-    }
-    con = duckdb.connect()
-    con.execute("CREATE TABLE t (k BIGINT, dom VARCHAR)")
-    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
-    ref = {
-        tuple(r)
-        for r in con.execute(
-            domain_cap_duckdb_sql("t", "k", "dom", 7, "k, dom")
-        ).fetchall()
-    }
-    assert mine == ref
 
 
 def test_poly_hash_cross_engine_on_unicode(spark):

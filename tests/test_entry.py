@@ -18,6 +18,14 @@ def test_every_query_has_an_oracle():
     assert qs - oracles == ROWS_ONLY, f"queries lacking an oracle: {qs - oracles - ROWS_ONLY}"
 
 
+def test_driver_first_names_are_queries():
+    # _driver_order skips unknown names silently, so a gate removed from
+    # queries() would otherwise leave a stale _DRIVER_FIRST entry behind
+    qs = entry_mod.queries()
+    stale = [k for k in entry_mod._DRIVER_FIRST if k not in qs]
+    assert not stale, f"_DRIVER_FIRST names missing from queries(): {stale}"
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

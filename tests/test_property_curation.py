@@ -1,5 +1,5 @@
-"""Property-based tests (hypothesis) for the curation operators: layout
-conservation, idempotency, and leakage-safety invariants under randomized
+"""Property-based tests (hypothesis) for the curation operators: packing
+conservation, idempotency, and bound invariants under randomized
 inputs — properties a fixed fixture can miss."""
 
 import pytest
@@ -61,31 +61,6 @@ def test_scrub_is_idempotent(spark, ws):
         r.n_email == 0 and r.n_ipv4 == 0 and r.n_number == 0
         for r in twice.collect()
     )
-
-
-@SLOW
-@given(
-    groups=st.lists(st.integers(0, 9), min_size=1, max_size=40),
-    fracs=st.sampled_from(
-        [
-            {"train": 0.8, "valid": 0.1, "test": 0.1},
-            {"a": 0.5, "b": 0.5},
-            {"x": 1.0},
-        ]
-    ),
-)
-def test_group_split_total_and_leak_free(spark, groups, fracs):
-    from kolibrie_spark.operators.sampling import group_split
-
-    rows = [(i, f"g{g}") for i, g in enumerate(groups)]
-    df = spark.createDataFrame(rows, "doc_id long, grp string")
-    out = group_split(df, "grp", fracs).collect()
-    assert len(out) == len(rows)  # total conservation: a split for every row
-    per_group = {}
-    for r in out:
-        per_group.setdefault(r.grp, set()).add(r.split)
-    assert all(len(v) == 1 for v in per_group.values())  # no leakage
-    assert all(r.split in fracs for r in out)
 
 
 @SLOW

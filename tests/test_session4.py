@@ -1,6 +1,6 @@
 """Session-4 operator hardening: empty-input robustness for every new
 operator, plus hypothesis property tests for the invariants a fixture
-can miss (prefix filtering == exact join, interval-merge coverage)."""
+can miss (interval-merge coverage)."""
 
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -16,23 +16,16 @@ def test_empty_inputs_session4(spark):
     from pyspark.sql import functions as F
 
     from kolibrie_spark.operators.analytics import path_ngrams
-    from kolibrie_spark.operators.dedup import prefix_jaccard_pairs
     from kolibrie_spark.operators.graph import triangle_count
-    from kolibrie_spark.operators.incremental import (
-        corpus_signatures,
-        near_dup_against_corpus,
-    )
     from kolibrie_spark.operators.profiling import mad_outliers, winsorize
     from kolibrie_spark.operators.scd import ewma_last, resample_ffill
     from kolibrie_spark.operators.sketches import hll_distinct
     from kolibrie_spark.operators.temporal import merge_intervals
 
-    docs = spark.createDataFrame([], "doc_id long, text string")
     ev = spark.createDataFrame([], "k string, ts long, v double, id long")
     edges = spark.createDataFrame([], "src long, dst long")
     iv = spark.createDataFrame([], "k string, s long, e long")
 
-    assert prefix_jaccard_pairs(docs, "doc_id", "text", 3, 0.5).count() == 0
     assert merge_intervals(iv, "k", "s", "e").count() == 0
     assert triangle_count(edges).count() == 0
     assert hll_distinct(ev, "k", "v").count() == 0
@@ -41,39 +34,6 @@ def test_empty_inputs_session4(spark):
     assert ewma_last(ev, "k", "ts", "v").count() == 0
     assert resample_ffill(ev, "k", "ts", "v", 10).count() == 0
     assert path_ngrams(ev, "k", "ts", "v", "id").count() == 0
-    state = corpus_signatures(docs, "doc_id", "text")
-    assert state.count() == 0
-    assert near_dup_against_corpus(docs, state, "doc_id", "text").count() == 0
-
-
-words_st = st.lists(
-    st.lists(st.sampled_from(["a", "b", "c", "d"]), min_size=1, max_size=8)
-    .map(" ".join),
-    min_size=1,
-    max_size=10,
-)
-
-
-@SLOW
-@given(texts=words_st, t=st.sampled_from([0.3, 0.5, 0.75]))
-def test_prefix_jaccard_equals_exact_property(spark, texts, t):
-    from kolibrie_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        prefix_jaccard_pairs,
-    )
-
-    df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(texts)], "doc_id long, text string"
-    )
-    exact = {
-        (r.id_a, r.id_b, round(r.jaccard, 12))
-        for r in ngram_jaccard_pairs(df, "doc_id", "text", 2, t).collect()
-    }
-    pref = {
-        (r.id_a, r.id_b, round(r.jaccard, 12))
-        for r in prefix_jaccard_pairs(df, "doc_id", "text", 2, t).collect()
-    }
-    assert pref == exact
 
 
 intervals_st = st.lists(

@@ -290,93 +290,6 @@ def test_start_foreachbatch_with_sink(spark, tmp_path):
     assert spark.read.parquet(results).count() > 0
 
 
-def test_sessionize_stream_applyinpandaswithstate(spark, tmp_path):
-    """Custom stateful operator path: per-user open-session state via
-    applyInPandasWithState; closed sessions emit across micro-batches and
-    match the batch sessionize() twin."""
-    import time
-
-    from kolibrie_spark.streaming.sessionize import sessionize_stream
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    batch1 = [("u1", 0), ("u1", 10), ("u1", 1000), ("u1", 1005), ("u2", 5)]
-    spark.createDataFrame(batch1, "u string, t long").write.parquet(src)
-
-    stream = spark.readStream.schema("u string, t long").parquet(src)
-    out = sessionize_stream(stream, "u", "t", gap=60)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_test")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    got1 = {
-        (r.u, r.session_id, r.session_end, r.n_events)
-        for r in spark.sql("SELECT * FROM sessions_test").collect()
-    }
-    # u1's first session (0..10) closed by the 1000 event; (1000,1005) open
-    assert got1 == {("u1", 0, 10, 2)}
-
-    # a later batch closes u1's open session; u2 stays open forever
-    spark.createDataFrame([("u1", 5000)], "u string, t long").write.mode(
-        "append"
-    ).parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got2 = {
-        (r.u, r.session_id, r.session_end, r.n_events)
-        for r in spark.sql("SELECT * FROM sessions_test").collect()
-    }
-    assert got2 == {("u1", 0, 10, 2), ("u1", 1000, 1005, 2)}
-
-
-def test_sessionize_stream_event_time_timeout_flushes_idle(spark, tmp_path):
-    """flush_open_sessions=True: once the event-time watermark passes an
-    idle user's last+gap, the open session is emitted and its state freed
-    (round-3 ADVICE fix: NoTimeout held idle sessions forever)."""
-    from kolibrie_spark.streaming.sessionize import sessionize_stream
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    # times sit well above epoch 0: the initial watermark is 0 and rows at
-    # exactly the watermark are dropped as late
-    batch1 = [("u1", 1000), ("u1", 1010), ("u2", 1005)]
-    spark.createDataFrame(batch1, "u string, t long").write.parquet(src)
-
-    stream = spark.readStream.schema("u string, t long").parquet(src)
-    out = sessionize_stream(stream, "u", "t", gap=60, flush_open_sessions=True)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_flush_test")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    # an unrelated user's much-later event advances the watermark past
-    # u1's and u2's last+gap — their open sessions must flush WITHOUT any
-    # further u1/u2 events
-    spark.createDataFrame([("u3", 10_000)], "u string, t long").write.mode(
-        "append"
-    ).parquet(src)
-    q.processAllAvailable()
-    # one more batch: the watermark computed at batch N flushes at N+1
-    spark.createDataFrame([("u3", 10_001)], "u string, t long").write.mode(
-        "append"
-    ).parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r.u, r.session_id, r.session_end, r.n_events)
-        for r in spark.sql("SELECT * FROM sessions_flush_test").collect()
-    }
-    assert ("u1", 1000, 1010, 2) in got
-    assert ("u2", 1005, 1005, 1) in got
-
-
 def test_sessionize_batch_matches_manual(spark):
     from kolibrie_spark.operators.temporal import sessionize
 
@@ -484,124 +397,6 @@ def test_live_istream_gate_matches_replay_twin(spark):
         .collect()
     }
     assert live == twin and live
-
-
-def test_funnel_stream_matches_batch(spark, tmp_path):
-    """Streaming funnel (applyInPandasWithState, one state row per user)
-    converges to the batch funnel() result when all events have arrived
-    in order."""
-    from kolibrie_spark.operators.analytics import funnel
-    from kolibrie_spark.streaming.funnel import funnel_stream
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    batch1 = [
-        ("u1", 100, "view"),
-        ("u1", 200, "cart"),
-        ("u2", 150, "view"),
-        ("u3", 50, "buy"),  # buy before view: must not count
-    ]
-    batch2 = [
-        ("u1", 300, "buy"),
-        ("u2", 140, "cart"),  # before u2's t1=150: not after -> no advance
-        ("u3", 60, "view"),
-        ("u3", 70, "buy"),
-    ]
-    steps = ["view", "cart", "buy"]
-    spark.createDataFrame(batch1, "u string, t long, et string").write.parquet(src)
-    stream = spark.readStream.schema("u string, t long, et string").parquet(src)
-    out = funnel_stream(stream, "u", "t", "et", steps)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("funnel_test")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    spark.createDataFrame(batch2, "u string, t long, et string").write.mode(
-        "append"
-    ).parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    # latest emission per user = current funnel state
-    rows = spark.sql(
-        "SELECT * FROM funnel_test"
-    ).collect()
-    latest = {}
-    for r in rows:
-        cur = (r["t1"], r["t2"], r["t3"])
-        prev = latest.get(r["uid"])
-        # update stream: a later emission strictly advances (more fields set)
-        if prev is None or sum(v is not None for v in cur) >= sum(
-            v is not None for v in prev
-        ):
-            latest[r["uid"]] = cur
-    all_events = batch1 + batch2
-    bdf = spark.createDataFrame(all_events, "u string, t long, et string")
-    batch_out = {
-        r["uid"]: (r["t1"], r["t2"], r["t3"])
-        for r in funnel(bdf, "u", "t", "et", steps).collect()
-    }
-    # streaming emits only users who entered the funnel (t1 set)
-    assert {u: v for u, v in latest.items() if v[0] is not None} == batch_out
-    assert batch_out["u1"] == (100, 200, 300)
-    assert batch_out["u2"] == (150, None, None)
-    assert batch_out["u3"] == (60, None, None)
-
-
-def test_funnel_stream_recovers_from_checkpoint(spark, tmp_path):
-    """Stop the stateful funnel query after batch 1 and start a NEW query
-    from the same checkpoint: state (step-time vectors) must survive the
-    restart, so batch 2 continues each user's funnel instead of starting
-    over — the Structured Streaming recovery contract. (Sink is a
-    foreachBatch parquet appender: the memory sink does not support
-    checkpoint recovery.)"""
-    import os
-
-    from kolibrie_spark.streaming.funnel import funnel_stream
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    results = str(tmp_path / "results")
-    steps = ["view", "cart", "buy"]
-    spark.createDataFrame(
-        [("u1", 100, "view"), ("u1", 200, "cart")],
-        "u string, t long, et string",
-    ).write.parquet(src)
-
-    def sink(batch_df, batch_id):
-        batch_df.write.mode("append").parquet(results)
-
-    def start_query():
-        stream = spark.readStream.schema("u string, t long, et string").parquet(src)
-        return (
-            funnel_stream(stream, "u", "t", "et", steps)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-
-    q1 = start_query()
-    q1.processAllAvailable()
-    q1.stop()
-
-    # new process-equivalent: fresh query object, same checkpoint
-    spark.createDataFrame(
-        [("u1", 300, "buy")], "u string, t long, et string"
-    ).write.mode("append").parquet(src)
-    q2 = start_query()
-    q2.processAllAvailable()
-    q2.stop()
-    rows = spark.read.parquet(results).collect()
-    # the restarted query only saw batch 2, but recovered t1/t2 from
-    # state: its final emission shows the COMPLETED funnel
-    emissions = sorted(
-        ((r["t1"], r["t2"], r["t3"]) for r in rows if r["uid"] == "u1"),
-        key=lambda x: sum(v is not None for v in x),
-    )
-    assert emissions[-1] == (100, 200, 300)
 
 
 _TWO_WINDOW_Q = """REGISTER RSTREAM <out> AS SELECT *

@@ -20,7 +20,7 @@ import pandas as pd
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
+    "orders", "lineitem", "events", "documents",
 ]
 
 

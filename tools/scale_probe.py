@@ -9,9 +9,6 @@ within-copy pairs) instead of quadratically (no cross-copy pairs):
 - documents: every token gets a per-copy suffix (a token bijection —
   within-copy Jaccard/shingle structure identical, cross-copy shingle
   overlap zero);
-- embeddings: a per-copy signed coordinate permutation (orthogonal, so
-  within-copy cosines are bit-preserved; cross-copy pairs drop to
-  background level);
 - events: ids/users shift, timestamps keep the 30-day span (10x denser
   stream — the realistic scale-up for windowed gates);
 - fact/dim tables: all FK keys shift consistently per copy; nation and
@@ -34,11 +31,6 @@ COPIES = 10
 SHIFT = 10_000_000
 
 DEFAULT_GATES = [
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "dedup_cluster",
     "graph_pagerank",
     "reasoner_transitive_closure",
     "streaming_istream_replay",
@@ -49,7 +41,6 @@ DEFAULT_GATES = [
 
 def generate() -> None:
     import duckdb
-    import numpy as np
 
     os.makedirs(DST, exist_ok=True)
     done = os.path.join(DST, ".complete")
@@ -78,27 +69,6 @@ def generate() -> None:
         ),
     )
 
-    rng = np.random.RandomState(7)
-    dim = 64
-
-    def perm_select(k: int) -> str:
-        if k == 0:
-            expr = "embedding"
-        else:
-            rs = np.random.RandomState(1000 + k)
-            perm = rs.permutation(dim)
-            sign = rs.choice([-1.0, 1.0], dim)
-            terms = ", ".join(
-                f"{'-' if sign[i] < 0 else ''}embedding[{perm[i] + 1}]"
-                for i in range(dim)
-            )
-            expr = f"list_value({terms})::FLOAT[]"
-        return (
-            f"SELECT vec_id + {k * SHIFT} AS vec_id, {expr} AS embedding, "
-            f"label FROM '{SRC}/embeddings.parquet'"
-        )
-
-    copy_union("embeddings", perm_select)
     copy_union(
         "events",
         lambda k: (
