@@ -9,15 +9,16 @@ micro-batch pipeline over EVENTS_SCHEMA-shaped input
     source → foreachBatch {
         state: window state is a list of PANES, each one eager local
         checkpoint of a micro-batch in the batch's own partitioning (a
-        batch finer than one slide bucket folds into the current bucket's
-        pane); the checkpoint job carries an Observation of the batch's
-        row count, event-time range and per-stream maxima, so the driver
+        batch finer than one bucket folds into the current bucket's pane);
+        the checkpoint job carries an Observation of the batch's row
+        count, event-time range and per-stream maxima, so the driver
         learns the marks without a job, and a pane is read coalesced to
         one partition per ROWS_PER_TASK observed rows;
-        control plane: the latest closed window per spec is driver
-        arithmetic over the panes' per-bucket maxima (default report,
-        width % slide == 0, no watermark), else one fused aggregate over
-        the live panes;
+        control plane: the bucket is the gcd of every width and slide, so
+        every window boundary is a bucket boundary, and each default-report
+        spec's latest closed window is driver arithmetic over the panes'
+        (stream, bucket) maxima, with no job; REPORT-gated specs judge
+        their candidate windows in one aggregate over the pre-batch panes;
         data plane: fired window content = the panes overlapping
         [open, close) under a range filter → the registered group
         compiles to a DataFrame plan; multi-window results join as
@@ -60,11 +61,12 @@ when a watermark is set. The horizon never falls, so a window sees the
 same events it would see in one buffer filtered batch by batch. A pane
 whose newest event is at or below the horizon is dropped and, once no
 held window result or R2S state still reads it, unpersisted. For an
-in-order stream that leaves about ``max(width + slide) / gcd(slides) + 2``
-live panes, whatever the batch size. R2S state is one result set per
-query, unpersisted once the next emission has read it. A sink must
-consume its emission inside the call: the panes and the state under a
-lazily held emission frame can be unpersisted later.
+in-order stream that leaves about
+``max(width + slide) / gcd(widths ∪ slides) + 2`` live panes, whatever the
+batch size. R2S state is one result set per query, unpersisted once the
+next emission has read it. A sink must consume its emission inside the
+call: the panes and the state under a lazily held emission frame can be
+unpersisted later.
 """
 
 from __future__ import annotations
@@ -84,10 +86,10 @@ from kolibrie_spark.streaming.rspql import RSPQLQuery, parse_rspql
 from kolibrie_spark.streaming.s2r import Periodic, ReportStrategy
 
 # Cumulative per-batch phase timers. Keys: pane (the batch's checkpoint
-# job, plus the per-bucket aggregate of a batch that spans several slide
-# buckets), closes (the general path's fused-closes aggregate), eval
-# (window compilation), emit (the R2S diff and the sink). Callers reset
-# them for a per-run reading; each phase costs two perf_counter() calls.
+# job, plus the per-bucket aggregate of a batch that spans several
+# buckets), eval (window compilation), emit (the R2S diff and the sink).
+# Callers reset them for a per-run reading; each phase costs two
+# perf_counter() calls.
 PHASE_SEC: dict[str, float] = {}
 PHASE_N: dict[str, int] = {}
 
@@ -106,19 +108,6 @@ _BUFFER_COLS = [
 ROWS_PER_TASK = 100_000
 
 
-def window_assignments(df: DataFrame, time_col: str, width: int, slide: int) -> DataFrame:
-    """Explode each event into every sliding window [open, open+width) that
-    covers it — pure column math (the F.window trick on integer seconds)."""
-    n = -(-width // slide)
-    t = F.col(time_col)
-    base = (t - (t % F.lit(slide))).cast("long")
-    opens = F.array(*[base - F.lit(i * slide) for i in range(n)])
-    valid = F.filter(opens, lambda o: (o >= 0) & (t >= o) & (t < o + F.lit(width)))
-    return df.withColumn("window_open", F.explode(valid)).withColumn(
-        "window_close", F.col("window_open") + F.lit(width)
-    )
-
-
 def _unpersist(checkpoint: DataFrame) -> None:
     """Free a local checkpoint's blocks: they belong to the RDD under its
     LogicalRDD, and DataFrame.unpersist only touches the SQL cache."""
@@ -129,9 +118,9 @@ def _unpersist(checkpoint: DataFrame) -> None:
 class _Pane:
     """One eager local checkpoint of window state, ``ckpt``, read as
     ``df``: the checkpoint coalesced by its observed row count.
-    ``lo``/``hi`` bound its event times; ``occ`` maps (stream, gcd
-    bucket) to the newest event time there, with stream None standing for
-    any stream — kept on the fast control plane only."""
+    ``lo``/``hi`` bound its event times; ``occ`` maps (stream, bucket) to
+    the newest event time there, with stream None standing for any
+    stream."""
 
     ckpt: DataFrame
     df: DataFrame
@@ -177,28 +166,11 @@ class StructuredRSP:
         self._fired_until: dict[str, int] = {}
         ws = self.query.windows
         # streams named by fixed-stream windows: the only per-stream marks
-        # anything reads (_hwm_for, the fast path's occupancy)
+        # anything reads (_hwm_for, the panes' occupancy)
         self._streams = sorted({w.stream for w in ws if w.stream is not None})
-        # Fast control plane: when every window is default-report with
-        # width % slide == 0 and no watermark is set, the latest closed
-        # window per spec is driver arithmetic over the panes' occupied
-        # (stream, gcd-bucket) maxima (see _fast_closes for the exactness
-        # argument); a pathological gcd that would explode the bucket
-        # count falls back to the general path's fused aggregate.
-        self._gcd = math.gcd(*[w.slide for w in ws]) if ws else 0
-        default_report = all(
-            not (list(getattr(w, "report", None) or []))
-            or list(w.report) == [ReportStrategy.ON_WINDOW_CLOSE]
-            for w in ws
-        )
-        self._fast = (
-            bool(ws)
-            and self.watermark is None
-            and default_report
-            and all(w.width % w.slide == 0 for w in ws)
-            and self._gcd > 0
-            and max((w.width + w.slide) // self._gcd for w in ws) <= 4096
-        )
+        # The bucket divides every width and slide, so every window
+        # boundary is a bucket boundary (see _closes)
+        self._gcd = math.gcd(*[x for w in ws for x in (w.width, w.slide)])
         # window state: live panes in arrival order, the read horizon, the
         # panes dropped from state but maybe still read by a held frame,
         # and the panes each held frame reads (a window result by IRI, the
@@ -284,12 +256,12 @@ class StructuredRSP:
         The checkpoint keeps the batch's own partitioning, so the source
         scan runs as wide as it did before; only the pane's reads are
         coalesced, by the row count observed in this job. The batch folds
-        into the latest pane when that pane holds only the current slide
-        bucket and the last batch's advance of the hwm says this one stays
-        inside it; a wrong guess only makes a pane span two buckets. On
-        the fast path a pane records its per-(stream, bucket) maxima: pure
-        arithmetic when the batch lies in one gcd bucket, else one small
-        aggregate over this pane's checkpoint."""
+        into the latest pane when that pane holds only the current bucket
+        and the last batch's advance of the hwm says this one stays
+        inside it; a wrong guess only makes a pane span two buckets. A
+        pane records its per-(stream, bucket) maxima: pure arithmetic when
+        the batch lies in one bucket, else one small aggregate over this
+        pane's checkpoint."""
         g = self._gcd
         last = self._panes[-1] if self._panes else None
         cur = self.hwm - self.hwm % g
@@ -319,15 +291,13 @@ class StructuredRSP:
         if fold:
             n, lo, hi = last.rows + n, min(last.lo, lo), max(last.hi, hi)
         df = ckpt.coalesce(-(-n // ROWS_PER_TASK))
-        occ: dict[tuple, int] = {}
-        if self._fast:
-            b = m["lo"] - m["lo"] % g
-            if m["hi"] < b + g:
-                occ = {(None, b): m["hi"]} | {(s, b): v for s, v in smax.items()}
-                if fold:
-                    occ = last.occ | {k: max(v, last.occ.get(k, v)) for k, v in occ.items()}
-            else:
-                occ = self._bucket_maxima(df)
+        b = m["lo"] - m["lo"] % g
+        if m["hi"] < b + g:
+            occ = {(None, b): m["hi"]} | {(s, b): v for s, v in smax.items()}
+            if fold:
+                occ = last.occ | {k: max(v, last.occ.get(k, v)) for k, v in occ.items()}
+        else:
+            occ = self._bucket_maxima(df)
         _phase("pane", _t0)
         pane = _Pane(ckpt, df, n, lo, hi, occ)
         if fold:
@@ -338,7 +308,7 @@ class StructuredRSP:
         return m["hi"], smax
 
     def _bucket_maxima(self, df: DataFrame) -> dict[tuple, int]:
-        """(stream or None, gcd bucket) -> max event time over one pane."""
+        """(stream or None, bucket) -> max event time over one pane."""
         t = F.col("event_time")
         bucket = (t - F.pmod(t, F.lit(self._gcd))).cast("long")
         rows = (
@@ -394,10 +364,7 @@ class StructuredRSP:
         self._evict()
 
         pre_flush = self._timeout_preflush()
-        if self._fast:
-            fired = self._fast_closes()
-        else:
-            fired = self._general_closes(prev_hwm, pre_panes, pre_horizon)
+        fired = self._closes(prev_hwm, pre_panes, pre_horizon)
         out = pre_flush + self._advance(fired, {w.iri for w in self.query.windows})
         self._release()
         return out
@@ -410,22 +377,25 @@ class StructuredRSP:
         self._last_window_results[w.iri] = self._eval_window(w, content)
         self._held[w.iri] = set(_overlapping(self._panes, open_, close))
 
-    def _fast_closes(self) -> set:
-        """The latest closed window per spec from the panes' occupancy,
-        with no Spark job.
+    def _closes(
+        self, prev_hwm: int, pre_panes: list[_Pane], pre_horizon: int | None
+    ) -> set:
+        """Fire every spec whose latest closed window moved: default-report
+        specs from the panes' occupancy, with no Spark job; report-gated
+        specs judge their candidates on the pre-batch panes.
 
-        Exactness vs the general path's fused aggregate (derivation in
-        OPTIMIZATION_r13.md): with width a multiple of slide, every event
-        of slide-bucket b witnesses exactly the closes {max(width, b+slide)
-        .. b+width}, so the bucket's best fireable close under mark H is
-        c = min(b+width, P) with P = (H//slide)*slide, valid when
-        c >= max(width, b+slide) — and all events of one bucket fall on
-        the same side of P, so the bucket-level max equals the event-level
-        max. A gcd bucket lies inside one slide bucket of every window, so
-        it can stand in for b. A (stream, bucket) is occupied iff its
-        newest event in some live pane is above the horizon — exactly when
-        the horizon-filtered state still holds one of its events, the
-        state the general path aggregates."""
+        For an event t under governing mark H, the largest fireable close
+        is arithmetic: the largest open o ≡ 0 (mod slide) with
+        o <= lim = min(t, H - width) is o = lim - lim mod slide, and a
+        smaller multiple of slide covers t only if o does, so t's close
+        is o + width when lim >= 0 and o > t - width, else none.
+        The bucket divides width and slide, so a bucket [b, b + bucket)
+        lies inside one slide bucket, o is the same for each of its
+        events, and o > t - width holds for all of them or none: the rule
+        applied to b gives every event's value. A (stream, bucket) is
+        occupied iff its newest event in some live pane is above the
+        horizon, i.e. iff the horizon-filtered state still holds one of
+        its events."""
         occupied: dict[str | None, set[int]] = {}
         for p in self._panes:
             for (s, b), mx in p.occ.items():
@@ -433,59 +403,6 @@ class StructuredRSP:
                     occupied.setdefault(s, set()).add(b)
         fired: set[str] = set()
         for w in self.query.windows:
-            H = self._hwm_for(w)
-            if H < w.width:
-                continue
-            P = (H // w.slide) * w.slide
-            best = None
-            for b in occupied.get(w.stream, ()):
-                bj = b - (b % w.slide)
-                c = min(bj + w.width, P)
-                if c >= max(w.width, bj + w.slide) and (best is None or c > best):
-                    best = c
-            if best is None or best <= self._fired_until.get(w.iri, -1):
-                continue
-            self._fire(w, best)
-            fired.add(w.iri)
-        return fired
-
-    def _general_closes(
-        self, prev_hwm: int, pre_panes: list[_Pane], pre_horizon: int | None
-    ) -> set:
-        """Watermark, REPORT and width % slide != 0 registrations: one
-        fused aggregate over the live panes gives every default-report
-        spec's latest closed window; report-gated specs judge their
-        candidates on the pre-batch panes."""
-        # For an event t under governing hwm H, its largest fireable close
-        # is pure arithmetic: the largest open o ≡ 0 (mod slide) with
-        # o <= min(t, H - width) is o* = lim - (lim mod slide); any
-        # smaller slide-multiple is < t - width whenever o* is, so the
-        # event's candidate is o* + width when o* still covers t
-        # (o* > t - width) and lim >= 0, else nothing.  max over events
-        # == max(window_close) of the exploded assignment filtered to
-        # close <= H — the same value, no explode, one job for all
-        # windows.
-        fused_aggs = []
-        for j, w in enumerate(self.query.windows):
-            strategies = list(getattr(w, "report", None) or [])
-            if strategies and strategies != [ReportStrategy.ON_WINDOW_CLOSE]:
-                continue
-            t = F.col("event_time")
-            lim = F.least(t, F.lit(self._hwm_for(w) - w.width))
-            o_cand = lim - F.pmod(lim, F.lit(w.slide))
-            c = F.when(
-                (lim >= 0) & (o_cand > t - F.lit(w.width)),
-                o_cand + F.lit(w.width),
-            )
-            if w.stream is not None:
-                c = F.when(F.col("stream") == w.stream, c)
-            fused_aggs.append(F.max(c).alias(f"__c{j}"))
-        _t0 = perf_counter()
-        fused_closes = self.buffer.agg(*fused_aggs).first() if fused_aggs else None
-        _phase("closes", _t0)
-
-        fired: set[str] = set()
-        for j, w in enumerate(self.query.windows):
             strategies = list(getattr(w, "report", None) or [])
             if strategies and strategies != [ReportStrategy.ON_WINDOW_CLOSE]:
                 # non-default REPORT clause: the event-at-a-time report
@@ -504,12 +421,18 @@ class StructuredRSP:
                 self._held[w.iri] = set(_overlapping(pre_panes, open_, close))
                 fired.add(w.iri)
                 continue
-            # latest window of this spec closed under the governing hwm
+            # latest window of this spec closed under the governing mark
             # (this stream's own, under per_stream_hwm)
-            close_v = fused_closes[f"__c{j}"] if fused_closes is not None else None
-            if close_v is None or close_v <= self._fired_until.get(w.iri, -1):
+            H = self._hwm_for(w)
+            best = -1
+            for b in occupied.get(w.stream, ()):
+                lim = min(b, H - w.width)
+                o = lim - lim % w.slide
+                if lim >= 0 and o > b - w.width:
+                    best = max(best, o + w.width)
+            if best <= self._fired_until.get(w.iri, -1):
                 continue
-            self._fire(w, int(close_v))
+            self._fire(w, best)
             fired.add(w.iri)
         return fired
 

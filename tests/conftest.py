@@ -20,7 +20,7 @@ _SLOW_TESTS = {
     "test_no_cartesian_products_in_gate_plans",
     # faithful-engine parity + coordination sweeps (structured streaming
     # keeps the scripted-timeline, r2s, live-gate-vs-replay,
-    # fast-vs-general differential and per-stream-hwm faithful-engine
+    # control-plane-vs-window-oracle and per-stream-hwm faithful-engine
     # parity pins in the default lane)
     "test_live_two_window_sync_matches_faithful_engine",
     "test_structured_timeout_matches_faithful_engine_event_clock",

@@ -247,8 +247,6 @@ def test_session3_operators_on_empty_input(spark):
 
 def test_earlier_curation_operators_on_empty_input(spark):
     """Round-3 session-1/2 operators under an empty corpus."""
-    from pyspark.sql import functions as F
-
     from kolibrie_spark.operators.packing import pack_sequences
     from kolibrie_spark.operators.scrub import scrub_pii
     from kolibrie_spark.operators.search import bm25_topk, top_terms

@@ -2,7 +2,6 @@
 unicode normalization, cross-engine hashing, winsorizing."""
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 

@@ -41,8 +41,6 @@ def test_quality_score_monotone(spark):
 
 
 def test_salted_join_equals_plain_join(spark):
-    from pyspark.sql import functions as F
-
     from kolibrie_spark.operators.skew import salted_join, top_heavy_keys
 
     left = spark.createDataFrame(

@@ -2,7 +2,6 @@
 conservation, idempotency, and bound invariants under randomized
 inputs — properties a fixed fixture can miss."""
 
-import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 SLOW = settings(

@@ -2,7 +2,6 @@
 operator, plus hypothesis property tests for the invariants a fixture
 can miss (interval-merge coverage)."""
 
-import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 SLOW = settings(
@@ -13,8 +12,6 @@ SLOW = settings(
 
 
 def test_empty_inputs_session4(spark):
-    from pyspark.sql import functions as F
-
     from kolibrie_spark.operators.analytics import path_ngrams
     from kolibrie_spark.operators.graph import triangle_count
     from kolibrie_spark.operators.profiling import mad_outliers, winsorize

@@ -28,19 +28,6 @@ def events_df(spark, rows):
     )
 
 
-def test_window_assignments(spark):
-    from kolibrie_spark.streaming.structured import window_assignments
-
-    df = spark.createDataFrame([("a", 5)], "s string, event_time long")
-    out = window_assignments(df, "event_time", 10, 2).select(
-        "window_open", "window_close"
-    )
-    got = sorted((r.window_open, r.window_close) for r in out.collect())
-    # event at t=5 belongs to windows opening at 0,2,4 (width 10, slide 2,
-    # non-negative opens, open <= 5 < open+10)
-    assert got == [(0, 10), (2, 12), (4, 14)]
-
-
 def test_rstream_micro_batches(spark):
     from kolibrie_spark.streaming.structured import compile_structured
 
@@ -258,8 +245,6 @@ def test_sink_mode_no_driver_materialization(spark, tmp_path):
 def test_start_foreachbatch_with_sink(spark, tmp_path):
     """start() drives process_batch through a real foreachBatch stream; in
     sink mode the results land in the results table only."""
-    import time
-
     from kolibrie_spark.streaming.structured import compile_structured, parquet_sink
 
     src_dir, ckpt, results = (
@@ -469,7 +454,6 @@ def test_live_two_window_sync_matches_faithful_engine(spark, tmp_path):
     emissions on the same timeline; and the Wait-vs-Steal emission
     difference is the stale-reuse firings."""
     import os
-    import time
 
     from kolibrie_spark.streaming.engine import RSPEngine
     from kolibrie_spark.streaming.structured import compile_structured
@@ -755,16 +739,96 @@ def test_per_stream_hwm_holds_stalled_stream_window(spark):
     assert sorted(map(tuple, out_global)) != faithful
 
 
-def test_fast_control_plane_matches_general_path(spark):
-    """r13 differential pin: the one-job fast control plane (driver-side
-    occupied-bucket close arithmetic + lazy-horizon checkpoint) must
-    reproduce the general path's emissions AND firing trace exactly —
-    including high-water-mark jumps larger than width+slide (where
-    eviction can silently retire a never-fired window) and empty
-    micro-batches."""
-    import random
+def _chop(rows, width):
+    """``rows`` cut into event-time batches of ``width`` seconds from the
+    first event on, as run_events_df cuts them (empty batches included)."""
+    lo, hi = min(r[4] for r in rows), max(r[4] for r in rows)
+    return [[r for r in rows if s <= r[4] < s + width] for s in range(lo, hi + 1, width)]
 
+
+def _window_oracle(windows, batches, watermark=None, per_stream_hwm=False):
+    """Batch-granularity model of the control plane, by window
+    enumeration. After each non-empty batch the horizon is recomputed
+    from the marks (the slowest window's ``mark - (width + slide)``,
+    raised to ``hwm - watermark``), and each default-report window's
+    latest close is the largest ``o + width <= mark`` over windows
+    ``[o, o + width)``, ``o`` a non-negative multiple of slide, holding an
+    event of its stream above the horizon; a close only moves forward.
+    Yields per batch the closes so far and the events above the
+    horizon."""
+    seen, hwm, stream_hwm, fired, visible = [], -1, {}, {}, []
+    for batch in batches:
+        if not batch:  # an empty batch leaves the state as it was
+            yield dict(fired), visible
+            continue
+        seen += batch
+        for r in batch:
+            hwm = max(hwm, r[4])
+            stream_hwm[r[3]] = max(stream_hwm.get(r[3], -1), r[4])
+
+        def mark(w):
+            return stream_hwm.get(w.stream, -1) if per_stream_hwm and w.stream else hwm
+
+        horizon = min(mark(w) - (w.width + w.slide) for w in windows)
+        if watermark is not None:
+            horizon = max(horizon, hwm - watermark)
+        visible = [r for r in seen if r[4] > horizon]
+        for w in windows:
+            closes = [
+                o + w.width
+                for (_s, _p, _o, st, t) in visible
+                if w.stream in (None, st)
+                for o in range(t - t % w.slide, max(t - w.width, -1), -w.slide)
+                if o + w.width <= mark(w)
+            ]
+            if closes and max(closes) > fired.get(w.iri, -1):
+                fired[w.iri] = max(closes)
+        yield dict(fired), visible
+
+
+def _run_against_oracle(
+    spark, qtext, batches, policy=("WAIT",), watermark=None, per_stream_hwm=False
+):
+    """Drive ``batches`` through one registration and assert after every
+    batch that its firing trace (``_fired_until``) equals the window
+    oracle's. For a single-window ISTREAM registration also assert every
+    emission against a Python window model: the fired window's (u, t)
+    pairs above the horizon minus the previous fired window's. Returns
+    the emissions per batch, the most panes held at once and the last
+    closes."""
     from kolibrie_spark.streaming.structured import compile_structured
+
+    q = compile_structured(
+        spark, qtext, sync_policy=policy, watermark=watermark, per_stream_hwm=per_stream_hwm
+    )
+    windows = q.query.windows
+    model = len(windows) == 1 and q.query.operator == "ISTREAM"
+    outs, panes, last, prev = [], 0, {}, set()
+    oracle = _window_oracle(windows, batches, watermark, per_stream_hwm)
+    for i, (batch, (fired, visible)) in enumerate(zip(batches, oracle)):
+        out = q.process_batch(events_df(spark, batch))
+        assert q._fired_until == fired, (i, q._fired_until, fired)
+        outs.append(out)
+        panes = max(panes, len(q._panes))
+        if model:
+            got = sorted((dict(r)["u"], dict(r)["t"]) for r in out)
+            if fired == last:
+                assert got == [], i
+            else:
+                (w,) = windows
+                close = fired[w.iri]
+                cur = {(u, o) for (u, _p, o, _st, t) in visible if close - w.width <= t < close}
+                assert got == sorted(cur - prev), i
+                prev = cur
+        last = fired
+    return outs, panes, last
+
+
+def test_control_plane_matches_window_oracle(spark):
+    """Every batch's firing trace equals the window oracle's, including
+    high-water-mark jumps larger than width + slide (where eviction
+    retires a never-fired window) and empty micro-batches."""
+    import random
 
     queries = [
         # sliding, STEP < RANGE
@@ -787,36 +851,16 @@ def test_fast_control_plane_matches_general_path(spark):
     for qtext, policy in queries:
         t, rows = 0, []
         for i in range(14):
-            # one guaranteed gap > width+slide (the eviction-retires-window
-            # edge where the buffer aggregate would see nothing) plus
-            # random small steps; i==7 pins the jump so the edge is
-            # exercised every run
+            # i == 7 pins one gap > width + slide every run
             t += 40 if i == 7 else rng.choice([1, 2, 3, 5])
-            rows.append(
-                (
-                    f"u{rng.randint(0, 4)}",
-                    "t",
-                    f"x{rng.randint(0, 2)}",
-                    "ev",
-                    t,
-                )
-            )
-        df = events_df(spark, rows)
-        got = []
-        for fast in (True, False):
-            q = compile_structured(spark, qtext, sync_policy=policy)
-            q._fast = fast
-            res = q.run_events_df(df, batch_seconds=10)
-            got.append((res, dict(q._fired_until)))
-        assert got[0] == got[1], f"fast!=general for {qtext}"
+            rows.append((f"u{rng.randint(0, 4)}", "t", f"x{rng.randint(0, 2)}", "ev", t))
+        outs, _, _ = _run_against_oracle(spark, qtext, _chop(rows, 10), policy)
+        assert any(outs), qtext
 
 
-def test_fast_control_plane_per_stream_hwm_parity(spark):
-    """Same differential under per_stream_hwm=True with one stalled
-    stream: the fast path's per-(stream,bucket) marks must hold a stalled
-    stream's window exactly like the general path."""
-    from kolibrie_spark.streaming.structured import compile_structured
-
+def test_control_plane_per_stream_hwm_matches_window_oracle(spark):
+    """Under per_stream_hwm=True a stalled stream's window holds on its
+    own stream's mark, batch by batch as the oracle says."""
     qtext = (
         "REGISTER RSTREAM <out> AS SELECT * "
         "FROM NAMED WINDOW :w1 ON :a [RANGE 10 STEP 10] "
@@ -830,40 +874,16 @@ def test_fast_control_plane_per_stream_hwm_parity(spark):
         ("u1", "t", "x", "a", 23),
         ("u1", "t", "x", "b", 24),
     ]
-    df = events_df(spark, rows)
-    got = []
-    for fast in (True, False):
-        q = compile_structured(
-            spark, qtext, sync_policy=("STEAL",), per_stream_hwm=True
-        )
-        q._fast = fast
-        res = q.run_events_df(df, batch_seconds=5)
-        got.append((res, dict(q._fired_until)))
-    assert got[0] == got[1]
+    _, _, fired = _run_against_oracle(
+        spark, qtext, _chop(rows, 5), ("STEAL",), per_stream_hwm=True
+    )
+    assert len(fired) == 1  # w1 fired; w2 held on its stalled stream
 
 
-def _fast_vs_general(spark, qtext, batches, policy=("WAIT",)):
-    """Per-batch emissions (sorted: row order within one emission is not
-    fixed) and the firing trace of the fast and the general control plane
-    on the same micro-batches, plus the most panes either run held."""
-    from kolibrie_spark.streaming.structured import compile_structured
-
-    got, panes = [], 0
-    for fast in (True, False):
-        q = compile_structured(spark, qtext, sync_policy=policy)
-        q._fast = fast
-        out = []
-        for batch in batches:
-            out.append(sorted(map(tuple, q.process_batch(events_df(spark, batch)))))
-            panes = max(panes, len(q._panes))
-        got.append((out, dict(q._fired_until)))
-    return got, panes
-
-
-def test_fast_control_plane_parity_multi_bucket_batches(spark):
-    """A batch that spans several slide buckets gets its per-bucket
-    maxima from one aggregate over its own pane; the firing trace and
-    the emissions must still equal the general path's."""
+def test_control_plane_multi_bucket_batches_match_window_oracle(spark):
+    """A batch that spans several buckets gets its per-bucket maxima
+    from one aggregate over its own pane; the firing trace still equals
+    the oracle's."""
     import random
 
     rng = random.Random(11)
@@ -871,24 +891,22 @@ def test_fast_control_plane_parity_multi_bucket_batches(spark):
     for i in range(30):
         t += 45 if i == 15 else rng.choice([1, 2, 4])
         rows.append((f"u{rng.randint(0, 4)}", "t", f"x{rng.randint(0, 2)}", "ev", t))
-    batches = [[r for r in rows if lo <= r[4] < lo + 17] for lo in range(0, t + 1, 17)]
     qtext = (
         "REGISTER ISTREAM <out> AS SELECT * "
         "FROM NAMED WINDOW :w1 ON :ev [RANGE 20 STEP 5] "
         "FROM NAMED WINDOW :w2 ON :ev [RANGE 30 STEP 10] "
         "WHERE { WINDOW :w1 { ?u <t> ?t } WINDOW :w2 { ?u <t> ?x } }"
     )
-    got, _ = _fast_vs_general(spark, qtext, batches, ("STEAL",))
-    assert got[0] == got[1]
-    assert any(got[0][0])  # something was emitted
+    outs, _, _ = _run_against_oracle(spark, qtext, _chop(rows, 17), ("STEAL",))
+    assert any(outs)  # something was emitted
 
 
-def test_fast_control_plane_parity_folded_panes(spark):
-    """Batches finer than one slide fold into the current bucket's pane
-    (including a wrong guess at a bucket edge); the fast path must still
-    match the general path — also across a jump past width + slide — and
-    the pane count stays bounded by the window span, not the batch
-    count."""
+def test_control_plane_folded_panes_match_window_oracle(spark):
+    """Batches finer than one bucket fold into the current bucket's pane
+    (including a wrong guess at a bucket edge); firings and emissions
+    still match the oracle and the window model, also across a jump past
+    width + slide, and the pane count stays bounded by the window span,
+    not the batch count."""
     times = [0, 1, 2, 3, 4, 5, 7, 8, 10, 30, 31, 33, 34]
     batches = [[(f"u{t % 4}", "t", f"x{t % 3}", "ev", t)] for t in times]
     qtext = (
@@ -896,10 +914,110 @@ def test_fast_control_plane_parity_folded_panes(spark):
         "FROM NAMED WINDOW :w ON :ev [RANGE 6 STEP 3] "
         "WHERE { WINDOW :w { ?u <t> ?t } }"
     )
-    got, panes = _fast_vs_general(spark, qtext, batches)
-    assert got[0] == got[1]
-    assert any(got[0][0])
+    outs, panes, _ = _run_against_oracle(spark, qtext, batches)
+    assert any(outs)
     assert panes <= (6 + 3) // 3 + 2 < len(times)
+
+
+def test_coprime_range_and_step_match_window_oracle(spark):
+    """RANGE 7 STEP 5: the bucket is gcd(7, 5) = 1 s, so batches of
+    several seconds span several buckets and single-second batches fold.
+    Firings and emissions match the oracle and the window model."""
+    import random
+
+    rng = random.Random(5)
+    rows, t = [], 0
+    for i in range(40):
+        t += 30 if i == 20 else rng.choice([0, 1, 1, 2, 3])
+        rows.append((f"u{rng.randint(0, 5)}", "t", f"x{rng.randint(0, 2)}", "ev", t))
+    batches = _chop(rows[:20], 4) + [[r] for r in rows[20:]]
+    qtext = (
+        "REGISTER ISTREAM <out> AS SELECT * "
+        "FROM NAMED WINDOW :w ON :ev [RANGE 7 STEP 5] "
+        "WHERE { WINDOW :w { ?u <t> ?t } }"
+    )
+    outs, _, _ = _run_against_oracle(spark, qtext, batches)
+    assert sum(map(bool, outs)) >= 5
+
+
+def test_two_unaligned_windows_match_window_oracle(spark):
+    """RANGE 10 STEP 4 on one stream and RANGE 6 STEP 6 on another: the
+    bucket is gcd(10, 4, 6) = 2 s, and each window fires on its own
+    stream's buckets."""
+    import random
+
+    rng = random.Random(13)
+    rows, t = [], 0
+    for i in range(36):
+        t += rng.choice([0, 1, 2, 3])
+        rows.append((f"u{rng.randint(0, 3)}", "t", f"x{rng.randint(0, 2)}", rng.choice("ab"), t))
+    qtext = (
+        "REGISTER RSTREAM <out> AS SELECT * "
+        "FROM NAMED WINDOW :w1 ON :a [RANGE 10 STEP 4] "
+        "FROM NAMED WINDOW :w2 ON :b [RANGE 6 STEP 6] "
+        "WHERE { WINDOW :w1 { ?u <t> ?t } WINDOW :w2 { ?v <t> ?t } }"
+    )
+    outs, _, _ = _run_against_oracle(spark, qtext, _chop(rows, 3), ("STEAL",))
+    assert any(outs)
+
+
+def test_watermark_with_late_events_matches_window_oracle(spark):
+    """A watermark only raises the read horizon to ``hwm - watermark``:
+    late events above it join the next fired window, older ones are
+    dropped, and no fired window fires again."""
+    import random
+
+    rng = random.Random(17)
+    batches, hwm = [], 0
+    for _ in range(24):
+        hwm += rng.choice([1, 2, 3, 4])
+        batch = [(f"u{rng.randint(0, 5)}", "t", f"x{rng.randint(0, 2)}", "ev", hwm)]
+        for _ in range(rng.randint(0, 2)):  # late: up to 12 s behind the mark
+            batch.append((f"u{rng.randint(0, 5)}", "t", "late", "ev", max(0, hwm - rng.randint(1, 12))))
+        batches.append(batch)
+    qtext = (
+        "REGISTER ISTREAM <out> AS SELECT * "
+        "FROM NAMED WINDOW :w ON :ev [RANGE 10 STEP 5] "
+        "WHERE { WINDOW :w { ?u <t> ?t } }"
+    )
+    outs, _, _ = _run_against_oracle(spark, qtext, batches, watermark=8)
+    assert any(("t", "late") in row for out in outs for row in out)
+
+
+def test_closes_run_no_spark_job(spark):
+    """A watermark registration and a RANGE 10 STEP 4 one, fed batches
+    that each lie in one bucket and fire no window: each process_batch
+    runs exactly one job, the pane checkpoint."""
+    import time
+
+    from kolibrie_spark.streaming.structured import compile_structured
+
+    sc = spark.sparkContext
+    cases = [
+        ("RANGE 10 STEP 5", {"watermark": 3}, [[0, 1], [2], [5, 6], [8]]),
+        ("RANGE 10 STEP 4", {}, [[0, 1], [2], [4, 5], [6], [8, 9]]),
+    ]
+    for window, kw, times in cases:
+        q = compile_structured(
+            spark,
+            "REGISTER RSTREAM <out> AS SELECT * "
+            f"FROM NAMED WINDOW :w ON :ev [{window}] "
+            "WHERE { WINDOW :w { ?u <t> ?t } }",
+            **kw,
+        )
+        frames = [events_df(spark, [(f"u{t}", "t", "x", "ev", t) for t in ts]) for ts in times]
+        groups = []
+        for i, df in enumerate(frames):
+            groups.append(f"closes-{window}-{i}")
+            sc.setJobGroup(groups[-1], "one batch")
+            try:
+                assert q.process_batch(df) == []
+            finally:
+                sc.setJobGroup("idle", "idle")
+        assert q._fired_until == {}
+        time.sleep(0.5)  # job events reach the status store asynchronously
+        jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
+        assert jobs == [1] * len(frames), (window, jobs)
 
 
 def test_pane_state_is_bounded_over_60_aligned_batches(spark):

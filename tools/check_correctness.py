@@ -3,6 +3,8 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB at sf0.01 (override with --sf-dir), compares row count, column names,
 and order-insensitive values (columns sorted by name, then rows sorted).
+Spark runs on local[cpu_count] with as many shuffle partitions, unless
+SPARK_GRAFT_CPUS says otherwise.
 
 Usage: python tools/check_correctness.py [names...]
 """
@@ -41,10 +43,11 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("check_correctness")
-        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.shuffle.partitions", str(int(cpus)))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "8g")
         .getOrCreate()

@@ -2,8 +2,8 @@
 
 Runs the named live gates once each in one JVM (local[cpu_count] unless
 SPARK_GRAFT_CPUS says otherwise) and prints, per gate: total wall
-seconds, the StructuredRSP phase split (``PHASE_SEC``: pane / closes /
-eval / emit, cumulative across batches with call counts), and the
+seconds, the StructuredRSP phase split (``PHASE_SEC``: pane / eval /
+emit, cumulative across batches with call counts), and the
 residual (setup chunk-write + streaming-engine machinery + final parquet
 read).
 

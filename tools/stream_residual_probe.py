@@ -1,7 +1,7 @@
 """Break down the live-gate residual: chunk-write setup vs stream drain
 vs per-trigger machinery (r13, guide §1). Monkeypatches the entry module's
 _write_stream_chunks and _drain_live to time them; the drain's StructuredRSP
-share is the ``PHASE_SEC`` split (pane / closes / eval / emit). Runs on
+share is the ``PHASE_SEC`` split (pane / eval / emit). Runs on
 local[cpu_count] unless SPARK_GRAFT_CPUS says otherwise."""
 from __future__ import annotations
 
