@@ -17,31 +17,14 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--distributed",
         action="store_true",
-        help="load through the chunk-parallel bulk readers "
-        "(QuadStore.load_distributed) instead of the driver-side parse — "
-        "the path for dump-scale files (VERDICT r10 task #7; the "
-        "reference CLI loads any size synchronously, cli/src/main.rs:25-39)",
+        help="load through the distributed readers "
+        "(QuadStore.load_distributed: a line parse for N-Triples/N-Quads, "
+        "a per-file chunk scan for Turtle/N3/RDF-XML) instead of the "
+        "driver-side parse; the reference CLI loads any size "
+        "synchronously (cli/src/main.rs:25-39)",
     )
     ap.add_argument("--query", default=None, help="SPARQL SELECT to run")
     ap.add_argument("--update", default=None, help="SPARQL Update to apply")
-    ap.add_argument(
-        "--export-zst",
-        default=None,
-        metavar="DIR",
-        help="after loading/updating, dump the store as splittable "
-        "multi-frame part-*.zst files under DIR "
-        "(QuadStore.export_zst; re-loadable in-file-parallel)",
-    )
-    ap.add_argument(
-        "--export-format",
-        default="ntriples",
-        help="export serialization: ntriples (default) or nquads",
-    )
-    ap.add_argument(
-        "--export-codec",
-        default="zst",
-        help="export frame codec: zst (default) or lz4",
-    )
     ap.add_argument("--explain", action="store_true", help="print the physical plan")
     ap.add_argument("--master", default="local[*]")
     ap.add_argument(
@@ -85,13 +68,6 @@ def main(argv: list[str] | None = None) -> int:
     if args.update:
         engine.update(args.update)
         print(f"update applied; store now holds {engine.triple_count()} quads")
-    if args.export_zst:
-        manifest = engine.store.export_zst(
-            args.export_zst, fmt=args.export_format, codec=args.export_codec
-        )
-        total = sum(m["rows"] for m in manifest)
-        print(f"exported {total} quads to {len(manifest)} file(s) under "
-              f"{args.export_zst}")
     if args.query:
         if args.explain:
             print(engine.explain(args.query))

@@ -93,11 +93,12 @@ class SparqlEngine:
     def load_file(
         self, path: str, fmt: str | None = None, distributed: bool = False
     ) -> None:
-        """``distributed=True`` routes through the chunk-parallel bulk
-        readers (``QuadStore.load_distributed``) — the path for corpora
-        that must never be read on the driver; the default driver-side
-        parse matches the reference's synchronous ``load`` semantics for
-        small interactive files."""
+        """Load the file(s) ``path`` names; ``fmt`` defaults to the
+        extension.  The default parses on the driver, matching the
+        reference's synchronous ``load`` for small interactive files;
+        ``distributed=True`` routes through ``QuadStore.load_distributed``
+        (one distributed reader per syntax family), so the triples are
+        never collected on the driver."""
         from kolibrie_spark import rdfio
 
         if distributed:

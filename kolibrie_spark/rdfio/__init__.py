@@ -10,16 +10,32 @@ Term model matches the reference's lexical cleaning
 literal datatypes stripped, language tags kept as ``value@lang``, blank
 nodes as ``_:label``, quoted triples interned as ``qt:`` surrogate ids.
 
-Scale path: the line-oriented formats (N-Triples/N-Quads) parse
-embarrassingly parallel — ``read_ntriples_df``/``read_nquads_df`` run the
-same parser inside ``mapPartitions`` over ``spark.read.text``, so a 100 TB
-dump ingests as a map-only job with no driver involvement.
+Two ways in:
+
+- the driver parser (:func:`parse_into`, :func:`load_into`), the
+  reference's synchronous ``load``: text or files parsed on the driver;
+- one distributed reader per syntax family (:func:`read_rdf_tagged_df`,
+  behind ``QuadStore.load_distributed``).  N-Triples/N-Quads read as
+  ``spark.read.text`` plus one ``mapInPandas`` line parse.  Turtle, N3 and
+  RDF/XML read as one task per file streaming it through a windowed
+  statement (or top-level element) chunk scan, with the chunk text
+  repartitioned to the parse tasks, so a plain, ``.gz``, ``.bz2`` or
+  ``.xz`` file of any size parses in bounded memory.  Both emit the
+  TAGGED stream: kind='q' quad rows and kind='t' quoted-triple mapping
+  rows.
+
+Inputs are a file, a directory, a glob or a list of those, listed on the
+driver; the scan tasks open the listed paths, so a cluster needs them
+mounted at the same place on every node.  ``hdfs://``/``s3://`` URIs and
+codecs the readers cannot decompress (``.zst``, ``.lz4``, ``.snappy``)
+raise ``ValueError`` naming the path.
 """
 
+import bz2
 import functools
+import gzip
+import lzma
 import re
-
-from kolibrie_spark.rdfio import framesplit
 
 from kolibrie_spark.rdfio.parsers import (
     _PREFIX_RE,
@@ -52,24 +68,39 @@ FORMAT_ALIASES = {
     "rdf/xml": "rdfxml",
 }
 
+# Turtle/N3 statements, and RDF/XML top-level elements, per parse chunk
+STATEMENTS_PER_CHUNK = 2000
+ELEMENTS_PER_CHUNK = 500
+
+
+def _resolve_format(name: str, source: str | None = None) -> str:
+    """Canonical format for a format name, or for the extension of the
+    file ``source``; ValueError names the input and the accepted names."""
+    fmt = FORMAT_ALIASES.get(name.lower())
+    if fmt is None:
+        what = (
+            f"extension {name!r} of {source!r}" if source is not None
+            else f"format {name!r}"
+        )
+        raise ValueError(
+            f"unknown RDF {what}; accepted: {', '.join(FORMAT_ALIASES)}"
+        )
+    return fmt
+
 
 def _parse(text: str, fmt: str):
-    fmt = FORMAT_ALIASES[fmt.lower()]
+    fmt = _resolve_format(fmt)
     if fmt == "ntriples":
         triples, quoted = parse_ntriples(text)
         return [(s, p, o, None) for (s, p, o) in triples], quoted
     if fmt == "nquads":
         return parse_nquads(text)
-    if fmt == "turtle":
-        triples, quoted, _ = parse_turtle(text)
-        return [(s, p, o, None) for (s, p, o) in triples], quoted
-    if fmt == "n3":
-        triples, quoted, _ = parse_n3(text)
-        return [(s, p, o, None) for (s, p, o) in triples], quoted
     if fmt == "rdfxml":
         triples = parse_rdfxml(text)
         return [(s, p, o, None) for (s, p, o) in triples], []
-    raise ValueError(f"unknown format {fmt!r}")
+    parser = parse_turtle if fmt == "turtle" else parse_n3
+    triples, quoted, _ = parser(text)
+    return [(s, p, o, None) for (s, p, o) in triples], quoted
 
 
 def parse_into(store, text: str, fmt: str = "turtle") -> int:
@@ -82,197 +113,148 @@ def parse_into(store, text: str, fmt: str = "turtle") -> int:
     return len(quads)
 
 
-def load_into(store, path: str, fmt: str | None = None) -> int:
-    """Driver-side synchronous load (the reference's interactive ``load``
-    shape) — small files only; bulk corpora go through
-    ``QuadStore.load_distributed``.  Compressed files decompress through
-    the same codec routing the scan tasks use, and the format comes from
-    the extension UNDER the codec suffix (``d.ttl.gz`` -> turtle)."""
-    if fmt is None:
-        fmt = (
-            infer_format(path)
-            if _COMPRESSED_EXT_RE.search(path)
-            else path.rsplit(".", 1)[-1].lower()
+def load_into(store, path, fmt: str | None = None) -> int:
+    """Driver-side synchronous load of the file(s) ``path`` names (the
+    reference's interactive ``load`` shape) — small files only; bulk
+    corpora go through ``QuadStore.load_distributed``.  Compressed files
+    decompress as the chunk scans do, and each file's format comes from
+    its extension under the codec suffix (``d.ttl.gz`` -> turtle) unless
+    ``fmt`` is given.  Returns the quads parsed."""
+    n = 0
+    for fp in _list_files(path):
+        with _open_maybe_compressed(fp) as f:
+            text = f.read().decode("utf-8")
+        n += parse_into(store, text, fmt=fmt or infer_format(fp))
+    return n
+
+
+# ---------------------------------------------------------------- inputs
+# Codec suffixes.  The chunk scans and the driver parser decompress the
+# stdlib codecs; the Spark text source under the line reader reads .gz
+# and .bz2.  Any other codec is refused by name rather than parsed as
+# raw bytes.
+_CODEC_RE = re.compile(
+    r"\.(gz|bz2|xz|lzma|zst|lz4|snappy|deflate)$", re.IGNORECASE
+)
+_STDLIB_CODECS = {
+    "gz": gzip.open, "bz2": bz2.open, "xz": lzma.open, "lzma": lzma.open
+}
+_TEXT_SOURCE_CODECS = ("gz", "bz2")
+
+
+def _codec(fp: str, readable) -> str | None:
+    """Codec suffix of ``fp`` (None for an uncompressed file); ValueError
+    naming the path and the codec when it is not in ``readable``."""
+    m = _CODEC_RE.search(fp)
+    if m is None:
+        return None
+    codec = m.group(1).lower()
+    if codec not in readable:
+        raise ValueError(
+            f"cannot read {fp!r}: .{codec} is not a codec this reader "
+            f"decompresses (readable: "
+            f"{', '.join('.' + c for c in readable)}); decompress it first"
         )
-    buf = bytearray()
-    with _open_maybe_compressed(path) as f:
-        while True:  # bounded reads: codec readers may not accept read(-1)
-            b = f.read(1 << 20)
-            if not b:
-                break
-            buf.extend(b)
-    return parse_into(store, bytes(buf).decode("utf-8"), fmt=fmt)
+    return codec
 
 
-def _frame_or_text_df(spark, path, schema, batches_from_values):
-    """Shared routing for the ``value``-driven line readers
-    (N-Triples/N-Quads-shaped): plain files parse off the Spark text
-    source; local .zst/.lz4 files take the SINGLE-HOP framesplit plan
-    (:func:`_framesplit_parsed_df`) — both feed the same
-    ``batches_from_values`` parse, so no intermediate line DataFrame
-    crosses the JVM and the two routes cannot drift.  Hadoop has no
-    streaming zstd/lz4 text codec in local mode, and multi-frame dumps
-    split in-file besides."""
+def _open_maybe_compressed(fp: str):
+    """Binary stream of ``fp``'s (decompressed) bytes."""
+    codec = _codec(fp, _STDLIB_CODECS)
+    return open(fp, "rb") if codec is None else _STDLIB_CODECS[codec](fp, "rb")
 
-    def run(batches):
-        for pdf in batches:
-            yield from batches_from_values(pdf["value"])
 
-    parts = []
-    frame_files, rest = _split_frame_files(path)
-    if frame_files:
-        parts.append(
-            _framesplit_parsed_df(
-                spark,
-                frame_files,
-                schema,
-                lambda pairs, task_key: batches_from_values(
-                    v for _, v in pairs
-                ),
-            )
+def _extension(path: str) -> str:
+    """Lower-cased extension of ``path``'s file name under any codec
+    suffix ('' when it has none)."""
+    import os
+
+    name = _CODEC_RE.sub("", os.path.basename(path))
+    return name.rsplit(".", 1)[1].lower() if "." in name else ""
+
+
+def _list_files(path) -> list[str]:
+    """Sorted absolute paths of the files ``path`` names: a file, a
+    directory's files (names starting '.' or '_' skipped, as Spark's
+    file sources skip them), a glob's matches, or a list of those.  An
+    empty directory lists nothing; a URI the driver cannot list, or a
+    path that names nothing, raises ValueError."""
+    import glob
+    import os
+
+    if isinstance(path, (list, tuple)):
+        return sorted(f for p in path for f in _list_files(p))
+    if "://" in path:
+        raise ValueError(
+            f"cannot list {path!r} on the driver: the RDF readers take "
+            f"local or mounted paths, not {path.split('://', 1)[0]}:// URIs"
         )
-    if rest or not frame_files:
-        lines = spark.read.text(rest if frame_files else path)
-        parts.append(lines.mapInPandas(run, schema))
-    df = parts[0]
-    for extra in parts[1:]:
-        df = df.unionByName(extra)
-    return df
-
-
-def _read_lines_arrow_df(spark, path: str, parse_line):
-    """Shared Arrow-batched line reader for N-Triples/N-Quads: the text
-    source's splittable line partitions feed ``mapInPandas`` directly, so
-    parsed quads return to the JVM as Arrow columns instead of pickled
-    rows (the r8 path paid an RDD round-trip + per-row pickle on every
-    triple).  ``parse_line(value) -> iterable of (s, p, o, g)``.
-    Local .zst/.lz4 files take the single-hop framesplit plan
-    (:func:`_framesplit_parsed_df`) with the same parse."""
-    from kolibrie_spark.schema import QUADS_SCHEMA
-
-    def batches_from_values(values):
-        import pandas as pd
-
-        S: list = []
-        P: list = []
-        O: list = []
-        G: list = []
-        for value in values:
-            for s, p, o, g in parse_line(value):
-                S.append(s)
-                P.append(p)
-                O.append(o)
-                G.append(g)
-            if len(S) >= 100_000:
-                yield pd.DataFrame(
-                    {
-                        "s": pd.Series(S, dtype=object),
-                        "p": pd.Series(P, dtype=object),
-                        "o": pd.Series(O, dtype=object),
-                        "g": pd.Series(G, dtype=object),
-                    }
-                )
-                S, P, O, G = [], [], [], []
-        yield pd.DataFrame(
-            {
-                "s": pd.Series(S, dtype=object),
-                "p": pd.Series(P, dtype=object),
-                "o": pd.Series(O, dtype=object),
-                "g": pd.Series(G, dtype=object),
-            }
+    if os.path.isdir(path):
+        return sorted(
+            os.path.abspath(os.path.join(path, f))
+            for f in os.listdir(path)
+            if not f.startswith((".", "_"))
+            and os.path.isfile(os.path.join(path, f))
         )
-
-    return _frame_or_text_df(spark, path, QUADS_SCHEMA, batches_from_values)
-
-
-def read_ntriples_df(spark, path: str):
-    """Distributed N-Triples ingestion: Arrow-batched line parse over the
-    splittable text source (quoted triples resolved per-batch; ids are
-    content-hashed so no cross-partition coordination is needed)."""
-
-    def parse_line(value):
-        triples, _quoted = parse_ntriples(value)
-        return [(s, p, o, None) for s, p, o in triples]
-
-    return _read_lines_arrow_df(spark, path, parse_line)
+    if os.path.isfile(path):
+        return [os.path.abspath(path)]
+    hits = sorted(os.path.abspath(p) for p in glob.glob(path) if os.path.isfile(p))
+    if not hits:
+        raise ValueError(f"no RDF file at {path!r}")
+    return hits
 
 
-def read_nquads_df(spark, path: str):
-    def parse_line(value):
-        quads, _quoted = parse_nquads(value)
-        return quads
-
-    return _read_lines_arrow_df(spark, path, parse_line)
-
-
-def _read_lines_tagged_df(spark, path: str, parse_line):
-    """TAGGED twin of :func:`_read_lines_arrow_df`: ``parse_line(value)
-    -> (quads, quoted)`` and the output stream carries kind='q' quad
-    rows plus kind='t' quoted-triple mapping rows (VERDICT r9 #1 — the
-    plain readers drop the mappings; a bulk load must not)."""
-    from kolibrie_spark.schema import TAGGED_RDF_SCHEMA
-
-    def batches_from_values(values):
-        import pandas as pd
-
-        S: list = []
-        P: list = []
-        O: list = []
-        G: list = []
-        QT: list = []
-        for value in values:
-            quads, quoted = parse_line(value)
-            for s, p, o, g in quads:
-                S.append(s)
-                P.append(p)
-                O.append(o)
-                G.append(g)
-            QT.extend(quoted)
-            if len(S) + len(QT) >= 100_000:
-                yield pd.DataFrame(
-                    {
-                        "kind": pd.Series(
-                            ["q"] * len(S) + ["t"] * len(QT), dtype=object
-                        ),
-                        "t1": pd.Series(S + [q[0] for q in QT], dtype=object),
-                        "t2": pd.Series(P + [q[1] for q in QT], dtype=object),
-                        "t3": pd.Series(O + [q[2] for q in QT], dtype=object),
-                        "t4": pd.Series(G + [q[3] for q in QT], dtype=object),
-                    }
-                )
-                S, P, O, G, QT = [], [], [], [], []
-        yield pd.DataFrame(
-            {
-                "kind": pd.Series(
-                    ["q"] * len(S) + ["t"] * len(QT), dtype=object
-                ),
-                "t1": pd.Series(S + [q[0] for q in QT], dtype=object),
-                "t2": pd.Series(P + [q[1] for q in QT], dtype=object),
-                "t3": pd.Series(O + [q[2] for q in QT], dtype=object),
-                "t4": pd.Series(G + [q[3] for q in QT], dtype=object),
-            }
-        )
-
-    return _frame_or_text_df(
-        spark, path, TAGGED_RDF_SCHEMA, batches_from_values
-    )
+def infer_format(path) -> str:
+    """Format from a path's extension (``d.ttl.gz`` -> turtle); a
+    directory or glob takes its first listed file's.  ValueError names
+    the path and the accepted extensions."""
+    ext = _extension(path)
+    if ext in FORMAT_ALIASES:
+        return FORMAT_ALIASES[ext]
+    try:
+        first = _list_files(path)[0]
+    except (ValueError, IndexError):
+        return _resolve_format(ext, path)
+    return _resolve_format(_extension(first), first)
 
 
-def read_ntriples_tagged_df(spark, path: str):
-    def parse_line(value):
-        triples, quoted = parse_ntriples(value)
-        return [(s, p, o, None) for s, p, o in triples], quoted
+def _read_full(fobj, n: int) -> bytes:
+    """Read exactly ``n`` bytes unless the stream ends: accumulate a
+    FULL window before declaring EOF.  A file object whose read()
+    legally returns fewer bytes mid-stream (socket-backed, raw
+    unbuffered) must not flip the windowed scanners to their EOF
+    regime early — that could mis-split a statement/token spanning the
+    short read (ADVICE r10).  EOF is only a b"" read."""
+    data = b""
+    while len(data) < n:
+        piece = fobj.read(n - len(data))
+        if not piece:
+            break
+        data += piece
+    return data
 
-    return _read_lines_tagged_df(spark, path, parse_line)
+
+def _collect_prefixes(files, head_bytes: int = 1 << 16) -> dict:
+    """PER-FILE @prefix maps ``{file: {label: iri}}`` from each file's
+    first ``head_bytes`` (decompressed) — prefix headers sit at the top
+    of a dump, and reading the corpus twice to find them would double
+    the ingest IO.  A prefix declared past the head is missed: the
+    header-broadcast assumption the reference's chunk-parallel parser
+    makes (prefixes are file-global here, not declaration-ordered).
+    Keyed by file, so two files binding one label to different IRIs
+    each expand their own terms (VERDICT r6 item #5)."""
+    by_file: dict[str, dict[str, str]] = {}
+    for fp in files:
+        with _open_maybe_compressed(fp) as f:
+            head = _read_full(f, head_bytes).decode("utf-8", "replace")
+        for line in head.lstrip("\ufeff").splitlines():
+            m = _PREFIX_RE.match(line.strip())
+            if m:
+                by_file.setdefault(fp, {})[m.group(1) or ""] = m.group(2)
+    return by_file
 
 
-def read_nquads_tagged_df(spark, path: str):
-    def parse_line(value):
-        return parse_nquads(value)
-
-    return _read_lines_tagged_df(spark, path, parse_line)
-
-
+# ------------------------------------------------------- chunk scanners
 # One Turtle STATEMENT for the chunk splitter, as a fully possessive
 # (backtrack-free, Python 3.11+) regex: runs of ordinary characters, or a
 # token whose body may contain '.' ( <IRI>, long/short strings of either
@@ -280,7 +262,7 @@ def read_nquads_tagged_df(spark, path: str):
 # whitespace/EOF (decimals like 1.5), repeated until the terminating '.'
 # that IS followed by whitespace/EOF.  Branches are first-character
 # disjoint, so matching is a single linear pass at C speed — this is the
-# r7 RDF/XML fix shape (_XML_TOKEN_RE below) applied to Turtle
+# r7 RDF/XML fix shape (_XML_TOKEN_RE_B below) applied to Turtle
 # (VERDICT r8 task #2: the old per-character Python loop ran ~7 MB/s and
 # serialized the whole ingest behind it).  The lone [<"'] tail branch
 # consumes an unterminated IRI/string opener so malformed input degrades
@@ -319,25 +301,6 @@ _TTL_DIRECTIVE_LINE_RE = re.compile(
     r"[ \t\f\v]*<[^<>\s]*>[ \t\f\v]*\.?[ \t\f\v]*|#[^\n]*)\r?$\n?",
     re.IGNORECASE,
 )
-
-
-@functools.lru_cache(maxsize=8)
-def _ttl_chunk_re(per_chunk: int):
-    """Compiled pattern matching a run of 1..per_chunk statements."""
-    return re.compile(f"(?:{_TTL_STMT}){{1,{per_chunk}}}+")
-
-
-@functools.lru_cache(maxsize=8)
-def _ttl_chunk_re_bytes(per_chunk: int):
-    """BYTES twin of :func:`_ttl_chunk_re` for the offset-based reader:
-    matching raw UTF-8 keeps chunk boundaries as BYTE offsets (no
-    char->byte conversion pass), and every metacharacter the pattern
-    dispatches on is ASCII, so multi-byte UTF-8 continuation bytes
-    (>= 0x80) can never be mistaken for one.  The only divergence from
-    the str scan: ``\\s`` on bytes is ASCII whitespace, so a '.' followed
-    by an exotic unicode space does not terminate a statement here — not
-    legal Turtle end-of-statement whitespace anyway."""
-    return re.compile(f"(?:{_TTL_STMT}){{1,{per_chunk}}}+".encode("ascii"))
 
 
 # STRICT statement for WINDOWED scans (VERDICT r9 #2: the scan task must
@@ -384,16 +347,6 @@ def _ttl_stmt_re_strict_bytes():
 
 
 @functools.lru_cache(maxsize=8)
-def _ttl_skip_re_strict_bytes():
-    """The strict statement BODY alone (no terminating '.'): matching it
-    at any between-token position consumes everything up to the first
-    '.'-followed-by-whitespace statement end — or stops earlier at an
-    opener whose token cannot close inside the buffer.  The parallel
-    range scanner's workhorse (always matches, possibly empty)."""
-    return re.compile(_TTL_SKIP_STRICT.encode("ascii"))
-
-
-@functools.lru_cache(maxsize=8)
 def _ttl_group_re_strict_bytes(per_chunk: int):
     """EXACTLY ``per_chunk`` strict statements per match — the windowed
     scan's C-speed workhorse.  Exact (not 1..per) so the global
@@ -417,600 +370,19 @@ def _ttl_stmt_re_bytes():
 SCAN_WINDOW_BYTES = 64 * 1024 * 1024
 
 
-def _turtle_stream_bounds(
-    path: str,
-    per_chunk: int,
-    window_bytes: int = 0,
-    start: int = 0,
-    end: int | None = None,
-):
-    """Yield (start, end) BYTE spans of up-to-``per_chunk``-statement
-    runs for one Turtle/N3 file, reading it in ``window_bytes`` windows
-    instead of whole (VERDICT r9 #2) — boundary-identical to matching
-    ``_ttl_chunk_re_bytes(per_chunk)`` over the full file (differential
-    tested, including statements/strings straddling window edges and
-    multi-byte UTF-8 at the edge).
-
-    Scheme: within a (carry + fresh read) buffer, match exact-``per``
-    STRICT groups, then single strict statements for the tail count; a
-    match that touches the buffer end is discarded (its terminator's
-    ``(?=\\s|\\Z)`` lookahead — and any lazy closer — could read beyond
-    the window), and the unmatched remainder is carried into the next
-    refill.  The final window (complete to EOF) switches to the
-    original fallback-bearing statement regex, so malformed tails
-    degrade exactly like the whole-file scan.
-
-    ``start``/``end`` restrict the scan to a byte SUB-RANGE (pass 2 of
-    the parallel in-file scan), with ``end`` behaving as EOF for the
-    sub-range.  Safe because pass 1 cuts segments only at true
-    statement ends, so every token opened inside a segment closes
-    inside it — exactly the inputs on which the EOF window's fallback
-    branches decide like the strict ones."""
-    window_bytes = window_bytes or SCAN_WINDOW_BYTES
-    group_re = _ttl_group_re_strict_bytes(per_chunk)
-    stmt_re = _ttl_stmt_re_strict_bytes()
-    eof_re = _ttl_stmt_re_bytes()
-    with open(path, "rb") as f:
-        if start:
-            f.seek(start)
-        remaining = None if end is None else end - start
-        buf = b""
-        base = start  # absolute offset of buf[0]
-        chunk_start = start  # absolute start of the current statement group
-        count = 0  # statements in the current group
-        while True:
-            take = (
-                window_bytes
-                if remaining is None
-                else min(window_bytes, remaining)
-            )
-            data = f.read(take)
-            if remaining is not None:
-                remaining -= len(data)
-            eof = len(data) < window_bytes or remaining == 0
-            buf += data
-            pos = 0
-            if eof:
-                while True:
-                    m = eof_re.match(buf, pos)
-                    if m is None:
-                        break
-                    pos = m.end()
-                    count += 1
-                    if count == per_chunk:
-                        yield (chunk_start, base + pos)
-                        chunk_start, count = base + pos, 0
-                if count:
-                    yield (chunk_start, base + pos)
-                    chunk_start = base + pos
-                if buf[pos:].strip():
-                    yield (chunk_start, base + len(buf))
-                return
-            bend = len(buf)
-            progressed = True
-            while progressed:
-                progressed = False
-                if count == 0:
-                    while True:
-                        m = group_re.match(buf, pos)
-                        if m is None or m.end() == bend:
-                            break  # end-touching: terminator ambiguous
-                        pos = m.end()
-                        progressed = True
-                        yield (chunk_start, base + pos)
-                        chunk_start = base + pos
-                while True:
-                    m = stmt_re.match(buf, pos)
-                    if m is None or m.end() == bend:
-                        break
-                    pos = m.end()
-                    count += 1
-                    progressed = True
-                    if count == per_chunk:
-                        yield (chunk_start, base + pos)
-                        chunk_start, count = base + pos, 0
-                        break  # back to group-at-a-time matching
-            buf = buf[pos:]
-            base += pos
-
-
-# ---------------------------------------------------------------------------
-# Parallel in-file boundary scan (the "optimistic split-and-stitch" pass).
-#
-# The general Turtle boundary scan needs LEFT CONTEXT (a '.' means nothing
-# inside a string/IRI/comment), so _turtle_stream_bounds is sequential per
-# file — one multi-hundred-GB dump file used to bottleneck on a single
-# core (~31 MB/s, BASELINE.md r10).  The classic fix is speculative FSM
-# composition (the parallel-lexing trick): cut the file into ranges, scan
-# each range under EVERY possible lexer start state, and compose the tiny
-# per-range (state -> state) tables on the driver.
-#
-# Cutting ranges AFTER A NEWLINE keeps the state space minimal: comments
-# terminate at '\n' (never straddle a cut), escape pairs and quote runs
-# cannot contain '\n' (never straddle), and a '.'-at-end-of-statement
-# decision needs one lookahead byte that is inside the range whenever the
-# range ends with '\n'.  Exactly six states can cross a cut:
-_TTL_ST_NORMAL = 0  # between tokens
-_TTL_ST_IRI = 1  # inside <...>
-_TTL_ST_SDQ = 2  # inside a short "..." string
-_TTL_ST_SSQ = 3  # inside a short '...' string
-_TTL_ST_LDQ = 4  # inside a long """...""" string
-_TTL_ST_LSQ = 5  # inside a long '''...''' string
-_TTL_STATES = range(6)
-
-# close-the-pending-token regexes for the short-string states (content
-# with escape pairs, then the closing quote) — C-speed, like the oracle's
-# per-character scan but in one match
-_TTL_SDQ_CLOSE_RE = re.compile(rb'(?:[^"\\]|\\[\s\S])*+"')
-_TTL_SSQ_CLOSE_RE = re.compile(rb"(?:[^'\\]|\\[\s\S])*+'")
-# ... and for the long-string states: escape-aware first-triple closer,
-# the same rule the statement regexes' long branches use (ADVICE r10).
-# Escape pairs contain no newline, so a pair never straddles a range cut
-# and matching from the range start is safe in these states.
-_TTL_LDQ_CLOSE_RE = re.compile(rb'(?:[^"\\]++|\\[\s\S]|"(?!""))*+"""')
-_TTL_LSQ_CLOSE_RE = re.compile(rb"(?:[^'\\]++|\\[\s\S]|'(?!''))*+'''")
-
-# engage the parallel scan for files at least this large (the sequential
-# scan clears a 256 MB file in ~8 s; below that the two-pass overhead
-# isn't worth it) ...
-PARALLEL_SCAN_MIN_BYTES = 256 * 1024 * 1024
-# ... and only when the predicted win justifies its ~3x total scan work:
-# the per-file plan's wall is ~max_file/rate (files scan concurrently),
-# the parallel plan's ~3*total/(par*rate); requiring the former to be
-# >= PARALLEL_SCAN_MIN_WIN times the latter keeps the 1x-work per-file
-# plan whenever the corpus already spreads (measured: an 8x380 MB corpus
-# scans slightly FASTER per-file, a single 1 GB file 2.8-4.9x faster
-# parallel — BASELINE.md r10)
-PARALLEL_SCAN_MIN_WIN = 2
-
-# pass-1 range floor: below this, per-task overhead dominates the walk.
-# Module-level (not inlined) so tests can force many tiny ranges through
-# the DISTRIBUTED pass-1/pass-2/ci-remap path, not just the local twins.
-PARALLEL_SCAN_RANGE_FLOOR = 8 * 1024 * 1024
-
-
-def _parallel_scan_worthwhile(sizes, par: int) -> bool:
-    total = sum(sz for _, sz in sizes)
-    max_sz = max((sz for _, sz in sizes), default=0)
-    return max_sz * par >= 3 * PARALLEL_SCAN_MIN_WIN * total
-
-
-def _scan_bounds_rdd(spark, paths, seq_scan, parallel_bounds):
-    """Shared scan routing for the offset readers: per-file sequential
-    scans for the spread of the corpus, the two-pass parallel FSM scan
-    for dominant huge files (win-based rule above), and a valid empty
-    RDD for an empty corpus directory (``sc.union([])`` would raise)."""
-    import os as _os
-
-    sc = spark.sparkContext
-    par = sc.defaultParallelism
-    sizes = [(fp, _os.path.getsize(fp)) for fp in paths]
-    huge = (
-        [t for t in sizes if t[1] >= PARALLEL_SCAN_MIN_BYTES]
-        if _parallel_scan_worthwhile(sizes, par)
-        else []
-    )
-    huge_set = {fp for fp, _ in huge}
-    small = [fp for fp in paths if fp not in huge_set]
-    rdds = []
-    if small:
-        rdds.append(
-            sc.parallelize(small, max(1, min(len(small), par))).mapPartitions(
-                seq_scan
-            )
-        )
-    if huge:
-        rdds.append(parallel_bounds(spark, huge))
-    if not rdds:
-        return sc.parallelize([], 1)
-    return rdds[0] if len(rdds) == 1 else sc.union(rdds)
-
-
-def _newline_align(f, pos: int, size: int, window_bytes: int) -> int:
-    """Absolute offset just after the first ``\\n`` at-or-after ``pos``
-    (``size`` when none) — the shared cut rule both neighbours of a
-    nominal range boundary compute independently and identically."""
-    if pos <= 0:
-        return 0
-    if pos >= size:
-        return size
-    f.seek(pos)
-    off = pos
-    # newlines sit a line-length away; read small probes (capped by the
-    # window bound), not whole windows
-    step = min(window_bytes, 256 * 1024)
-    while off < size:
-        data = f.read(step)
-        if not data:
-            break
-        i = data.find(b"\n")
-        if i >= 0:
-            return off + i + 1
-        off += len(data)
-    return size
-
-
-def _ttl_state_of_opener(buf: bytes, q: int) -> int:
-    """Lexer state consumed to the end of ``buf`` by the unterminated
-    opener at ``q`` (where the strict skip regex stopped)."""
-    c = buf[q]
-    if c == 0x3C:  # '<' with no '>' in the rest of the range
-        return _TTL_ST_IRI
-    if c == 0x22:  # '"'
-        return _TTL_ST_LDQ if buf[q : q + 3] == b'"""' else _TTL_ST_SDQ
-    if c == 0x27:  # "'"
-        return _TTL_ST_LSQ if buf[q : q + 3] == b"'''" else _TTL_ST_SSQ
-    raise AssertionError(f"unexpected scan stopper {buf[q:q+4]!r} at {q}")
-
-
-def _ttl_end_state_from(buf: bytes, pos: int) -> int:
-    """Lexer state at the end of ``buf`` scanning from the statement
-    start ``pos`` — en-masse strict statement groups (one Python
-    iteration per ~2048 statements), then singles, then one skip match
-    to classify the trailing partial statement."""
-    group_re = _ttl_group_re_strict_bytes(2048)
-    stmt_re = _ttl_stmt_re_strict_bytes()
-    skip_re = _ttl_skip_re_strict_bytes()
-    n = len(buf)
-    while True:
-        m = group_re.match(buf, pos)
-        if m is None:
-            break
-        pos = m.end()
-    while True:
-        m = stmt_re.match(buf, pos)
-        if m is None:
-            break
-        pos = m.end()
-    while True:
-        q = skip_re.match(buf, pos).end()
-        if q >= n:
-            return _TTL_ST_NORMAL
-        if buf[q] == 0x2E:
-            # a '.'-with-whitespace the statement regexes didn't reach
-            # cannot happen on strict-consistent input (the statement
-            # body IS the skip body); step past it defensively
-            pos = q + 1
-            continue
-        return _ttl_state_of_opener(buf, q)
-
-
-def _turtle_range_state_table(
-    path: str,
-    nominal_a: int,
-    nominal_b: int,
-    size: int,
-    window_bytes: int = 0,
-):
-    """Pass 1 of the parallel in-file scan, for one nominal byte range:
-    returns ``(aligned_a, aligned_b, table)`` where ``table`` maps each
-    assumed lexer start state to ``(first_statement_end_abs_or_None,
-    end_state)``.  Entirely range-local — neighbours agree on the
-    newline-aligned cuts without communication, and the driver composes
-    the (tiny) tables into true sync points.
-
-    The buffer is the whole aligned range (range_bytes + the overshoot
-    to the next newline), the same order of bound as the parse tasks'
-    per-slice reads; a single LINE longer than the range size is the
-    adversarial case that inflates it."""
-    window_bytes = window_bytes or SCAN_WINDOW_BYTES
-    with open(path, "rb") as f:
-        a = _newline_align(f, nominal_a, size, window_bytes)
-        b = (
-            size
-            if nominal_b >= size
-            else _newline_align(f, nominal_b, size, window_bytes)
-        )
-        if a >= b:
-            return (a, b, {st: (None, st) for st in _TTL_STATES})
-        f.seek(a)
-        buf = f.read(b - a)
-
-    def close(st: int):
-        """Offset in ``buf`` where NORMAL resumes after the assumed
-        pending token, or None when it consumes the whole range."""
-        if st == _TTL_ST_NORMAL:
-            return 0
-        if st == _TTL_ST_IRI:
-            i = buf.find(b">")
-            return None if i < 0 else i + 1
-        if st == _TTL_ST_LDQ:
-            m = _TTL_LDQ_CLOSE_RE.match(buf)
-            return None if m is None else m.end()
-        if st == _TTL_ST_LSQ:
-            m = _TTL_LSQ_CLOSE_RE.match(buf)
-            return None if m is None else m.end()
-        m = (_TTL_SDQ_CLOSE_RE if st == _TTL_ST_SDQ else _TTL_SSQ_CLOSE_RE).match(
-            buf
-        )
-        return None if m is None else m.end()
-
-    skip_re = _ttl_skip_re_strict_bytes()
-    n = len(buf)
-    table: dict[int, tuple[int | None, int]] = {}
-    from_k: dict[int, tuple[int | None, int]] = {}
-    dot_memo: dict[int, int] = {}  # first-dot offset -> end state
-
-    def scan_from(k: int):
-        q = skip_re.match(buf, k).end()
-        if q >= n:
-            return (None, _TTL_ST_NORMAL)
-        if buf[q] != 0x2E:
-            return (None, _ttl_state_of_opener(buf, q))
-        # '.' stopper: the skip regex declined it, so it IS followed by
-        # whitespace (or true EOF on the file's final range — the only
-        # range whose buffer may not end with '\n')
-        first = a + q
-        end_state = dot_memo.get(q)
-        if end_state is None:
-            end_state = dot_memo[q] = _ttl_end_state_from(buf, q + 1)
-        return (first, end_state)
-
-    for st in _TTL_STATES:
-        k = close(st)
-        if k is None:
-            table[st] = (None, st)
-            continue
-        if k not in from_k:
-            from_k[k] = scan_from(k)
-        table[st] = from_k[k]
-    return (a, b, table)
-
-
-def _turtle_compose_segments(size: int, tables) -> list[tuple[int, int]]:
-    """Driver-side pass-1 composition: thread the true lexer state
-    through the per-range tables (file start = NORMAL) and cut the file
-    at each range's first true statement end.  Returns ``[(seg_start,
-    seg_end), ...]`` covering [0, size) — every segment starts at a
-    statement start and, except possibly the last, ends just after a
-    statement-terminating '.'."""
-    state = _TTL_ST_NORMAL
-    syncs: list[int] = []
-    for _a, _b, table in tables:
-        first, state = table[state]
-        if first is not None:
-            syncs.append(first)
-    segments: list[tuple[int, int]] = []
-    prev = 0
-    for s in syncs:
-        segments.append((prev, s + 1))
-        prev = s + 1
-    if prev < size or not segments:
-        segments.append((prev, size))
-    return segments
-
-
-def _turtle_parallel_segments_local(
-    path: str, range_bytes: int, window_bytes: int = 0
-) -> list[tuple[int, int]]:
-    """In-process twin of the distributed pass 1 (tests + small files):
-    state tables per nominal range, composed into segments."""
-    import os
-
-    size = os.path.getsize(path)
-    n_ranges = max(1, -(-size // range_bytes))
-    tables = [
-        _turtle_range_state_table(
-            path, i * range_bytes, min((i + 1) * range_bytes, size), size,
-            window_bytes,
-        )
-        for i in range(n_ranges)
-    ]
-    return _turtle_compose_segments(size, tables)
-
-
-def _turtle_parallel_bounds(
-    spark, files, per_chunk: int, window_bytes: int = 0
-):
-    """Distributed two-pass boundary scan for HUGE files: pass 1 maps
-    newline-aligned ranges to per-state tables (parallel, tiny results
-    collected — split planning, like any FileScan), the driver composes
-    true sync points, and pass 2 runs the sequential windowed scanner
-    per inter-sync segment (parallel — segments are ~range-sized).
-    Total scan work is ~2x the sequential pass but spreads over every
-    core, so a single 400 GB dump file scans at cluster rate instead of
-    one core's.  Returns an RDD of (path, start, end) bound rows."""
-    sc = spark.sparkContext
-    par = sc.defaultParallelism
-    # ~2 pass-1 tasks per core for balance (each range costs ~2 C-speed
-    # regex walks), floored so tiny ranges don't drown in per-task
-    # overhead and capped at the scan window (the per-task memory bound)
-    total = sum(sz for _, sz in files)
-    range_bytes = max(
-        PARALLEL_SCAN_RANGE_FLOOR,
-        min(SCAN_WINDOW_BYTES, -(-total // (par * 2))),
-    )
-    tasks = []
-    for fp, sz in files:
-        n_ranges = max(1, -(-sz // range_bytes))
-        tasks.extend(
-            (fp, i * range_bytes, min((i + 1) * range_bytes, sz), sz)
-            for i in range(n_ranges)
-        )
-    wb = window_bytes
-
-    def pass1(t):
-        fp, na, nb, sz = t
-        return (fp, na, _turtle_range_state_table(fp, na, nb, sz, wb))
-
-    tables = (
-        sc.parallelize(tasks, max(1, min(len(tasks), par * 2)))
-        .map(pass1)
-        .collect()
-    )
-    by_file: dict[str, list] = {}
-    for fp, na, tab in tables:
-        by_file.setdefault(fp, []).append((na, tab))
-    segments = []
-    for fp, sz in files:
-        tabs = [t for _, t in sorted(by_file[fp], key=lambda x: x[0])]
-        segments.extend(
-            (fp, sa, sb) for sa, sb in _turtle_compose_segments(sz, tabs)
-        )
-    pc = per_chunk
-
-    def pass2(it):
-        for fp, sa, sb in it:
-            for x, y in _turtle_stream_bounds(fp, pc, wb, start=sa, end=sb):
-                yield (fp, x, y)
-
-    return sc.parallelize(
-        segments, max(1, min(len(segments), par))
-    ).mapPartitions(pass2)
-
-
-def _turtle_statement_chunks(text: str, per_chunk: int):
-    """Split Turtle text into independently-parseable statement chunks —
-    the reference's chunk-parallel trick (sparql_database.rs:965-1141).
-    A '.' terminates a statement when it is outside <IRI> brackets and
-    string literals (short and long, both quote styles) and is followed
-    by whitespace/EOF (so decimals like 1.5 don't split).  @prefix lines
-    are dropped here (the caller broadcasts the collected prefix map
-    instead).
-
-    The scan is one compiled-regex pass matching WHOLE per_chunk-statement
-    runs (one Python-level iteration per CHUNK, not per character/token),
-    driven by ``match(pos)`` rather than a sliding search so an
-    unterminated tail degrades to a single final chunk exactly like the
-    old linear scan did.  Measured ~20x faster than the per-character
-    Python loop it replaces (BASELINE.md r9 ingest datapoint); the loop
-    survives as ``_turtle_statement_chunks_slow`` as the differential
-    oracle for the equivalence tests."""
-    body = _TTL_DIRECTIVE_LINE_RE.sub("", text)
-    pat = _ttl_chunk_re(per_chunk)
-    chunks: list[str] = []
-    pos, n = 0, len(body)
-    while pos < n:
-        m = pat.match(body, pos)
-        if m is None:
-            break  # no further terminated statement — remainder below
-        chunks.append(m.group(0))
-        pos = m.end()
-    if body[pos:].strip():
-        chunks.append(body[pos:])
-    return chunks
-
-
-def _turtle_statement_chunks_slow(text: str, per_chunk: int):
-    """The original per-character scan, kept as the differential oracle
-    for :func:`_turtle_statement_chunks` (tests assert both produce the
-    same statement boundaries and parse to the same triples)."""
-    body = "\n".join(
-        line
-        for line in text.splitlines()
-        if not (_PREFIX_RE.match(line.strip()) or line.strip().startswith("#"))
-    )
-    chunks: list[str] = []
-    start = 0
-    n_stmts = 0
-    i, n = 0, len(body)
-    while i < n:
-        c = body[i]
-        if c == "<":  # IRI: skip to closing '>'
-            j = body.find(">", i + 1)
-            i = n if j < 0 else j + 1
-            continue
-        if c in ('"', "'"):
-            if body[i : i + 3] in ('"""', "'''"):  # long string
-                # escape-aware first-triple closer (ADVICE r10): a
-                # backslash consumes two chars, mirroring the statement
-                # regexes' long branches
-                j = i + 3
-                while j < n:
-                    if body[j] == "\\":
-                        j += 2
-                    elif body[j] == c and body[j : j + 3] == c * 3:
-                        break
-                    else:
-                        j += 1
-                i = n if j >= n else j + 3
-            else:
-                j = i + 1
-                while j < n and body[j] != c:
-                    j += 2 if body[j] == "\\" else 1
-                i = j + 1
-            continue
-        if c == "#":  # comment to end of line
-            j = body.find("\n", i)
-            i = n if j < 0 else j + 1
-            continue
-        if c == "." and (i + 1 >= n or body[i + 1].isspace()):
-            n_stmts += 1
-            if n_stmts >= per_chunk:
-                chunks.append(body[start : i + 1])
-                start = i + 1
-                n_stmts = 0
-        i += 1
-    if body[start:].strip():
-        chunks.append(body[start:])
-    return chunks
-
-
 # Quote-aware XML token scanner for the chunk splitter: comments, CDATA,
 # processing instructions and DOCTYPE first (their bodies may contain '<'
 # and '>'), then tags — with quoted attribute values allowed to contain
-# '>' per the XML spec.
-_XML_TOKEN_RE = re.compile(
-    r"<!--.*?-->"
-    r"|<!\[CDATA\[.*?\]\]>"
-    r"|<\?.*?\?>"
-    r"|<![^>]*>"
-    r"|<[^>\"']*(?:\"[^\"]*\"[^>\"']*|'[^']*'[^>\"']*)*>",
+# '>' per the XML spec.  Bytes: every metacharacter is ASCII, so
+# multi-byte UTF-8 continuation bytes cannot collide.
+_XML_TOKEN_RE_B = re.compile(
+    rb"<!--.*?-->"
+    rb"|<!\[CDATA\[.*?\]\]>"
+    rb"|<\?.*?\?>"
+    rb"|<![^>]*>"
+    rb"|<[^>\"']*(?:\"[^\"]*\"[^>\"']*|'[^']*'[^>\"']*)*>",
     re.S,
 )
-
-
-def _rdfxml_chunks(text: str, elements_per_chunk: int = 500) -> list[str]:
-    """Split one RDF/XML document into standalone sub-documents of at most
-    ``elements_per_chunk`` TOP-LEVEL node elements each, every chunk
-    wrapped in the original root open tag (so xmlns declarations and
-    xml:base travel with it) — the safe split points a depth-tracking
-    token scan finds, mirroring the reference's single-pass chunked parse
-    (kolibrie/src/sparql_database.rs:806-963).  The scan is regex-driven
-    (C speed); only the per-chunk DOM parse is Python-rate, and that is
-    exactly the part read_rdfxml_df distributes.  A document with one
-    top-level element (or a scan that cannot find the root) degrades to a
-    single chunk — never an error."""
-    depth = 0
-    root_open: str | None = None
-    spans: list[tuple[int, int]] = []  # top-level element [start, end)
-    el_start = -1
-    for m in _XML_TOKEN_RE.finditer(text):
-        tok = m.group(0)
-        if tok.startswith(("<!--", "<![", "<?", "<!")):
-            continue
-        if tok.startswith("</"):
-            depth -= 1
-            if depth == 1 and el_start >= 0:
-                spans.append((el_start, m.end()))
-                el_start = -1
-            elif depth == 0:
-                break
-            continue
-        selfclose = tok.endswith("/>")
-        if depth == 0:
-            if selfclose:  # <rdf:RDF/> — empty document
-                return [text]
-            root_open = tok
-            depth = 1
-            continue
-        if depth == 1:
-            if selfclose:
-                spans.append((m.start(), m.end()))
-            else:
-                el_start = m.start()
-                depth = 2
-        elif not selfclose:
-            depth += 1
-    if root_open is None or len(spans) <= elements_per_chunk:
-        return [text]
-    close = _close_tag_of(root_open)
-    out = []
-    for i in range(0, len(spans), elements_per_chunk):
-        group = spans[i : i + elements_per_chunk]
-        body = text[group[0][0] : group[-1][1]]
-        out.append(root_open + body + close)
-    return out
 
 
 def _close_tag_of(open_tag: str) -> str:
@@ -1018,13 +390,8 @@ def _close_tag_of(open_tag: str) -> str:
     return f"</{name}>"
 
 
-# bytes twin of _XML_TOKEN_RE (every metacharacter is ASCII; multi-byte
-# UTF-8 continuation bytes cannot collide) — keeps the offset scan in
-# byte space so parse tasks can do ranged reads
-_XML_TOKEN_RE_B = re.compile(_XML_TOKEN_RE.pattern.encode("ascii"), re.S)
-
 # STRICT token for WINDOWED XML scans (VERDICT r9 #2, same shape as
-# _TTL_STMT_STRICT): the fallback-ordered branches of _XML_TOKEN_RE can
+# _TTL_STMT_STRICT): the fallback-ordered branches of _XML_TOKEN_RE_B can
 # cross over on a truncated window — a comment whose '-->' lies beyond
 # the window edge would degrade to the DOCTYPE branch and "close" at a
 # '>' inside the comment.  Negative lookaheads pin each special form to
@@ -1041,171 +408,28 @@ _XML_TOKEN_RE_STRICT_B = re.compile(
 )
 
 
-def _rdfxml_stream_bounds(
-    path: str,
-    elements_per_chunk: int = 500,
-    window_bytes: int = 0,
-    start: int = 0,
-    end: int | None = None,
-    depth0: int = 0,
-    root_open0: bytes | None = None,
-    assume_split: bool = False,
-):
-    """Yield ``(chunk_index, byte_start, byte_end, root_tag)`` rows for
-    one RDF/XML file — the same rows the whole-file
-    :func:`_rdfxml_spans_bytes` scan derives — reading the file in
-    ``window_bytes`` windows (VERDICT r9 #2).  Unsplittable documents
-    (no root found, self-closing root, at most ``elements_per_chunk``
-    top-level elements) yield the single whole-file row
-    ``(0, 0, size, None)``.  Peak memory: one window plus the largest
-    single token (comment/CDATA/tag) plus ``elements_per_chunk``
-    buffered span offsets.
-
-    Scheme: STRICT token matches within each window; a ``<`` in the gap
-    before a match (a token the strict pattern could not complete) or a
-    match touching the buffer end stops the window and carries from the
-    token start; the EOF window switches to the original fallback-
-    bearing pattern.  Depth/root/span state persists across refills as
-    absolute offsets; groups of ``elements_per_chunk`` spans flush as
-    soon as splitting is confirmed (more than one group exists).
-
-    ``start``/``end``/``depth0``/``root_open0``/``assume_split``
-    restrict the scan to a byte SUB-RANGE with a known entry state —
-    pass 2 of the parallel in-file scan.  Segments start between
-    top-level elements (depth 1, outside all tokens), splitting is
-    already decided (groups flush at ``per``; the unsplittable
-    whole-file verdict is disabled), and ``end`` behaves as EOF for
-    the sub-range."""
-    import os
-
-    window_bytes = window_bytes or SCAN_WINDOW_BYTES
-    size = os.path.getsize(path)
-    per = elements_per_chunk
-    pending: list[tuple[int, int]] = []
-    split_mode = assume_split
-    ci = 0
-    root_open: bytes | None = root_open0
-    depth = depth0
-    el_start = -1
-    stopped = False  # root closed / unsplittable verdict reached
-    single = False  # self-closing or absent root => whole-file row
-
-    with open(path, "rb") as f:
-        if start:
-            f.seek(start)
-        remaining = None if end is None else end - start
-        buf = b""
-        base = start
-        while not stopped:
-            take = (
-                window_bytes
-                if remaining is None
-                else min(window_bytes, remaining)
-            )
-            data = f.read(take)
-            if remaining is not None:
-                remaining -= len(data)
-            eof = len(data) < window_bytes or remaining == 0
-            buf += data
-            pos = 0
-            bend = len(buf)
-            pat = _XML_TOKEN_RE_B if eof else _XML_TOKEN_RE_STRICT_B
-            while not stopped:
-                m = pat.search(buf, pos)
-                if m is None:
-                    if eof:
-                        stopped = True
-                    else:
-                        g = buf.find(b"<", pos)
-                        pos = bend if g == -1 else g
-                    break
-                if not eof:
-                    g = buf.find(b"<", pos, m.start())
-                    if g != -1:  # truncated token the strict pattern skipped
-                        pos = g
-                        break
-                    if m.end() == bend:  # token may extend past the window
-                        pos = m.start()
-                        break
-                tok = m.group(0)
-                pos = m.end()
-                if tok.startswith((b"<!--", b"<![", b"<?", b"<!")):
-                    continue
-                if tok.startswith(b"</"):
-                    depth -= 1
-                    if depth == 1 and el_start >= 0:
-                        pending.append((el_start, base + m.end()))
-                        el_start = -1
-                    elif depth == 0:
-                        stopped = True
-                else:
-                    selfclose = tok.endswith(b"/>")
-                    if depth == 0:
-                        if selfclose:  # <rdf:RDF/> — empty document
-                            single = True
-                            stopped = True
-                        else:
-                            root_open = tok
-                            depth = 1
-                    elif depth == 1:
-                        if selfclose:
-                            pending.append((base + m.start(), base + m.end()))
-                        else:
-                            el_start = base + m.start()
-                            depth = 2
-                    elif not selfclose:
-                        depth += 1
-                # flush confirmed-full groups so span memory stays O(per)
-                if not split_mode and len(pending) > per:
-                    split_mode = True
-                while split_mode and len(pending) >= per:
-                    group, pending = pending[:per], pending[per:]
-                    yield (
-                        ci,
-                        group[0][0],
-                        group[-1][1],
-                        root_open.decode("utf-8", "replace"),
-                    )
-                    ci += 1
-            buf = buf[pos:]
-            base += pos
-            if eof:
-                stopped = True
-    if single or root_open is None or (not split_mode and len(pending) <= per):
-        yield (0, 0, size, None)
-        return
-    while pending:
-        group, pending = pending[:per], pending[per:]
-        yield (
-            ci,
-            group[0][0],
-            group[-1][1],
-            root_open.decode("utf-8", "replace"),
-        )
-        ci += 1
-
-
 def _rdfxml_stream_chunks(fobj, elements_per_chunk: int, window_bytes: int = 0):
-    """Chunk-CONTENT sibling of :func:`_rdfxml_stream_bounds` for
-    non-seekable decompressed streams (VERDICT r10 task #3 — the XML
-    twin of :func:`_turtle_stream_chunks`): the same windowed strict
-    token scan and top-level-element grouping, but yielding
-    ``(chunk_index, root_tag|None, body_bytes)`` rows with the chunk
-    CONTENT — a gzip stream cannot be ranged-read later, so the scan
-    must hand the bytes onward itself.  ``root_tag`` is None only for
-    the unsplittable whole-file row, whose body is the entire document.
+    """Split one RDF/XML document, read from ``fobj`` in ``window_bytes``
+    windows, into ``(chunk_index, root_tag|None, body_bytes)`` rows: each
+    body holds at most ``elements_per_chunk`` TOP-LEVEL node elements and
+    parses standalone once wrapped in the root open tag (so xmlns
+    declarations and xml:base travel with it) — the safe split points a
+    depth-tracking token scan finds, mirroring the reference's chunked
+    single-pass parse (sparql_database.rs:806-963).  A document with no
+    root, a self-closing root or at most ``elements_per_chunk``
+    top-level elements yields the single row ``(0, None, whole_doc)``.
 
     Memory: bytes are retained only from the first pending span (plus
     one scan window); groups flush as soon as splitting is confirmed,
     so a 50 GB-decompressed dump of the usual millions-of-top-level-
     elements shape scans in ~(elements_per_chunk elements + window)
-    bytes.  The whole-document fallback (no root / self-closing root /
-    at most ``elements_per_chunk`` top-level elements) inherently
-    buffers the document — the same ceiling that row has everywhere.
+    bytes.  The whole-document row inherently buffers the document.
 
-    Differential-tested against :func:`_rdfxml_stream_bounds`: on a
-    seekable copy of the same bytes, ranged reads of the bounds rows
-    reproduce these chunks byte-for-byte."""
+    Windowed matching uses the strict token pattern (a token truncated
+    by the window edge matches nothing and is carried into the next
+    refill); the EOF window uses the original pattern, so the rows equal
+    a whole-document scan's (differential-tested at windows down to 16
+    bytes, with short reads)."""
     window_bytes = window_bytes or SCAN_WINDOW_BYTES
     per = elements_per_chunk
     pending: list[tuple[int, int]] = []  # ABSOLUTE [start, end) spans
@@ -1300,8 +524,8 @@ def _rdfxml_stream_chunks(fobj, elements_per_chunk: int, window_bytes: int = 0):
         if eof:
             stopped = True
     if single or root_open is None or (not split_mode and len(pending) <= per):
-        # whole-document row: drain any unread tail so the body matches
-        # the bounds scanner's (0, 0, size, None) ranged read exactly
+        # whole-document row: drain any unread tail so the body is the
+        # complete document
         while True:
             data = _read_full(fobj, window_bytes)
             buf += data
@@ -1319,1185 +543,25 @@ def _rdfxml_stream_chunks(fobj, elements_per_chunk: int, window_bytes: int = 0):
         ci += 1
 
 
-# ---------------------------------------------------------------------------
-# Parallel in-file boundary scan for RDF/XML — the XML twin of the Turtle
-# speculative-FSM scan above.  Newline-aligned cuts again keep the state
-# space finite: every multi-byte lexical marker (<!--, <![CDATA[, </, <?,
-# -->, ]]>, ?>, />, quote chars) contains no newline, so none can
-# straddle a cut; only the STATES below can.  Depth is unbounded but its
-# DELTA across a range is composable, and element-end events are
-# recorded per RELATIVE depth so the driver can pick the true top-level
-# ones after composing absolute depths.
-_XML_ST_TEXT = 0
-_XML_ST_COMMENT = 1  # inside <!-- ... -->
-_XML_ST_CDATA = 2  # inside <![CDATA[ ... ]]>
-_XML_ST_PI = 3  # inside <? ... ?>
-_XML_ST_BANG = 4  # inside <!DOCTYPE-ish ... >
-_XML_ST_OPEN = 5  # inside an open tag, outside attr quotes
-_XML_ST_OPEN_SQ = 6
-_XML_ST_OPEN_DQ = 7
-_XML_ST_CLOSE = 8  # inside a </close> tag
-_XML_ST_CLOSE_SQ = 9
-_XML_ST_CLOSE_DQ = 10
-_XML_STATES = range(11)
-
-# tag-INTERNAL completion from just after '<' (or any point inside the
-# tag outside quotes): quote-aware skip then the closing '>'
-_XML_TAG_REST_RE = re.compile(
-    rb"[^>\"']*(?:\"[^\"]*\"[^>\"']*|'[^']*'[^>\"']*)*>"
-)
-# same but WITHOUT requiring the '>': always matches; its end tells
-# whether the range ends outside quotes (end == len) or at an
-# unterminated quote (buf[end] is the quote char)
-_XML_TAG_SKIP_RE = re.compile(
-    rb"[^>\"']*(?:\"[^\"]*\"[^>\"']*|'[^']*'[^>\"']*)*"
-)
-
-
-def _xml_tag_end_state(buf: bytes, pos: int, closing: bool) -> int:
-    """State at the end of ``buf`` when it ends inside a tag whose
-    remaining text starts at ``pos``."""
-    e = _XML_TAG_SKIP_RE.match(buf, pos).end()
-    if e >= len(buf):
-        return _XML_ST_CLOSE if closing else _XML_ST_OPEN
-    c = buf[e]
-    if c == 0x22:
-        return _XML_ST_CLOSE_DQ if closing else _XML_ST_OPEN_DQ
-    if c == 0x27:
-        return _XML_ST_CLOSE_SQ if closing else _XML_ST_OPEN_SQ
-    raise AssertionError(f"tag skip stopped at {buf[e:e+4]!r}")
-
-
-def _xml_walk_unterminated(buf: bytes, g: int, rel, sync, opens):
-    """Classify the unterminated opener at ``g`` (where the strict
-    pattern could not complete a token): its content swallows the rest
-    of the range, so the walk ends in the opener's state."""
-    if buf.startswith(b"<!--", g):
-        return (_XML_ST_COMMENT, rel, sync, opens)
-    if buf.startswith(b"<![CDATA[", g):
-        return (_XML_ST_CDATA, rel, sync, opens)
-    if buf.startswith(b"<?", g):
-        return (_XML_ST_PI, rel, sync, opens)
-    if buf.startswith(b"<!", g):
-        return (_XML_ST_BANG, rel, sync, opens)
-    closing = buf.startswith(b"</", g)
-    return (
-        _xml_tag_end_state(buf, g + (2 if closing else 1), closing),
-        rel,
-        sync,
-        opens,
-    )
-
-
-def _xml_walk(buf: bytes, k: int):
-    """Token walk from ``k`` (TEXT state) to the end of ``buf``:
-    returns (end_state, depth_delta, sync_map, open_map) where
-    ``sync_map`` maps RELATIVE depth AFTER an element-end event to the
-    absolute-in-buf offset just after the first such event, and
-    ``open_map`` maps the relative depth BEFORE the first non-self-
-    closing open tag seen at that depth to its tag bytes (the driver
-    reads the root open tag from it).  Mirrors the windowed scanner's
-    strict-token + gap-'<' discipline, so unterminated tokens classify
-    instead of being misparsed.  The loop is finditer-driven with byte
-    peeks instead of token materialization — per-token Python is THE
-    pass-1 cost (the 60M probe measured the naive search+group loop at
-    ~11 us/token; this shape is ~3x cheaper)."""
-    pos = k
-    rel = 0
-    sync: dict[int, int] = {}
-    opens: dict[int, bytes] = {}
-    find = buf.find
-    for m in _XML_TOKEN_RE_STRICT_B.finditer(buf, k):
-        s = m.start()
-        if s > pos:
-            g = find(b"<", pos, s)
-            if g != -1:
-                return _xml_walk_unterminated(buf, g, rel, sync, opens)
-        pos = m.end()
-        c1 = buf[s + 1]
-        if c1 == 0x21 or c1 == 0x3F:  # <!... / <?...: no depth effect
-            continue
-        if c1 == 0x2F:  # </close>
-            rel -= 1
-            if rel not in sync:
-                sync[rel] = pos
-        elif buf[pos - 2] == 0x2F:  # <self/>: element end, no change
-            if rel not in sync:
-                sync[rel] = pos
-        else:  # <open>
-            if rel not in opens:
-                opens[rel] = m.group(0)
-            rel += 1
-    g = find(b"<", pos)
-    if g != -1:
-        return _xml_walk_unterminated(buf, g, rel, sync, opens)
-    return (_XML_ST_TEXT, rel, sync, opens)
-
-
-def _rdfxml_range_state_table(
-    path: str,
-    nominal_a: int,
-    nominal_b: int,
-    size: int,
-    window_bytes: int = 0,
-):
-    """Pass 1 for one newline-aligned byte range of an RDF/XML file:
-    ``(aligned_a, aligned_b, table)`` with ``table[state] = (end_state,
-    depth_delta, sync_map, open_map)``; sync/open offsets are absolute
-    file offsets and sync/open keys are relative to the depth at range
-    entry."""
-    window_bytes = window_bytes or SCAN_WINDOW_BYTES
-    with open(path, "rb") as f:
-        a = _newline_align(f, nominal_a, size, window_bytes)
-        b = (
-            size
-            if nominal_b >= size
-            else _newline_align(f, nominal_b, size, window_bytes)
-        )
-        if a >= b:
-            return (a, b, {st: (st, 0, {}, {}) for st in _XML_STATES})
-        f.seek(a)
-        buf = f.read(b - a)
-
-    def close(st: int):
-        """(k, depth_adj, pending_end_event) for the assumed pending
-        token, or None when it consumes the whole range (terminal)."""
-        if st == _XML_ST_TEXT:
-            return (0, 0, False)
-        if st == _XML_ST_COMMENT:
-            i = buf.find(b"-->")
-            return None if i < 0 else (i + 3, 0, False)
-        if st == _XML_ST_CDATA:
-            i = buf.find(b"]]>")
-            return None if i < 0 else (i + 3, 0, False)
-        if st == _XML_ST_PI:
-            i = buf.find(b"?>")
-            return None if i < 0 else (i + 2, 0, False)
-        if st == _XML_ST_BANG:
-            i = buf.find(b">")
-            return None if i < 0 else (i + 1, 0, False)
-        closing = st in (_XML_ST_CLOSE, _XML_ST_CLOSE_SQ, _XML_ST_CLOSE_DQ)
-        pos = 0
-        if st in (_XML_ST_OPEN_SQ, _XML_ST_CLOSE_SQ):
-            i = buf.find(b"'")
-            if i < 0:
-                return None
-            pos = i + 1
-        elif st in (_XML_ST_OPEN_DQ, _XML_ST_CLOSE_DQ):
-            i = buf.find(b'"')
-            if i < 0:
-                return None
-            pos = i + 1
-        m = _XML_TAG_REST_RE.match(buf, pos)
-        if m is None:
-            return None
-        k = m.end()
-        if closing:
-            return (k, -1, True)
-        selfclose = buf.endswith(b"/>", 0, k)
-        return (k, 0 if selfclose else 1, selfclose)
-
-    def terminal_state(st: int) -> int:
-        """End state when the pending token never closes in-range.  A
-        tag state must re-derive WHERE inside the tag the range ends —
-        a tag spanning the whole range can drift into (or out of) an
-        attribute quote, and reporting the entry state unchanged lets
-        the next range's close() read quoted text as tag syntax (a '/>'
-        inside an attribute value then fabricates an element end —
-        silent span loss, caught by review)."""
-        if st in (_XML_ST_OPEN, _XML_ST_CLOSE):
-            return _xml_tag_end_state(buf, 0, st == _XML_ST_CLOSE)
-        if st in (_XML_ST_OPEN_SQ, _XML_ST_OPEN_DQ, _XML_ST_CLOSE_SQ,
-                  _XML_ST_CLOSE_DQ):
-            q = b"'" if st in (_XML_ST_OPEN_SQ, _XML_ST_CLOSE_SQ) else b'"'
-            i = buf.find(q)
-            if i >= 0:
-                closing = st in (_XML_ST_CLOSE_SQ, _XML_ST_CLOSE_DQ)
-                return _xml_tag_end_state(buf, i + 1, closing)
-        return st
-
-    from_k: dict[int, tuple] = {}
-    from_first: dict[int, tuple] = {}
-    pat = _XML_TOKEN_RE_STRICT_B
-
-    def walk_memo(k: int):
-        """A walk from ``k`` (TEXT) is fully determined by its FIRST
-        strict-token start (the eventless text before it only matters
-        for the unterminated-'<' gap check) — different assumed states
-        whose pending tokens close at nearby offsets usually share it,
-        so the ~2 s/64 MB walk runs once, not once per state."""
-        m = pat.search(buf, k)
-        first = m.start() if m is not None else len(buf)
-        g = buf.find(b"<", k, first)
-        if g != -1:
-            return _xml_walk_unterminated(buf, g, 0, {}, {})
-        r = from_first.get(first)
-        if r is None:
-            r = from_first[first] = _xml_walk(buf, first)
-        return r
-
-    table: dict[int, tuple] = {}
-    for st in _XML_STATES:
-        c = close(st)
-        if c is None:
-            table[st] = (terminal_state(st), 0, {}, {})
-            continue
-        k, adj, pending_end = c
-        if k not in from_k:
-            from_k[k] = walk_memo(k)
-        end_state, delta, sync_k, opens_k = from_k[k]
-        # shift walk-relative depths by the pending token's adjustment
-        # and add absolute offsets; the pending token's own end event
-        # (at relative depth ``adj``) happens first, so it wins the
-        # first-per-key slot
-        sync = {r + adj: a + p for r, p in sync_k.items()}
-        if pending_end:
-            if adj not in sync or a + k < sync[adj]:
-                sync[adj] = a + k
-        opens = {r + adj: t for r, t in opens_k.items()}
-        table[st] = (end_state, delta + adj, sync, opens)
-    return (a, b, table)
-
-
-def _rdfxml_compose(size: int, tables):
-    """Driver-side composition for the XML parallel scan: thread
-    (state, depth) through the per-range tables from (TEXT, 0), picking
-    each range's first true top-level element-end as a sync point and
-    the root open tag from the first open seen at absolute depth 0.
-    Returns (root_open_bytes | None, [sync offsets])."""
-    state, depth = _XML_ST_TEXT, 0
-    root: bytes | None = None
-    syncs: list[int] = []
-    for _a, _b, table in tables:
-        end_state, delta, sync, opens = table[state]
-        if root is None:
-            root = opens.get(-depth)
-        s = sync.get(1 - depth)
-        if s is not None:
-            syncs.append(s)
-        state, depth = end_state, depth + delta
-    return root, syncs
-
-
-def _rdfxml_parallel_bounds_local(
-    path: str, per: int, range_bytes: int, window_bytes: int = 0
-) -> list[tuple[int, int, int, str | None]]:
-    """In-process twin of the distributed XML parallel scan (tests +
-    differential oracle): pass-1 tables per nominal range, composed
-    sync points, pass-2 sequential scans per segment.  Falls back to
-    the plain sequential scan when the file is unsplittable."""
-    import os
-
-    size = os.path.getsize(path)
-    n_ranges = max(1, -(-size // range_bytes))
-    tabs = [
-        _rdfxml_range_state_table(
-            path, i * range_bytes, min((i + 1) * range_bytes, size), size,
-            window_bytes,
-        )
-        for i in range(n_ranges)
-    ]
-    root, syncs = _rdfxml_compose(size, tabs)
-    if root is None or len(syncs) < 2:
-        return list(_rdfxml_stream_bounds(path, per, window_bytes))
-    out = []
-    bounds = list(syncs) + [size]
-    prev, d0 = 0, 0
-    for si, s in enumerate(bounds):
-        for ci, a, b, r in _rdfxml_stream_bounds(
-            path,
-            per,
-            window_bytes,
-            start=prev,
-            end=s,
-            depth0=d0,
-            root_open0=root if d0 else None,
-            assume_split=True,
-        ):
-            out.append(((si << 32) + ci, a, b, r))
-        prev, d0 = s, 1
-    return out
-
-
-def _rdfxml_parallel_bounds(
-    spark, files, elements_per_chunk: int, window_bytes: int = 0
-):
-    """Distributed two-pass boundary scan for HUGE RDF/XML files — same
-    scheme as :func:`_turtle_parallel_bounds`: pass 1 maps newline-
-    aligned ranges to per-state (end-state, depth-delta, sync) tables,
-    the driver composes true sync points (positions between top-level
-    elements), pass 2 runs the sequential windowed scanner per
-    inter-sync segment with its known entry state (TEXT, depth 1).
-    Chunk indices are remapped per segment (segment_index * 2**32 +
-    local) so (file, chunk) genid salts stay unique and deterministic.
-    Returns an RDD of (path, ci, start, end, root) bound rows."""
-    sc = spark.sparkContext
-    par = sc.defaultParallelism
-    total = sum(sz for _, sz in files)
-    range_bytes = max(
-        PARALLEL_SCAN_RANGE_FLOOR,
-        min(SCAN_WINDOW_BYTES, -(-total // (par * 2))),
-    )
-    tasks = []
-    for fp, sz in files:
-        n_ranges = max(1, -(-sz // range_bytes))
-        tasks.extend(
-            (fp, i * range_bytes, min((i + 1) * range_bytes, sz), sz)
-            for i in range(n_ranges)
-        )
-    wb = window_bytes
-
-    def pass1(t):
-        fp, na, nb, sz = t
-        return (fp, na, _rdfxml_range_state_table(fp, na, nb, sz, wb))
-
-    tables = (
-        sc.parallelize(tasks, max(1, min(len(tasks), par * 2)))
-        .map(pass1)
-        .collect()
-    )
-    by_file: dict[str, list] = {}
-    for fp, na, tab in tables:
-        by_file.setdefault(fp, []).append((na, tab))
-    per = elements_per_chunk
-    segments = []  # (path, si, seg_start, seg_end, depth0, root_str)
-    seq_files = []  # unsplittable: defer to the sequential scanner
-    for fp, sz in files:
-        # each entry is the (aligned_a, aligned_b, table) triple the
-        # range task returned, ordered by nominal range start
-        tabs = [t for _, t in sorted(by_file[fp], key=lambda x: x[0])]
-        root, syncs = _rdfxml_compose(sz, tabs)
-        if root is None or len(syncs) < 2:
-            seq_files.append(fp)
-            continue
-        root_str = root.decode("utf-8", "replace")
-        prev, d0 = 0, 0
-        for si, s in enumerate(syncs):
-            segments.append((fp, si, prev, s, d0, root_str))
-            prev, d0 = s, 1
-        segments.append((fp, len(syncs), prev, sz, 1, root_str))
-
-    def pass2(it):
-        for fp, si, sa, sb, d0, root_str in it:
-            for ci, x, y, r in _rdfxml_stream_bounds(
-                fp,
-                per,
-                wb,
-                start=sa,
-                end=sb,
-                depth0=d0,
-                root_open0=root_str.encode("utf-8") if d0 else None,
-                assume_split=True,
-            ):
-                yield (fp, (si << 32) + ci, x, y, r)
-
-    def seq_scan(it):
-        for fp in it:
-            for ci, x, y, r in _rdfxml_stream_bounds(fp, per, wb):
-                yield (fp, ci, x, y, r)
-
-    rdds = []
-    if segments:
-        rdds.append(
-            sc.parallelize(
-                segments, max(1, min(len(segments), par))
-            ).mapPartitions(pass2)
-        )
-    if seq_files:
-        rdds.append(
-            sc.parallelize(
-                seq_files, max(1, min(len(seq_files), par))
-            ).mapPartitions(seq_scan)
-        )
-    return rdds[0] if len(rdds) == 1 else sc.union(rdds)
-
-
-def _rdfxml_spans_bytes(
-    raw: bytes, elements_per_chunk: int = 500
-) -> tuple[str | None, list[tuple[int, int]]]:
-    """BYTE-offset version of the :func:`_rdfxml_chunks` scan: returns
-    ``(root_open_tag, [(start, end), ...])`` where each span is one
-    TOP-LEVEL node element of the document, or ``(None, [])`` when the
-    document cannot (or need not) be split — single/self-closing root,
-    root not found, or at most ``elements_per_chunk`` elements.  Spans
-    start/end at ASCII ``<``/``>`` bytes, so slicing never splits a
-    multi-byte UTF-8 character."""
-    depth = 0
-    root_open: bytes | None = None
-    spans: list[tuple[int, int]] = []
-    el_start = -1
-    for m in _XML_TOKEN_RE_B.finditer(raw):
-        tok = m.group(0)
-        if tok.startswith((b"<!--", b"<![", b"<?", b"<!")):
-            continue
-        if tok.startswith(b"</"):
-            depth -= 1
-            if depth == 1 and el_start >= 0:
-                spans.append((el_start, m.end()))
-                el_start = -1
-            elif depth == 0:
-                break
-            continue
-        selfclose = tok.endswith(b"/>")
-        if depth == 0:
-            if selfclose:  # <rdf:RDF/> — empty document
-                return None, []
-            root_open = tok
-            depth = 1
-            continue
-        if depth == 1:
-            if selfclose:
-                spans.append((m.start(), m.end()))
-            else:
-                el_start = m.start()
-                depth = 2
-        elif not selfclose:
-            depth += 1
-    if root_open is None or len(spans) <= elements_per_chunk:
-        return None, []
-    return root_open.decode("utf-8", "replace"), spans
-
-
-def read_rdfxml_df(spark, path: str, elements_per_chunk: int = 500):
-    """Distributed RDF/XML ingestion, parallel both ACROSS files and
-    WITHIN a file: each document is split at top-level node-element
-    boundaries into chunks carrying the root tag's xmlns/xml:base header,
-    and the Python-rate DOM parse runs per chunk — so one 100 GB dump no
-    longer serializes onto a single task (VERDICT r6 item #8; reference
-    equivalent: the chunked single-pass parse at sparql_database.rs:806).
-
-    For driver-listable local paths (r9, same design as the Turtle
-    reader): the scan emits (path, chunk_index, byte_start, byte_end,
-    root_tag) rows only (:func:`_rdfxml_spans_bytes`), parse tasks do
-    ranged reads and re-wrap their slice in the root tag, and triples
-    return Arrow-batched — no chunk text is shuffled.  Non-listable
-    paths keep the wholetext + text-shuffle fallback.
-
-    Blank-node scoping (VERDICT r6 item #4): labels are DOCUMENT-scoped
-    in RDF, so `rdf:nodeID` labels are salted per source file (two files
-    both saying ``rdf:nodeID="b1"`` stay two nodes, while chunks of ONE
-    file still unify), and anonymous ``_:genid`` counters — which restart
-    per chunk — are salted per (file, chunk).
-
-    Non-local masters take the shuffle fallback unless ``SHARED_FS`` is
-    set (the offsets plan needs executors to open() the driver's paths —
-    see the flag's comment)."""
-    paths = _local_paths(path) if _offsets_usable(spark) else None
-    if paths is None:
-        return _read_rdfxml_shuffle_df(spark, path, elements_per_chunk)
-    # per-file codec routing — see the Turtle reader's note.  Directly-
-    # streamable codecs take the bounded-memory streaming chunker
-    # (VERDICT r10 task #3 — a .rdf.gz/.bz2 dump with >2 GB decompressed
-    # used to hit the wholetext plan's JVM-row ceiling); the rest keep
-    # the wholetext shuffle, whose ~2 GB decompressed-row ceiling is
-    # documented at _read_rdfxml_shuffle_df
-    compressed = [fp for fp in paths if _COMPRESSED_EXT_RE.search(fp)]
-    comp_df = None
-    if compressed:
-        stream = [fp for fp in compressed if _codec_direct_streamable(fp)]
-        rest = [fp for fp in compressed if not _codec_direct_streamable(fp)]
-        comp_dfs = []
-        if stream:
-            comp_dfs.append(
-                _read_rdfxml_stream_df(spark, stream, elements_per_chunk)
-            )
-        if rest:
-            comp_dfs.append(
-                _read_rdfxml_shuffle_df(spark, rest, elements_per_chunk)
-            )
-        comp_df = comp_dfs[0]
-        for extra in comp_dfs[1:]:
-            comp_df = comp_df.unionAll(extra)
-        paths = [fp for fp in paths if not _COMPRESSED_EXT_RE.search(fp)]
-        if not paths:
-            return comp_df
-
-    from kolibrie_spark.schema import QUADS_SCHEMA
-
-    sc = spark.sparkContext
-    par = sc.defaultParallelism
-
-    def scan(it):
-        # windowed streaming scan (VERDICT r9 #2): never reads a file
-        # whole — a single 400 GB dump file scans in SCAN_WINDOW_BYTES
-        # windows; unsplittable/small documents yield the whole-file row
-        for fp in it:
-            for ci, a, b, root in _rdfxml_stream_bounds(fp, elements_per_chunk):
-                yield (fp, ci, a, b, root)
-
-    # dominant huge files take the two-pass parallel FSM scan — same
-    # shared win-based routing as the Turtle reader
-    bounds = spark.createDataFrame(
-        _scan_bounds_rdd(
-            spark,
-            paths,
-            scan,
-            lambda sp, huge: _rdfxml_parallel_bounds(
-                sp, huge, elements_per_chunk
-            ),
-        ),
-        "path string, ci long, start long, end long, root string",
-    ).repartition(par)
-
-    def parse_slices(batches):
-        import hashlib
-
-        import pandas as pd
-
-        def frame(S, P, O):
-            return pd.DataFrame(
-                {
-                    "s": pd.Series(S, dtype=object),
-                    "p": pd.Series(P, dtype=object),
-                    "o": pd.Series(O, dtype=object),
-                    "g": pd.Series([None] * len(S), dtype=object),
-                }
-            )
-
-        for pdf in batches:
-            S: list = []
-            P: list = []
-            O: list = []
-            for fp, ci, a, b, root in zip(
-                pdf["path"], pdf["ci"], pdf["start"], pdf["end"], pdf["root"]
-            ):
-                with open(fp, "rb") as f:
-                    f.seek(int(a))
-                    body = f.read(int(b) - int(a)).decode("utf-8", "replace")
-                if not body.strip():
-                    # zero-byte / whitespace-only file (e.g. a marker file
-                    # in a corpus directory): no document, no triples —
-                    # ET.fromstring("") would raise instead
-                    continue
-                doc = (root + body + _close_tag_of(root)) if root else body
-                # same salt formula as the shuffle path: file-scoped
-                # nodeIDs, (file, chunk)-scoped anonymous genid counters
-                salt = hashlib.sha1(
-                    _norm_src(fp).encode("utf-8")
-                ).hexdigest()[:8]
-                for s, p, o in parse_rdfxml(
-                    doc,
-                    bnode_prefix=f"f{salt}.",
-                    genid_prefix=f"f{salt}c{int(ci)}.",
-                ):
-                    S.append(s)
-                    P.append(p)
-                    O.append(o)
-                # bounded output frames (see the Turtle reader: one input
-                # batch otherwise accumulates millions of strings)
-                if len(S) >= 100_000:
-                    yield frame(S, P, O)
-                    S, P, O = [], [], []
-            if S:
-                yield frame(S, P, O)
-
-    out = bounds.mapInPandas(parse_slices, QUADS_SCHEMA)
-    return out.unionAll(comp_df) if comp_df is not None else out
-
-
-def _read_rdfxml_stream_df(spark, paths, elements_per_chunk: int = 500):
-    """STREAMING reader for LISTABLE COMPRESSED RDF/XML files — the XML
-    twin of :func:`_read_turtle_like_stream_df` (VERDICT r10 task #3).
-    One scan task per file opens the codec stream directly in Python
-    (:func:`_open_maybe_compressed`) and runs the windowed strict token
-    scan on the decompressed bytes (:func:`_rdfxml_stream_chunks`),
-    shipping each chunk's body once through one repartition to parallel
-    DOM-parse tasks.  Peak scan-task memory is a window plus one group
-    of top-level elements, so a multi-GB-decompressed ``.rdf.gz`` dump
-    parses where the wholetext plan's ~2 GB JVM-row ceiling failed.
-    Blank-node salts match the offsets reader (file-scoped nodeIDs,
-    (file, chunk)-scoped genid counters)."""
-    import hashlib
-
-    from kolibrie_spark.schema import QUADS_SCHEMA
-
-    sc = spark.sparkContext
-    par = sc.defaultParallelism
-    per = elements_per_chunk
-
-    def scan(it):
-        for fp in it:
-            key = _norm_src(fp)
-            with _open_maybe_compressed(fp) as f:
-                for ci, root, body in _rdfxml_stream_chunks(f, per):
-                    yield (key, int(ci), root, body.decode("utf-8", "replace"))
-
-    chunked = (
-        sc.parallelize(list(paths), max(1, len(paths)))
-        .mapPartitions(scan)
-        .repartition(par)
-    )
-
-    def parse_part(part):
-        for key, ci, root, body in part:
-            if not body.strip():
-                continue
-            doc = (root + body + _close_tag_of(root)) if root else body
-            salt = hashlib.sha1(key.encode("utf-8")).hexdigest()[:8]
-            for s, p, o in parse_rdfxml(
-                doc,
-                bnode_prefix=f"f{salt}.",
-                genid_prefix=f"f{salt}c{ci}.",
-            ):
-                yield (s, p, o, None)
-
-    return chunked.mapPartitions(parse_part).toDF(QUADS_SCHEMA)
-
-
-def _read_rdfxml_shuffle_df(spark, path, elements_per_chunk: int = 500):
-    """Text-shuffle fallback for non-listable paths (the pre-r9 plan):
-    wholetext read, str-scan chunking (:func:`_rdfxml_chunks`), chunk
-    text repartitioned to the parse tasks.  Ceiling: the wholetext read
-    materializes each file as ONE JVM row, so a single file with >~2 GB
-    decompressed fails here — listable compressed files route to
-    :func:`_read_rdfxml_stream_df` instead."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.schema import QUADS_SCHEMA
-
-    files = spark.read.text(path, wholetext=True).select(
-        F.input_file_name().alias("src"), "value"
-    )
-    par = spark.sparkContext.defaultParallelism
-
-    def chunk(part):
-        for row in part:
-            salt = hashlib.sha1(row.src.encode("utf-8")).hexdigest()[:8]
-            for ci, doc in enumerate(_rdfxml_chunks(row.value, elements_per_chunk)):
-                yield (salt, ci, doc)
-
-    chunked = files.rdd.mapPartitions(chunk).repartition(par)
-
-    def parse_part(part):
-        for salt, ci, doc in part:
-            for s, p, o in parse_rdfxml(
-                doc,
-                bnode_prefix=f"f{salt}.",
-                genid_prefix=f"f{salt}c{ci}.",
-            ):
-                yield (s, p, o, None)
-
-    return chunked.mapPartitions(parse_part).toDF(QUADS_SCHEMA)
-
-
-def read_n3_df(spark, path: str, statements_per_chunk: int = 2000):
-    """Distributed N3 ingestion — same chunk-parallel scheme as
-    :func:`read_turtle_df` (the repo's N3 subset shares Turtle's
-    statement syntax; formulas `{ }` are driver-side only), with the
-    same per-source-file prefix scoping."""
-    return _read_turtle_like_df(spark, path, statements_per_chunk, parse_n3)
-
-
-# The offset readers plan byte splits on the DRIVER and have executor
-# tasks open() the same absolute paths — correct under a local master
-# (driver == executors) or when every node mounts the corpus at the same
-# paths (NFS/Lustre/FUSE).  On a multi-node cluster WITHOUT a shared
-# mount the parse tasks would fail loudly at open() (ADVICE r9), so by
-# default the offsets plan engages only for local masters; a deployment
-# with a shared filesystem sets this flag to keep the no-shuffle plan.
-SHARED_FS = False
-
-# Hadoop-codec extensions the Spark text source decompresses natively.
-# The byte-offset scans cannot see through them, so compressed files
-# route to the text-source fallbacks (correctness first: gz is not
-# splittable, one decompress task per file — the price of the codec).
-_COMPRESSED_EXT_RE = re.compile(
-    r"\.(?:gz|bz2|xz|lzma|zst|lz4|snappy|deflate)$", re.IGNORECASE
-)
-
-
-def _has_compressed(paths) -> bool:
-    return any(_COMPRESSED_EXT_RE.search(p) for p in paths)
-
-
-# codecs the DRIVER can stream incrementally for the 64 KiB prefix-head
-# pass (gzip/bz2/xz via the stdlib); zst/lz4/snappy/deflate heads fall
-# back to the Spark text branch
-_STDLIB_CODEC_RE = re.compile(r"\.(?:gz|bz2|xz|lzma)$", re.IGNORECASE)
-
-
-class _ClosingStreamWrapper:
-    """Delegating wrapper whose close() also closes the underlying file
-    handle — for decompressor streams that cannot take ownership of the
-    fh themselves (older ``zstandard`` without ``closefd``; ADVICE r11:
-    one leaked fd per file otherwise in long-running scan executors)."""
-
-    def __init__(self, stream, fh):
-        self._stream = stream
-        self._fh = fh
-
-    def __getattr__(self, name):
-        return getattr(self._stream, name)
-
-    def close(self):
-        try:
-            self._stream.close()
-        finally:
-            self._fh.close()
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        self.close()
-        return False
-
-
-def _open_maybe_compressed(fp: str):
-    low = fp.lower()
-    if low.endswith(".gz"):
-        import gzip
-
-        return gzip.open(fp, "rb")
-    if low.endswith(".bz2"):
-        import bz2
-
-        return bz2.open(fp, "rb")
-    if low.endswith((".xz", ".lzma")):
-        import lzma
-
-        return lzma.open(fp, "rb")
-    if low.endswith(".zst"):
-        # optional dependency (VERDICT r10 task #4): zstd is the de-facto
-        # dump codec for new corpora; when the module is present the scan
-        # task decompresses directly (the 2.9x-faster streaming path)
-        # instead of the per-line Hadoop fallback.  stream_reader.read()
-        # may legally return short — every caller goes through _read_full.
-        try:
-            import zstandard
-        except ImportError:
-            # vendored minimal decoder over the system libzstd (VERDICT
-            # r11 task #5): containers routinely ship libzstd.so without
-            # the Python wheel
-            from kolibrie_spark.rdfio import zstd_ctypes as zstandard
-
-        fh = open(fp, "rb")
-        try:
-            try:
-                return zstandard.ZstdDecompressor().stream_reader(
-                    fh, closefd=True
-                )
-            except TypeError:  # older zstandard without closefd
-                return _ClosingStreamWrapper(
-                    zstandard.ZstdDecompressor().stream_reader(fh), fh
-                )
-        except Exception:
-            # ADVICE r11: never leak the already-opened fd — long-running
-            # scan executors open one fh per file.
-            fh.close()
-            raise
-    if low.endswith(".lz4"):
-        try:
-            import lz4.frame
-        except ImportError:
-            # vendored minimal decoder over the system liblz4 (the zstd
-            # shim's twin): never leak the fh on construction failure
-            from kolibrie_spark.rdfio import lz4_ctypes
-
-            fh = open(fp, "rb")
-            try:
-                return lz4_ctypes.open_stream(fh, closefd=True)
-            except Exception:
-                fh.close()
-                raise
-        return lz4.frame.open(fp, "rb")
-    return open(fp, "rb")
-
-
-def _codec_direct_streamable(fp: str) -> bool:
-    """Can the Python scan task decompress ``fp`` itself (the bounded-
-    memory streaming chunker path)?  Always true for stdlib codecs;
-    true for .zst/.lz4 exactly when the optional module imports on the
-    driver (executors are assumed env-identical — a mismatched cluster
-    fails loudly at the task's import, and the Hadoop line fallback
-    still covers the module-less install)."""
-    if _STDLIB_CODEC_RE.search(fp):
-        return True
-    low = fp.lower()
-    if low.endswith(".zst"):
-        return _optional_codec_available("zstandard") or _ctypes_zstd_available()
-    if low.endswith(".lz4"):
-        return _optional_codec_available("lz4.frame") or _ctypes_lz4_available()
-    return False
-
-
-@functools.lru_cache(maxsize=1)
-def _ctypes_zstd_available() -> bool:
-    """True when the vendored ctypes shim can bind the system libzstd —
-    the no-wheel fallback for the .zst direct-streaming path."""
-    try:
-        from kolibrie_spark.rdfio import zstd_ctypes
-
-        return zstd_ctypes.available()
-    except Exception:
-        return False
-
-
-@functools.lru_cache(maxsize=1)
-def _ctypes_lz4_available() -> bool:
-    """liblz4 twin of :func:`_ctypes_zstd_available`."""
-    try:
-        from kolibrie_spark.rdfio import lz4_ctypes
-
-        return lz4_ctypes.available()
-    except Exception:
-        return False
-
-
-@functools.lru_cache(maxsize=4)
-def _optional_codec_available(module: str) -> bool:
-    import importlib
-
-    try:
-        importlib.import_module(module)
-        return True
-    except ImportError:
-        return False
-
-
-def _offsets_usable(spark) -> bool:
-    if SHARED_FS:
-        return True
-    return (spark.sparkContext.master or "").startswith("local")
-
-
-def _local_paths(path) -> list[str] | None:
-    """Driver-listable local files for ``path`` (a file, a directory, a
-    glob, or a LIST of any of those) as sorted absolute paths — or None
-    when the path is not local/listable (e.g. an hdfs:// URI), in which
-    case callers fall back to the Spark text source."""
-    import glob as _glob
-    import os
-
-    if isinstance(path, (list, tuple)):
-        out: list[str] = []
-        for p in path:
-            hits = _local_paths(p)
-            if hits is None:
-                return None
-            out.extend(hits)
-        return sorted(out) or None
-    if os.path.isdir(path):
-        return sorted(
-            os.path.abspath(os.path.join(path, f))
-            for f in os.listdir(path)
-            if os.path.isfile(os.path.join(path, f))
-        )
-    if os.path.isfile(path):
-        return [os.path.abspath(path)]
-    hits = sorted(os.path.abspath(p) for p in _glob.glob(path) if os.path.isfile(p))
-    return hits or None
-
-
-def _norm_src(src: str) -> str:
-    """Normalize a file path / ``input_file_name()`` URI to a comparable
-    key: strip the ``file:`` scheme, percent-decoding, and keep the
-    plain absolute path."""
-    from urllib.parse import unquote, urlparse
-
-    if "://" in src or src.startswith("file:"):
-        parsed = urlparse(src)
-        return unquote(parsed.path) or src
-    return src
-
-
-def _collect_prefixes(spark, path: str, head_bytes: int = 1 << 16) -> dict:
-    """PER-FILE @prefix maps for a Turtle/N3 corpus →
-    ``{normalized_file_path: {prefix: iri}}``, reading only each file's
-    HEAD (``head_bytes``, default 64 KiB) when the path is local — prefix
-    headers live at the top of a Turtle file, and re-reading a 100 TB
-    corpus end-to-end just to find them would double the ingest IO.
-    Falls back to a full line scan for non-listable paths.  A prefix
-    declared beyond the head window is missed — the same
-    header-broadcast assumption the reference's chunk-parallel parser
-    makes (prefixes are file-global here, not declaration-ordered).
-
-    Keying by file (VERDICT r6 item #5) stops cross-file clobbering: two
-    files binding the same label to different IRIs each expand their own
-    terms in their own namespace instead of last-file-wins."""
-    import os
-
-    paths = _local_paths(path)
-
-    if paths and any(
-        _COMPRESSED_EXT_RE.search(p) and not _codec_direct_streamable(p)
-        for p in paths
-    ):
-        paths = None  # codec the driver cannot stream: text branch
-    if paths and len(paths) > 256 and not _offsets_usable(spark):
-        # the >256-file branch ships head reads to EXECUTORS, which
-        # cannot open() driver-listed paths on a shared-nothing cluster
-        # (the per-file OSError continue would silently drop every
-        # prefix — review finding); use the text branch instead
-        paths = None
-    if paths:
-
-        def heads(it):
-            for fp in it:
-                try:
-                    with _open_maybe_compressed(fp) as f:
-                        # _read_full, not read(): codec stream_readers
-                        # may legally return short before head_bytes
-                        text = _read_full(f, head_bytes).decode(
-                            "utf-8", "replace"
-                        )
-                except OSError:
-                    continue
-                for line in text.lstrip("\ufeff").splitlines():
-                    m = _PREFIX_RE.match(line.strip())
-                    if m:
-                        yield (_norm_src(fp), (m.group(1) or "", m.group(2)))
-
-        if len(paths) <= 256:
-            # head-reading a handful of 64 KiB windows is microseconds of
-            # IO; a Spark job to do it costs ~1.3 s of scheduling (r9
-            # ingest profile) — stay on the driver for small corpora
-            pairs = list(heads(paths))
-        else:
-            sc = spark.sparkContext
-            n = max(1, min(len(paths), sc.defaultParallelism))
-            pairs = sc.parallelize(paths, n).mapPartitions(heads).collect()
-    else:
-        from pyspark.sql import functions as F
-
-        lines = spark.read.text(path).select(
-            F.input_file_name().alias("src"), "value"
-        )
-
-        def prefix_lines(part):
-            for row in part:
-                m = _PREFIX_RE.match(row.value.lstrip("\ufeff").strip())
-                if m:
-                    yield (_norm_src(row.src), (m.group(1) or "", m.group(2)))
-
-        pairs = lines.rdd.mapPartitions(prefix_lines).collect()
-
-    by_file: dict[str, dict[str, str]] = {}
-    for src, (pfx, iri) in pairs:
-        by_file.setdefault(src, {})[pfx] = iri
-    return by_file
-
-
-def _read_turtle_like_df(
-    spark, path: str, statements_per_chunk: int, parser, tagged: bool = False
-):
-    """Shared chunk-parallel reader for Turtle/N3 (reference
-    sparql_database.rs:965-1141): one head-only pass collects each file's
-    (tiny) @prefix header and broadcasts the PER-FILE maps
-    (:func:`_collect_prefixes` — 64 KiB per file, not a full re-read);
-    a scan pass finds statement-chunk boundaries, and a parse pass runs
-    the Python-rate statement parse in parallel with THAT FILE'S prefix
-    map — so a multi-file / multi-GB corpus ingests without the driver
-    ever seeing a triple, and two files binding the same prefix label to
-    different IRIs stay in their own namespaces (VERDICT r6 item #5).
-    Matches the driver-side parser exactly on the same input (round-trip
-    tested), with the same documented divergence as the reference's
-    parallel path: prefixes apply file-globally, not declaration-ordered.
-
-    For driver-listable local paths the scan emits only (path, start,
-    end) BYTE OFFSETS — one C-speed bytes-regex pass per file
-    (:func:`_ttl_chunk_re_bytes`) — and the parse tasks do ranged reads
-    of their own slices, so NO statement text is ever shuffled and the
-    parsed triples return Arrow-batched (``mapInPandas``), not pickled
-    row-at-a-time.  This is the split-planning shape a 100 TB ingest
-    wants (scan = split computation, parse = ranged reads, exactly how a
-    FileScan distributes work); the r8 path shipped every chunk's text
-    through a full shuffle.  Dominant huge files (win-based rule,
-    :func:`_scan_bounds_rdd`) scan with the two-pass parallel FSM scan
-    (:func:`_turtle_parallel_bounds`), so even a single multi-hundred-GB
-    dump file scans at cluster rate.  Non-listable paths (hdfs://,
-    s3://) — and
-    non-local masters without ``SHARED_FS`` (ADVICE r9: executor tasks
-    must be able to open() the driver-listed paths) — keep the
-    text-shuffle fallback (:func:`_read_turtle_like_shuffle_df`).
-
-    ``tagged=True`` emits the TAGGED stream (kind='q' quads, kind='t'
-    quoted-triple qid<->(s,p,o) mappings) so a Turtle-star bulk load
-    keeps its annotations resolvable (VERDICT r9 #1) — the mapping rows
-    are emitted DISTRIBUTIVELY from the parse tasks (ids are content
-    hashes, rdfstar.qt_id, so no coordination), deduped downstream."""
-    paths = _local_paths(path) if _offsets_usable(spark) else None
-    if paths is None:
-        return _read_turtle_like_shuffle_df(
-            spark, path, statements_per_chunk, parser, tagged=tagged
-        )
-    # per-file codec routing (review finding: one .gz sidecar must not
-    # push a multi-TB plain corpus onto the wholetext shuffle plan):
-    # only the compressed files take the STREAMING text fallback, which
-    # parses any decompressed size in bounded memory
-    compressed = [fp for fp in paths if _COMPRESSED_EXT_RE.search(fp)]
-    comp_df = None
-    if compressed:
-        comp_df = _read_turtle_like_stream_df(
-            spark, compressed, statements_per_chunk, parser, tagged=tagged
-        )
-        paths = [fp for fp in paths if not _COMPRESSED_EXT_RE.search(fp)]
-        if not paths:
-            return comp_df
-
-    from kolibrie_spark.schema import QUADS_SCHEMA, TAGGED_RDF_SCHEMA
-
-    sc = spark.sparkContext
-    prefixes_by_file = sc.broadcast(_collect_prefixes(spark, path))
-    par = sc.defaultParallelism
-
-    def scan(it):
-        # windowed streaming scan (VERDICT r9 #2): boundary-identical to
-        # the whole-file regex pass but bounded at SCAN_WINDOW_BYTES +
-        # the largest single statement, so one 400 GB dump file cannot
-        # OOM the scan task
-        for fp in it:
-            for a, b in _turtle_stream_bounds(fp, statements_per_chunk):
-                yield (fp, a, b)
-
-    # the boundary scan is sequential PER FILE (statement boundaries
-    # need left context); dominant huge files take the two-pass parallel
-    # FSM scan instead — the shared win-based routing keeps the 1x-work
-    # per-file plan whenever the file count already spreads the scan
-    bounds = spark.createDataFrame(
-        _scan_bounds_rdd(
-            spark,
-            paths,
-            scan,
-            lambda sp, huge: _turtle_parallel_bounds(
-                sp, huge, statements_per_chunk
-            ),
-        ),
-        "path string, start long, end long",
-    ).repartition(par)
-
-    def parse_slices(batches):
-        import hashlib
-
-        import pandas as pd
-
-        by_file = prefixes_by_file.value
-
-        def frame(S, P, O, QT):
-            if not tagged:
-                return pd.DataFrame(
-                    {
-                        "s": pd.Series(S, dtype=object),
-                        "p": pd.Series(P, dtype=object),
-                        "o": pd.Series(O, dtype=object),
-                        "g": pd.Series([None] * len(S), dtype=object),
-                    }
-                )
-            return pd.DataFrame(
-                {
-                    "kind": pd.Series(
-                        ["q"] * len(S) + ["t"] * len(QT), dtype=object
-                    ),
-                    "t1": pd.Series(S + [q[0] for q in QT], dtype=object),
-                    "t2": pd.Series(P + [q[1] for q in QT], dtype=object),
-                    "t3": pd.Series(O + [q[2] for q in QT], dtype=object),
-                    "t4": pd.Series(
-                        [None] * len(S) + [q[3] for q in QT], dtype=object
-                    ),
-                }
-            )
-
-        for pdf in batches:
-            S: list = []
-            P: list = []
-            O: list = []
-            QT: list = []
-            fh, cur, fsalt = None, None, ""
-            try:
-                for fp, a, b in sorted(
-                    zip(pdf["path"], pdf["start"], pdf["end"])
-                ):
-                    if fp != cur:
-                        if fh is not None:
-                            fh.close()
-                        fh, cur = open(fp, "rb"), fp
-                        # anonymous '[ ]'/'( )' labels are document-scoped
-                        # but counters restart per slice — salt with
-                        # (file, byte-offset), unique and deterministic
-                        # (the rdfxml genid discipline)
-                        fsalt = hashlib.sha1(
-                            _norm_src(fp).encode("utf-8")
-                        ).hexdigest()[:8]
-                    fh.seek(int(a))
-                    text = fh.read(int(b) - int(a)).decode("utf-8", "replace")
-                    # directive lines were left in place during the byte
-                    # scan (removing them would invalidate the offsets);
-                    # drop them here, per slice, before the parse
-                    text = _TTL_DIRECTIVE_LINE_RE.sub("", text)
-                    triples, _quoted, _ = parser(
-                        text,
-                        prefixes=by_file.get(_norm_src(fp), {}),
-                        anon_prefix=f"f{fsalt}o{int(a)}.",
-                    )
-                    for s, p, o in triples:
-                        S.append(s)
-                        P.append(p)
-                        O.append(o)
-                    if tagged:
-                        QT.extend(_quoted)
-                    # flush bounded output frames: an Arrow INPUT batch
-                    # can carry ~10k boundary rows x per_chunk statements
-                    # — accumulating all of it (tens of millions of
-                    # strings) in one pandas frame measured SUPER-linear
-                    # at 60M triples (exponent 1.38 vs 10x input; the r9
-                    # 60M probe) from allocator/GC pressure alone
-                    if len(S) + len(QT) >= 100_000:
-                        yield frame(S, P, O, QT)
-                        S, P, O, QT = [], [], [], []
-            finally:
-                if fh is not None:
-                    fh.close()
-            if S or QT:
-                yield frame(S, P, O, QT)
-
-    out = bounds.mapInPandas(
-        parse_slices, TAGGED_RDF_SCHEMA if tagged else QUADS_SCHEMA
-    )
-    return out.unionAll(comp_df) if comp_df is not None else out
-
-
-# streaming-fallback flush threshold: complete statements are scanned
-# out of the line buffer whenever it exceeds this, so peak memory per
-# task is ~this plus the largest single statement — NOT the whole
-# decompressed file
-_STREAM_FLUSH_BYTES = 8 * 1024 * 1024
-
-
-@functools.lru_cache(maxsize=8)
-def _ttl_chunk_re_strict(per_chunk: int):
-    """STR twin of the strict chunk regex for the streaming fallback's
-    mid-stream scans (end-touching matches carried, like the windowed
-    byte scanner)."""
-    return re.compile(f"(?:{_TTL_STMT_STRICT}){{1,{per_chunk}}}+")
-
-
-def _read_full(fobj, n: int) -> bytes:
-    """Read exactly ``n`` bytes unless the stream ends: accumulate a
-    FULL window before declaring EOF.  stdlib codec streams satisfy
-    full reads, but a file object whose read() legally returns fewer
-    bytes mid-stream (socket-backed, raw unbuffered, zstandard's
-    stream_reader) must not flip the windowed scanners to their EOF
-    regime early — that could mis-split a statement/token spanning the
-    short read (ADVICE r10).  EOF is only a b"" read."""
-    data = b""
-    while len(data) < n:
-        piece = fobj.read(n - len(data))
-        if not piece:
-            break
-        data += piece
-    return data
-
-
 def _turtle_stream_chunks(fobj, per_chunk: int, window_bytes: int = 0):
-    """Chunk-CONTENT sibling of :func:`_turtle_stream_bounds` for
-    non-seekable decompressed streams: same windowed strict-match-and-
-    carry discipline, but yields the chunk BYTES instead of (start, end)
-    offsets — a gzip stream cannot be ranged-read later, so the scan
-    must hand the content onward itself.  Differential-tested against
-    the offsets scanner (concatenating the yields reproduces the file
-    between its bounds)."""
+    """Split Turtle/N3 read from ``fobj`` into chunks of ``per_chunk``
+    statements (the last may be shorter, or an unterminated tail) and
+    yield each chunk's BYTES — the reference's chunk-parallel trick
+    (sparql_database.rs:965-1141).  A '.' ends a statement outside
+    <IRI> brackets, string literals and comments when whitespace or EOF
+    follows it (so decimals like 1.5 don't split); directive lines count
+    as statements and stay in the chunk text.
+
+    The stream is read in ``window_bytes`` windows: exact-``per_chunk``
+    STRICT statement groups, then single strict statements for the tail
+    count; a match touching the buffer end is discarded (its
+    terminator's lookahead could read past the window) and the rest is
+    carried into the next refill.  The final window (complete to EOF)
+    switches to the fallback-bearing statement regex, so malformed tails
+    degrade exactly like a whole-text scan.  Peak memory is a window
+    plus the largest statement; the chunks equal a whole-text
+    ``(?:_TTL_STMT){1,per_chunk}`` scan's (differential-tested at
+    windows down to 1 byte, with short reads)."""
     window_bytes = window_bytes or SCAN_WINDOW_BYTES
     group_re = _ttl_group_re_strict_bytes(per_chunk)
     stmt_re = _ttl_stmt_re_strict_bytes()
@@ -2555,751 +619,153 @@ def _turtle_stream_chunks(fobj, per_chunk: int, window_bytes: int = 0):
         buf = buf[pos:]
 
 
-def _read_turtle_like_stream_df(
-    spark, paths, statements_per_chunk: int, parser, tagged: bool = False
-):
-    """STREAMING fallback for LISTABLE COMPRESSED Turtle/N3 files.
-
-    Directly-streamable codecs (stdlib gz/bz2/xz always; zst/lz4 when
-    the optional ``zstandard``/``lz4`` module is installed — VERDICT
-    r10 task #4, a measured 2.9x over the line path): one scan task per
-    file opens the codec stream DIRECTLY in Python
-    (:func:`_open_maybe_compressed`) and runs
-    the windowed strict-carry chunk scan on the decompressed bytes
-    (:func:`_turtle_stream_chunks` — the chunk-content sibling of the
-    offsets scanner), shipping chunk TEXT through one repartition to
-    parallel parse tasks.  Peak task memory is a scan window plus the
-    largest statement — a 50 GB-decompressed dump parses in bounded
-    memory, and nothing crosses the JVM per line (the first cut of this
-    path shipped 30M (offset, line) tuples through newAPIHadoopFile at
-    ~49k rows/s; direct decompression measures ~10x that).
-
-    Other codecs (snappy/deflate; zst/lz4 sans module): the Hadoop text source
-    decompresses them, each file pinned to ONE split (split.minsize)
-    so statement order holds within a partition; lines re-join into a
-    bounded buffer with the same strict-carry scan.  Line terminators
-    are stripped by the text source, so CRLF inside raw-newline
-    literals normalizes to \n on this path only."""
-    from kolibrie_spark.schema import QUADS_SCHEMA, TAGGED_RDF_SCHEMA
-
-    sc = spark.sparkContext
-    par = sc.defaultParallelism
-    prefixes_by_file = sc.broadcast(_collect_prefixes(spark, list(paths)))
-    per = statements_per_chunk
-
-    direct = [fp for fp in paths if _codec_direct_streamable(fp)]
-    hadoop = [fp for fp in paths if not _codec_direct_streamable(fp)]
-    flush_bytes = _STREAM_FLUSH_BYTES  # driver-time capture (testable)
-    chunk_rdds = []
-
-    if direct:
-
-        def scan_direct(it):
-            for fp in it:
-                key = _norm_src(fp)
-                with _open_maybe_compressed(fp) as f:
-                    for ch in _turtle_stream_chunks(f, per):
-                        yield (key, ch.decode("utf-8", "replace"))
-
-        chunk_rdds.append(
-            sc.parallelize(direct, len(direct)).mapPartitions(scan_direct)
-        )
-
-    for fp in hadoop:
-        key = _norm_src(fp)
-
-        def lines_to_chunks(it, _key=key):
-            strict_re = _ttl_chunk_re_strict(per)
-            final_re = _ttl_chunk_re(per)
-
-            def scan(text: str, final: bool):
-                out, pos, n = [], 0, len(text)
-                pat = final_re if final else strict_re
-                while True:
-                    m = pat.match(text, pos)
-                    if m is None or (not final and m.end() == n):
-                        break
-                    out.append(m.group(0))
-                    pos = m.end()
-                if final and text[pos:].strip():
-                    out.append(text[pos:])
-                    pos = n
-                return out, text[pos:]
-
-            carry = ""
-            buf: list[str] = []
-            size = 0
-            for _off, line in it:
-                buf.append(line)
-                size += len(line) + 1
-                if size >= flush_bytes:
-                    chunks, carry = scan(carry + "\n".join(buf) + "\n", False)
-                    for ch in chunks:
-                        yield (_key, ch)
-                    buf, size = [], 0
-            if buf or carry:
-                chunks, _ = scan(
-                    carry + "\n".join(buf) + ("\n" if buf else ""), True
-                )
-                for ch in chunks:
-                    yield (_key, ch)
-
-        conf = {"mapreduce.input.fileinputformat.split.minsize": str(1 << 60)}
-        rdd = sc.newAPIHadoopFile(
-            fp,
-            "org.apache.hadoop.mapreduce.lib.input.TextInputFormat",
-            "org.apache.hadoop.io.LongWritable",
-            "org.apache.hadoop.io.Text",
-            conf=conf,
-        )
-        chunk_rdds.append(rdd.mapPartitions(lines_to_chunks))
-
-    chunked = (
-        chunk_rdds[0] if len(chunk_rdds) == 1 else sc.union(chunk_rdds)
-    ).repartition(par)
-
-    def parse_part(part):
-        yield from _parse_chunk_rows(
-            part, prefixes_by_file.value, parser, tagged,
-            strip_directives=True,
-        )
-
-    return chunked.mapPartitions(parse_part).toDF(
-        TAGGED_RDF_SCHEMA if tagged else QUADS_SCHEMA
-    )
+# --------------------------------------------------------------- readers
+_TAGGED_COLUMNS = ["kind", "t1", "t2", "t3", "t4"]
 
 
-def _parse_chunk_rows(part, by_file, parser, tagged, strip_directives=False):
-    """Shared (src, chunk-text) -> row-tuple loop for the streaming and
-    text-shuffle fallbacks (review: the two copies had drifted apart by
-    exactly the directive sub)."""
-    # per-chunk anonymous-label salt: these paths carry no byte offsets,
-    # so (spark partition id, chunk ordinal) scopes the '[ ]' counters —
-    # unique across every chunk of one read
-    try:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-    except Exception:
-        pid = 0
-    for seq, (src, ch) in enumerate(part):
-        if strip_directives:
-            ch = _TTL_DIRECTIVE_LINE_RE.sub("", ch)
-        triples, quoted, _ = parser(
-            ch, prefixes=by_file.get(src, {}), anon_prefix=f"p{pid}c{seq}."
-        )
-        if tagged:
-            for s_, p_, o_ in triples:
-                yield ("q", s_, p_, o_, None)
-            for qid, qs, qp, qo in quoted:
-                yield ("t", qid, qs, qp, qo)
-        else:
-            for s_, p_, o_ in triples:
-                yield (s_, p_, o_, None)
+def _tagged_rows(quads, quoted):
+    """TAGGED row tuples: kind='q' (s, p, o, g) quads, then kind='t'
+    (qid, qs, qp, qo) quoted-triple mappings."""
+    for q in quads:
+        yield ("q", *q)
+    for t in quoted:
+        yield ("t", *t)
 
 
-def _read_turtle_like_shuffle_df(
-    spark, path, statements_per_chunk: int, parser, tagged: bool = False
-):
-    """Text-shuffle fallback for non-listable paths: wholetext read,
-    str-regex chunk scan (:func:`_turtle_statement_chunks`), chunk text
-    repartitioned to the parse tasks.  ``tagged=True`` keeps the
-    quoted-triple mappings (kind='t' rows), like the offsets reader."""
-    from pyspark.sql import functions as F
+def _tagged_frames(rows, batch_rows: int = 100_000):
+    """Pandas frames of at most ``batch_rows`` TAGGED rows: bounded Arrow
+    batches back to the JVM (one frame per input batch measured
+    super-linear at 60M triples from allocator pressure alone, r9)."""
+    import itertools
 
-    from kolibrie_spark.schema import QUADS_SCHEMA, TAGGED_RDF_SCHEMA
+    import pandas as pd
 
-    files = spark.read.text(path, wholetext=True).select(
-        F.input_file_name().alias("src"), "value"
-    )
-    prefixes_by_file = spark.sparkContext.broadcast(
-        _collect_prefixes(spark, path)
-    )
-
-    par = spark.sparkContext.defaultParallelism
-
-    def chunk(part):
-        for row in part:
-            src = _norm_src(row.src)
-            for ch in _turtle_statement_chunks(row.value, statements_per_chunk):
-                yield (src, ch)
-
-    chunked = files.rdd.mapPartitions(chunk).repartition(par)
-
-    def parse_part(part):
-        yield from _parse_chunk_rows(part, prefixes_by_file.value, parser, tagged)
-
-    return chunked.mapPartitions(parse_part).toDF(
-        TAGGED_RDF_SCHEMA if tagged else QUADS_SCHEMA
-    )
+    rows = iter(rows)
+    while True:
+        batch = list(itertools.islice(rows, batch_rows))
+        if not batch:
+            return
+        yield pd.DataFrame(batch, columns=_TAGGED_COLUMNS, dtype=object)
 
 
-def read_turtle_df(spark, path: str, statements_per_chunk: int = 2000):
-    """Distributed Turtle(-star) ingestion — see
-    :func:`_read_turtle_like_df` for the chunk-parallel scheme and the
-    per-source-file prefix scoping."""
-    return _read_turtle_like_df(spark, path, statements_per_chunk, parse_turtle)
+def _read_lines_tagged_df(spark, files, fmt):
+    """N-Triples/N-Quads: the text source splits plain files into line
+    partitions (and decompresses .gz/.bz2), and one ``mapInPandas``
+    parses each Arrow batch of lines.  Quoted-triple ids are content
+    hashes, so the mapping rows need no cross-task coordination."""
+    from kolibrie_spark.schema import TAGGED_RDF_SCHEMA
 
-
-_FRAME_CODEC_RE = re.compile(r"\.(?:zst|lz4)$", re.IGNORECASE)
-
-
-def _split_frame_files(path):
-    """Partition ``path`` into (frame_files, text_files): local .zst/.lz4
-    files the frame-index split planner handles vs everything else (which
-    stays on the Spark text source).  Returns ([], None) when the path is
-    not driver-listable — the caller keeps its current single-source plan.
-    Frame files route through :mod:`~kolibrie_spark.rdfio.framesplit`
-    whenever a decoder binds (wheel or vendored ctypes): Hadoop's
-    ZStandardCodec is stream-only and usually absent in local mode, so
-    without this the line readers cannot read .zst/.lz4 at all — and WITH
-    it, a multi-frame dump (pzstd / zstd --seekable / t2sz / concatenated
-    frames) splits across executors like bz2 blocks do."""
-    files = _local_paths(path)
-    if files is None:
-        return [], None
-    import os
-
-    # directory/glob listings skip hidden and metadata names the Hadoop
-    # text source would have skipped when it did the listing itself
-    # ('.part-*.crc', '_SUCCESS', in-progress temps) — but a file the
-    # caller NAMED explicitly is always honored
-    named = path if isinstance(path, (list, tuple)) else [path]
-    explicit = {os.path.abspath(p) for p in named if os.path.isfile(p)}
-    files = [
-        fp
-        for fp in files
-        if fp in explicit or not os.path.basename(fp).startswith((".", "_"))
-    ]
-    frame = [
-        fp
-        for fp in files
-        if _FRAME_CODEC_RE.search(fp) and _codec_direct_streamable(fp)
-    ]
-    in_frame = set(frame)
-    rest = [fp for fp in files if fp not in in_frame]
-    return frame, rest
-
-
-def _framesplit_parsed_df(
-    spark, files, schema, make_batches, target_bytes: int | None = None
-):
-    """Single-hop framesplit reader over .zst/.lz4 files: the DRIVER
-    walks each file's frame headers (a few bytes per block, no
-    decompression; the seekable-format seek table when present) and
-    plans ~``target_bytes``-DECOMPRESSED groups; each group becomes one
-    row of a tiny task DataFrame whose ``mapInPandas`` expansion
-    decompresses ONLY its span (plus a forward tail-line carry), turns
-    the group-owned (src, line) pairs into output rows via
-    ``make_batches`` — a callable running IN the task, so decode, parse
-    and Arrow-out all happen in one Python worker with no intermediate
-    line DataFrame crossing the JVM — and yields ``schema``-shaped
-    pandas frames.  One multi-frame 400 GB dump therefore scans with
-    genuine in-file parallelism — single-frame files degrade to one
-    task per file, which is still the only way a wheel-less local
-    cluster can read these codecs at all."""
-    import os
-
-    indexes = {fp: framesplit.frame_index(fp) for fp in files}
-    sizes = {fp: os.path.getsize(fp) for fp in files}
-    if target_bytes is None:
-        # adaptive granularity, the text source's own convention:
-        # ~128 MB decompressed per task, but never fewer than
-        # 2 x defaultParallelism tasks when the corpus allows (floored
-        # at 16 MB so tiny files don't shatter into no-op tasks)
-        total = sum(
-            framesplit.estimated_decompressed(indexes[fp], sizes[fp])
-            for fp in files
-        )
-        par = max(spark.sparkContext.defaultParallelism, 1)
-        target_bytes = max(16 << 20, min(128 << 20, total // (2 * par) or 1))
-    tasks = []
     for fp in files:
-        for i, (start, end) in enumerate(
-            framesplit.frame_groups_from_index(
-                indexes[fp], sizes[fp], target_bytes
-            )
-        ):
-            # explicit first-group flag: a leading skippable frame puts
-            # the first group at start > 0, which must still OWN its
-            # head line (framesplit.iter_group_lines docstring)
-            tasks.append((fp, int(start), int(end), int(sizes[fp]), i == 0))
-    if not tasks:
-        return spark.createDataFrame([], schema)
-    task_schema = "fp string, start long, end long, size long, first boolean"
-    # exact one-task-per-partition via parallelize slices, NOT
-    # repartition(n): round-robin repartition writes each input
-    # partition's rows CONSECUTIVELY from a random start offset, so a
-    # tiny task table collides into some targets and leaves others
-    # empty — measured 19 of 50 planned groups idle (verified identical
-    # with AQE on and off).  A leaf RDD's slicing is exact, and it
-    # saves the shuffle besides.
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, len(tasks)), task_schema
-    )
+        _codec(fp, _TEXT_SOURCE_CODECS)
 
-    def run(batches):
+    def parse(batches):
+        # the text source drops each file's BOM and line terminators
         for pdf in batches:
-            for fp, start, end, size, first in zip(
-                pdf["fp"], pdf["start"], pdf["end"], pdf["size"], pdf["first"]
-            ):
-                key = _norm_src(fp)
-                pairs = (
-                    (key, ln.decode("utf-8", "replace"))
-                    for ln in framesplit.iter_group_lines(
-                        fp, int(start), int(end), int(size), first=bool(first)
-                    )
-                )
-                # task_key uniquely names this group across the whole
-                # read (file path + compressed start offset) — parse
-                # routes fold it into anon-label salts so two groups
-                # sharing a Spark partition cannot mint colliding
-                # blank-node ids
-                yield from make_batches(pairs, f"{key}:{int(start)}")
+            text = "\n".join(pdf["value"])
+            yield from _tagged_frames(_tagged_rows(*_parse(text, fmt)))
 
-    return tdf.mapInPandas(run, schema)
+    return spark.read.text(files).mapInPandas(parse, TAGGED_RDF_SCHEMA)
 
 
-def _frame_pairs_batches(pairs, task_key=None, batch_rows: int = 100_000):
-    """Default ``make_batches``: (src, value) line frames, 100k rows per
-    Arrow batch (``task_key`` unused — raw lines carry no generated
-    ids)."""
-    import pandas as pd
+def _read_chunks_tagged_df(spark, files, fmt, per_chunk):
+    """Turtle/N3/RDF-XML (reference chunk-parallel parse,
+    sparql_database.rs:806-1141): one scan task per file streams it
+    through :func:`_turtle_stream_chunks` or :func:`_rdfxml_stream_chunks`
+    (a window plus one chunk of memory, whatever the file's size or
+    codec), and the chunk text repartitions to the parse tasks.
 
-    S: list = []
-    V: list = []
-    for key, val in pairs:
-        S.append(key)
-        V.append(val)
-        if len(V) >= batch_rows:
-            yield pd.DataFrame(
-                {
-                    "src": pd.Series(S, dtype=object),
-                    "value": pd.Series(V, dtype=object),
-                }
-            )
-            S, V = [], []
-    if V:
-        yield pd.DataFrame(
-            {
-                "src": pd.Series(S, dtype=object),
-                "value": pd.Series(V, dtype=object),
-            }
-        )
+    Turtle/N3 chunks parse with their file's @prefix map
+    (:func:`_collect_prefixes`, broadcast).  Blank-node labels are
+    document-scoped, so generated labels are salted per (file, chunk):
+    Turtle's anonymous '[ ]'/'( )' nodes, RDF/XML's anonymous genid
+    nodes; RDF/XML rdf:nodeID labels are salted per file, so one file's
+    chunks unify them and two files keep theirs apart (VERDICT r6
+    item #4)."""
+    import hashlib
 
+    from kolibrie_spark.schema import TAGGED_RDF_SCHEMA
 
-def _framesplit_lines_df(spark, files, target_bytes: int | None = None):
-    """(src, value) line DataFrame over .zst/.lz4 files via the
-    frame-index split plan — the generic lines surface of
-    :func:`_framesplit_parsed_df` (the Turtle/N-Triples readers use the
-    single-hop parsed variant instead)."""
-    from pyspark.sql.types import StringType, StructField, StructType
+    for fp in files:
+        _codec(fp, _STDLIB_CODECS)
+    sc = spark.sparkContext
+    window = SCAN_WINDOW_BYTES
 
-    lines_schema = StructType(
-        [StructField("src", StringType()), StructField("value", StringType())]
-    )
-    return _framesplit_parsed_df(
-        spark, files, lines_schema, _frame_pairs_batches, target_bytes
-    )
+    def salt(fp):
+        return hashlib.sha1(fp.encode("utf-8")).hexdigest()[:8]
 
-
-def read_turtle_lines_df(spark, path: str, tagged: bool = False):
-    """LINE-SAFE Turtle ingestion: for dumps whose statements are ONE PER
-    LINE (the shape machine-generated exports overwhelmingly have), the
-    splittable text source partitions even a SINGLE multi-hundred-GB
-    file across executors with ZERO extra scan work.  The general
-    reader's two-pass parallel FSM scan (r10) also parallelizes huge
-    single files — with full Turtle fidelity but ~3x scan work — so
-    this reader remains the cheapest plan where its one-statement-per-
-    line contract holds (BASELINE.md r10: 15.2 s vs 14.3 s general-
-    parallel vs 42.8 s general-sequential on the same 1 GB file).
-
-    Opt-in contract, enforced loudly: every non-directive line must be a
-    complete statement ('.'-terminated; ';'/','/annotations WITHIN the
-    line are fine — the full per-line parser handles them).  A
-    continuation line or a statement spanning lines raises
-    RdfParseError naming this reader, telling the caller to use
-    read_turtle_df.  The one shape that cannot be detected per line —
-    a raw-newline short string whose interior line happens to parse as
-    a statement — is the same record-must-not-contain-raw-newlines
-    contract every line-splittable text format (and the reference's own
-    line-oriented Turtle parser, kolibrie/src/sparql_database.rs:966)
-    imposes.
-
-    Prefixes come from the per-file 64 KiB head pass
-    (:func:`_collect_prefixes`), broadcast like the offsets reader's.
-    ``tagged=True`` keeps the quoted-triple qid<->(s,p,o) mapping rows
-    annotation lines carry (kind='t'), like the other tagged readers."""
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.schema import QUADS_SCHEMA, TAGGED_RDF_SCHEMA
-
-    prefixes_by_file = spark.sparkContext.broadcast(_collect_prefixes(spark, path))
-    out_schema = TAGGED_RDF_SCHEMA if tagged else QUADS_SCHEMA
-
-    def run(batches):
-        def pairs():
-            for pdf in batches:
-                yield from zip(pdf["src"], pdf["value"])
-
-        yield from _turtle_line_batches(
-            pairs(), prefixes_by_file.value, tagged
-        )
-
-    def frame_batches(pairs, task_key):
-        import hashlib
-
-        # per-group salt, the offsets path's f{filehash}o{offset} scheme
-        gsalt = hashlib.sha1(task_key.encode("utf-8")).hexdigest()[:8]
-        yield from _turtle_line_batches(
-            pairs, prefixes_by_file.value, tagged, salt=f"g{gsalt}."
-        )
-
-    parts = []
-    frame_files, rest = _split_frame_files(path)
-    if frame_files:
-        # .zst/.lz4 dumps: frame-index split plan, SINGLE-HOP — decode,
-        # per-line parse and Arrow-out all inside the group task (the
-        # two-hop lines-then-parse pipeline measured 99.5 s vs 15.5 s
-        # lines-only on the 30M-row probe: the second Arrow crossing
-        # and re-batching dominated) — in-file parallel for multi-frame
-        # files; the only readable route in wheel-less local mode
-        # either way.  Everything else stays on the text source.
-        parts.append(
-            _framesplit_parsed_df(spark, frame_files, out_schema, frame_batches)
-        )
-    if rest or not frame_files:
-        lines = spark.read.text(rest if frame_files else path).select(
-            F.input_file_name().alias("src"), "value"
-        )
-        parts.append(lines.mapInPandas(run, out_schema))
-    df = parts[0]
-    for extra in parts[1:]:
-        df = df.unionByName(extra)
-    return df
-
-
-def _turtle_line_batches(pairs, by_file, tagged, salt: str = ""):
-    """Shared per-line Turtle parse for the line-safe readers:
-    ``pairs`` yields (src, line); yields QUADS/TAGGED-shaped pandas
-    frames of 100k rows.  Runs inside a task — both the text-source
-    ``mapInPandas`` and the framesplit group tasks delegate here, so
-    the two routes cannot drift.  ``salt`` scopes generated blank-node
-    labels: the framesplit route passes a per-group hash (one partition
-    can run SEVERAL groups, and the text stage of the same union reuses
-    partition ids — pid alone would mint colliding '[ ]' labels across
-    them)."""
-    import pandas as pd
-
-    from kolibrie_spark.rdfio.parsers import (
-        _EMPTY_PREFIXES,
-        _PREFIX_RE,
-        _SIMPLE_LINE_RE,
-        RdfParseError,
-        _fast_term,
-        parse_turtle,
-    )
-
-    pfx_cache: dict = {}
-    try:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-    except Exception:
-        pid = 0
-    n_slow = 0  # slow-path line ordinal: the '[ ]' anon-label salt
-
-    def frame(S, P, O, QT):
-        if not tagged:
-            return pd.DataFrame(
-                {
-                    "s": pd.Series(S, dtype=object),
-                    "p": pd.Series(P, dtype=object),
-                    "o": pd.Series(O, dtype=object),
-                    "g": pd.Series([None] * len(S), dtype=object),
-                }
-            )
-        return pd.DataFrame(
-            {
-                "kind": pd.Series(
-                    ["q"] * len(S) + ["t"] * len(QT), dtype=object
-                ),
-                "t1": pd.Series(S + [q[0] for q in QT], dtype=object),
-                "t2": pd.Series(P + [q[1] for q in QT], dtype=object),
-                "t3": pd.Series(O + [q[2] for q in QT], dtype=object),
-                "t4": pd.Series(
-                    [None] * len(S) + [q[3] for q in QT], dtype=object
-                ),
-            }
-        )
-
-    S: list = []
-    P: list = []
-    O: list = []
-    QT: list = []
-    for src, raw in pairs:
-        line = raw.lstrip("\ufeff").strip()
-        if not line or line.startswith("#"):
-            continue
-        if _PREFIX_RE.match(line):
-            continue  # declarations come from the head pass
-        pfx = pfx_cache.get(src)
-        if pfx is None:
-            pfx = by_file.get(_norm_src(src), _EMPTY_PREFIXES)
-            pfx_cache[src] = pfx
-        fm = _SIMPLE_LINE_RE.fullmatch(line)
-        if fm:
-            S.append(_fast_term(fm.group(1), pfx))
-            P.append(_fast_term(fm.group(2), pfx))
-            O.append(_fast_term(fm.group(3), pfx))
-            if len(S) >= 100_000:
-                yield frame(S, P, O, QT)
-                S, P, O, QT = [], [], [], []
-            continue
-        try:
-            # '[ ]' counters restart per LINE here — salt with
-            # (partition id, line ordinal) like the chunk paths
-            n_slow += 1
-            triples, _quoted, _ = parse_turtle(
-                line, prefixes=pfx, anon_prefix=f"{salt}p{pid}l{n_slow}."
-            )
-        except RdfParseError as e:
-            raise RdfParseError(
-                f"read_turtle_lines_df requires one complete "
-                f"statement per line; offending line: {line[:120]!r}"
-                f" ({e}) — use read_turtle_df for general Turtle"
-            ) from e
-        for s, p, o in triples:
-            S.append(s)
-            P.append(p)
-            O.append(o)
-        if tagged:
-            QT.extend(_quoted)
-        if len(S) + len(QT) >= 100_000:
-            yield frame(S, P, O, QT)
-            S, P, O, QT = [], [], [], []
-    if S or QT:
-        yield frame(S, P, O, QT)
-
-
-def write_rdf_zst(df, out_dir: str, fmt: str = "ntriples",
-                  frame_bytes: int = 32 << 20, level: int = 3,
-                  quoted_rows=(), codec: str = "zst"):
-    """Distributed SPLITTABLE compressed export: each partition of the
-    quads DataFrame serializes to N-Triples/N-Quads lines and writes ONE
-    multi-frame ``part-NNNNN.{nt,nq}.zst`` under ``out_dir`` — one zstd
-    frame per ~``frame_bytes`` decompressed (the pzstd shape, emitted by
-    the vendored one-shot ``ZSTD_compress``; frames record their content
-    size).  Any zstd tool reads the output (concatenated frames are a
-    legal stream), and :func:`read_ntriples_df`/:func:`read_nquads_df`
-    split it back IN-FILE via the frame index — the write->read round
-    trip stays parallel at both ends at any file size.  Tasks write to a
-    ``.inprogress.<attempt>`` temp and ``os.replace`` at the end, so a
-    retried task never leaves a torn file.  Returns the manifest (one
-    dict per non-empty partition: path, rows, bytes) — bounded by the
-    partition count, like any writer's commit summary.
-
-    ``quoted_rows`` is the RDF-star qid<->(s,p,o) mapping set (the
-    QUOTED_SCHEMA rows); with it, qt:<id> surrogate terms serialize as
-    ``<< s p o >>`` (N-Triples-star) instead of degrading to opaque
-    literals.  It ships inside the task closure like the prefix maps —
-    the same small-mapping-set assumption ``load_distributed`` makes.
-
-    ``codec="lz4"`` writes lz4 frames instead (Content_Size stamped, so
-    the split planner still groups by decompressed size)."""
-    import os
-
-    from kolibrie_spark.rdfio import lz4_ctypes, zstd_ctypes
-
-    if codec == "zst":
-        if not (
-            _optional_codec_available("zstandard") or zstd_ctypes.available()
-        ):
-            raise ImportError(
-                "write_rdf_zst needs libzstd (vendored ctypes shim) or the "
-                "zstandard package"
-            )
-    elif codec == "lz4":
-        if not lz4_ctypes.available():
-            raise ImportError("write_rdf_zst(codec='lz4') needs liblz4")
-    else:
-        raise ValueError(f"unknown codec {codec!r}: zst or lz4")
-    fmt = FORMAT_ALIASES[fmt.lower()]
-    if fmt not in ("ntriples", "nquads"):
-        raise ValueError(f"write_rdf_zst serializes ntriples/nquads, not {fmt}")
-    ext = "nt" if fmt == "ntriples" else "nq"
-    os.makedirs(out_dir, exist_ok=True)
-    quoted_rows = [tuple(r) for r in quoted_rows]
-
-    def run(batches):
-        import pandas as pd
-
-        from kolibrie_spark.rdfio.serializers import (
-            serialize_nquads,
-            serialize_ntriples,
-        )
-
-        try:
-            from pyspark import TaskContext
-
-            ctx = TaskContext.get()
-            pid, attempt = ctx.partitionId(), ctx.attemptNumber()
-        except Exception:
-            pid, attempt = 0, 0
-        final = os.path.join(out_dir, f"part-{pid:05d}.{ext}.{codec}")
-        # hidden-prefixed temp: a hard-killed task's leftover is invisible
-        # to the readers (the Hadoop convention _split_frame_files and the
-        # text source both honor), never a torn file poisoning the dir
-        tmp = os.path.join(
-            out_dir, f".part-{pid:05d}.{ext}.{codec}.inprogress.{attempt}"
-        )
-        out = None
-        buf: list[str] = []
-        size = 0
-        rows = 0
-
-        if codec == "lz4":
-            compress = lz4_ctypes.compress_frame
-        elif zstd_ctypes.available():
-            compress = zstd_ctypes.compress_frame
-        else:  # driver gate passed, so the wheel must be importable
-
-            def compress(b, lvl):
-                import zstandard
-
-                return zstandard.ZstdCompressor(level=lvl).compress(b)
-
-        def flush():
-            nonlocal out, buf, size
-            if not buf:
-                return
-            out.write(compress("".join(buf).encode("utf-8"), level))
-            buf, size = [], 0
-
-        try:
-            step = 1000  # serialize in slices so frames honor
-            # frame_bytes even when one Arrow batch carries the whole
-            # partition
-            for pdf in batches:
-                if out is None:
-                    out = open(tmp, "wb")
-                S, P, O = pdf["s"], pdf["p"], pdf["o"]
-                G = pdf["g"] if fmt == "nquads" else None
-                for lo in range(0, len(pdf), step):
-                    hi = lo + step
-                    if fmt == "ntriples":
-                        text = serialize_ntriples(
-                            zip(S[lo:hi], P[lo:hi], O[lo:hi]),
-                            quoted_rows=quoted_rows,
-                        )
-                    else:
-                        text = serialize_nquads(
-                            zip(S[lo:hi], P[lo:hi], O[lo:hi], G[lo:hi]),
-                            quoted_rows=quoted_rows,
-                        )
-                    buf.append(text)
-                    size += len(text)
-                    if size >= frame_bytes:
-                        flush()
-                rows += len(pdf)
-            if out is not None:
-                flush()
-                out.close()
-                out = None
-                os.replace(tmp, final)
-                yield pd.DataFrame(
-                    {
-                        "path": pd.Series([final], dtype=object),
-                        "rows": pd.Series([rows], dtype="int64"),
-                        "bytes": pd.Series(
-                            [os.path.getsize(final)], dtype="int64"
-                        ),
-                    }
-                )
-        finally:
-            if out is not None:
-                out.close()
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
-
-    manifest = df.mapInPandas(run, "path string, rows long, bytes long")
-    return [r.asDict() for r in manifest.collect()]
-
-
-def read_turtle_lines_tagged_df(spark, path: str):
-    """Line-safe Turtle as a TAGGED stream — quads plus quoted-triple
-    mappings, suitable for ``QuadStore.load_distributed``-style splits."""
-    return read_turtle_lines_df(spark, path, tagged=True)
-
-
-def read_turtle_tagged_df(spark, path: str, statements_per_chunk: int = 2000):
-    """Turtle(-star) as a TAGGED stream: quads plus the quoted-triple
-    qid<->(s,p,o) mapping rows an annotated corpus carries."""
-    return _read_turtle_like_df(
-        spark, path, statements_per_chunk, parse_turtle, tagged=True
-    )
-
-
-def read_n3_tagged_df(spark, path: str, statements_per_chunk: int = 2000):
-    return _read_turtle_like_df(
-        spark, path, statements_per_chunk, parse_n3, tagged=True
-    )
-
-
-def read_rdfxml_tagged_df(spark, path: str, elements_per_chunk: int = 500):
-    """RDF/XML has no quoted-triple syntax — the tagged stream is the
-    quad stream relabeled (kind='q' everywhere)."""
-    from pyspark.sql import functions as F
-
-    df = read_rdfxml_df(spark, path, elements_per_chunk)
-    return df.select(
-        F.lit("q").alias("kind"),
-        F.col("s").alias("t1"),
-        F.col("p").alias("t2"),
-        F.col("o").alias("t3"),
-        F.col("g").alias("t4"),
-    )
-
-
-def infer_format(path: str) -> str:
-    """Format from a file/dir/glob path's extension: a direct extension
-    match wins; a directory or glob is inferred from its first listed
-    file.  Raises KeyError like :func:`_parse` on unknown extensions."""
-    def ext_of(p: str) -> str:
-        p = _COMPRESSED_EXT_RE.sub("", p)
-        return p.rsplit(".", 1)[-1].lower()
-
-    ext = ext_of(path)
-    if ext in FORMAT_ALIASES:
-        return FORMAT_ALIASES[ext]
-    hits = _local_paths(path)
-    if hits:
-        return FORMAT_ALIASES[ext_of(hits[0])]
-    raise KeyError(ext)
-
-
-def read_rdf_tagged_df(spark, path: str, fmt: str):
-    """Dispatch a TAGGED distributed read by format name/alias.  The
-    extra name ``turtle-lines`` selects the line-safe in-file-parallel
-    Turtle path (one statement per line, loud error otherwise) so
-    ``QuadStore.load_distributed(path, fmt="turtle-lines")`` can ride
-    it for line-shaped dumps."""
-    if fmt.lower() in ("turtle-lines", "ttl-lines"):
-        return read_turtle_lines_tagged_df(spark, path)
-    fmt = FORMAT_ALIASES[fmt.lower()]
-    if fmt == "ntriples":
-        return read_ntriples_tagged_df(spark, path)
-    if fmt == "nquads":
-        return read_nquads_tagged_df(spark, path)
-    if fmt == "turtle":
-        return read_turtle_tagged_df(spark, path)
-    if fmt == "n3":
-        return read_n3_tagged_df(spark, path)
     if fmt == "rdfxml":
-        return read_rdfxml_tagged_df(spark, path)
-    raise ValueError(f"unknown format {fmt!r}")
+        per = per_chunk or ELEMENTS_PER_CHUNK
+
+        def chunks(f):
+            for _ci, root, body in _rdfxml_stream_chunks(f, per, window):
+                body = body.decode("utf-8", "replace")
+                yield (root + body + _close_tag_of(root)) if root else body
+
+        def parse(fp, ci, doc):
+            if not doc.strip():  # empty file: no document, no triples
+                return ()
+            h = salt(fp)
+            triples = parse_rdfxml(
+                doc, bnode_prefix=f"f{h}.", genid_prefix=f"f{h}c{ci}."
+            )
+            return _tagged_rows(((s, p, o, None) for s, p, o in triples), ())
+
+    else:
+        per = per_chunk or STATEMENTS_PER_CHUNK
+        parser = parse_turtle if fmt == "turtle" else parse_n3
+        prefixes = sc.broadcast(_collect_prefixes(files))
+
+        def chunks(f):
+            for ch in _turtle_stream_chunks(f, per, window):
+                yield ch.decode("utf-8", "replace")
+
+        def parse(fp, ci, text):
+            # directives stay in the scanned text (they count as
+            # statements there); the broadcast map replaces them
+            triples, quoted, _ = parser(
+                _TTL_DIRECTIVE_LINE_RE.sub("", text),
+                prefixes=prefixes.value.get(fp, {}),
+                anon_prefix=f"f{salt(fp)}c{ci}.",
+            )
+            return _tagged_rows(((s, p, o, None) for s, p, o in triples), quoted)
+
+    def scan(paths):
+        for fp in paths:
+            with _open_maybe_compressed(fp) as f:
+                for ci, text in enumerate(chunks(f)):
+                    yield (fp, ci, text)
+
+    def parse_batches(batches):
+        for pdf in batches:
+            yield from _tagged_frames(
+                row
+                for fp, ci, text in zip(pdf["path"], pdf["ci"], pdf["text"])
+                for row in parse(fp, int(ci), text)
+            )
+
+    scanned = sc.parallelize(files, len(files)).mapPartitions(scan)
+    return (
+        spark.createDataFrame(scanned, "path string, ci long, text string")
+        .repartition(sc.defaultParallelism)
+        .mapInPandas(parse_batches, TAGGED_RDF_SCHEMA)
+    )
+
+
+def read_rdf_tagged_df(spark, path, fmt: str, per_chunk: int | None = None):
+    """The TAGGED stream of the file(s) ``path`` names, read by the
+    distributed reader of ``fmt``'s syntax family: kind='q' rows carry
+    (s, p, o, g) in t1..t4, kind='t' rows the quoted-triple mappings
+    (qid, qs, qp, qo).  ``per_chunk`` sets the statements (Turtle/N3) or
+    top-level elements (RDF/XML) per parse chunk."""
+    from kolibrie_spark.schema import TAGGED_RDF_SCHEMA
+
+    fmt = _resolve_format(fmt)
+    files = _list_files(path)
+    if not files:
+        return spark.createDataFrame([], TAGGED_RDF_SCHEMA)
+    if fmt in ("ntriples", "nquads"):
+        return _read_lines_tagged_df(spark, files, fmt)
+    return _read_chunks_tagged_df(spark, files, fmt, per_chunk)
 
 
 def split_tagged(tagged):
@@ -3326,3 +792,30 @@ def split_tagged(tagged):
         .dropDuplicates(["qid"])
     )
     return quads, quoted
+
+
+# Quad-only views: the quads half of the tagged stream.
+def read_ntriples_df(spark, path):
+    return split_tagged(read_rdf_tagged_df(spark, path, "ntriples"))[0]
+
+
+def read_nquads_df(spark, path):
+    return split_tagged(read_rdf_tagged_df(spark, path, "nquads"))[0]
+
+
+def read_turtle_df(spark, path, statements_per_chunk: int | None = None):
+    return split_tagged(
+        read_rdf_tagged_df(spark, path, "turtle", statements_per_chunk)
+    )[0]
+
+
+def read_n3_df(spark, path, statements_per_chunk: int | None = None):
+    return split_tagged(
+        read_rdf_tagged_df(spark, path, "n3", statements_per_chunk)
+    )[0]
+
+
+def read_rdfxml_df(spark, path, elements_per_chunk: int | None = None):
+    return split_tagged(
+        read_rdf_tagged_df(spark, path, "rdfxml", elements_per_chunk)
+    )[0]

@@ -253,12 +253,15 @@ class QuadStore:
 
     def load_distributed(self, path: str, fmt: str | None = None) -> int:
         """Bulk-load serialized RDF (a file, directory, or glob) through
-        the DISTRIBUTED readers — the 100 TB ingest path, unlike
-        :func:`rdfio.load_into` which parses on the driver.  The tagged
-        stream parses ONCE (checkpointed), then splits into quads and
-        the quoted-triple qid<->(s,p,o) mappings, so a Turtle-star corpus
-        with ``{| |}`` annotations stays fully queryable by the RDF-star
-        builtins (VERDICT r9 #1; reference semantics
+        the distributed reader of its syntax family
+        (:func:`rdfio.read_rdf_tagged_df`: a line parse over the text
+        source for N-Triples/N-Quads, a per-file windowed chunk scan for
+        Turtle/N3/RDF-XML), unlike :func:`rdfio.load_into`, which parses
+        on the driver.  ``fmt`` defaults to the path's extension.  The
+        tagged stream parses ONCE (checkpointed), then splits into quads
+        and the quoted-triple qid<->(s,p,o) mappings, so a Turtle-star
+        corpus with ``{| |}`` annotations stays fully queryable by the
+        RDF-star builtins (VERDICT r9 #1; reference semantics
         shared/src/quoted_triple_store.rs:14-33 — every interned id
         resolvable).  Mapping ids are content hashes emitted
         distributively from the parse tasks; dedup is a hash shuffle on
@@ -284,28 +287,6 @@ class QuadStore:
             self.register_graphs(gs)
         self.insert_quoted(quoted)
         return n
-
-    def export_zst(
-        self, out_dir: str, fmt: str = "ntriples",
-        frame_bytes: int = 32 << 20, codec: str = "zst",
-    ) -> list:
-        """Splittable compressed dump of the store: one multi-frame
-        ``part-*.{nt,nq}.zst`` per partition (``rdfio.write_rdf_zst``) —
-        readable by any zstd tool, re-loadable IN-FILE-parallel through
-        ``load_distributed``.  Quoted-triple mappings ride along so
-        qt:<id> surrogates serialize as ``<< s p o >>`` (lossless
-        RDF-star round trip via the tagged readers).  Returns the
-        per-file manifest."""
-        from kolibrie_spark import rdfio
-
-        return rdfio.write_rdf_zst(
-            self.quads,
-            out_dir,
-            fmt=fmt,
-            frame_bytes=frame_bytes,
-            quoted_rows=[tuple(r) for r in self.quoted.collect()],
-            codec=codec,
-        )
 
     def add_quads(self, rows: list[tuple]) -> None:
         """rows of (s,p,o) or (s,p,o,g), added through the delta."""

@@ -55,10 +55,6 @@ _SLOW_TESTS = {
     "test_nquads_roundtrip_exact",
     "test_turtle_roundtrip_exact",
     "test_rdfxml_roundtrip_exact",
-    # splittable-ingest direct-stream e2e (format coverage stays via the
-    # multiframe reader/writer unit tests)
-    "test_lz4_direct_stream_end_to_end",
-    "test_zst_direct_stream_end_to_end",
     # reasoner scenario composites (unit-level rule tests stay default)
     "test_query_with_repairs_iar_semantics",
     "test_ml_bound_conclusions_across_scenarios",

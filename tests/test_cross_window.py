@@ -236,69 +236,6 @@ def test_cli_distributed_load(tmp_path, capsys):
     assert capsys.readouterr().out.strip() == "0.9"
 
 
-def test_cli_export_zst_round_trip(tmp_path, capsys):
-    """--export-zst dumps the store as splittable multi-frame .zst that
-    a second CLI invocation re-loads with --distributed."""
-    import pytest
-
-    from kolibrie_spark.rdfio import zstd_ctypes as Z
-
-    if not Z.available():
-        pytest.skip("no libzstd on this box")
-    from kolibrie_spark.cli import main
-
-    f = tmp_path / "d.nt"
-    f.write_text("".join(
-        f'<urn:s{i}> <urn:p> "{i}" .\n' for i in range(200)
-    ))
-    out = tmp_path / "dump"
-    rc = main(
-        [
-            "--file", str(f),
-            "--export-zst", str(out),
-            "--master", "local[2]",
-        ]
-    )
-    assert rc == 0
-    assert "exported 200 quads" in capsys.readouterr().out
-    rc = main(
-        [
-            "--file", str(out), "--distributed", "--format", "ntriples",
-            "--query",
-            "SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o }",
-            "--master", "local[2]",
-        ]
-    )
-    assert rc == 0
-    assert capsys.readouterr().out.strip() == "200"
-
-
-def test_cli_export_codec_lz4(tmp_path, capsys):
-    import pytest
-
-    from kolibrie_spark.rdfio import lz4_ctypes as L
-
-    if not L.available():
-        pytest.skip("no liblz4 on this box")
-    import glob
-
-    from kolibrie_spark.cli import main
-
-    f = tmp_path / "d.nt"
-    f.write_text('<urn:a> <urn:p> "1" .\n<urn:b> <urn:p> "2" .\n')
-    out = tmp_path / "dump"
-    rc = main(
-        [
-            "--file", str(f),
-            "--export-zst", str(out), "--export-codec", "lz4",
-            "--master", "local[2]",
-        ]
-    )
-    assert rc == 0
-    assert "exported 2 quads" in capsys.readouterr().out
-    assert glob.glob(str(out / "*.nt.lz4"))
-
-
 # ------------------------------------------------------ repairs + prov tags
 def test_constraint_repairs(spark):
     from kolibrie_spark.reasoner import Reasoner, Rule as R

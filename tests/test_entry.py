@@ -1,5 +1,6 @@
-"""Driver-contract sanity: queries()/oracle_sql() stay consistent and the
-flagship entry runs on the smoke scale factor."""
+"""Driver-contract sanity: queries()/oracle_sql() stay consistent, the
+name registries (_DRIVER_FIRST, conftest's _SLOW_TESTS) name real
+entries, and the flagship entry runs on the smoke scale factor."""
 
 import __spark_entry__ as entry_mod
 
@@ -24,6 +25,25 @@ def test_driver_first_names_are_queries():
     qs = entry_mod.queries()
     stale = [k for k in entry_mod._DRIVER_FIRST if k not in qs]
     assert not stale, f"_DRIVER_FIRST names missing from queries(): {stale}"
+
+
+def test_slow_test_names_are_defined():
+    # conftest marks tests slow by bare name, so a test renamed or
+    # deleted would leave a stale _SLOW_TESTS entry that marks nothing
+    import ast
+    import pathlib
+
+    import conftest
+
+    here = pathlib.Path(__file__).resolve().parent
+    defined = {
+        node.name
+        for f in here.glob("test_*.py")
+        for node in ast.walk(ast.parse(f.read_text(encoding="utf-8")))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    stale = sorted(conftest._SLOW_TESTS - defined)
+    assert not stale, f"_SLOW_TESTS names no test defines: {stale}"
 
 
 def test_entry_smoke(spark):

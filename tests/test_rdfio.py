@@ -1,9 +1,14 @@
 """Ingestion/serialization round trips (FIXTURES.md §8): parse → serialize
 → parse equals the original quad set, in each format the reference parses."""
 
+import io
+import re
+
 import pytest
 
+import kolibrie_spark.rdfio as R
 from kolibrie_spark.rdfio.parsers import (
+    _PREFIX_RE,
     RdfParseError,
     parse_nquads,
     parse_ntriples,
@@ -16,6 +21,134 @@ from kolibrie_spark.rdfio.serializers import (
     serialize_rdfxml,
     serialize_turtle,
 )
+
+
+def _turtle_statement_chunks(text: str, per_chunk: int, window_bytes: int = 0):
+    """The kept chunker, :func:`R._turtle_stream_chunks`, over a whole
+    text with its directive lines dropped first (as the slow oracle
+    drops them), decoded back to str."""
+    body = R._TTL_DIRECTIVE_LINE_RE.sub("", text).encode("utf-8")
+    return [
+        c.decode("utf-8")
+        for c in R._turtle_stream_chunks(io.BytesIO(body), per_chunk, window_bytes)
+    ]
+
+
+def _turtle_statement_chunks_slow(text: str, per_chunk: int):
+    """Reference oracle for the Turtle chunker: the original
+    per-character scan, with @prefix and comment lines dropped first."""
+    body = "\n".join(
+        line
+        for line in text.splitlines()
+        if not (_PREFIX_RE.match(line.strip()) or line.strip().startswith("#"))
+    )
+    chunks: list[str] = []
+    start = 0
+    n_stmts = 0
+    i, n = 0, len(body)
+    while i < n:
+        c = body[i]
+        if c == "<":  # IRI: skip to closing '>'
+            j = body.find(">", i + 1)
+            i = n if j < 0 else j + 1
+            continue
+        if c in ('"', "'"):
+            if body[i : i + 3] in ('"""', "'''"):  # long string
+                # escape-aware first-triple closer (ADVICE r10): a
+                # backslash consumes two chars, mirroring the statement
+                # regexes' long branches
+                j = i + 3
+                while j < n:
+                    if body[j] == "\\":
+                        j += 2
+                    elif body[j] == c and body[j : j + 3] == c * 3:
+                        break
+                    else:
+                        j += 1
+                i = n if j >= n else j + 3
+            else:
+                j = i + 1
+                while j < n and body[j] != c:
+                    j += 2 if body[j] == "\\" else 1
+                i = j + 1
+            continue
+        if c == "#":  # comment to end of line
+            j = body.find("\n", i)
+            i = n if j < 0 else j + 1
+            continue
+        if c == "." and (i + 1 >= n or body[i + 1].isspace()):
+            n_stmts += 1
+            if n_stmts >= per_chunk:
+                chunks.append(body[start : i + 1])
+                start = i + 1
+                n_stmts = 0
+        i += 1
+    if body[start:].strip():
+        chunks.append(body[start:])
+    return chunks
+
+
+def _ttl_whole_chunks(raw: bytes, per: int) -> list[bytes]:
+    """Whole-buffer oracle for the windowed scan: repeated matches of
+    1..per fallback-bearing statements over the complete bytes, with an
+    unterminated tail as a last chunk."""
+    pat = re.compile(f"(?:{R._TTL_STMT}){{1,{per}}}+".encode("ascii"))
+    out, pos, n = [], 0, len(raw)
+    while pos < n:
+        m = pat.match(raw, pos)
+        if m is None:
+            break
+        out.append(raw[pos : m.end()])
+        pos = m.end()
+    if raw[pos:].strip():
+        out.append(raw[pos:])
+    return out
+
+
+def _rdfxml_whole_chunks(raw: bytes, per: int):
+    """Whole-document oracle for the windowed RDF/XML scan: one token
+    pass over the complete bytes finds every top-level element span; the
+    rows group ``per`` spans under the root tag, or are the single
+    ``(0, None, raw)`` row for an unsplittable document."""
+    depth = 0
+    root_open = None
+    spans = []
+    el_start = -1
+    for m in R._XML_TOKEN_RE_B.finditer(raw):
+        tok = m.group(0)
+        if tok.startswith((b"<!--", b"<![", b"<?", b"<!")):
+            continue
+        if tok.startswith(b"</"):
+            depth -= 1
+            if depth == 1 and el_start >= 0:
+                spans.append((el_start, m.end()))
+                el_start = -1
+            elif depth == 0:
+                break
+            continue
+        selfclose = tok.endswith(b"/>")
+        if depth == 0:
+            if selfclose:  # <rdf:RDF/> — empty document
+                return [(0, None, raw)]
+            root_open = tok
+            depth = 1
+            continue
+        if depth == 1:
+            if selfclose:
+                spans.append((m.start(), m.end()))
+            else:
+                el_start = m.start()
+                depth = 2
+        elif not selfclose:
+            depth += 1
+    if root_open is None or len(spans) <= per:
+        return [(0, None, raw)]
+    root = root_open.decode("utf-8", "replace")
+    return [
+        (k, root, raw[spans[i][0] : spans[i : i + per][-1][1]])
+        for k, i in enumerate(range(0, len(spans), per))
+    ]
+
 
 NT = """
 <http://ex/alice> <http://ex/name> "Alice" .
@@ -257,8 +390,6 @@ def test_turtle_chunker_edges():
     """_turtle_statement_chunks must not split inside long strings,
     IRIs, or comments, and must handle trailing statements without a
     final newline."""
-    from kolibrie_spark.rdfio import _turtle_statement_chunks
-
     text = (
         '@prefix ex: <http://ex/> .\n'
         'ex:a ex:doc """multi. line. literal.\nwith \'quotes\' and . dots""" .\n'
@@ -320,7 +451,7 @@ def test_single_file_rdfxml_chunk_parallel_roundtrip(spark, tmp_path):
     chunks and still produce the whole-document triple set (modulo
     blank-node relabeling), with rdf:ID/xml:base resolution and
     rdf:nodeID unification working across chunk boundaries."""
-    from kolibrie_spark.rdfio import _rdfxml_chunks, read_rdfxml_df
+    from kolibrie_spark.rdfio import read_rdfxml_df
     from kolibrie_spark.rdfio.parsers import parse_rdfxml
 
     n = 40
@@ -341,7 +472,8 @@ def test_single_file_rdfxml_chunk_parallel_roundtrip(spark, tmp_path):
     f = tmp_path / "one.rdf"
     f.write_text(xml)
 
-    assert len(_rdfxml_chunks(xml, 7)) > 1  # >1 parse tasks from ONE file
+    # >1 parse tasks from ONE file
+    assert len(list(R._rdfxml_stream_chunks(io.BytesIO(xml.encode()), 7))) > 1
 
     got = [tuple(r) for r in read_rdfxml_df(spark, str(f), elements_per_chunk=7).collect()]
     want = [(s, p, o, None) for s, p, o in parse_rdfxml(xml)]
@@ -403,11 +535,6 @@ def test_regex_chunker_matches_percharacter_scan():
     IRIs/literals/comments, decimals, long strings of both quote styles,
     escaped quotes, multi-statement lines, directives, and malformed
     tails."""
-    from kolibrie_spark.rdfio import (
-        _turtle_statement_chunks,
-        _turtle_statement_chunks_slow,
-    )
-
     cases = [
         'ex:a ex:b "dot . inside" .\nex:c ex:d "x" .',
         'ex:a ex:b """long\nstring . with dots.\n""" .\nex:c ex:d ex:e .',
@@ -430,15 +557,16 @@ def test_regex_chunker_matches_percharacter_scan():
     norm = lambda cs: [" ".join(c.split()) for c in cs]  # noqa: E731
     for i, text in enumerate(cases):
         for per_chunk in (1, 2, 1000):
-            fast = norm(_turtle_statement_chunks(text, per_chunk))
             slow = norm(_turtle_statement_chunks_slow(text, per_chunk))
-            assert fast == slow, (i, per_chunk, fast, slow)
+            for win in (0, 5):
+                fast = norm(_turtle_statement_chunks(text, per_chunk, win))
+                assert fast == slow, (i, per_chunk, win, fast, slow)
 
 
 def test_offset_reader_handles_multibyte_utf8(spark, tmp_path):
-    """The offset-based reader scans BYTES and parse tasks do ranged
-    reads; multi-byte UTF-8 literals (and a directive line that must be
-    dropped per-slice) must survive with exact values."""
+    """The chunk reader scans BYTES and cuts them at statement ends;
+    multi-byte UTF-8 literals (and a directive line that must be
+    dropped per chunk) must survive with exact values."""
     from kolibrie_spark.rdfio import parse_turtle, read_turtle_df
 
     body = "@prefix ex: <http://ex/> .\n" + "".join(
@@ -459,8 +587,8 @@ def test_offset_reader_handles_multibyte_utf8(spark, tmp_path):
 
 
 def test_rdfxml_offset_reader_multibyte_split(spark, tmp_path):
-    """The r9 byte-offset RDF/XML reader slices raw bytes at top-level
-    element boundaries; multi-byte UTF-8 literals inside a FORCED split
+    """The RDF/XML chunk reader slices raw bytes at top-level element
+    boundaries; multi-byte UTF-8 literals inside a FORCED split
     (elements_per_chunk smaller than the element count) must survive
     with exact values, matching the driver-side parse."""
     from kolibrie_spark.rdfio import parse_rdfxml, read_rdfxml_df
@@ -582,52 +710,6 @@ def test_ntriples_nquads_fast_path_matches_tokenizer_path():
     assert fast_q == slow_q
 
 
-def test_shuffle_fallback_readers_match_offset_readers(spark, tmp_path):
-    """Non-listable paths (hdfs://, s3://) take the text-shuffle fallback
-    readers; local tests always take the offsets path, so exercise the
-    fallbacks DIRECTLY against the same corpus to keep them from
-    rotting."""
-    from kolibrie_spark.rdfio import (
-        _read_rdfxml_shuffle_df,
-        _read_turtle_like_shuffle_df,
-        parse_turtle,
-        read_rdfxml_df,
-        read_turtle_df,
-    )
-
-    d = tmp_path / "ttl"
-    d.mkdir()
-    for f in range(2):
-        (d / f"f{f}.ttl").write_text(
-            f"@prefix ex: <http://d{f}/> .\n"
-            + "".join(f'ex:s{i} ex:p "v {i} é" .\n' for i in range(25))
-        )
-    main = sorted(tuple(r) for r in read_turtle_df(spark, str(d), statements_per_chunk=7).collect())
-    fb = sorted(
-        tuple(r)
-        for r in _read_turtle_like_shuffle_df(spark, str(d), 7, parse_turtle).collect()
-    )
-    assert main == fb and len(main) == 50
-
-    x = tmp_path / "xml"
-    x.mkdir()
-    items = "".join(
-        f'  <rdf:Description rdf:about="http://e/s{i}">'
-        f"<ex:name>n{i} é</ex:name></rdf:Description>\n"
-        for i in range(20)
-    )
-    (x / "a.rdf").write_text(
-        '<?xml version="1.0"?>\n<rdf:RDF '
-        'xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" '
-        'xmlns:ex="http://e/">\n' + items + "</rdf:RDF>"
-    )
-    main_x = sorted(tuple(r) for r in read_rdfxml_df(spark, str(x), elements_per_chunk=6).collect())
-    fb_x = sorted(
-        tuple(r) for r in _read_rdfxml_shuffle_df(spark, str(x), 6).collect()
-    )
-    assert main_x == fb_x and len(main_x) == 20
-
-
 def test_turtle_fast_path_raw_newline_short_string():
     """ADVICE r9 (medium): a short string containing RAW newlines must not
     be split by the fast path — the interior line must not be extracted
@@ -687,11 +769,6 @@ def test_turtle_chunker_crlf_matches_slow_oracle():
     """ADVICE r9: CRLF-terminated @prefix/comment lines must be removed by
     the fast chunker's directive sub so chunk boundaries match the slow
     per-line oracle on CRLF files."""
-    from kolibrie_spark.rdfio import (
-        _turtle_statement_chunks,
-        _turtle_statement_chunks_slow,
-    )
-
     text = (
         "@prefix ex: <http://e.org/> .\r\n"
         "ex:a ex:b ex:c .\r\n"
@@ -702,45 +779,10 @@ def test_turtle_chunker_crlf_matches_slow_oracle():
     )
     norm = lambda cs: [" ".join(c.split()) for c in cs]  # noqa: E731
     for per_chunk in (1, 2, 1000):
-        fast = norm(_turtle_statement_chunks(text, per_chunk))
         slow = norm(_turtle_statement_chunks_slow(text, per_chunk))
-        assert fast == slow, (per_chunk, fast, slow)
-
-
-def test_offsets_gate_requires_local_master_or_shared_fs(spark, tmp_path, monkeypatch):
-    """ADVICE r9: the offset readers have executor tasks open() driver-
-    listed paths, so they engage only under a local master unless the
-    deployment declares a shared filesystem (SHARED_FS)."""
-    import kolibrie_spark.rdfio as R
-
-    class _Ctx:
-        def __init__(self, master):
-            self.master = master
-
-    class _FakeSpark:
-        def __init__(self, master):
-            self.sparkContext = _Ctx(master)
-
-    assert R._offsets_usable(_FakeSpark("local[32]"))
-    assert R._offsets_usable(_FakeSpark("local"))
-    assert not R._offsets_usable(_FakeSpark("spark://host:7077"))
-    assert not R._offsets_usable(_FakeSpark("yarn"))
-    monkeypatch.setattr(R, "SHARED_FS", True)
-    assert R._offsets_usable(_FakeSpark("spark://host:7077"))
-    monkeypatch.setattr(R, "SHARED_FS", False)
-
-    # wiring: with the gate forced off, the readers still produce the
-    # same triples through the shuffle fallback
-    d = tmp_path / "gate"
-    d.mkdir()
-    (d / "a.ttl").write_text(
-        "@prefix ex: <http://e/> .\n"
-        + "".join(f'ex:s{i} ex:p "v{i}" .\n' for i in range(10))
-    )
-    want = sorted(tuple(r) for r in R.read_turtle_df(spark, str(d)).collect())
-    monkeypatch.setattr(R, "_offsets_usable", lambda s: False)
-    got = sorted(tuple(r) for r in R.read_turtle_df(spark, str(d)).collect())
-    assert got == want and len(got) == 10
+        for win in (0, 7):
+            fast = norm(_turtle_statement_chunks(text, per_chunk, win))
+            assert fast == slow, (per_chunk, win, fast, slow)
 
 
 def test_fast_path_hit_rate_on_bulk_dump_shape():
@@ -823,7 +865,7 @@ def test_load_distributed_ntriples_star_and_nquads_graphs(spark, tmp_path):
     """The tagged line readers keep << >> mappings (N-Triples-star) and
     the store registers named graphs from a distributed N-Quads load."""
     from kolibrie_spark.engine import SparqlEngine
-    from kolibrie_spark.rdfio import read_ntriples_tagged_df, split_tagged
+    from kolibrie_spark.rdfio import read_rdf_tagged_df, split_tagged
 
     nt = tmp_path / "t.nt"
     nt.write_text(
@@ -831,7 +873,7 @@ def test_load_distributed_ntriples_star_and_nquads_graphs(spark, tmp_path):
         '<< <http://e/a> <http://e/p> "v" >> <http://e/conf> "0.9" .\n'
         '<< <http://e/b> <http://e/q> "w" >> <http://e/conf> "0.8" .\n'
     )
-    quads, quoted = split_tagged(read_ntriples_tagged_df(spark, str(nt)))
+    quads, quoted = split_tagged(read_rdf_tagged_df(spark, str(nt), "ntriples"))
     assert quads.count() == 3
     qrows = {(r.qs, r.qp, r.qo) for r in quoted.collect()}
     assert qrows == {("http://e/a", "http://e/p", "v"), ("http://e/b", "http://e/q", "w")}
@@ -871,12 +913,20 @@ def test_load_distributed_infer_format_and_count(spark, tmp_path):
     (d / "a.ttl").write_text(
         "@prefix ex: <http://e/> .\nex:a ex:p ex:b .\nex:a ex:p ex:b .\n"
     )
+    # Hadoop-convention hidden names in a listed directory are skipped,
+    # as the text source skips them; the chunk reader reads a hidden
+    # file named explicitly
+    (d / ".a.ttl.crc").write_bytes(b"\x00\x01binary junk")
+    (d / "_SUCCESS").write_text("")
     assert infer_format(str(d / "a.ttl")) == "turtle"
     assert infer_format(str(d)) == "turtle"
     store = QuadStore(spark)
     n = store.load_distributed(str(d))
     assert n == 2  # pre-dedup parse count, like load_into
     assert store.triple_count() == 1  # set semantics after dedup
+    hidden = tmp_path / ".explicit.ttl"
+    hidden.write_text("<http://e/x> <http://e/p> <http://e/o> .\n")
+    assert QuadStore(spark).load_distributed(str(hidden)) == 1
 
 
 def test_turtle_stream_bounds_match_whole_file_scan(tmp_path):
@@ -885,21 +935,6 @@ def test_turtle_stream_bounds_match_whole_file_scan(tmp_path):
     long strings, comments and multi-byte UTF-8 straddling window edges,
     window sizes down to 1 byte, and malformed tails (which defer to the
     EOF window's fallback semantics)."""
-    from kolibrie_spark.rdfio import _ttl_chunk_re_bytes, _turtle_stream_bounds
-
-    def whole(raw, per):
-        pat = _ttl_chunk_re_bytes(per)
-        out, pos, n = [], 0, len(raw)
-        while pos < n:
-            m = pat.match(raw, pos)
-            if m is None:
-                break
-            out.append((pos, m.end()))
-            pos = m.end()
-        if raw[pos:].strip():
-            out.append((pos, n))
-        return out
-
     cases = [
         "".join(f'ex:s{i} ex:p "v {i} é" .\n' for i in range(200)),
         'ex:a ex:b """long\nstring . with dots.\n""" .\nex:c ex:d ex:e .\n',
@@ -918,26 +953,17 @@ def test_turtle_stream_bounds_match_whole_file_scan(tmp_path):
         p = tmp_path / f"c{i}.ttl"
         p.write_bytes(raw)
         for per in (1, 7, 1000):
-            want = whole(raw, per)
+            want = _ttl_whole_chunks(raw, per)
             for win in (1, 17, 64, 1 << 20):
-                got = list(_turtle_stream_bounds(str(p), per, window_bytes=win))
+                with open(p, "rb") as f:
+                    got = list(R._turtle_stream_chunks(f, per, win))
                 assert got == want, (i, per, win, got[:4], want[:4])
 
 
 def test_rdfxml_stream_bounds_match_whole_file_scan(tmp_path):
-    """Windowed RDF/XML scan == whole-file _rdfxml_spans_bytes-derived
-    rows, including fat comments/CDATA with '>' inside straddling window
-    edges, self-closing roots, and unsplittable small documents."""
-    from kolibrie_spark.rdfio import _rdfxml_spans_bytes, _rdfxml_stream_bounds
-
-    def whole(raw, per):
-        root, spans = _rdfxml_spans_bytes(raw, per)
-        if root is None:
-            return [(0, 0, len(raw), None)]
-        return [
-            (k, spans[i][0], spans[i : i + per][-1][1], root)
-            for k, i in enumerate(range(0, len(spans), per))
-        ]
+    """Windowed RDF/XML scan == whole-document scan rows, including fat
+    comments/CDATA with '>' inside straddling window edges,
+    self-closing roots, and unsplittable small documents."""
 
     def doc(n, mid=""):
         items = "".join(
@@ -963,9 +989,10 @@ def test_rdfxml_stream_bounds_match_whole_file_scan(tmp_path):
         p = tmp_path / f"x{i}.rdf"
         p.write_bytes(raw)
         for per in (1, 7, 500):
-            want = whole(raw, per)
+            want = _rdfxml_whole_chunks(raw, per)
             for win in (1, 16, 256, 1 << 20):
-                got = list(_rdfxml_stream_bounds(str(p), per, window_bytes=win))
+                with open(p, "rb") as f:
+                    got = list(R._rdfxml_stream_chunks(f, per, win))
                 assert got == want, (i, per, win, got[:3], want[:3])
 
 
@@ -1032,199 +1059,6 @@ def test_rdfxml_reader_skips_empty_files(spark, tmp_path):
     assert got == [("http://e/s", "http://e/n", "v", None)]
 
 
-def test_read_turtle_lines_df_matches_general_reader(spark, tmp_path):
-    """The line-safe Turtle reader must equal read_turtle_df on
-    one-statement-per-line dumps (incl. same-line continuations and
-    annotations, prefix expansion, fast and slow lines), parallelize a
-    SINGLE file, and raise its named error on multi-line statements."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from kolibrie_spark.rdfio import read_turtle_df, read_turtle_lines_df
-    from kolibrie_spark.rdfio.parsers import RdfParseError
-
-    d = tmp_path / "lines"
-    d.mkdir()
-    (d / "a.ttl").write_text(
-        "@prefix ex: <http://e/> .\n"
-        "# comment line\n"
-        + "".join(f'ex:s{i} ex:p "v {i} é" .\n' for i in range(50))
-        + 'ex:m ex:p1 "a" ; ex:p2 "b" , "c" .\n'
-        + 'ex:ann ex:conf "x" {| ex:src "y" |} .\n'
-        + "unknown:q unknown:r unknown:t .\n"
-    )
-    want = sorted(tuple(r) for r in read_turtle_df(spark, str(d)).collect())
-    got = sorted(tuple(r) for r in read_turtle_lines_df(spark, str(d)).collect())
-    assert got == want and len(got) == 56
-
-    # single-file parallelism: with a small split size, one file becomes
-    # multiple input partitions
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
-        df = read_turtle_lines_df(spark, str(d / "a.ttl"))
-        assert df.rdd.getNumPartitions() > 1
-        assert df.count() == 56
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-
-    # multi-line statement: loud, named error
-    (d / "a.ttl").write_text(
-        "@prefix ex: <http://e/> .\nex:s ex:p\n    ex:o .\n"
-    )
-    with _pytest.raises(Exception, match="read_turtle_lines_df"):
-        read_turtle_lines_df(spark, str(d)).collect()
-
-
-def test_read_turtle_lines_tagged_keeps_mappings(spark, tmp_path):
-    """The line-safe reader's tagged variant must keep annotation-line
-    quoted-triple mappings, like every other tagged reader."""
-    from kolibrie_spark.rdfio import read_turtle_lines_tagged_df, split_tagged
-
-    f = tmp_path / "ann.ttl"
-    f.write_text(
-        "@prefix ex: <http://e/> .\n"
-        'ex:a ex:bal "1" {| ex:conf "0.9" |} .\n'
-        "ex:b ex:p ex:c .\n"
-    )
-    quads, quoted = split_tagged(read_turtle_lines_tagged_df(spark, str(f)))
-    assert quads.count() == 3  # base + annotation + plain
-    rows = [(r.qs, r.qp, r.qo) for r in quoted.collect()]
-    assert rows == [("http://e/a", "http://e/bal", "1")]
-
-
-def test_load_distributed_turtle_lines_format(spark, tmp_path):
-    """fmt='turtle-lines' routes load_distributed through the in-file-
-    parallel line-safe reader, mappings included."""
-    from kolibrie_spark.store import QuadStore
-
-    f = tmp_path / "lines.ttl"
-    f.write_text(
-        "@prefix ex: <http://e/> .\n"
-        'ex:a ex:bal "1" {| ex:conf "0.9" |} .\n'
-        "ex:b ex:p ex:c .\n"
-    )
-    store = QuadStore(spark)
-    n = store.load_distributed(str(f), fmt="turtle-lines")
-    assert n == 3
-    assert store.quoted.count() == 1
-
-
-def test_turtle_parallel_segments_match_sequential_scan(tmp_path):
-    """The two-pass parallel in-file scan must place EXACTLY the
-    sequential windowed scan's statement boundaries: at per_chunk=1 the
-    union of per-segment spans equals the whole-file span list — across
-    long/short strings with interior dots spanning range cuts,
-    raw-newline short strings, escapes at line ends, IRIs containing
-    newlines, comments, decimals, CRLF, multi-byte UTF-8, malformed
-    tails, and 250 random token-soup trials at range sizes down to 7
-    bytes."""
-    import random
-
-    from kolibrie_spark.rdfio import (
-        _turtle_parallel_segments_local,
-        _turtle_stream_bounds,
-    )
-
-    def seq(p):
-        return list(_turtle_stream_bounds(p, 1))
-
-    def par(p, rb):
-        out = []
-        for a, b in _turtle_parallel_segments_local(p, rb):
-            out.extend(_turtle_stream_bounds(p, 1, start=a, end=b))
-        return out
-
-    cases = [
-        "".join(f'ex:s{i} ex:p "v {i} é" .\n' for i in range(50)),
-        'ex:a ex:b """long\nstring . with dots.\nmore\n""" .\n'
-        "ex:c ex:d ex:e .\n",
-        'ex:a ex:b """' + ("x . y\n" * 100) + '""" .\nex:c ex:d ex:e .\n',
-        'ex:a ex:b "' + "A" * 500 + '" .\nex:c ex:d ex:e .\n',
-        'ex:a ex:b "café . 日本語" .\nex:c ex:d ex:e .\n',
-        'ex:a ex:b "" .\nex:q ex:r """" .\nex:c ex:d ex:e .\n',
-        "@prefix ex: <http://e/> .\r\nex:a ex:b ex:c .\r\nex:d ex:e ex:f .\r\n",
-        "ex:a <unterm ex:b ex:c .\nex:d ex:e ex:f .\n",
-        "ex:a ex:b ex:c . # tail comment",
-        'ex:a ex:b "unterminated',
-        'ex:a ex:b "raw\nnewline . inside\nstill" .\nex:c ex:d ex:e .\n',
-        'ex:a ex:b "esc at eol\\\n continued" .\nex:c ex:d ex:e .\n',
-        "ex:n ex:v 1.5 .\nex:m ex:w 2.75 .\n",
-        "ex:a ex:b <http://iri\nwith/newline> .\nex:c ex:d ex:e .\n",
-        "ex:a ex:b '''long sq\n . inside\n''' .\nex:c ex:d 'short . ' .\n",
-        '# only a comment with " quote and . dots\n',
-        "",
-        # r11 escape-aware long-string closer: escaped quote-runs and a
-        # trailing escaped quote, with newlines so range cuts land INSIDE
-        # the long string (exercises the LDQ/LSQ close regexes)
-        'ex:a ex:b """line one\nends with quote\\""""' " .\nex:c ex:d ex:e .\n",
-        'ex:a ex:b """a\\"""mid . dot\nmore\\"""tail""" .\nex:c ex:d ex:e .\n',
-        "ex:a ex:b '''sq\\'''\nrun . here''' .\nex:c ex:d ex:e .\n",
-        'ex:a ex:b """backslashes \\\\"""' " .\nex:c ex:d ex:e .\n",
-    ]
-    for i, text in enumerate(cases):
-        p = tmp_path / f"p{i}.ttl"
-        p.write_bytes(text.encode("utf-8"))
-        want = seq(str(p))
-        for rb in (7, 16, 64, 997, 1 << 20):
-            got = par(str(p), rb)
-            assert got == want, (i, rb, got[:5], want[:5])
-
-    rng = random.Random(20260816)
-    pieces = [
-        "ex:s ex:p ex:o .\n", " . ", ". ", '."', '" ', "' ", "<", ">",
-        "#c . \n", '"""', "'''", "\\", '\\"', "\n", "\r\n", "1.5 ",
-        "café 日本語 ", '"lit . ', 'x" .\n', "@prefix ex: <http://e/> .\n",
-        '{| ex:a "1" |}', "<< ex:a ex:b ex:c >>",
-        '"""block\n. dots\n""" ', "'sq' ", '""', "''", ". \n", "ex:p",
-        " ", ";", ",", '\\"""', "\\'''", '"""e\\"""" ', "\\\\",
-    ]
-    p = tmp_path / "soup.ttl"
-    for t in range(250):
-        text = "".join(
-            rng.choice(pieces) for _ in range(rng.randrange(1, 60))
-        )
-        p.write_bytes(text.encode("utf-8"))
-        want = seq(str(p))
-        for rb in (7, 33, 128):
-            got = par(str(p), rb)
-            assert got == want, (t, rb, repr(text[:120]))
-
-
-def test_turtle_parallel_scan_through_reader(spark, tmp_path, monkeypatch):
-    """read_turtle_df must produce identical triples (and, tagged,
-    identical quoted mappings) when the parallel in-file scan is forced
-    (threshold 1 byte, tiny ranges so one file becomes many pass-1
-    ranges and pass-2 segments) as with the default sequential scan."""
-    import kolibrie_spark.rdfio as R
-    from kolibrie_spark.rdfio import split_tagged
-
-    d = tmp_path / "par"
-    d.mkdir()
-    (d / "a.ttl").write_text(
-        "@prefix ex: <http://e/> .\n"
-        + "".join(f'ex:s{i} ex:p "value {i} — 日本語 é" .\n' for i in range(60))
-        + 'ex:big ex:p """'
-        + ("fat . value — 日本語\n" * 30)
-        + '""" .\n'
-        + 'ex:ann ex:bal "1" {| ex:conf "0.9" |} .\n'
-    )
-    want = sorted(tuple(r) for r in R.read_turtle_df(spark, str(d), 7).collect())
-    wq, wt = split_tagged(R.read_turtle_tagged_df(spark, str(d), 7))
-    want_q = sorted(tuple(r) for r in wq.collect())
-    want_t = sorted(tuple(r) for r in wt.collect())
-
-    monkeypatch.setattr(R, "PARALLEL_SCAN_MIN_BYTES", 1)
-    monkeypatch.setattr(R, "PARALLEL_SCAN_MIN_WIN", 0)  # local[4] test session
-    monkeypatch.setattr(R, "PARALLEL_SCAN_RANGE_FLOOR", 256)  # force many ranges
-    monkeypatch.setattr(R, "SCAN_WINDOW_BYTES", 256)
-    got = sorted(tuple(r) for r in R.read_turtle_df(spark, str(d), 7).collect())
-    assert got == want and len(got) == 63
-    gq, gt = split_tagged(R.read_turtle_tagged_df(spark, str(d), 7))
-    assert sorted(tuple(r) for r in gq.collect()) == want_q
-    assert sorted(tuple(r) for r in gt.collect()) == want_t
-
-
 def test_parse_turtle_long_strings():
     """Long strings — single- and multi-line, both quote styles, with
     interior dots / quotes / escapes / fake directives — are inlined to
@@ -1273,211 +1107,6 @@ def test_parse_turtle_long_strings():
     assert len(q) == 1
 
 
-def test_rdfxml_parallel_bounds_match_sequential_scan(tmp_path):
-    """The XML two-pass parallel scan must place EXACTLY the sequential
-    windowed scan's element spans at per=1 — across comments with fake
-    tags inside, CDATA, PIs, DOCTYPE, attributes containing '>' /
-    quotes / newlines, nesting, self-closing top-level elements,
-    multi-byte UTF-8, and 120 random nested-document fuzz trials at
-    range sizes down to 13 bytes."""
-    import random
-
-    from kolibrie_spark.rdfio import (
-        _rdfxml_parallel_bounds_local,
-        _rdfxml_stream_bounds,
-    )
-
-    def seq(p, per=1):
-        return [(a, b, r) for _, a, b, r in _rdfxml_stream_bounds(p, per)]
-
-    def par(p, rb, per=1):
-        return [
-            (a, b, r)
-            for _, a, b, r in _rdfxml_parallel_bounds_local(p, per, rb)
-        ]
-
-    def doc(n, mid="", nest=False, pre=""):
-        items = []
-        for i in range(n):
-            if nest and i % 5 == 2:
-                items.append(
-                    f'  <rdf:Description rdf:about="http://e/s{i}">'
-                    f"<ex:n>café {i} 日本語</ex:n>"
-                    f'<ex:inner><ex:d attr="a &gt; b">x</ex:d></ex:inner>'
-                    f"</rdf:Description>\n"
-                )
-            elif nest and i % 7 == 3:
-                items.append(
-                    f'  <rdf:Description rdf:about="http://e/s{i}"/>\n'
-                )
-            else:
-                items.append(
-                    f'  <rdf:Description rdf:about="http://e/s{i}">'
-                    f"<ex:n>value {i}</ex:n></rdf:Description>\n"
-                )
-        return (
-            pre + '<?xml version="1.0"?>\n<rdf:RDF '
-            'xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" '
-            'xmlns:ex="http://e/">\n' + mid + "".join(items) + "</rdf:RDF>\n"
-        )
-
-    cases = [
-        doc(40),
-        doc(40, nest=True),
-        doc(
-            30,
-            mid="<!-- a > fat comment\n"
-            + ("pad > x</rdf:Description>\n" * 20)
-            + "-->\n",
-        ),
-        doc(12, mid="<ex:x><![CDATA[ raw > < stuff \n more ]]></ex:x>"),
-        doc(
-            25,
-            mid='<ex:w attr="multi\nline > v" other=\'s > q\'>t</ex:w>\n',
-        ),
-        doc(
-            18,
-            pre="<!DOCTYPE rdf:RDF SYSTEM 'x.dtd'>\n"
-            "<?xml-stylesheet href='y'?>\n",
-        ),
-        "<rdf:RDF xmlns:rdf='http://www.w3.org/1999/02/22-rdf-syntax-ns#'/>",
-        doc(3),  # unsplittable at high per: falls back to sequential
-    ]
-    for i, text in enumerate(cases):
-        p = tmp_path / f"x{i}.rdf"
-        p.write_bytes(text.encode("utf-8"))
-        want = seq(str(p))
-        for rb in (16, 64, 331, 1 << 20):
-            got = par(str(p), rb)
-            assert got == want, (i, rb, got[:4], want[:4])
-
-    rng = random.Random(42)
-
-    def rand_elem(depth, budget):
-        name = rng.choice(["ex:a", "ex:b", "rdf:Description"])
-        attrs = ""
-        for _ in range(rng.randrange(0, 3)):
-            v = rng.choice(
-                ["x > y", "multi\nline", "quote ' inside", "café 日本語"]
-            )
-            q = '"' if "'" in v or rng.random() < 0.7 else "'"
-            attrs += f" ex:k{rng.randrange(5)}={q}{v}{q}"
-        if budget <= 0 or (depth > 0 and rng.random() < 0.3):
-            return (
-                f"<{name}{attrs}/>"
-                if rng.random() < 0.5
-                else f"<{name}{attrs}></{name}>"
-            )
-        kids = []
-        for _ in range(rng.randrange(1, 4)):
-            r = rng.random()
-            if r < 0.15:
-                kids.append("<!-- comment with > and </fake>\nlines -->")
-            elif r < 0.25:
-                kids.append("<![CDATA[ raw < > \n stuff ]]>")
-            elif r < 0.3:
-                kids.append("<?pi data > here?>")
-            elif r < 0.5:
-                kids.append(f"text café {rng.randrange(100)}\n")
-            else:
-                kids.append(rand_elem(depth + 1, budget - 1))
-        return f"<{name}{attrs}>" + "".join(kids) + f"</{name}>"
-
-    p = tmp_path / "fuzz.rdf"
-    for t in range(120):
-        body = "\n".join(
-            rand_elem(1, rng.randrange(0, 4))
-            for _ in range(rng.randrange(2, 12))
-        )
-        p.write_bytes(
-            (
-                '<?xml version="1.0"?>\n<rdf:RDF '
-                'xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" '
-                'xmlns:ex="http://e/">\n' + body + "\n</rdf:RDF>\n"
-            ).encode("utf-8")
-        )
-        want = seq(str(p))
-        for rb in (13, 47, 256):
-            got = par(str(p), rb)
-            assert got == want, (t, rb)
-
-
-def test_rdfxml_parallel_scan_through_reader(spark, tmp_path, monkeypatch):
-    """read_rdfxml_df must produce identical triples with the parallel
-    in-file scan forced (threshold 1, tiny ranges) as with the default
-    sequential scan — including stable (file, chunk)-salted genid blank
-    nodes across the ci remap."""
-    import kolibrie_spark.rdfio as R
-
-    d = tmp_path / "xpar"
-    d.mkdir()
-    (d / "a.rdf").write_text(
-        '<?xml version="1.0"?>\n<rdf:RDF '
-        'xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" '
-        'xmlns:ex="http://e/">\n'
-        + "".join(
-            f'<rdf:Description rdf:about="http://e/s{i}">'
-            f"<ex:n>n{i} é 日本語</ex:n></rdf:Description>\n"
-            for i in range(60)
-        )
-        + "<!-- fat > comment\n" + ("x</rdf:Description>\n" * 10) + "-->\n"
-        + "</rdf:RDF>"
-    )
-    want = sorted(
-        tuple(r) for r in R.read_rdfxml_df(spark, str(d), 7).collect()
-    )
-    monkeypatch.setattr(R, "PARALLEL_SCAN_MIN_BYTES", 1)
-    monkeypatch.setattr(R, "PARALLEL_SCAN_MIN_WIN", 0)  # local[4] test session
-    monkeypatch.setattr(R, "PARALLEL_SCAN_RANGE_FLOOR", 256)  # force many ranges
-    monkeypatch.setattr(R, "SCAN_WINDOW_BYTES", 256)
-    got = sorted(
-        tuple(r) for r in R.read_rdfxml_df(spark, str(d), 7).collect()
-    )
-    assert got == want and len(got) == 60
-
-
-def test_rdfxml_parallel_scan_tag_spanning_full_range(tmp_path):
-    """Review repro: a tag whose attribute values span MULTIPLE pass-1
-    ranges, with a fake '/>' and '>' inside a quoted value straddling a
-    range cut.  The quote-blind terminal_state reported OPEN instead of
-    OPEN_DQ for the mid-tag ranges, so the next range's close() matched
-    the fake '/>' as a self-closing tag and the parallel scan silently
-    dropped 7 of 13 top-level elements."""
-    from kolibrie_spark.rdfio import (
-        _rdfxml_parallel_bounds_local,
-        _rdfxml_stream_bounds,
-    )
-
-    fat_attr = 'x > y /> z\n' * 40  # many fake closers, raw newlines
-    text = (
-        '<?xml version="1.0"?>\n<rdf:RDF '
-        'xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" '
-        'xmlns:ex="http://e/">\n'
-        + "".join(
-            f'<rdf:Description rdf:about="http://e/s{i}">'
-            f"<ex:n>v{i}</ex:n></rdf:Description>\n"
-            for i in range(6)
-        )
-        + f'<ex:w a="1"\nb="{fat_attr}"\nc=\'{fat_attr}\'>t</ex:w>\n'
-        + "".join(
-            f'<rdf:Description rdf:about="http://e/t{i}">'
-            f"<ex:n>w{i}</ex:n></rdf:Description>\n"
-            for i in range(6)
-        )
-        + "</rdf:RDF>\n"
-    )
-    pth = tmp_path / "fat.rdf"
-    pth.write_bytes(text.encode("utf-8"))
-    want = [(a, b, r) for _, a, b, r in _rdfxml_stream_bounds(str(pth), 1)]
-    assert len(want) == 13
-    for rb in (64, 128, 256):  # the tag spans many ranges at these sizes
-        got = [
-            (a, b, r)
-            for _, a, b, r in _rdfxml_parallel_bounds_local(str(pth), 1, rb)
-        ]
-        assert got == want, (rb, len(got), len(want))
-
-
 def test_offset_readers_empty_directory(spark, tmp_path):
     """An empty corpus directory must return an empty DataFrame, not
     crash in sc.union([]) (review regression catch)."""
@@ -1499,7 +1128,6 @@ def test_bom_prefixed_documents(spark, tmp_path):
         read_ntriples_df,
         read_rdfxml_df,
         read_turtle_df,
-        read_turtle_lines_df,
     )
     from kolibrie_spark.rdfio.parsers import parse_nquads, parse_turtle
 
@@ -1520,7 +1148,6 @@ def test_bom_prefixed_documents(spark, tmp_path):
 
     for reader, name in [
         (read_turtle_df, "a.ttl"),
-        (read_turtle_lines_df, "a.ttl"),
         (read_ntriples_df, "a.nt"),
         (read_rdfxml_df, "a.rdf"),
     ]:
@@ -1544,11 +1171,10 @@ def test_bom_prefixed_documents(spark, tmp_path):
 
 
 def test_compressed_dumps_route_to_text_fallback(spark, tmp_path):
-    """Real dumps ship gzipped: the byte-offset scans cannot see through
-    codecs, so compressed corpora route to the Spark-text fallbacks
-    (which decompress natively) — including the prefix head pass, which
-    previously read codec bytes and silently lost @prefix resolution.
-    infer_format strips compression suffixes."""
+    """Real dumps ship gzipped: the chunk scans read through the codec
+    (the line reader through the text source's), and so does the prefix
+    head pass, which once read codec bytes and silently lost @prefix
+    resolution.  infer_format strips compression suffixes."""
     import gzip
 
     from kolibrie_spark.rdfio import (
@@ -1596,12 +1222,10 @@ def test_compressed_dumps_route_to_text_fallback(spark, tmp_path):
 
 
 def test_mixed_plain_and_compressed_corpus(spark, tmp_path):
-    """Per-file codec routing (review finding): one compressed sidecar
-    must not push the plain files onto the wholetext shuffle plan — the
-    plain files keep the offsets path, the compressed files take the
-    text fallback, results union.  Prefix heads stream through stdlib
-    codecs (gzip/bz2) on the driver instead of scanning the whole
-    decompressed corpus."""
+    """Per-file codecs: plain, gzip and bz2 files of one corpus each
+    open with their own codec in the one chunk scan, and the results
+    union.  Prefix heads stream through the stdlib codecs on the driver
+    instead of scanning the whole decompressed corpus."""
     import bz2
     import gzip
 
@@ -1638,18 +1262,17 @@ def test_mixed_plain_and_compressed_corpus(spark, tmp_path):
 
 
 def test_streaming_compressed_reader_bounded_memory(spark, tmp_path, monkeypatch):
-    """Compressed Turtle routes to the STREAMING fallback: one Hadoop
-    split per file (split.minsize pinned, so bz2 cannot split), lines
-    re-joined into a bounded buffer, strict-scan with carry mid-stream,
-    fallback finish at EOF.  Forced 64-byte flushes make statements —
-    including a multi-line long string with interior dots, an
-    annotation, and a raw-newline short string — straddle many buffer
-    flushes; triples must equal the driver parse for both gzip and
-    bz2."""
+    """Compressed Turtle streams through the windowed chunk scan: one
+    scan task per file decompresses it, strict-scans each window with
+    carry, and finishes with the fallback regex at EOF.  Forced 64-byte
+    windows make statements — including a multi-line long string with
+    interior dots, an annotation, and a raw-newline short string —
+    straddle many refills; triples must equal the driver parse for
+    gzip, bz2 and xz."""
     import bz2
     import gzip
+    import lzma
 
-    import kolibrie_spark.rdfio as R
     from kolibrie_spark.rdfio.parsers import parse_turtle
 
     ttl = (
@@ -1666,9 +1289,11 @@ def test_streaming_compressed_reader_bounded_memory(spark, tmp_path, monkeypatch
         f.write(ttl)
     with bz2.open(d / "b.ttl.bz2", "wt") as f:
         f.write(ttl)
-    monkeypatch.setattr(R, "_STREAM_FLUSH_BYTES", 64)
+    with lzma.open(d / "c.ttl.xz", "wt") as f:
+        f.write(ttl)
+    monkeypatch.setattr(R, "SCAN_WINDOW_BYTES", 64)
     want = sorted(parse_turtle(ttl)[0])
-    for fn in ("a.ttl.gz", "b.ttl.bz2"):
+    for fn in ("a.ttl.gz", "b.ttl.bz2", "c.ttl.xz"):
         got = sorted(
             (r.s, r.p, r.o)
             for r in R.read_turtle_df(spark, str(d / fn)).collect()
@@ -1677,23 +1302,18 @@ def test_streaming_compressed_reader_bounded_memory(spark, tmp_path, monkeypatch
 
     # tagged twin keeps the quoted mappings through the stream path
     quads, quoted = R.split_tagged(
-        R.read_turtle_tagged_df(spark, str(d / "a.ttl.gz"))
+        R.read_rdf_tagged_df(spark, str(d / "a.ttl.gz"), "turtle")
     )
     assert quoted.count() == 1
 
 
 def test_turtle_stream_chunks_match_offset_scanner(tmp_path):
-    """The chunk-CONTENT scanner (compressed-stream fallback) must
-    yield byte-identical chunks to the offsets scanner's bounds — same
-    strict-match-and-carry discipline, token-soup fuzzed at windows
-    down to 7 bytes."""
-    import io
+    """The windowed chunk scanner must yield byte-identical chunks to a
+    whole-buffer scan of the same bytes (strict-match-and-carry
+    discipline), token-soup fuzzed at windows down to 7 bytes."""
     import random
 
-    from kolibrie_spark.rdfio import (
-        _turtle_stream_bounds,
-        _turtle_stream_chunks,
-    )
+    from kolibrie_spark.rdfio import _turtle_stream_chunks
 
     rng = random.Random(7)
     pieces = [
@@ -1710,7 +1330,7 @@ def test_turtle_stream_chunks_match_offset_scanner(tmp_path):
         ).encode("utf-8")
         p.write_bytes(raw)
         for per in (1, 3, 17):
-            want = [raw[a:b] for a, b in _turtle_stream_bounds(str(p), per)]
+            want = _ttl_whole_chunks(p.read_bytes(), per)
             for win in (7, 31, 127):
                 got = list(
                     _turtle_stream_chunks(io.BytesIO(raw), per, win)
@@ -1767,51 +1387,6 @@ def test_turtle_stream_chunks_short_reads_not_eof(tmp_path):
                     assert got == want, (t, per, win, max_read)
 
 
-def test_streaming_hadoop_line_branch_and_xz(spark, tmp_path, monkeypatch):
-    """Review follow-ups: (a) .xz routes to the streaming fallback (it
-    was missing from _COMPRESSED_EXT_RE, so LZMA bytes hit the raw
-    offsets plan — silent garbage); (b) the Hadoop line-rejoin branch
-    (the zst/lz4/snappy path) gets real coverage by forcing a .gz file
-    through it (Hadoop decompresses gz natively) with 64-byte flushes,
-    so statements straddle many buffer flushes."""
-    import gzip
-    import lzma
-    import re as _re
-
-    import kolibrie_spark.rdfio as R
-    from kolibrie_spark.rdfio.parsers import parse_turtle
-
-    ttl = (
-        "@prefix ex: <http://e/> .\n"
-        + "".join(f'ex:s{i} ex:p "v {i} é" .\n' for i in range(40))
-        + 'ex:big ex:p """' + ("fat . line\n" * 20) + '""" .\n'
-        + "ex:tail ex:q ex:r .\n"
-    )
-    want = sorted(parse_turtle(ttl)[0])
-
-    d = tmp_path / "xz"
-    d.mkdir()
-    with lzma.open(d / "a.ttl.xz", "wt") as f:
-        f.write(ttl)
-    got = sorted(
-        (r.s, r.p, r.o)
-        for r in R.read_turtle_df(spark, str(d / "a.ttl.xz")).collect()
-    )
-    assert got == want
-
-    h = tmp_path / "hline"
-    h.mkdir()
-    with gzip.open(h / "a.ttl.gz", "wt") as f:
-        f.write(ttl)
-    monkeypatch.setattr(R, "_STDLIB_CODEC_RE", _re.compile(r"(?!x)x"))
-    monkeypatch.setattr(R, "_STREAM_FLUSH_BYTES", 64)
-    got = sorted(
-        (r.s, r.p, r.o)
-        for r in R.read_turtle_df(spark, str(h / "a.ttl.gz")).collect()
-    )
-    assert got == want
-
-
 def test_long_string_escaped_quote_before_closer(spark, tmp_path):
     """ADVICE r10 fix pin: the long-string closer is the first quote
     triple NOT inside an escape pair (W3C STRING_LITERAL_LONG_*), so
@@ -1820,14 +1395,9 @@ def test_long_string_escaped_quote_before_closer(spark, tmp_path):
     the old escape-blind lazy closer cut these early
     (loud error for the first shape, silent mid-statement re-open risk
     for the second).  Pinned across ALL the boundary engines: driver
-    parse, fast chunk scan, slow oracle, windowed offsets scan, stream
-    chunker, and the Spark reader."""
-    import io
-
+    parse, whole-text chunk scan, slow oracle, whole-buffer regex scan,
+    windowed stream chunker, and the Spark reader."""
     from kolibrie_spark.rdfio import (
-        _turtle_statement_chunks,
-        _turtle_statement_chunks_slow,
-        _turtle_stream_bounds,
         _turtle_stream_chunks,
         parse_turtle,
         read_turtle_df,
@@ -1863,7 +1433,7 @@ def test_long_string_escaped_quote_before_closer(spark, tmp_path):
     p.write_bytes(ttl.encode("utf-8"))
     raw = p.read_bytes()
     for per in (1, 3):
-        bounds_chunks = [raw[a:b] for a, b in _turtle_stream_bounds(str(p), per)]
+        bounds_chunks = _ttl_whole_chunks(raw, per)
         for win in (11, 64, 1 << 20):
             stream_chunks = list(
                 _turtle_stream_chunks(io.BytesIO(raw), per, win)
@@ -1888,18 +1458,13 @@ def _xml_soup(rng, n_pieces):
 
 
 def test_rdfxml_stream_chunks_match_bounds_scanner(tmp_path):
-    """The XML chunk-CONTENT scanner (compressed-stream path, VERDICT
-    r10 task #3) must reproduce the offsets scanner's rows exactly:
-    same chunk indices, same root tag, and bodies byte-identical to
-    ranged reads of the bounds — structured documents and token soup,
-    fuzzed at windows down to 16 bytes."""
-    import io
+    """The windowed XML chunk scanner (VERDICT r10 task #3) must
+    reproduce a whole-document scan's rows exactly: same chunk indices,
+    same root tag, and byte-identical bodies — structured documents and
+    token soup, fuzzed at windows down to 16 bytes."""
     import random
 
-    from kolibrie_spark.rdfio import (
-        _rdfxml_stream_bounds,
-        _rdfxml_stream_chunks,
-    )
+    from kolibrie_spark.rdfio import _rdfxml_stream_chunks
 
     rng = random.Random(13)
     docs = []
@@ -1927,19 +1492,16 @@ def test_rdfxml_stream_chunks_match_bounds_scanner(tmp_path):
     for di, raw in enumerate(docs):
         p.write_bytes(raw)
         for per in (1, 2, 5):
-            want = [
-                (ci, a, b, root)
-                for ci, a, b, root in _rdfxml_stream_bounds(str(p), per)
-            ]
+            want = _rdfxml_whole_chunks(p.read_bytes(), per)
             for win in (16, 64, 1 << 20):
                 got = list(
                     _rdfxml_stream_chunks(io.BytesIO(raw), per, win)
                 )
                 assert len(got) == len(want), (di, per, win)
-                for (gci, groot, gbody), (wci, wa, wb, wroot) in zip(got, want):
+                for (gci, groot, gbody), (wci, wroot, wbody) in zip(got, want):
                     assert gci == wci, (di, per, win)
                     assert groot == wroot, (di, per, win)
-                    assert gbody == raw[wa:wb], (di, per, win, gci)
+                    assert gbody == wbody, (di, per, win, gci)
                 # short-read streams must not change the chunks
                 got_sr = list(
                     _rdfxml_stream_chunks(_ShortReadIO(raw, 5), per, win)
@@ -1948,10 +1510,10 @@ def test_rdfxml_stream_chunks_match_bounds_scanner(tmp_path):
 
 
 def test_rdfxml_compressed_streaming_end_to_end(spark, tmp_path):
-    """A gzip-compressed (and a BOM'd bz2) RDF/XML file routes to the
-    streaming chunker and produces the same triples as the uncompressed
-    offsets plan — the >2 GB-decompressed wholetext ceiling no longer
-    applies to stdlib-codec XML dumps."""
+    """A gzip-compressed (and a BOM'd bz2) RDF/XML file streams through
+    the windowed chunker and produces the same triples as the
+    uncompressed file — no whole-document read, so no >2 GB
+    decompressed ceiling."""
     import bz2 as _bz2
     import gzip as _gzip
 
@@ -1991,396 +1553,6 @@ def test_rdfxml_compressed_streaming_end_to_end(spark, tmp_path):
         assert got == want, comp
 
 
-def test_zst_routing_present_vs_absent(monkeypatch, tmp_path):
-    """.zst routes to the direct streaming path when EITHER the optional
-    zstandard module imports OR the vendored ctypes shim can bind the
-    system libzstd (r12); with both absent the Hadoop line fallback
-    keeps the file readable-by-design (VERDICT r10 task #4)."""
-    import kolibrie_spark.rdfio as R
-
-    import sys
-
-    # force "absent" even if another test planted a fake module or an
-    # addPyFile root earlier this session (None blocks the import)
-    monkeypatch.setitem(sys.modules, "zstandard", None)
-    monkeypatch.setitem(sys.modules, "lz4", None)
-    monkeypatch.setitem(sys.modules, "lz4.frame", None)
-    R._optional_codec_available.cache_clear()
-    # simulate a box with no libzstd / liblz4 either
-    monkeypatch.setattr(R, "_ctypes_zstd_available", lambda: False)
-    monkeypatch.setattr(R, "_ctypes_lz4_available", lambda: False)
-    try:
-        # with wheel AND C library absent, .zst/.lz4 keep the line path
-        assert not R._codec_direct_streamable("/x/d.ttl.zst")
-        assert not R._codec_direct_streamable("/x/d.ttl.lz4")
-        # stdlib codecs are always direct
-        assert R._codec_direct_streamable("/x/d.ttl.gz")
-        assert R._codec_direct_streamable("/x/d.rdf.bz2")
-        assert not R._codec_direct_streamable("/x/d.ttl.snappy")
-        # C library bindable via the ctypes shims: direct, no wheel
-        monkeypatch.setattr(R, "_ctypes_zstd_available", lambda: True)
-        assert R._codec_direct_streamable("/x/d.ttl.zst")
-        assert not R._codec_direct_streamable("/x/d.ttl.lz4")
-        monkeypatch.setattr(R, "_ctypes_lz4_available", lambda: True)
-        assert R._codec_direct_streamable("/x/d.ttl.lz4")
-        monkeypatch.setattr(R, "_ctypes_zstd_available", lambda: False)
-        monkeypatch.setattr(R, "_ctypes_lz4_available", lambda: False)
-        # plant a fake module: now .zst goes direct via the wheel route
-        fake = tmp_path / "fakemods"
-        fake.mkdir()
-        (fake / "zstandard.py").write_text("class ZstdDecompressor:\n pass\n")
-        monkeypatch.delitem(sys.modules, "zstandard")
-        monkeypatch.syspath_prepend(str(fake))
-        R._optional_codec_available.cache_clear()
-        assert R._codec_direct_streamable("/x/d.ttl.zst")
-        assert not R._codec_direct_streamable("/x/d.ttl.lz4")
-    finally:
-        R._optional_codec_available.cache_clear()
-
-
-_FAKE_ZSTD_SRC = '''\
-"""Identity stand-in for the optional zstandard module (test-only):
-lets the .zst direct-streaming route run end-to-end in a container
-without the real codec.  stream_reader deliberately returns SHORT
-reads to exercise the _read_full discipline."""
-
-
-class _Reader:
-    def __init__(self, fh):
-        self._fh = fh
-
-    def read(self, n=-1):
-        if n is None or n < 0:
-            return self._fh.read()
-        return self._fh.read(min(n, 7))  # short reads on purpose
-
-    def close(self):
-        self._fh.close()
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *a):
-        self.close()
-
-
-class ZstdDecompressor:
-    def stream_reader(self, fh, closefd=True):
-        return _Reader(fh)
-'''
-
-
-def _zstd_compress_bytes(data: bytes, level: int = 3) -> bytes:
-    """Test-only one-shot compressor over the same system libzstd the
-    vendored shim binds (the product code only ever DEcompresses)."""
-    import ctypes
-
-    from kolibrie_spark.rdfio.zstd_ctypes import _load_libzstd
-
-    lib = _load_libzstd()
-    lib.ZSTD_compressBound.restype = ctypes.c_size_t
-    lib.ZSTD_compressBound.argtypes = [ctypes.c_size_t]
-    lib.ZSTD_compress.restype = ctypes.c_size_t
-    lib.ZSTD_compress.argtypes = [
-        ctypes.c_void_p, ctypes.c_size_t,
-        ctypes.c_void_p, ctypes.c_size_t, ctypes.c_int,
-    ]
-    bound = lib.ZSTD_compressBound(len(data))
-    dst = ctypes.create_string_buffer(bound)
-    n = lib.ZSTD_compress(
-        ctypes.cast(dst, ctypes.c_void_p), bound, data, len(data), level
-    )
-    assert not lib.ZSTD_isError(n)
-    return dst.raw[:n]
-
-
-def test_zst_ctypes_shim_real_codec_roundtrip(tmp_path):
-    """r12 (VERDICT r11 task #5): the vendored ctypes decoder against the
-    REAL system libzstd — single frame, multi-frame (concatenated), and
-    corrupt input all behave; short reads respected by construction."""
-    from kolibrie_spark.rdfio import zstd_ctypes as Z
-
-    if not Z.available():
-        pytest.skip("no libzstd on this box")
-    data = ("@prefix ex: <http://e/> .\n" + "".join(
-        f'ex:s{i} ex:p "v {i} café" .\n' for i in range(5000)
-    )).encode("utf-8")
-
-    f = tmp_path / "one.zst"
-    f.write_bytes(_zstd_compress_bytes(data))
-    r = Z.ZstdDecompressor().stream_reader(open(f, "rb"))
-    got = bytearray()
-    while True:
-        c = r.read(4096)
-        if not c:
-            break
-        got.extend(c)
-    r.close()
-    assert bytes(got) == data
-
-    # multi-frame: two independently-compressed frames concatenated is a
-    # legal .zst file (zstdcat semantics) — the reader must cross the
-    # frame boundary
-    half = len(data) // 2
-    f2 = tmp_path / "two.zst"
-    f2.write_bytes(
-        _zstd_compress_bytes(data[:half]) + _zstd_compress_bytes(data[half:])
-    )
-    r2 = Z.ZstdDecompressor().stream_reader(open(f2, "rb"))
-    assert r2.read(-1) == data
-    r2.close()
-
-    # corrupt input raises loudly, not silently truncates
-    f3 = tmp_path / "bad.zst"
-    f3.write_bytes(b"\x28\xb5\x2f\xfd" + b"\x00" * 64)  # magic + garbage
-    r3 = Z.ZstdDecompressor().stream_reader(open(f3, "rb"))
-    with pytest.raises(Z.ZstdError):
-        r3.read(-1)
-    r3.close()
-
-
-def test_zst_real_codec_end_to_end_scan(spark, tmp_path):
-    """A .ttl.zst written with the real codec reads through the full
-    distributed reader via the ctypes shim (no zstandard wheel in this
-    container) and matches the plain-text parse."""
-    import kolibrie_spark.rdfio as R
-    from kolibrie_spark.rdfio import zstd_ctypes as Z
-
-    if not Z.available():
-        pytest.skip("no libzstd on this box")
-    ttl = "@prefix ex: <http://e/> .\n" + "".join(
-        f'ex:s{i} ex:p{i % 5} "v {i} café" .\n' for i in range(2000)
-    )
-    comp = tmp_path / "d.ttl.zst"
-    comp.write_bytes(_zstd_compress_bytes(ttl.encode("utf-8")))
-    assert R._codec_direct_streamable(str(comp))
-    rows = R.read_turtle_df(spark, str(comp)).collect()
-    assert {(r.s, r.o) for r in rows} == {
-        (f"http://e/s{i}", f"v {i} café") for i in range(2000)
-    }
-
-
-def test_zst_open_never_leaks_fd(monkeypatch, tmp_path):
-    """ADVICE r11 (low): the .zst branch of _open_maybe_compressed must
-    close the underlying fh (a) on close() even when the old no-closefd
-    zstandard API is in play, and (b) when stream_reader construction
-    itself raises."""
-    import sys
-    import types
-
-    import kolibrie_spark.rdfio as R
-
-    f = tmp_path / "x.zst"
-    f.write_bytes(b"payload")
-
-    # (a) old API: stream_reader(fh) only — TypeError on closefd kwarg
-    class _OldReader:
-        def __init__(self, fh):
-            self._fh = fh
-
-        def read(self, n=-1):
-            return self._fh.read(n)
-
-        def close(self):
-            pass  # old readers do NOT close the fh themselves
-
-    class _OldDecomp:
-        def stream_reader(self, fh):  # no closefd kwarg
-            return _OldReader(fh)
-
-    old_mod = types.ModuleType("zstandard")
-    old_mod.ZstdDecompressor = _OldDecomp
-    monkeypatch.setitem(sys.modules, "zstandard", old_mod)
-    stream = R._open_maybe_compressed(str(f))
-    inner_fh = stream._fh
-    assert not inner_fh.closed
-    stream.close()
-    assert inner_fh.closed
-
-    # (b) constructor failure: the already-opened fh must be closed
-    opened = []
-    real_open = open
-
-    def _spy_open(path, *a, **kw):
-        fh = real_open(path, *a, **kw)
-        opened.append(fh)
-        return fh
-
-    class _BoomDecomp:
-        def stream_reader(self, fh, closefd=True):
-            raise RuntimeError("corrupt frame header")
-
-    boom_mod = types.ModuleType("zstandard")
-    boom_mod.ZstdDecompressor = _BoomDecomp
-    monkeypatch.setitem(sys.modules, "zstandard", boom_mod)
-    monkeypatch.setattr("builtins.open", _spy_open)
-    with pytest.raises(RuntimeError):
-        R._open_maybe_compressed(str(f))
-    assert opened and all(fh.closed for fh in opened)
-
-
-_FAKE_CODEC_DRIVER = '''\
-import os
-import sys
-
-from pyspark.sql import SparkSession
-
-import kolibrie_spark.rdfio as R
-
-path = sys.argv[1]
-spark = (
-    SparkSession.builder.master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
-assert R._codec_direct_streamable(path), "fake module not importable"
-rows = R.read_turtle_df(spark, path).collect()
-got = {(r.s, r.o) for r in rows}
-want = {(f"http://e/s{i}", sys.argv[2].format(i=i)) for i in range(int(sys.argv[3]))}
-assert got == want, (len(got), len(want))
-print("FAKE-CODEC-OK")
-'''
-
-
-def _run_fake_codec_subprocess(tmp_path, fake_dir, codec_path, pattern, n):
-    """Run the fake-codec end-to-end read in an ISOLATED SparkSession
-    subprocess: a fake module shipped into the shared session via
-    addPyFile would shadow the real import for every LATER test reading
-    that codec (the landmine the r12 real-codec tests stepped on)."""
-    import os
-    import subprocess
-    import sys as _sys
-
-    drv = tmp_path / "drv.py"
-    drv.write_text(_FAKE_CODEC_DRIVER)
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ)
-    env["PYTHONPATH"] = (
-        f"{fake_dir}{os.pathsep}{repo}{os.pathsep}" + env.get("PYTHONPATH", "")
-    )
-    proc = subprocess.run(
-        [_sys.executable, str(drv), str(codec_path), pattern, str(n)],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        env=env,
-    )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    assert "FAKE-CODEC-OK" in proc.stdout
-
-
-def test_zst_direct_stream_end_to_end(tmp_path):
-    """With a (fake, identity) zstandard module importable on driver and
-    executors (via PYTHONPATH in an isolated session), a .ttl.zst file
-    takes the direct streaming chunker and parses identically to the
-    plain file."""
-    fake = tmp_path / "fakemods"
-    fake.mkdir()
-    (fake / "zstandard.py").write_text(_FAKE_ZSTD_SRC)
-    ttl = "@prefix ex: <http://e/> .\n" + "".join(
-        f'ex:s{i} ex:p "v {i} café" .\n' for i in range(30)
-    )
-    d = tmp_path / "corpus"
-    d.mkdir()
-    (d / "d.ttl.zst").write_bytes(ttl.encode("utf-8"))
-    _run_fake_codec_subprocess(
-        tmp_path, fake, d / "d.ttl.zst", "v {i} café", 30
-    )
-
-
-def test_turtle_lines_reader_splits_bz2_in_file(spark, tmp_path):
-    """Hadoop's bz2 codec is block-SPLITTABLE, so the line-safe reader
-    gets in-file parallelism even on a COMPRESSED single dump file —
-    the cheapest plan for the machine-export shape at dump scale
-    (gzip stays one split per file; bz2 and plain text split).  Pinned:
-    a .ttl.bz2 under a small maxPartitionBytes reads with >1 input
-    partition and matches the general reader on the plain text."""
-    import bz2 as _bz2
-
-    import kolibrie_spark.rdfio as R
-
-    # compresslevel=1 -> 100 KB bz2 blocks; ~2 MB uncompressed gives
-    # several blocks so byte-range splits can land between them
-    ttl = "@prefix ex: <http://e/> .\n" + "".join(
-        f'ex:s{i} ex:p{i % 3} "v {i} café padding {i * 7}" .\n'
-        for i in range(40_000)
-    )
-    plain = tmp_path / "d.ttl"
-    plain.write_text(ttl, encoding="utf-8")
-    comp = tmp_path / "d.ttl.bz2"
-    comp.write_bytes(_bz2.compress(ttl.encode("utf-8"), 1))
-
-    old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-    old_ocb = spark.conf.get("spark.sql.files.openCostInBytes", None)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(64 * 1024))
-    spark.conf.set("spark.sql.files.openCostInBytes", "1024")
-    try:
-        df = R.read_turtle_lines_df(spark, str(comp))
-        assert df.rdd.getNumPartitions() > 1  # the split actually happened
-        got = {(r.s, r.p, r.o) for r in df.collect()}
-    finally:
-        if old_mpb is not None:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
-        if old_ocb is not None:
-            spark.conf.set("spark.sql.files.openCostInBytes", old_ocb)
-    want = {
-        (r.s, r.p, r.o)
-        for r in R.read_turtle_df(spark, str(plain)).collect()
-    }
-    assert got == want and len(want) == 40_000
-
-
-_FAKE_LZ4_FRAME_SRC = '''\
-"""Identity stand-in for lz4.frame (test-only)."""
-
-
-class _F:
-    def __init__(self, fh):
-        self._fh = fh
-
-    def read(self, n=-1):
-        if n is None or n < 0:
-            return self._fh.read()
-        return self._fh.read(min(n, 11))  # short reads on purpose
-
-    def close(self):
-        self._fh.close()
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *a):
-        self.close()
-
-
-def open(fp, mode="rb"):
-    import builtins
-
-    return _F(builtins.open(fp, "rb"))
-'''
-
-
-def test_lz4_direct_stream_end_to_end(tmp_path):
-    """lz4 twin of the zst end-to-end: a fake identity lz4.frame package
-    importable on driver and executors (PYTHONPATH, isolated session)
-    routes .ttl.lz4 through the direct streaming chunker."""
-    pkg = tmp_path / "fakepkg" / "lz4"
-    pkg.mkdir(parents=True)
-    (pkg / "__init__.py").write_text("")
-    (pkg / "frame.py").write_text(_FAKE_LZ4_FRAME_SRC)
-    ttl = "@prefix ex: <http://e/> .\n" + "".join(
-        f'ex:s{i} ex:p "w {i}" .\n' for i in range(20)
-    )
-    d = tmp_path / "corpus"
-    d.mkdir()
-    (d / "d.ttl.lz4").write_bytes(ttl.encode("utf-8"))
-    _run_fake_codec_subprocess(
-        tmp_path, tmp_path / "fakepkg", d / "d.ttl.lz4", "w {i}", 20
-    )
-
-
 def test_single_quoted_short_strings(spark, tmp_path):
     """W3C Turtle STRING_LITERAL_SINGLE_QUOTE ('lit'): the chunk
     scanners always handled its boundaries, but the tokenizer had no
@@ -2417,9 +1589,10 @@ def test_single_quoted_short_strings(spark, tmp_path):
 def _canon_bnodes(triples):
     """Label-insensitive canonical form for the bracket/collection tests:
     blank nodes in the generated docs form TREES, so each node's
-    signature is the recursive hash of its outgoing (p, o) edges."""
+    signature is the recursive hash of its outgoing (p, o) edges.  Rows
+    may carry trailing fields (a graph), kept as they are."""
     out = {}
-    for s, p, o in triples:
+    for s, p, o, *_ in triples:
         out.setdefault(s, []).append((p, o))
     memo = {}
 
@@ -2434,7 +1607,7 @@ def _canon_bnodes(triples):
         ) + ")"
         return memo[term]
 
-    return sorted((sig(s), p, sig(o)) for s, p, o in triples)
+    return sorted((sig(s), p, sig(o), *rest) for s, p, o, *rest in triples)
 
 
 def test_turtle_bnode_property_lists_and_collections():
@@ -2522,13 +1695,13 @@ def test_turtle_bracket_chunker_differential_and_fuzz():
         # chunker differential: fast == slow oracle at several chunk sizes
         norm = lambda cs: [" ".join(c.split()) for c in cs]  # noqa: E731
         for per in (1, 2, 7):
-            fast = norm(R._turtle_statement_chunks(text, per))
-            slow = norm(R._turtle_statement_chunks_slow(text, per))
+            fast = norm(_turtle_statement_chunks(text, per, 16))
+            slow = norm(_turtle_statement_chunks_slow(text, per))
             assert fast == slow, (trial, per)
         # chunked parse == whole-doc parse, label-insensitively
         whole, _, pfx = P.parse_turtle(text)
         per_chunk = []
-        for ci, ch in enumerate(R._turtle_statement_chunks(text, 2)):
+        for ci, ch in enumerate(_turtle_statement_chunks(text, 2)):
             ch = R._TTL_DIRECTIVE_LINE_RE.sub("", ch)
             t, _, _ = P.parse_turtle(ch, prefixes=pfx, anon_prefix=f"c{ci}.")
             per_chunk.extend(t)
@@ -2537,8 +1710,8 @@ def test_turtle_bracket_chunker_differential_and_fuzz():
 
 def test_turtle_bracket_distributed_roundtrip(spark, tmp_path, monkeypatch):
     """Distributed-reader round-trip with '[ ]' statements spanning chunk
-    and stream-flush boundaries: plain dir scan, tiny scan window, and
-    the compressed streaming path all produce the whole-doc parse
+    and scan-window boundaries: plain dir scan, tiny scan window, and
+    a gzip file with a tiny window all produce the whole-doc parse
     (label-insensitively), with anon labels DISTINCT across chunks."""
     import gzip
 
@@ -2580,13 +1753,13 @@ def test_turtle_bracket_distributed_roundtrip(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     assert _canon_bnodes(got_win) == want
 
-    # compressed streaming path with a tiny flush: brackets straddle
-    # stream-chunk boundaries
+    # gzip stream with a tiny window: brackets straddle decompressed
+    # window refills
     g = tmp_path / "brgz"
     g.mkdir()
     with gzip.open(g / "a.ttl.gz", "wt") as fh:
         fh.write(text)
-    monkeypatch.setattr(R, "_STREAM_FLUSH_BYTES", 256)
+    monkeypatch.setattr(R, "SCAN_WINDOW_BYTES", 256)
     got_gz = [
         (r.s, r.p, r.o)
         for r in R.read_turtle_df(spark, str(g / "a.ttl.gz"), 3).collect()
@@ -2597,80 +1770,11 @@ def test_turtle_bracket_distributed_roundtrip(spark, tmp_path, monkeypatch):
     assert len(firsts) == 80
 
 
-def test_lz4_ctypes_shim_real_codec_roundtrip(tmp_path):
-    """lz4 twin of the zstd shim test: real liblz4 streaming decode —
-    single frame via the CLI compressor, truncation raises loudly."""
-    import shutil
-    import subprocess
-
-    from kolibrie_spark.rdfio import lz4_ctypes as L
-
-    if not L.available():
-        pytest.skip("no liblz4 on this box")
-    lz4_bin = shutil.which("lz4")
-    if lz4_bin is None:
-        pytest.skip("no lz4 CLI to compress the fixture")
-    data = ("@prefix ex: <http://e/> .\n" + "".join(
-        f'ex:s{i} ex:p "v {i} café" .\n' for i in range(5000)
-    )).encode("utf-8")
-    plain = tmp_path / "d.ttl"
-    plain.write_bytes(data)
-    comp = tmp_path / "d.ttl.lz4"
-    subprocess.run([lz4_bin, "-f", "-q", str(plain), str(comp)], check=True)
-
-    r = L.open_stream(open(comp, "rb"))
-    got = bytearray()
-    while True:
-        c = r.read(4096)
-        if not c:
-            break
-        got.extend(c)
-    r.close()
-    assert bytes(got) == data
-
-    # truncated mid-frame: loud error, not silent short data
-    blob = comp.read_bytes()
-    trunc = tmp_path / "t.lz4"
-    trunc.write_bytes(blob[: len(blob) // 2])
-    r2 = L.open_stream(open(trunc, "rb"))
-    with pytest.raises(L.Lz4Error):
-        r2.read(-1)
-    r2.close()
-
-
-def test_lz4_real_codec_end_to_end_scan(spark, tmp_path):
-    """A .ttl.lz4 written with the real codec reads through the full
-    distributed reader via the ctypes shim (no lz4 wheel here)."""
-    import shutil
-    import subprocess
-
-    import kolibrie_spark.rdfio as R
-    from kolibrie_spark.rdfio import lz4_ctypes as L
-
-    if not L.available():
-        pytest.skip("no liblz4 on this box")
-    lz4_bin = shutil.which("lz4")
-    if lz4_bin is None:
-        pytest.skip("no lz4 CLI to compress the fixture")
-    ttl = "@prefix ex: <http://e/> .\n" + "".join(
-        f'ex:s{i} ex:p{i % 5} "v {i} café" .\n' for i in range(2000)
-    )
-    plain = tmp_path / "d.ttl"
-    plain.write_text(ttl)
-    comp = tmp_path / "d.ttl.lz4"
-    subprocess.run([lz4_bin, "-f", "-q", str(plain), str(comp)], check=True)
-    plain.unlink()  # only the compressed file in the scan dir
-    assert R._codec_direct_streamable(str(comp))
-    rows = R.read_turtle_df(spark, str(comp)).collect()
-    assert {(r.s, r.o) for r in rows} == {
-        (f"http://e/s{i}", f"v {i} café") for i in range(2000)
-    }
-
-
 def test_load_into_compressed_files(spark, tmp_path):
     """r12: the driver-side interactive load decompresses and infers the
     format from the extension UNDER the codec suffix (it used to hand
-    raw gzip bytes to the parser and KeyError on fmt='gz')."""
+    raw gzip bytes to the parser and KeyError on fmt='gz'); a codec it
+    cannot decompress is refused by name."""
     import gzip
 
     import kolibrie_spark.rdfio as R
@@ -2684,14 +1788,165 @@ def test_load_into_compressed_files(spark, tmp_path):
     assert R.load_into(store, str(g)) == 2
     assert store.quads.count() == 2
 
-    from kolibrie_spark.rdfio import zstd_ctypes as Z
+    z = tmp_path / "d.nt.zst"
+    z.write_bytes(b"\x28\xb5\x2f\xfd")  # a zstd frame magic
+    with pytest.raises(ValueError, match=r"d\.nt\.zst.*\.zst is not a codec"):
+        R.load_into(QuadStore(spark), str(z))
 
-    if Z.available():
-        nt = '<http://e/x> <http://e/p> "1" .\n<http://e/y> <http://e/p> "2" .\n'
-        z = tmp_path / "d.nt.zst"
-        z.write_bytes(_zstd_compress_bytes(nt.encode()))
-        store2 = QuadStore(spark)
-        assert R.load_into(store2, str(z)) == 2
-        assert {r.s for r in store2.quads.collect()} == {
-            "http://e/x", "http://e/y"
-        }
+
+def test_unknown_format_extension_and_codec_raise_named_value_errors(
+    spark, tmp_path
+):
+    """Errors that name the cause: an unknown format name, an unknown
+    extension, a codec the readers cannot decompress and a path the
+    driver cannot list each raise ValueError naming the input (and, for
+    formats, the accepted names) — on the driver, before any Spark job."""
+    from kolibrie_spark.store import QuadStore
+
+    with pytest.raises(ValueError, match=r"unknown RDF format 'txt'; accepted: nt, "):
+        R._parse("x", "txt")
+    with pytest.raises(ValueError, match=r"extension 'txt' of '/tmp/a\.txt'.*ttl"):
+        R.infer_format("/tmp/a.txt")
+    with pytest.raises(ValueError, match=r"unknown RDF format 'txt'"):
+        QuadStore(spark).load_distributed(str(tmp_path), fmt="txt")
+
+    z = tmp_path / "d.ttl.zst"
+    z.write_bytes(b"\x28\xb5\x2f\xfd")
+    for load in (R.load_into, lambda st, p: st.load_distributed(p)):
+        with pytest.raises(ValueError, match=r"d\.ttl\.zst.*\.zst is not a codec"):
+            load(QuadStore(spark), str(z))
+    for codec in ("lz4", "snappy"):
+        f = tmp_path / f"d.nt.{codec}"
+        f.write_bytes(b"\x00")
+        with pytest.raises(ValueError, match=rf"\.{codec} is not a codec"):
+            R.read_ntriples_df(spark, str(f))
+    with pytest.raises(ValueError, match=r"cannot list 'hdfs://nn/d\.ttl'.*hdfs://"):
+        QuadStore(spark).load_distributed("hdfs://nn/d.ttl")
+    with pytest.raises(ValueError, match=r"no RDF file at"):
+        R.load_into(QuadStore(spark), str(tmp_path / "missing.ttl"))
+
+
+# ------------------------------------ distributed reader == driver parser
+_TTL_A = (
+    "\ufeff@prefix ex: <http://a.example/> .\n"
+    'ex:s1 ex:p "v1" {| ex:conf "0.9" ; ex:src "feed" |} .\n'
+    "ex:s2 ex:p 1.5 .\n"
+    "ex:s3 ex:knows _:x .\n"
+    'ex:s4 ex:doc """multi. line.\nliteral""" .\n'
+    '_:x ex:name "shared blank" .\n'
+    'ex:s5 ex:p [ ex:q "anon one" ; ex:r [ ex:t "nested" ] ] .\n'
+    'ex:s6 ex:list ( ex:i1 "two" 3 ) .\n'
+    '<< ex:s7 ex:p "quoted" >> ex:conf "0.5" .\n'
+    "ex:s8 ex:knows _:x .\n"
+    'ex:s9 ex:p [ ex:q "anon two" ] .\n'
+)
+# CRLF, and the same prefix label bound to another IRI
+_TTL_B = (
+    "@prefix ex: <http://b.example/> .\r\n"
+    'ex:s1 ex:p "v1" .\r\n'
+    'ex:t ex:q ex:o ; ex:r "x" , "y" .\r\n'
+    'ex:s9 ex:p "w" {| ex:conf "0.1" |} .\r\n'
+)
+_NT_A = (
+    '\ufeff<http://e/a> <http://e/p> "v" .\n'
+    '<< <http://e/a> <http://e/p> "v" >> <http://e/conf> "0.9" .\n'
+    '_:b1 <http://e/name> "blank" .\n'
+    "<http://e/c> <http://e/knows> _:b1 .\n"
+)
+_NT_B = (
+    '<http://e/d> <http://e/p> "w"@en .\r\n'
+    '<http://e/d> <http://e/q> "5"^^<http://www.w3.org/2001/XMLSchema#int> .\r\n'
+)
+_NQ_A = (
+    '\ufeff<http://e/a> <http://e/p> "1" <http://e/g1> .\n'
+    '<http://e/b> <http://e/p> "2" .\n'
+    '<< <http://e/a> <http://e/p> "1" >> <http://e/conf> "0.9" <http://e/g2> .\n'
+)
+_NQ_B = (
+    '<http://e/c> <http://e/p> "3" <http://e/g1> .\r\n'
+    '<http://e/d> <http://e/p> "4" <http://e/g3> .\r\n'
+)
+_RDF_HEAD = (
+    '<?xml version="1.0"?>\n<rdf:RDF '
+    'xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" '
+    'xmlns:ex="http://e/"'
+)
+_RDF_A = (
+    "\ufeff" + _RDF_HEAD + ">\n"
+    + "".join(
+        f'  <rdf:Description rdf:about="http://e/s{i}"><ex:n>n{i} café</ex:n>'
+        f'<ex:hub rdf:nodeID="hub"/></rdf:Description>\n'
+        for i in range(5)
+    )
+    + '  <rdf:Description rdf:about="http://e/pet"><ex:pet><ex:Cat>'
+    "<ex:name>Mia</ex:name></ex:Cat></ex:pet></rdf:Description>\n"
+    + '  <rdf:Description rdf:nodeID="hub"><ex:name>HUB</ex:name>'
+    "</rdf:Description>\n</rdf:RDF>\n"
+)
+_RDF_B = (
+    _RDF_HEAD + ' xml:base="http://base/doc">\r\n'
+    + "".join(
+        f'  <rdf:Description rdf:ID="r{i}"><ex:next rdf:resource="#r{i + 1}"/>'
+        "</rdf:Description>\r\n"
+        for i in range(3)
+    )
+    + "</rdf:RDF>\r\n"
+)
+_DIFF_DOCS = {
+    "ntriples": ("nt", _NT_A, _NT_B),
+    "nquads": ("nq", _NQ_A, _NQ_B),
+    "turtle": ("ttl", _TTL_A, _TTL_B),
+    "n3": ("n3", _TTL_A, _TTL_B),
+    "rdfxml": ("rdf", _RDF_A, _RDF_B),
+}
+
+
+@pytest.mark.parametrize("codec", ["", ".gz"])
+@pytest.mark.parametrize("syntax", sorted(_DIFF_DOCS))
+def test_load_distributed_matches_load_into(
+    spark, tmp_path, monkeypatch, syntax, codec
+):
+    """The distributed reader of every syntax, plain and gzipped, loads
+    the same quads and quoted-triple mappings as the driver parser: {| |}
+    annotations and << >> terms, N-Quads graphs, a BOM, CRLF, two files
+    binding one prefix label to different IRIs, and blank nodes
+    referenced from several chunks (2 statements or elements per chunk,
+    64-byte scan windows).  Blank-node labels differ between the paths
+    (the distributed ones are salted per file and chunk), so quads
+    compare label-insensitively; anonymous nodes sit in one file only,
+    because the driver parser scopes labels per file, not per load."""
+    import gzip
+
+    from kolibrie_spark.store import QuadStore
+
+    ext, doc_a, doc_b = _DIFF_DOCS[syntax]
+    d = tmp_path / "corpus"
+    d.mkdir()
+    for name, doc in (("a", doc_a), ("b", doc_b)):
+        raw = doc.encode("utf-8")
+        (d / f"{name}.{ext}{codec}").write_bytes(
+            gzip.compress(raw) if codec else raw
+        )
+    monkeypatch.setattr(R, "STATEMENTS_PER_CHUNK", 2)
+    monkeypatch.setattr(R, "ELEMENTS_PER_CHUNK", 2)
+    monkeypatch.setattr(R, "SCAN_WINDOW_BYTES", 64)
+
+    drv = QuadStore(spark)
+    n_drv = R.load_into(drv, str(d))
+    dist = QuadStore(spark)
+    n_dist = dist.load_distributed(str(d))
+
+    def quads(store):
+        return _canon_bnodes(
+            [(s, p, o, g or "") for s, p, o, g in store.quads.collect()]
+        )
+
+    assert n_dist == n_drv > 0
+    assert quads(dist) == quads(drv)
+    want_quoted = sorted(map(tuple, drv.quoted.collect()))
+    assert sorted(map(tuple, dist.quoted.collect())) == want_quoted
+    if syntax != "rdfxml":
+        assert want_quoted  # RDF-star mappings exercised
+    if syntax == "nquads":
+        graphs = {r.g for r in dist.named_graph_names().collect()}
+        assert graphs == {"http://e/g1", "http://e/g2", "http://e/g3"}

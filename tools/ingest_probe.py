@@ -1,23 +1,24 @@
-"""Repeatable ingest-scale probe for the distributed RDF readers.
+"""Repeatable ingest probe for the distributed RDF readers.
 
-Three jobs (VERDICT r9 tasks #2/#5/#6):
+Three jobs:
 
-1. ``--scale``: generate N-Triples / N-Quads / Turtle / RDF-XML corpora at
-   0.6M, 6M and 60M triples under /tmp/kolibrie_ingest and time each
-   format's reader (count() sink, warm session, min-of-3), printing the
-   10x/100x scaling exponents.  The r9 probe covered the Turtle offsets
-   reader; the Arrow line readers and the RDF/XML offsets reader batch
-   their input differently — exactly where the r9 probe caught the
-   super-linear frame-accumulation bug — so they get their own sweep.
+1. ``--scale``: generate N-Triples / N-Quads / Turtle / RDF-XML corpora
+   (8 files each) at the given sizes, in millions of triples, under
+   /tmp/kolibrie_ingest, and time each format's reader (count() sink,
+   warm session, min-of-3), printing the scaling exponents between
+   sizes.  The line reader (N-Triples/N-Quads) and the chunk reader
+   (Turtle/RDF-XML) batch their input differently, so each gets its own
+   sweep.
 2. ``--memprobe``: generate ONE >= 1 GB Turtle file and measure the
-   streaming boundary scan's peak RSS in a fresh subprocess — the scan
-   must hold ~SCAN_WINDOW_BYTES, not the file (VERDICT r9 #2; the r9
-   scan did ``f.read()`` per file).
+   windowed chunk scan's peak RSS in a fresh subprocess — the scan must
+   hold ~SCAN_WINDOW_BYTES plus one chunk, not the file.
 3. ``--hitrate``: fast-path statement share on the generated corpora
-   (parsers.FAST_PATH_STATS), the BASELINE.md datapoint for task #6.
+   (parsers.FAST_PATH_STATS).
 
 Usage: python tools/ingest_probe.py [--scale] [--memprobe] [--hitrate]
        [--fmt ntriples,nquads,turtle,rdfxml] [--sizes 0.6,6,60]
+
+Spark runs at local[$SPARK_GRAFT_CPUS] (default 32).
 """
 
 from __future__ import annotations
@@ -154,12 +155,13 @@ def probe_scales(fmts: list[str], sizes: list[float]) -> None:
 _MEMPROBE_SNIPPET = """
 import json, os, resource, sys, time
 sys.path.insert(0, {repo!r})
-from kolibrie_spark.rdfio import _turtle_stream_bounds
+from kolibrie_spark.rdfio import _turtle_stream_chunks
 path = sys.argv[1]
 t0 = time.time()
-n = sum(1 for _ in _turtle_stream_bounds(path, 2000))
+with open(path, "rb") as f:
+    n = sum(1 for _ in _turtle_stream_chunks(f, 2000))
 print(json.dumps({{
-    "bounds": n, "sec": round(time.time() - t0, 2),
+    "chunks": n, "sec": round(time.time() - t0, 2),
     "peak_rss_mb": round(resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024, 1),
     "file_mb": round(os.path.getsize(path) / 1e6, 1),
 }}))
@@ -167,7 +169,7 @@ print(json.dumps({{
 
 
 def probe_memory() -> None:
-    """One >= 1 GB single Turtle file; scan it with the streaming bounds
+    """One >= 1 GB single Turtle file; scan it with the windowed chunk
     generator in a FRESH subprocess so ru_maxrss isolates the scan."""
     os.makedirs(BASE, exist_ok=True)
     p = _huge_single_file()
@@ -194,513 +196,6 @@ def _huge_single_file() -> str:
                 )
                 i += 100_000
     return p
-
-
-def _huge_single_xml() -> str:
-    os.makedirs(BASE, exist_ok=True)
-    p = os.path.join(BASE, "huge_single.rdf")
-    if not os.path.exists(p) or os.path.getsize(p) < 1_000_000_000:
-        with open(p, "w", encoding="utf-8") as fh:
-            fh.write(
-                '<?xml version="1.0"?>\n<rdf:RDF '
-                'xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" '
-                'xmlns:ex="http://example.org/">\n'
-            )
-            i = 0
-            while fh.tell() < 1_000_000_000:
-                fh.writelines(
-                    f'  <rdf:Description rdf:about="http://example.org/s{j}">'
-                    f"<ex:p{j % 7}>value {j} — café padding {j * 7}</ex:p{j % 7}>"
-                    f"</rdf:Description>\n"
-                    for j in range(i, i + 100_000)
-                )
-                i += 100_000
-            fh.write("</rdf:RDF>\n")
-    return p
-
-
-def probe_parscan_xml() -> None:
-    """Single >= 1 GB RDF/XML file: sequential vs parallel scan,
-    end-to-end (min-of-2 warm)."""
-    import kolibrie_spark.rdfio as R
-    from pyspark.sql import SparkSession
-
-    p = _huge_single_xml()
-    size = os.path.getsize(p)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    t0 = time.time()
-    n_seq = sum(1 for _ in R._rdfxml_stream_bounds(p, 500))
-    seq_scan = time.time() - t0
-    t0 = time.time()
-    n_par = R._rdfxml_parallel_bounds(spark, [(p, size)], 500).count()
-    par_scan = time.time() - t0
-
-    def end_to_end(min_bytes: int):
-        old = R.PARALLEL_SCAN_MIN_BYTES
-        R.PARALLEL_SCAN_MIN_BYTES = min_bytes
-        try:
-            best, n = math.inf, 0
-            for _ in range(2):
-                t0 = time.time()
-                n = R.read_rdfxml_df(spark, p).count()
-                best = min(best, time.time() - t0)
-            return best, n
-        finally:
-            R.PARALLEL_SCAN_MIN_BYTES = old
-
-    e2e_seq, n1 = end_to_end(1 << 60)
-    e2e_par, n2 = end_to_end(256 * 1024 * 1024)
-    print(
-        json.dumps(
-            {
-                "fmt": "rdfxml",
-                "file_mb": round(size / 1e6),
-                "seq_scan_s": round(seq_scan, 1),
-                "par_scan_s": round(par_scan, 1),
-                "bounds": [n_seq, n_par],
-                "e2e_seq_s": round(e2e_seq, 1),
-                "e2e_par_s": round(e2e_par, 1),
-                "triples": [n1, n2],
-            }
-        ),
-        flush=True,
-    )
-
-
-def probe_stream() -> None:
-    """One gzip Turtle file whose DECOMPRESSED size exceeds the ~2 GB
-    JVM wholetext row ceiling: the streaming fallback must parse it
-    (bounded flush-buffer memory); the old wholetext plan cannot."""
-    import gzip
-
-    from pyspark.sql import SparkSession
-
-    import kolibrie_spark.rdfio as R
-
-    os.makedirs(BASE, exist_ok=True)
-    p = os.path.join(BASE, "big_stream.ttl.gz")
-    if not os.path.exists(p):
-        with gzip.open(p, "wt", compresslevel=1) as fh:
-            fh.write("@prefix ex: <http://example.org/> .\n")
-            i = 0
-            # ~2.6 GB decompressed (~90 B/stmt x 30M)
-            while i < 30_000_000:
-                fh.writelines(
-                    f'ex:s{j} ex:p{j % 7} "value {j} — café padding '
-                    f'{j * 7}"@en .\n'
-                    for j in range(i, i + 100_000)
-                )
-                i += 100_000
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    t0 = time.time()
-    n = R.read_turtle_df(spark, p).count()
-    sec = time.time() - t0
-    print(
-        json.dumps(
-            {
-                "probe": "stream-gz",
-                "compressed_mb": round(os.path.getsize(p) / 1e6),
-                "rows": n,
-                "sec": round(sec, 1),
-            }
-        ),
-        flush=True,
-    )
-
-
-def probe_stream_zst() -> None:
-    """zstd twin of :func:`probe_stream` (VERDICT r11 task #5): the SAME
-    30M-statement / ~2.6 GB-decompressed Turtle dump, compressed with the
-    REAL system zstd, read through the direct streaming chunker via the
-    vendored ctypes shim (no zstandard wheel in this container).  This
-    replaces the r11 extrapolation with a measured datapoint."""
-    import shutil
-    import subprocess
-
-    from pyspark.sql import SparkSession
-
-    import kolibrie_spark.rdfio as R
-
-    os.makedirs(BASE, exist_ok=True)
-    p = os.path.join(BASE, "big_stream.ttl.zst")
-    if not os.path.exists(p):
-        plain = os.path.join(BASE, "big_stream_plain.ttl")
-        if not os.path.exists(plain):
-            with open(plain, "w") as fh:
-                fh.write("@prefix ex: <http://example.org/> .\n")
-                i = 0
-                while i < 30_000_000:
-                    fh.writelines(
-                        f'ex:s{j} ex:p{j % 7} "value {j} — café padding '
-                        f'{j * 7}"@en .\n'
-                        for j in range(i, i + 100_000)
-                    )
-                    i += 100_000
-        zstd_bin = shutil.which("zstd")
-        if zstd_bin is None:
-            print(json.dumps({"probe": "stream-zst", "skip": "no zstd CLI"}))
-            return
-        subprocess.run([zstd_bin, "-1", "-f", "-q", plain, "-o", p], check=True)
-        os.remove(plain)
-    from kolibrie_spark.rdfio import zstd_ctypes
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    t0 = time.time()
-    n = R.read_turtle_df(spark, p).count()
-    sec = time.time() - t0
-    print(
-        json.dumps(
-            {
-                "probe": "stream-zst",
-                "decoder": "zstandard-wheel"
-                if R._optional_codec_available("zstandard")
-                else ("ctypes-libzstd" if zstd_ctypes.available() else "none"),
-                "compressed_mb": round(os.path.getsize(p) / 1e6),
-                "rows": n,
-                "sec": round(sec, 1),
-            }
-        ),
-        flush=True,
-    )
-
-
-def probe_stream_lz4() -> None:
-    """lz4 twin of :func:`probe_stream_zst` via the vendored liblz4
-    ctypes shim (same 30M-statement corpus, lz4 -1)."""
-    import shutil
-    import subprocess
-
-    from pyspark.sql import SparkSession
-
-    import kolibrie_spark.rdfio as R
-
-    os.makedirs(BASE, exist_ok=True)
-    p = os.path.join(BASE, "big_stream.ttl.lz4")
-    if not os.path.exists(p):
-        plain = os.path.join(BASE, "big_stream_plain.ttl")
-        if not os.path.exists(plain):
-            with open(plain, "w") as fh:
-                fh.write("@prefix ex: <http://example.org/> .\n")
-                i = 0
-                while i < 30_000_000:
-                    fh.writelines(
-                        f'ex:s{j} ex:p{j % 7} "value {j} — café padding '
-                        f'{j * 7}"@en .\n'
-                        for j in range(i, i + 100_000)
-                    )
-                    i += 100_000
-        lz4_bin = shutil.which("lz4")
-        if lz4_bin is None:
-            print(json.dumps({"probe": "stream-lz4", "skip": "no lz4 CLI"}))
-            return
-        subprocess.run([lz4_bin, "-1", "-f", "-q", plain, p], check=True)
-        os.remove(plain)
-    from kolibrie_spark.rdfio import lz4_ctypes
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    t0 = time.time()
-    n = R.read_turtle_df(spark, p).count()
-    sec = time.time() - t0
-    print(
-        json.dumps(
-            {
-                "probe": "stream-lz4",
-                "decoder": "lz4-wheel"
-                if R._optional_codec_available("lz4.frame")
-                else ("ctypes-liblz4" if lz4_ctypes.available() else "none"),
-                "compressed_mb": round(os.path.getsize(p) / 1e6),
-                "rows": n,
-                "sec": round(sec, 1),
-            }
-        ),
-        flush=True,
-    )
-
-
-def probe_stream_zst_split() -> None:
-    """MULTI-FRAME zst probe (r12): the same 30M-statement corpus
-    compressed one-frame-per-32 MB-decompressed (the pzstd/seekable
-    shape), read through read_turtle_lines_df's frame-index split plan —
-    in-file parallelism for a codec Hadoop cannot split at all.  The
-    sequential control is the SAME file read as one frame group
-    (target_bytes=1 << 60), isolating the split win from codec/parser
-    differences."""
-    from pyspark.sql import SparkSession
-
-    import kolibrie_spark.rdfio as R
-    from kolibrie_spark.rdfio import framesplit, zstd_ctypes
-
-    os.makedirs(BASE, exist_ok=True)
-    p = os.path.join(BASE, "big_stream_mf.ttl.zst")
-    if not os.path.exists(p):
-
-        def frame(b: bytes) -> bytes:
-            return zstd_ctypes.compress_frame(b, 1)
-
-        target = 32 << 20  # decompressed bytes per frame, the pzstd shape
-        with open(p, "wb") as out:
-            buf: list[str] = ["@prefix ex: <http://example.org/> .\n"]
-            size = len(buf[0])
-            i = 0
-            while i < 30_000_000:
-                chunk = "".join(
-                    f'ex:s{j} ex:p{j % 7} "value {j} — café padding '
-                    f'{j * 7}"@en .\n'
-                    for j in range(i, i + 100_000)
-                )
-                buf.append(chunk)
-                size += len(chunk)
-                i += 100_000
-                if size >= target:
-                    out.write(frame("".join(buf).encode("utf-8")))
-                    buf, size = [], 0
-            if buf:
-                out.write(frame("".join(buf).encode("utf-8")))
-    n_frames = len(framesplit.zstd_frame_offsets(p))
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    df = R.read_turtle_lines_df(spark, p)
-    n_tasks = df.rdd.getNumPartitions()
-    t0 = time.time()
-    n = df.count()
-    split_sec = time.time() - t0
-    # sequential control: same file, one group (monkeypatched plan)
-    orig = R._framesplit_parsed_df
-    R._framesplit_parsed_df = (
-        lambda sp, files, schema, mk, target_bytes=None: orig(
-            sp, files, schema, mk, target_bytes=1 << 60
-        )
-    )
-    try:
-        t0 = time.time()
-        n_seq = R.read_turtle_lines_df(spark, p).count()
-        seq_sec = time.time() - t0
-    finally:
-        R._framesplit_parsed_df = orig
-    print(
-        json.dumps(
-            {
-                "probe": "stream-zst-split",
-                "compressed_mb": round(os.path.getsize(p) / 1e6),
-                "frames": n_frames,
-                "tasks": n_tasks,
-                "rows": n,
-                "sec": round(split_sec, 1),
-                "rows_seq": n_seq,
-                "sec_seq": round(seq_sec, 1),
-                "speedup": round(seq_sec / split_sec, 2),
-            }
-        ),
-        flush=True,
-    )
-
-
-def probe_zst_write() -> None:
-    """Export-writer throughput: parse the 30M-row multi-frame dump
-    (`--streamprobe-zstsplit` fixture) and write it back as splittable
-    multi-frame .nt.zst via write_rdf_zst — the full
-    read->serialize->compress->commit pipeline at local[cpus]."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import SparkSession
-
-    import kolibrie_spark.rdfio as R
-
-    p = os.path.join(BASE, "big_stream_mf.ttl.zst")
-    if not os.path.exists(p):
-        print(json.dumps({"probe": "zst-write",
-                          "skip": "run --streamprobe-zstsplit first"}))
-        return
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    out = tempfile.mkdtemp(prefix="zstwrite_", dir=BASE)
-    try:
-        t0 = time.time()
-        manifest = R.write_rdf_zst(
-            R.read_turtle_lines_df(spark, p), out
-        )
-        sec = time.time() - t0
-        print(
-            json.dumps(
-                {
-                    "probe": "zst-write",
-                    "rows": sum(m["rows"] for m in manifest),
-                    "files": len(manifest),
-                    "out_mb": round(
-                        sum(m["bytes"] for m in manifest) / 1e6
-                    ),
-                    "sec": round(sec, 1),
-                }
-            ),
-            flush=True,
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def probe_stream_xml() -> None:
-    """XML twin of :func:`probe_stream` (VERDICT r10 task #3): one gzip
-    RDF/XML file with >2 GB decompressed — past the wholetext plan's JVM
-    row ceiling — must parse through the streaming chunker
-    (_rdfxml_stream_chunks) in bounded memory."""
-    import gzip
-
-    from pyspark.sql import SparkSession
-
-    import kolibrie_spark.rdfio as R
-
-    os.makedirs(BASE, exist_ok=True)
-    p = os.path.join(BASE, "big_stream.rdf.gz")
-    if not os.path.exists(p):
-        with gzip.open(p, "wt", compresslevel=1) as fh:
-            fh.write(
-                '<?xml version="1.0"?>\n<rdf:RDF '
-                'xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" '
-                'xmlns:ex="http://example.org/">\n'
-            )
-            i = 0
-            # ~2.6 GB decompressed (~130 B/element x 20M)
-            while i < 20_000_000:
-                fh.writelines(
-                    f'  <rdf:Description rdf:about="http://example.org/s{j}">'
-                    f"<ex:p{j % 7}>value {j} — café padding {j * 7}</ex:p{j % 7}>"
-                    f"</rdf:Description>\n"
-                    for j in range(i, i + 100_000)
-                )
-                i += 100_000
-            fh.write("</rdf:RDF>\n")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    t0 = time.time()
-    n = R.read_rdfxml_df(spark, p).count()
-    sec = time.time() - t0
-    print(
-        json.dumps(
-            {
-                "probe": "stream-gz-xml",
-                "compressed_mb": round(os.path.getsize(p) / 1e6),
-                "rows": n,
-                "sec": round(sec, 1),
-            }
-        ),
-        flush=True,
-    )
-
-
-def probe_parscan() -> None:
-    """Single >= 1 GB Turtle file: sequential boundary scan vs the
-    two-pass parallel FSM scan (r10's in-file split-and-stitch), scan
-    only and end-to-end read_turtle_df (min-of-2 warm)."""
-    import kolibrie_spark.rdfio as R
-    from pyspark.sql import SparkSession
-
-    p = _huge_single_file()
-    size = os.path.getsize(p)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()  # warm
-
-    t0 = time.time()
-    n_seq_bounds = sum(1 for _ in R._turtle_stream_bounds(p, 2000))
-    seq_scan = time.time() - t0
-
-    t0 = time.time()
-    rdd = R._turtle_parallel_bounds(spark, [(p, size)], 2000)
-    n_par_bounds = rdd.count()
-    par_scan = time.time() - t0
-
-    def end_to_end(min_bytes: int) -> tuple[float, int]:
-        old = R.PARALLEL_SCAN_MIN_BYTES
-        R.PARALLEL_SCAN_MIN_BYTES = min_bytes
-        try:
-            best, n = math.inf, 0
-            for _ in range(2):
-                t0 = time.time()
-                n = R.read_turtle_df(spark, p).count()
-                best = min(best, time.time() - t0)
-            return best, n
-        finally:
-            R.PARALLEL_SCAN_MIN_BYTES = old
-
-    e2e_seq, n1 = end_to_end(1 << 60)  # force sequential scan
-    e2e_par, n2 = end_to_end(256 * 1024 * 1024)
-    print(
-        json.dumps(
-            {
-                "file_mb": round(size / 1e6),
-                "seq_scan_s": round(seq_scan, 1),
-                "par_scan_s": round(par_scan, 1),
-                "bounds": [n_seq_bounds, n_par_bounds],
-                "e2e_seq_s": round(e2e_seq, 1),
-                "e2e_par_s": round(e2e_par, 1),
-                "triples": [n1, n2],
-            }
-        ),
-        flush=True,
-    )
 
 
 def probe_hitrate(fmts: list[str]) -> None:
@@ -733,16 +228,8 @@ if __name__ == "__main__":
     ap = argparse.ArgumentParser()
     ap.add_argument("--scale", action="store_true")
     ap.add_argument("--memprobe", action="store_true")
-    ap.add_argument("--parscan", action="store_true")
-    ap.add_argument("--parscan-xml", action="store_true")
-    ap.add_argument("--streamprobe", action="store_true")
-    ap.add_argument("--streamprobe-xml", action="store_true")
-    ap.add_argument("--streamprobe-zst", action="store_true")
-    ap.add_argument("--streamprobe-zstsplit", action="store_true")
-    ap.add_argument("--streamprobe-zstwrite", action="store_true")
-    ap.add_argument("--streamprobe-lz4", action="store_true")
     ap.add_argument("--hitrate", action="store_true")
-    ap.add_argument("--fmt", default="ntriples,nquads,rdfxml")
+    ap.add_argument("--fmt", default="ntriples,nquads,turtle,rdfxml")
     ap.add_argument("--sizes", default="0.6,6,60")
     args = ap.parse_args()
     fmts = args.fmt.split(",")
@@ -751,21 +238,5 @@ if __name__ == "__main__":
         probe_hitrate(fmts)
     if args.memprobe:
         probe_memory()
-    if args.parscan:
-        probe_parscan()
-    if args.parscan_xml:
-        probe_parscan_xml()
-    if args.streamprobe:
-        probe_stream()
-    if args.streamprobe_xml:
-        probe_stream_xml()
-    if args.streamprobe_zst:
-        probe_stream_zst()
-    if args.streamprobe_zstsplit:
-        probe_stream_zst_split()
-    if args.streamprobe_zstwrite:
-        probe_zst_write()
-    if args.streamprobe_lz4:
-        probe_stream_lz4()
     if args.scale:
         probe_scales(fmts, sizes)
